@@ -145,25 +145,10 @@ object Changelog {
     * touched bucket whole) and made this the suite's single most
     * load-sensitive artifact build (round-14: 6 s quiet, 90.7 s on a
     * loaded box) for no additional read coverage. */
-  private val counterFixtures =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  Materialize.onSessionFreed { s =>
-    val it = counterFixtures.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        Materialize.deleteLocalDir(new java.io.File(e.getValue).getParent)
-        it.remove()
-      }
-    }
-  }
-
   private def counterFixture(spark: SparkSession, dir: String): String =
-    counterFixtures.computeIfAbsent((spark, dir), { case (s, d) =>
-      val t0 = System.nanoTime()
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_counters").toString + "/state"
-      val changes = Tables.events(s, d).select(
+    Materialize.fixture(spark, "counter_store_fixture", dir) { tmp =>
+      val root = tmp + "/state"
+      val changes = Tables.events(spark, dir).select(
         col("user_id").cast("string").as("rowkey"),
         when(col("event_type") === Cfg.deleteClass, lit(null: String))
           .otherwise(col("event_type")).as("qualifier"),
@@ -171,10 +156,9 @@ object Changelog {
         when(col("event_type") === Cfg.deleteClass, "delete")
           .otherwise("incr").as("op"),
         col("value").as("delta"))
-      graft.streaming.CounterStore.mergeCounters(s, changes, root)
-      Materialize.recordBuild("counter_store_fixture", System.nanoTime() - t0)
+      graft.streaming.CounterStore.mergeCounters(spark, changes, root)
       root
-    })
+    }
 
   private def qCounterMaintained(spark: SparkSession, dir: String): DataFrame =
     // q_counter_state served from the MAINTAINED counter store: the sum
@@ -386,33 +370,18 @@ object Changelog {
     * the MAINTAINED index (Solr's facet-over-standing-index, the
     * reference's query surface) are oracle-checked against genuinely
     * maintained state, like the postings fixture in Index.scala. */
-  private val indexFixtures =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  Materialize.onSessionFreed { s =>
-    val it = indexFixtures.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        Materialize.deleteLocalDir(new java.io.File(e.getValue).getParent)
-        it.remove()
-      }
-    }
-  }
-
   private def indexFixture(spark: SparkSession, dir: String): String =
-    indexFixtures.computeIfAbsent((spark, dir), { case (s, d) =>
-      val t0 = System.nanoTime()
-      val root = java.nio.file.Files.createTempDirectory("graft_mindex").toString + "/state"
-      val changes = Tables.events(s, d).select(
+    Materialize.fixture(spark, "maintained_index_fixture", dir) { tmp =>
+      val root = tmp + "/state"
+      val changes = Tables.events(spark, dir).select(
         col("user_id").cast("string").as("rowkey"),
         col("event_id"),
         when(col("event_type") === Cfg.deleteClass, "delete")
           .otherwise("put").as("op"),
         col("event_type"), col("value"))
-      graft.streaming.IncrementalIndex.mergeBatch(s, changes, root)
-      Materialize.recordBuild("maintained_index_fixture", System.nanoTime() - t0)
+      graft.streaming.IncrementalIndex.mergeBatch(spark, changes, root)
       root
-    })
+    }
 
   /** A row-state root whose merge ALSO maintained the per-bucket rollup
     * sidecar ([[graft.streaming.IncrementalRollup]]) — built by streaming
@@ -420,30 +389,14 @@ object Changelog {
     * event_id, so the second merge genuinely updates partials the first
     * one wrote (replacements and deletes included). Returns (stateRoot,
     * rollupSpec). */
-  private val rollupFixtures =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (String, graft.streaming.IncrementalRollup.Spec)]()
-  Materialize.onSessionFreed { s =>
-    val it = rollupFixtures.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        Materialize.deleteLocalDir(new java.io.File(e.getValue._1).getParent)
-        it.remove()
-      }
-    }
-  }
-
   private def rollupFixture(spark: SparkSession, dir: String)
       : (String, graft.streaming.IncrementalRollup.Spec) =
-    rollupFixtures.computeIfAbsent((spark, dir), { case (s, d) =>
-      val t0 = System.nanoTime()
-      val base = java.nio.file.Files.createTempDirectory("graft_rollup").toString
+    Materialize.fixture(spark, "rollup_fixture", dir) { base =>
       val root = base + "/state"
       val spec = graft.streaming.IncrementalRollup.Spec(
         base + "/rollup", Seq("event_type"), Some("value"),
         statsCol = Some("value"))
-      val changes = Tables.events(s, d).select(
+      val changes = Tables.events(spark, dir).select(
         col("user_id").cast("string").as("rowkey"),
         col("event_id"),
         when(col("event_type") === Cfg.deleteClass, "delete")
@@ -452,35 +405,20 @@ object Changelog {
       val mid = changes.agg(percentile_approx(col("event_id"), lit(0.5),
         lit(100))).head().getLong(0)
       graft.streaming.IncrementalIndex.mergeBatch(
-        s, changes.filter(col("event_id") <= mid), root, rollup = Some(spec))
+        spark, changes.filter(col("event_id") <= mid), root, rollup = Some(spec))
       graft.streaming.IncrementalIndex.mergeBatch(
-        s, changes.filter(col("event_id") > mid), root, rollup = Some(spec))
-      Materialize.recordBuild("rollup_fixture", System.nanoTime() - t0)
+        spark, changes.filter(col("event_id") > mid), root, rollup = Some(spec))
       (root, spec)
-    })
+    }
 
   /** A [[graft.streaming.CellStore]] root built by merging the events
     * changelog in TWO halves split on event_id — so the second merge
     * genuinely re-ranks versions the first one retained and its
     * tombstones genuinely purge cells the first merge wrote. */
-  private val cellFixtures =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  Materialize.onSessionFreed { s =>
-    val it = cellFixtures.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        Materialize.deleteLocalDir(new java.io.File(e.getValue).getParent)
-        it.remove()
-      }
-    }
-  }
-
   private def cellFixture(spark: SparkSession, dir: String): String =
-    cellFixtures.computeIfAbsent((spark, dir), { case (s, d) =>
-      val t0 = System.nanoTime()
-      val root = java.nio.file.Files.createTempDirectory("graft_cells").toString + "/state"
-      val changes = Tables.events(s, d).select(
+    Materialize.fixture(spark, "cell_store_fixture", dir) { tmp =>
+      val root = tmp + "/state"
+      val changes = Tables.events(spark, dir).select(
         col("user_id").cast("string").as("rowkey"),
         when(col("event_type") === Cfg.deleteClass, lit(null: String))
           .otherwise(col("event_type")).as("qualifier"),
@@ -491,12 +429,11 @@ object Changelog {
       val mid = changes.agg(percentile_approx(col("event_id"), lit(0.5),
         lit(100))).head().getLong(0)
       graft.streaming.CellStore.mergeCells(
-        s, changes.filter(col("event_id") <= mid), root, MaxVersions)
+        spark, changes.filter(col("event_id") <= mid), root, MaxVersions)
       graft.streaming.CellStore.mergeCells(
-        s, changes.filter(col("event_id") > mid), root, MaxVersions)
-      Materialize.recordBuild("cell_store_fixture", System.nanoTime() - t0)
+        spark, changes.filter(col("event_id") > mid), root, MaxVersions)
       root
-    })
+    }
 
   private def qVersionsMaintained(spark: SparkSession, dir: String): DataFrame =
     // q_cell_versions served from the MAINTAINED cell store: version

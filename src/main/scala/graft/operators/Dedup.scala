@@ -315,51 +315,19 @@ object Dedup {
     * is [[graft.streaming.IncrementalShingles.nearDuplicates]] itself;
     * state construction and probe-text selection are one-time fixture
     * setup (recorded on the build clock). */
-  private val probeStates =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), (String, String)]()
-  Materialize.onSessionFreed { s =>
-    val it = probeStates.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        // the fixture root is "<tempdir>/<state>" — drop the whole tempdir
-        Materialize.deleteLocalDir(new java.io.File(e.getValue._1).getParent)
-        it.remove()
-      }
-    }
-  }
-
-  /** One (state root, probe text) fixture per (session, dir, name), its
-    * construction recorded on the build clock under `name`. Builds that
-    * run NESTED inside the span (the pair artifacts the qid selection may
-    * trigger) are subtracted — they are already on the clock under their
-    * own names; the per-THREAD clock means a concurrent unrelated build
-    * elsewhere is never mis-subtracted. */
-  private def probeFixtureImpl(spark: SparkSession, dir: String, name: String)
-                              (build: (SparkSession, String) => (String, String)): (String, String) =
-    probeStates.computeIfAbsent((spark, dir, name), { case (s, d, _) =>
-      val t0 = System.nanoTime()
-      val clock0 = Materialize.threadBuildClockNanos
-      val result = build(s, d)
-      val nested = Materialize.threadBuildClockNanos - clock0
-      Materialize.recordBuild(name,
-        math.max(0L, System.nanoTime() - t0 - nested))
-      result
-    })
-
   private def probeFixture(spark: SparkSession, dir: String): (String, String) =
-    probeFixtureImpl(spark, dir, "neardup_probe_fixture") { (s, d) =>
-      val root = java.nio.file.Files.createTempDirectory("graft_probe").toString + "/shingles"
-      val changes = Tables.documents(s, d).select(
+    Materialize.fixture(spark, "neardup_probe_fixture", dir) { base =>
+      val root = base + "/shingles"
+      val changes = Tables.documents(spark, dir).select(
         col("doc_id").cast("string").as("rowkey"),
         col("doc_id").as("event_id"), lit("put").as("op"), col("text"))
-      graft.streaming.IncrementalShingles.mergeBatch(s, changes, root)
-      val pairsMin = sharedNearPairs(s, d).agg(min(col("da"))).head()
+      graft.streaming.IncrementalShingles.mergeBatch(spark, changes, root)
+      val pairsMin = sharedNearPairs(spark, dir).agg(min(col("da"))).head()
       val qid =
         if (pairsMin.isNullAt(0))
-          Tables.documents(s, d).agg(min(col("doc_id"))).head().getLong(0)
+          Tables.documents(spark, dir).agg(min(col("doc_id"))).head().getLong(0)
         else pairsMin.getLong(0)
-      val text = Tables.documents(s, d).filter(col("doc_id") === qid)
+      val text = Tables.documents(spark, dir).filter(col("doc_id") === qid)
         .select("text").head().getString(0)
       (root, text)
     }
@@ -369,19 +337,19 @@ object Dedup {
     * pair member (falling back to the smallest doc_id when the corpus has
     * no pairs at the artifact threshold). */
   private def cjkProbeFixture(spark: SparkSession, dir: String): (String, String) =
-    probeFixtureImpl(spark, dir, "cjk_probe_fixture") { (s, d) =>
-      val root = java.nio.file.Files.createTempDirectory("graft_probeC").toString + "/sketch"
-      val changes = cjkDocs(s, d).select(
+    Materialize.fixture(spark, "cjk_probe_fixture", dir) { base =>
+      val root = base + "/sketch"
+      val changes = cjkDocs(spark, dir).select(
         col("doc_id").cast("string").as("rowkey"),
         col("doc_id").as("event_id"), lit("put").as("op"), col("t").as("text"))
-      graft.streaming.IncrementalShingles.mergeBatch(s, changes, root,
+      graft.streaming.IncrementalShingles.mergeBatch(spark, changes, root,
         scheme = graft.streaming.IncrementalShingles.CharSketch)
-      val pairsMin = sharedCjkPairs(s, d).agg(min(col("da"))).head()
+      val pairsMin = sharedCjkPairs(spark, dir).agg(min(col("da"))).head()
       val qid =
         if (pairsMin.isNullAt(0))
-          Tables.documents(s, d).agg(min(col("doc_id"))).head().getLong(0)
+          Tables.documents(spark, dir).agg(min(col("doc_id"))).head().getLong(0)
         else pairsMin.getLong(0)
-      val text = cjkDocs(s, d).filter(col("doc_id") === qid)
+      val text = cjkDocs(spark, dir).filter(col("doc_id") === qid)
         .select("t").head().getString(0)
       (root, text)
     }

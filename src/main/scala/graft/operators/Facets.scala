@@ -228,30 +228,13 @@ object Facets {
     * delta maintenance cannot express; recompute-per-touched-bucket
     * handles it). The split point is max(doc_id)/2 — deterministic, so
     * the DuckDB oracle reproduces the live set arithmetically. */
-  private val statsFixtures =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      graft.streaming.IncrementalRollup.Spec]()
-  Materialize.onSessionFreed { s =>
-    val it = statsFixtures.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        Materialize.deleteLocalDir(
-          new java.io.File(e.getValue.path).getParent)
-        it.remove()
-      }
-    }
-  }
-
   private def statsFixture(spark: SparkSession,
                            dir: String): graft.streaming.IncrementalRollup.Spec =
-    statsFixtures.computeIfAbsent((spark, dir), { case (s, d) =>
-      val t0 = System.nanoTime()
-      val base = java.nio.file.Files.createTempDirectory("graft_fstats").toString
+    Materialize.fixture(spark, "facet_stats_fixture", dir) { base =>
       val root = base + "/state"
       val spec = graft.streaming.IncrementalRollup.Spec(
         base + "/rollup", Seq("lang", "source"), statsCol = Some("n_chars"))
-      val docs = Tables.documents(s, d)
+      val docs = Tables.documents(spark, dir)
       val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
       val changes = docs.select(
         col("doc_id").cast("string").as("rowkey"),
@@ -265,13 +248,12 @@ object Facets {
           lit(null).cast("string").as("source"),
           lit(null).cast("long").as("n_chars"))
       graft.streaming.IncrementalIndex.mergeBatch(
-        s, changes.filter(col("event_id") <= mid), root, rollup = Some(spec))
+        spark, changes.filter(col("event_id") <= mid), root, rollup = Some(spec))
       graft.streaming.IncrementalIndex.mergeBatch(
-        s, changes.filter(col("event_id") > mid).unionByName(dels), root,
+        spark, changes.filter(col("event_id") > mid).unionByName(dels), root,
         rollup = Some(spec))
-      Materialize.recordBuild("facet_stats_fixture", System.nanoTime() - t0)
       spec
-    })
+    }
 
   private def qFacetStatsMaintained(spark: SparkSession, dir: String): DataFrame = {
     // The nested facet served from MAINTAINED stats partials only: every

@@ -51,7 +51,7 @@ object Hybrid {
   private val WVec = 0.3
 
   /** Collect a RESULT-SIZED frame into a local relation — the
-    * materialization both the one-epoch stamps and the keyed fetches
+    * materialization both the one-epoch tokens and the keyed fetches
     * need (a lazy bounded frame re-plans/re-reads per downstream driver
     * lookup — the round-15 probe pathology). Callers own the bound:
     * every use here is a ≤ legDepth/candDepth rank list. */
@@ -258,7 +258,7 @@ object Hybrid {
     * guidance SCALE.md records for single-root maintained reads), or pass
     * `consistent = true` to [[hybridSearchMaintained]] /
     * [[hybridSearchFilteredMaintained]] — the opt-in optimistic mode
-    * ([[oneEpoch]]) that validates both roots' version stamps around the
+    * ([[oneEpoch]]) that validates both roots' state tokens around the
     * leg reads and retries (then fails loudly) on an interleaved commit. */
   private[graft] def maintainedLegs(spark: SparkSession, postingsRoot: String,
                              ivfRoot: String, terms: Seq[String],
@@ -303,16 +303,18 @@ object Hybrid {
 
   /** The OPT-IN one-epoch mode the mixed-epoch contract names
     * ([[maintainedLegs]]): an optimistic stability loop over the two
-    * roots' [[graft.streaming.StateStore.versionStamp]]s — stamp both
+    * roots' [[graft.streaming.StateStore.stateToken]]s — token both
     * roots, MATERIALIZE the legs (the check is meaningless while the
-    * plan could still read files later), stamp again; equal stamps mean
+    * plan could still read files later), token again; equal tokens mean
     * no commit landed between the leg reads, so the fused result is one
-    * epoch of both roots. A mismatch retries the whole read up to
-    * `maxRetries` times, then FAILS LOUDLY — under sustained write
-    * pressure one-epoch fusion is a scheduling decision (run the read in
-    * the writer's maintenance slot), not something a retry loop should
-    * fake by spinning. The stamps are two directory listings per root
-    * per attempt (driver metadata); default reads skip all of it.
+    * epoch of both roots. A missing token (a commit in flight, or a root
+    * that never committed through the store) counts as unstable. A
+    * mismatch retries the whole read up to `maxRetries` times, then FAILS
+    * LOUDLY — under sustained write pressure one-epoch fusion is a
+    * scheduling decision (run the read in the writer's maintenance
+    * slot), not something a retry loop should fake by spinning. A token
+    * is one status call and two small `_seq` reads per root per attempt
+    * (driver metadata); default reads skip all of it.
     *
     * Materialization is collect-to-local-relation, NOT localCheckpoint:
     * the legs are result-sized by contract (≤ legDepth rank rows — the
@@ -320,24 +322,21 @@ object Hybrid {
     * discarded attempt leaves nothing persisted to reclaim (a dropped
     * localCheckpoint's RDD lingers until the ContextCleaner GCs it —
     * round-15 ADVICE), and downstream fusion of a 50-row local relation
-    * needs no exchange at all. Stamp stability: versionStamp folds each
-    * root's monotonic `_seq` commit counter into the fingerprint
-    * alongside the per-entry (mtime, length) metadata, so two commits
-    * landing in one filesystem mtime tick with unchanged entry sizes —
-    * the former alias window — are still told apart (every
-    * commit/commitBuckets pre-increments the counter;
-    * IncrementalMergeSpec constructs the alias and proves the stamp
-    * breaks it). The fence-slot discipline remains the strict path for
-    * readers that cannot tolerate optimistic retries. */
+    * needs no exchange at all. Token stability: every commit moves the
+    * monotonic `_seq` counter of the root it writes and of that root's
+    * parent, so two commits landing in one filesystem mtime tick with
+    * unchanged sizes are still told apart (IncrementalMergeSpec
+    * constructs that alias). The fence-slot discipline remains the
+    * strict path for readers that cannot tolerate optimistic retries. */
   private[graft] def oneEpoch(spark: SparkSession, roots: Seq[String],
       maxRetries: Int)(read: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
     var attempt = 0
     while (true) {
-      val before = roots.map(r => graft.streaming.StateStore.versionStamp(spark, r))
+      val before = roots.map(r => graft.streaming.StateStore.stateToken(spark, r))
       val (bm, v) = read
       val out = (localRelation(spark, bm), localRelation(spark, v))
-      val after = roots.map(r => graft.streaming.StateStore.versionStamp(spark, r))
-      if (before == after) return out
+      val after = roots.map(r => graft.streaming.StateStore.stateToken(spark, r))
+      if (before.forall(_.isDefined) && before == after) return out
       attempt += 1
       if (attempt > maxRetries) throw new IllegalStateException(
         s"one-epoch hybrid read over ${roots.mkString(", ")} could not " +
@@ -466,7 +465,7 @@ object Hybrid {
     *
     * Like every two-root read, the default contract is MIXED-EPOCH,
     * NEVER TORN ([[maintainedLegs]]); `consistent = true` opts into the
-    * optimistic one-epoch mode ([[oneEpoch]]) over BOTH roots — stamps
+    * optimistic one-epoch mode ([[oneEpoch]]) over BOTH roots — tokens
     * validated around the candidate read and the vector fetch together,
     * one retry per interleaved commit, loud failure on exhaustion.
     * Returns (doc_id STRING, bm25_rank, sim), ordered by sim desc. */

@@ -263,31 +263,15 @@ object Index {
     * keeps current in production — so the reference's PRIMARY read
     * topology (search the index, fetch the live rows) is exercised by the
     * oracle gate against genuinely maintained state, not a session cache. */
-  private val maintainedFixtures =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  Materialize.onSessionFreed { s =>
-    val it = maintainedFixtures.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        // the fixture root is "<tempdir>/postings" — drop the whole tempdir
-        Materialize.deleteLocalDir(new java.io.File(e.getValue).getParent)
-        it.remove()
-      }
-    }
-  }
-
   private[graft] def maintainedFixture(spark: SparkSession, dir: String): String =
-    maintainedFixtures.computeIfAbsent((spark, dir), { case (s, d) =>
-      val t0 = System.nanoTime()
-      val root = java.nio.file.Files.createTempDirectory("graft_mpost").toString + "/postings"
-      graft.streaming.IncrementalPostings.mergeBatch(s,
-        Tables.documents(s, d).select(
+    Materialize.fixture(spark, "maintained_postings_fixture", dir) { tmp =>
+      val root = tmp + "/postings"
+      graft.streaming.IncrementalPostings.mergeBatch(spark,
+        Tables.documents(spark, dir).select(
           col("doc_id").cast("string").as("rowkey"),
           col("doc_id").as("event_id"), lit("put").as("op"), col("text")), root)
-      Materialize.recordBuild("maintained_postings_fixture", System.nanoTime() - t0)
       root
-    })
+    }
 
   private def qSearchMaintained(spark: SparkSession, dir: String): DataFrame =
     // The reference's read path, end to end, over MAINTAINED state:

@@ -250,9 +250,13 @@ object IvfIndex {
         s"embedding dim ${d.head.getInt(0)} not divisible by PqSpec.m=${spec.m}")
       d.head.getInt(0) / spec.m
     }
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark0.sessionState.newHadoopConf())
-    if (fs.exists(root)) fs.delete(root, true): Unit
+    // the clear is itself a commit of an empty root: the root keeps its
+    // `_seq` counter (moved past the previous build's), so no listing or
+    // statistic cached against the previous build can validate again
+    StateStore.commit(spark0, path) { tmp =>
+      val t = new org.apache.hadoop.fs.Path(tmp)
+      t.getFileSystem(spark0.sessionState.newHadoopConf()).mkdirs(t): Unit
+    }
     var centroids = e.orderBy("vec_id").limit(nlist)
       .select(
         (row_number().over(Window.orderBy("vec_id")) - 1).cast("int").as("cell"),
@@ -285,11 +289,13 @@ object IvfIndex {
     val assigned = cbOpt.map(encode(assignedRaw, _)).getOrElse(assignedRaw)
       .repartition(col("cell")).cache()
     try {
-      assigned.write.mode("overwrite").partitionBy("cell").parquet(path + "/vectors")
-      assigned.select(col("vec_id"), col("cell")).withColumn("b", idBucket)
-        .repartition(col("b"))
-        .write.mode("overwrite").partitionBy("b").parquet(path + "/ids")
-      // after the overwrite (which replaces the whole ids dir, marker included)
+      StateStore.commit(spark0, path + "/vectors")(tmp =>
+        assigned.write.partitionBy("cell").parquet(tmp))
+      StateStore.commit(spark0, path + "/ids")(tmp =>
+        assigned.select(col("vec_id"), col("cell")).withColumn("b", idBucket)
+          .repartition(col("b"))
+          .write.partitionBy("b").parquet(tmp))
+      // after the swap (which replaces the whole ids dir, marker included)
       StateStore.ensureBucketCount(assigned.sparkSession, path + "/ids", IdBuckets)
       if (attrs.nonEmpty) {
         StateStore.ensureTag(spark0, path, "_attrs", attrs.mkString(","))

@@ -175,8 +175,49 @@ object Materialize {
     * it for every session of a stopping context). */
   private[graft] def reset(spark: SparkSession): Unit = {
     keysFor(_._1 eq spark).foreach(drop)
+    freeSession(spark)
+  }
+
+  private def freeSession(spark: SparkSession): Unit = {
+    fixtures.entrySet.removeIf { e =>
+      val mine = e.getKey._1 eq spark
+      if (mine) e.getValue.synchronized(e.getValue.dir.foreach(deleteLocalDir))
+      mine
+    }: Unit
     sessionCleaners.forEach(f => f(spark))
   }
+
+  /** A session-scoped FILE-BACKED fixture: `build` runs once per (session,
+    * name, dir), given a fresh driver-local temp directory to put its
+    * state roots under, and its value is served to every later caller. The
+    * build's wall time is recorded on the build clock under `name`, minus
+    * the artifact builds that ran nested inside it (they are already on
+    * the clock under their own names). The temp directory is deleted when
+    * the session's artifacts are freed ([[reset]] or the context ending);
+    * [[invalidate]] does not drop fixtures. Builds of different keys run
+    * in parallel; a fixture may request another fixture. */
+  private[graft] def fixture[T](spark: SparkSession, name: String, dir: String)
+                               (build: String => T): T = {
+    hookSessionClose(spark)
+    val f = fixtures.computeIfAbsent((spark, name, dir), _ => new Fixture)
+    f.synchronized {
+      if (f.dir.isEmpty) {
+        val tmp = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+        val t0 = System.nanoTime()
+        val clock0 = threadBuildClockNanos
+        f.value = try build(tmp) catch {
+          case e: Throwable => deleteLocalDir(tmp); throw e
+        }
+        val nested = threadBuildClockNanos - clock0
+        recordBuild(name, math.max(0L, System.nanoTime() - t0 - nested))
+        f.dir = Some(tmp)
+      }
+      f.value.asInstanceOf[T]
+    }
+  }
+
+  private final class Fixture { var dir: Option[String] = None; var value: Any = _ }
+  private val fixtures = new java.util.concurrent.ConcurrentHashMap[Key, Fixture]()
 
   /** Drop every session's artifacts over data scope `scope` — the
     * invalidation hook for data changes: anything that mutates the corpus
@@ -199,15 +240,21 @@ object Materialize {
       val listener = new SparkListener {
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
           val keys = keysFor(_._1.sparkContext eq sc)
-          val sessions = keys.map(_._1).distinct
           keys.foreach(drop)
-          sessions.foreach(s => sessionCleaners.forEach(f => f(s)))
+          val sessions = keys.map(_._1) ++ fixtureSessions(sc)
+          sessions.distinct.foreach(freeSession)
           hooks.remove(sc): Unit
         }
       }
       sc.addSparkListener(listener)
       listener
     }): Unit
+  }
+
+  private def fixtureSessions(sc: SparkContext): Seq[SparkSession] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[SparkSession]
+    fixtures.keySet.forEach(k => if (k._1.sparkContext eq sc) out += k._1)
+    out.toSeq
   }
 
   /** Test seam: the close listener registered for `sc`, if any. */

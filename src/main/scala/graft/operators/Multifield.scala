@@ -194,33 +194,17 @@ object Multifield {
     * twins exercise genuinely maintained per-field state (entries with a
     * field column, per-field dstats) — the same discipline as
     * `Index.maintainedFixture`. */
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  Materialize.onSessionFreed { s =>
-    val it = fixtures.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        Materialize.deleteLocalDir(new java.io.File(e.getValue).getParent)
-        it.remove()
-      }
-    }
-  }
-
   private def fixture(spark: SparkSession, dir: String): String =
-    fixtures.computeIfAbsent((spark, dir), { case (s, d) =>
-      val t0 = System.nanoTime()
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_mfpost").toString + "/postings"
-      graft.streaming.IncrementalPostings.mergeBatchFields(s,
-        sharedFielded(s, d).select(
+    Materialize.fixture(spark, "multifield_fixture", dir) { tmp =>
+      val root = tmp + "/postings"
+      graft.streaming.IncrementalPostings.mergeBatchFields(spark,
+        sharedFielded(spark, dir).select(
           col("doc_id").cast("string").as("rowkey"),
           col("doc_id").as("event_id"), lit("put").as("op"),
           col("title"), col("body")),
         root, Fields)
-      Materialize.recordBuild("multifield_fixture", System.nanoTime() - t0)
       root
-    })
+    }
 
   private def qMultifieldMaintained(spark: SparkSession, dir: String): DataFrame =
     // qf term search over MAINTAINED multi-field state: one bucket-pruned

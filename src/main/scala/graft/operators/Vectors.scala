@@ -237,6 +237,8 @@ object Vectors {
       .orderBy("a_id", "b_id")
   }
 
+  private[graft] val AnnFixtureNlist = 8
+
   /** One maintained-IVF fixture per (session, dir): the index BUILT from
     * the corpus, then moved forward through the incremental write surface
     * — an upsert that re-embeds ids 0–9 with the embedding of id+100
@@ -248,48 +250,19 @@ object Vectors {
     * table, so the ORACLE brute-forces the post-maintenance vector set —
     * the oracle gate checks the maintenance arithmetic end to end, while
     * file pruning and crash replay are pinned in IvfIndexSpec. Root is
-    * dropped when the session is freed. */
-  private val annStates =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  Materialize.onSessionFreed { s =>
-    val it = annStates.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        // the fixture root is "<tempdir>/ivf" — drop the whole tempdir
-        Materialize.deleteLocalDir(new java.io.File(e.getValue).getParent)
-        it.remove()
-      }
-    }
-  }
-
-  private[graft] val AnnFixtureNlist = 8
-
-  /** The maintained-fixture query parameters — vec 100's pre-delete
-    * (embedding, label) — collected ONCE per (session, dir) and shared by
-    * every maintained ANN/hybrid key: the fetch is a driver-bounded
-    * parameter read, but an uncached head() re-scans the embeddings
-    * parquet on every bench/probe trial, which at N× derived corpora
-    * adds a corpus-sized footer/scan term to reads whose growth is
-    * supposed to be cell-sized (round-14 review finding). */
-  private val fixtureQueries = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[Float], Int)]()
-  Materialize.onSessionFreed { s =>
-    fixtureQueries.keySet.removeIf(_._1 eq s)
-  }
-  private[graft] def fixtureQuery(spark: SparkSession,
-                                  dir: String): (Seq[Float], Int) =
-    fixtureQueries.computeIfAbsent((spark, dir), { case (s, d) =>
-      val r = Tables.embeddings(s, d).filter(col("vec_id") === 100)
-        .select("embedding", "label").head()
-      (r.getSeq[Float](0), r.getInt(1))
-    })
-
-  private[graft] def annFixture(spark: SparkSession, dir: String): String =
-    annStates.computeIfAbsent((spark, dir), { case (s, d) =>
-      val t0 = System.nanoTime()
-      val root = java.nio.file.Files.createTempDirectory("graft_annm").toString + "/ivf"
-      val e = Tables.embeddings(s, d)
+    * dropped when the session is freed.
+    *
+    * The fixture also carries the query parameters every maintained
+    * ANN/hybrid key shares — vec 100's pre-delete (embedding, label) —
+    * collected once: an uncached head() re-scans the embeddings parquet
+    * on every bench/probe trial, which at N× derived corpora adds a
+    * corpus-sized footer/scan term to reads whose growth is supposed to
+    * be cell-sized (round-14 review finding). */
+  private def annFixtureWithQuery(spark: SparkSession,
+                                 dir: String): (String, (Seq[Float], Int)) =
+    Materialize.fixture(spark, "ann_maintained_fixture", dir) { tmp =>
+      val root = tmp + "/ivf"
+      val e = Tables.embeddings(spark, dir)
       // built WITH PQ so the same fixture proves the codes column rides
       // the upsert/delete cell rewrites below (q_ann_pq_maintained), and
       // WITH the label attribute so the same fixture serves the filtered
@@ -311,13 +284,19 @@ object Vectors {
         .filter(col("a.vec_id") < 10)
         .select(col("a.vec_id").as("vec_id"),
           col("b.embedding").as("embedding"), col("a.label").as("label"))
-      IvfIndex.upsert(s, root, delta)
-      IvfIndex.delete(s, root,
+      IvfIndex.upsert(spark, root, delta)
+      IvfIndex.delete(spark, root,
         e.filter(col("vec_id") % 37 === 11 || col("vec_id") === 100)
           .select("vec_id"))
-      Materialize.recordBuild("ann_maintained_fixture", System.nanoTime() - t0)
-      root
-    })
+      val q = e.filter(col("vec_id") === 100).select("embedding", "label").head()
+      (root, (q.getSeq[Float](0), q.getInt(1)))
+    }
+
+  private[graft] def annFixture(spark: SparkSession, dir: String): String =
+    annFixtureWithQuery(spark, dir)._1
+
+  private[graft] def fixtureQuery(spark: SparkSession, dir: String): (Seq[Float], Int) =
+    annFixtureWithQuery(spark, dir)._2
 
   private def qAnnMaintained(spark: SparkSession, dir: String): DataFrame = {
     // X3 (maintained): exact top-k against the INCREMENTALLY MAINTAINED

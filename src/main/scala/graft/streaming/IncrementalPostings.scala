@@ -503,10 +503,10 @@ object IncrementalPostings {
       finally stats.unpersist(): Unit
     }
     else if (StateStore.nonEmpty(spark, statsRoot)) {
-      // docs gone but a stale sidecar remains: clear it so the re-pin
-      // below cannot collide with the old count's marker
-      val p = new org.apache.hadoop.fs.Path(statsRoot)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true): Unit
+      // docs gone but a stale sidecar remains: clear it (a commit that
+      // writes nothing removes the root) so the re-pin below cannot
+      // collide with the old count's marker
+      StateStore.commit(spark, statsRoot)(_ => ())
     }
     // the swap replaced the sidecar root, marker included — re-pin
     StateStore.ensureBucketCount(spark, statsRoot, newBuckets)
@@ -519,8 +519,7 @@ object IncrementalPostings {
     // fallback behavior (absent rows are always the safe direction), and
     // re-running rescale or the backfill converges.
     if (dfSidecarEnabled(spark, rootPath)) {
-      val p = new org.apache.hadoop.fs.Path(dfsRoot(rootPath))
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      StateStore.commit(spark, dfsRoot(rootPath))(_ => ())
       enableDfSidecar(spark, rootPath)
     }
   }
@@ -929,119 +928,94 @@ object IncrementalPostings {
     docsState(spark, rootPath).join(broadcast(hits), "rowkey")
   }
 
-  /** `_seq`-stamped cache of tiny derived metadata frames (round-17
-    * verdict #4): the ranking-statistics sidecar aggregates
-    * ([[docStats]]/[[fieldStats]]) are ≤-field-count rows re-derived by a
-    * full Spark action on EVERY ranked maintained read, although they can
-    * only change when a commit lands on the root — which
-    * [[StateStore.stateToken]] detects with one getFileStatus + two small
-    * `_seq` reads, no job. A hit returns the collected rows as a
-    * LocalRelation, so the consumer's `broadcast(...)`/`head()` runs
-    * driver-side with ZERO Spark jobs — one fewer action per ranked
-    * maintained query, the read-fresh contract preserved by construction
-    * (any commit moves the token; seqlock fill as in the listing cache:
-    * cache only when the token is unchanged across the compute).
-    * Session-scoped (dropped with the session, like every artifact —
-    * never persisted, never keyed on input paths across sessions). */
-  private val metaFrameCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (String, (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row]))]()
-  graft.operators.Materialize.onSessionFreed { s =>
-    metaFrameCache.keySet.removeIf(_._1 eq s): Unit
-  }
+  /** A ranking-statistics aggregate collected to the driver — the value
+    * [[docStats]]/[[fieldStats]] keep in [[StateStore.cached]]. Those
+    * aggregates are ≤ bucket × field rows, re-derived by a full Spark
+    * action on every ranked maintained read although they only change
+    * when a commit lands on the sidecar root; served from the cache they
+    * come back as a LocalRelation, so the consumer's `broadcast(...)`/
+    * `head()` runs driver-side with zero Spark jobs. */
+  private type Collected =
+    (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])
 
-  private def cachedMetaFrame(spark: SparkSession, cacheKey: String,
-      tokenRoot: String)(build: => DataFrame): DataFrame = {
-    def local(schema: org.apache.spark.sql.types.StructType,
-              rows: Array[org.apache.spark.sql.Row]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    val token = StateStore.stateToken(spark, tokenRoot)
-    if (token.isEmpty) return build
-    val k = (spark, cacheKey)
-    val hit = metaFrameCache.get(k)
-    if (hit != null && hit._1 == token.get) return local(hit._2._1, hit._2._2)
-    val df = build
-    val rows = df.collect()
-    if (StateStore.stateToken(spark, tokenRoot) == token)
-      metaFrameCache.put(k, (token.get, (df.schema, rows))): Unit
-    local(df.schema, rows)
-  }
+  private def collected(df: DataFrame): Collected = (df.schema, df.collect())
+
+  private def local(spark: SparkSession, c: Collected): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(c._2: _*), c._1)
 
   /** Corpus-level ranking statistics over the maintained state — one row
     * (n_docs, avgdl) summed from the per-bucket stats sidecar: ≤
     * bucket-count rows of metadata, no docs scan. avgdl is the exact
     * integer token-length sum over the exact live count, divided once in
     * double — the same arithmetic as the corpus-scoped BM25's `avg`.
-    * Served from the `_seq`-stamped [[cachedMetaFrame]] when the sidecar
-    * root is tokenizable (the fallback corpus aggregate of a pre-sidecar
-    * root is never cached — no token root to validate against). */
+    * The sidecar aggregate is cached on the sidecar root's token; a
+    * pre-sidecar root (no live sidecar buckets) falls back to a corpus
+    * aggregate measured with the CALLER's tokenizer, which is never
+    * cached — only the sidecar answer is tokenizer-free. */
   def docStats(spark: SparkSession, rootPath: String,
-               tokenize: Column => Column = split(_, " ")): DataFrame =
-    cachedMetaFrame(spark, s"docStats:$rootPath", rootPath + "/dstats")(
-      docStatsUncached(spark, rootPath, tokenize))
-
-  private def docStatsUncached(spark: SparkSession, rootPath: String,
-               tokenize: Column => Column): DataFrame = {
-    // guard symmetry with the `_fields` WRITE marker: a single-field
-    // ranked read against a multi-field root would filter the sidecar to
-    // a field that doesn't exist and score every document with NULL
-    // statistics — silently. Fail loudly instead, like the write path.
-    StateStore.readTag(spark, rootPath, "_fields").foreach { f =>
-      if (f != DefaultField) throw new IllegalStateException(
-        s"state at $rootPath is a multi-field root (fields=$f); " +
-          "single-field ranked reads have no statistics here — use " +
-          "bm25SearchFields/termSearchFields with explicit field boosts")
-    }
+               tokenize: Column => Column = split(_, " ")): DataFrame = {
     val root = rootPath + "/dstats"
-    val dirs = StateStore.liveBuckets(spark, root)
-    val per =
-      if (dirs.nonEmpty) {
-        // the sidecar went per-field in round 11: single-field reads take
-        // the default field's rows (≡ all rows on a single-field root;
-        // legacy pre-field rows surface field = NULL under mergeSchema
-        // and ARE the default field). Summing across fields here would
-        // silently hand a multi-field root's combined length mass to a
-        // single-field ranking.
-        val raw = readMerged(spark, dirs.map(d => s"$root/$d"))
-        if (raw.columns.contains("field"))
-          raw.filter(coalesce(col("field"), lit(DefaultField)) === DefaultField)
-        else raw
+    val sidecar = StateStore.cached(spark, root, "docStats") {
+      // guard symmetry with the `_fields` WRITE marker: a single-field
+      // ranked read against a multi-field root would filter the sidecar
+      // to a field that doesn't exist and score every document with NULL
+      // statistics — silently. Fail loudly instead, like the write path.
+      StateStore.readTag(spark, rootPath, "_fields").foreach { f =>
+        if (f != DefaultField) throw new IllegalStateException(
+          s"state at $rootPath is a multi-field root (fields=$f); " +
+            "single-field ranked reads have no statistics here — use " +
+            "bm25SearchFields/termSearchFields with explicit field boosts")
       }
-      else
-        // pre-sidecar root: a one-time corpus-sized fallback aggregate,
-        // measured with the CALLER's tokenizer so dl and avgdl stay in
-        // the same units (one merge through the current code adopts the
-        // sidecar for the touched buckets and onward)
-        docsState(spark, rootPath).select(lit(1L).as("n_docs"),
-          size(tokenize(col("text"))).cast("long").as("dl_sum"))
+      val dirs = StateStore.liveBuckets(spark, root)
+      // the sidecar went per-field in round 11: single-field reads take
+      // the default field's rows (≡ all rows on a single-field root;
+      // legacy pre-field rows surface field = NULL under mergeSchema and
+      // ARE the default field). Summing across fields here would silently
+      // hand a multi-field root's combined length mass to a single-field
+      // ranking.
+      Option.when(dirs.nonEmpty) {
+        val raw = readMerged(spark, dirs.map(d => s"$root/$d"))
+        collected(avgdl(
+          if (raw.columns.contains("field"))
+            raw.filter(coalesce(col("field"), lit(DefaultField)) === DefaultField)
+          else raw))
+      }
+    }
+    sidecar.map(local(spark, _)).getOrElse(
+      // pre-sidecar root: a one-time corpus-sized fallback aggregate,
+      // measured with the CALLER's tokenizer so dl and avgdl stay in the
+      // same units (one merge through the current code adopts the
+      // sidecar for the touched buckets and onward)
+      avgdl(docsState(spark, rootPath).select(lit(1L).as("n_docs"),
+        size(tokenize(col("text"))).cast("long").as("dl_sum"))))
+  }
+
+  private def avgdl(per: DataFrame): DataFrame =
     per.agg(sum(col("n_docs")).as("n_docs"), sum(col("dl_sum")).as("dl_sum"))
       .select(col("n_docs"), (col("dl_sum").cast("double") / col("n_docs")).as("avgdl"))
-  }
 
   /** PER-FIELD ranking statistics from the dstats sidecar — one row per
     * field (field, n_docs, avgdl), where n_docs is the field's docCount
     * (docs that HAVE the field — Lucene's per-field similarity statistic)
     * and avgdl its exact-integer length sum over that count. ≤ bucket ×
-    * field rows of metadata, no docs scan. Legacy pre-field rows adopt
-    * [[DefaultField]]. */
-  def fieldStats(spark: SparkSession, rootPath: String): DataFrame =
-    cachedMetaFrame(spark, s"fieldStats:$rootPath", rootPath + "/dstats")(
-      fieldStatsUncached(spark, rootPath))
-
-  private def fieldStatsUncached(spark: SparkSession, rootPath: String): DataFrame = {
+    * field rows of metadata, no docs scan, cached on the sidecar root's
+    * token. Legacy pre-field rows adopt [[DefaultField]]. */
+  def fieldStats(spark: SparkSession, rootPath: String): DataFrame = {
     val root = rootPath + "/dstats"
-    val dirs = StateStore.liveBuckets(spark, root)
-    require(dirs.nonEmpty,
-      s"no dstats sidecar at $rootPath — merge a batch first")
-    val raw = readMerged(spark, dirs.map(d => s"$root/$d"))
-    val per =
-      if (raw.columns.contains("field"))
-        raw.withColumn("field", coalesce(col("field"), lit(DefaultField)))
-      else raw.withColumn("field", lit(DefaultField))
-    per.groupBy("field")
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("dl_sum")).as("dl_sum"))
-      .select(col("field"), col("n_docs"),
-        (col("dl_sum").cast("double") / col("n_docs")).as("avgdl"))
+    local(spark, StateStore.cached(spark, root, "fieldStats") {
+      val dirs = StateStore.liveBuckets(spark, root)
+      require(dirs.nonEmpty,
+        s"no dstats sidecar at $rootPath — merge a batch first")
+      val raw = readMerged(spark, dirs.map(d => s"$root/$d"))
+      val per =
+        if (raw.columns.contains("field"))
+          raw.withColumn("field", coalesce(col("field"), lit(DefaultField)))
+        else raw.withColumn("field", lit(DefaultField))
+      collected(per.groupBy("field")
+        .agg(sum(col("n_docs")).as("n_docs"), sum(col("dl_sum")).as("dl_sum"))
+        .select(col("field"), col("n_docs"),
+          (col("dl_sum").cast("double") / col("n_docs")).as("avgdl")))
+    })
   }
 
   /** Multi-field boosted term search over the maintained state — Solr

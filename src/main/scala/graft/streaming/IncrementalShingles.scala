@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -748,41 +749,38 @@ object IncrementalShingles {
     gateDecisionsBody(spark, rootPath, batch, threshold, scheme,
       maxCandidates, clock)
 
-  /** Execution-conf bracket for the gate's SKETCH action (round-18,
-    * guide §1.2 order: measured before changed). Interleaved GateProbe
-    * A/Bs of the bracket at three scopes:
+  /** Execution settings for the gate's SKETCH action (round-18, guide
+    * §1.2 order: measured before changed). Interleaved GateProbe A/Bs at
+    * three scopes:
     *   - whole gate: sketch 2.6→1.1 s/5 batches, probe neutral, score
     *     6.7→20.5/23.9 s — AQE's runtime join replanning is LOAD-BEARING
-    *     in the intra-batch scoring pass, so the blanket bracket was
-    *     REJECTED;
+    *     in the intra-batch scoring pass, so AQE stays on there;
     *   - sketch only (this shape): the phase is one flush-bounded
     *     groupBy + sketch projection with no joins for AQE to replan —
-    *     the bracket removes only the per-query-stage job dispatches.
-    * Shuffle partitions are pinned to defaultParallelism for the bracket
-    * (NOT a local-mode constant: at any cluster size that is the core
-    * count, the right width for flush-bounded shuffles) so a production
-    * session sized for large analytic shuffles does not launch
-    * 2000-task stages on batch-sized frames once AQE is not there to
-    * coalesce them. Both knobs restore on exit and are overridable:
-    * `spark.graft.gate.aqe=true` keeps AQE on, and
-    * `spark.graft.gate.shufflePartitions=N` pins the width explicitly. */
-  private def withGateExecConf[T](spark: SparkSession)(body: => T): T = {
-    val keepAqe = spark.conf.getOption("spark.graft.gate.aqe")
-      .exists(_.equalsIgnoreCase("true"))
-    if (keepAqe) return body
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    val prevAqe = spark.conf.getOption(aqeKey)
-    val prevSp = spark.conf.getOption(spKey)
-    val gateSp = spark.conf.getOption("spark.graft.gate.shufflePartitions")
-      .getOrElse(spark.sparkContext.defaultParallelism.toString)
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(spKey, gateSp)
-    try body finally {
-      prevAqe.fold(spark.conf.unset(aqeKey))(spark.conf.set(aqeKey, _))
-      prevSp.fold(spark.conf.unset(spKey))(spark.conf.set(spKey, _))
-    }
+    *     AQE off removes only the per-query-stage job dispatches.
+    * Shuffle partitions are defaultParallelism (NOT a local-mode
+    * constant: at any cluster size that is the core count, the right
+    * width for flush-bounded shuffles) so a production session sized for
+    * large analytic shuffles does not launch 2000-task stages on
+    * batch-sized frames once AQE is not there to coalesce them.
+    *
+    * The settings live on a private session of the caller's context,
+    * made once per context ([[Bridge.isolatedSession]]); the sketch plan
+    * is re-bound to it, checkpointed there, and the checkpoint re-bound
+    * to the caller's session. The caller's conf is never written, so
+    * overlapping gate calls and unrelated queries on the same session
+    * plan exactly as they would without the gate. */
+  private def onSketchSession(spark: SparkSession)(df: DataFrame): DataFrame = {
+    sketchSessions.keySet.removeIf(_.isStopped)
+    val iso = sketchSessions.computeIfAbsent(spark.sparkContext, sc =>
+      Bridge.isolatedSession(spark, Map(
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> sc.defaultParallelism.toString)))
+    Bridge.rebind(spark, Bridge.rebind(iso, df).localCheckpoint())
   }
+
+  private val sketchSessions = new java.util.concurrent.ConcurrentHashMap[
+    org.apache.spark.SparkContext, SparkSession]()
 
   private def gateDecisionsBody(spark: SparkSession, rootPath: String,
                     batch: DataFrame, threshold: Double,
@@ -801,12 +799,11 @@ object IncrementalShingles {
     // update-flag key fetch + intra-batch pair scoring). The default
     // clock is a discarded accumulator — zero behavior change for
     // untimed callers.
-    val latest = clock.time("sketch")(withGateExecConf(spark)(
+    val latest = clock.time("sketch")(onSketchSession(spark)(
       puts.groupBy("rowkey")
         .agg(max_by(col("text"), col("event_id")).as("text"))
         .select(col("rowkey"),
-          array_sort(array_distinct(scheme.sketch(col("text")))).as("qs"))
-        .localCheckpoint()))
+          array_sort(array_distinct(scheme.sketch(col("text")))).as("qs"))))
     // a put whose only near-dup is its OWN stored version is an UPDATE,
     // not a duplicate — qid = rowkey matches must not gate it out, or
     // every minor edit to an existing document would be silently lost

@@ -128,8 +128,8 @@ object IngestPipeline {
     val marker = new Path(s"$pipelineRoot/$RollupMarker")
     val fs = marker.getFileSystem(conf)
     if (fs.exists(marker)) fs.delete(marker, false): Unit
-    val sidecar = new Path(rollupRoot(pipelineRoot))
-    if (fs.exists(sidecar)) fs.delete(sidecar, true): Unit
+    if (fs.exists(new Path(rollupRoot(pipelineRoot))))
+      StateStore.commit(spark, rollupRoot(pipelineRoot))(_ => ())
   }
 
   /** The enabled rollup spec of this pipeline, if any — parsed from the
@@ -163,6 +163,12 @@ object IngestPipeline {
   def percolatorRoot(pipelineRoot: String): String = s"$pipelineRoot/percolator"
   private def registryDir(pipelineRoot: String): String =
     s"${percolatorRoot(pipelineRoot)}/registry"
+  /** Remove bucket dirs of a state root as one commit that writes
+    * nothing for them (see [[StateStore.swapIn]]'s missing-tmp case), so
+    * the root's token moves and no cached listing still names them. */
+  private def dropDirs(spark: SparkSession, root: String, dirs: Seq[String]): Unit =
+    if (dirs.nonEmpty) StateStore.commitBuckets(spark, root, dirs)(_ => ())
+
   private def alertsRoot(pipelineRoot: String): String =
     s"${percolatorRoot(pipelineRoot)}/alerts"
   private def alertDir(pipelineRoot: String, batchId: Long): String =
@@ -342,12 +348,11 @@ object IngestPipeline {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(rootPath)) return
-    StateStore.liveBuckets(spark, root, prefix = "batch=")
+    dropDirs(spark, root, StateStore.liveBuckets(spark, root, prefix = "batch=")
       .filter { d =>
         val id = d.stripPrefix("batch=").toLong
         id != BootstrapBatchId && id < horizonBatchId
-      }
-      .foreach(d => fs.delete(new Path(s"$root/$d"), true): Unit)
+      })
   }
 
   /** Match this batch's admitted puts against the registry and commit the
@@ -373,13 +378,12 @@ object IngestPipeline {
         // query was removed must clear the alerts its first run committed
         // — skipping would leave the outbox advertising hits for queries
         // that no longer exist (a nonempty registry overwrites instead)
-        val dir = new Path(alertDir(pipelineRoot, batchId))
-        val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-        if (fs.exists(dir)) fs.delete(dir, true): Unit
-        // a swap interrupted on the FIRST run can leave only `<dir>.old`;
-        // the outbox heal would re-promote it after the delete above
-        val old = new Path(alertDir(pipelineRoot, batchId) + ".old")
-        if (fs.exists(old)) fs.delete(old, true): Unit
+        // (a commit that writes nothing removes the dir, after healing
+        // a `<dir>.old` a swap interrupted on the FIRST run left behind)
+        val dir = alertDir(pipelineRoot, batchId)
+        val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+        if (fs.exists(new Path(dir)) || fs.exists(new Path(dir + ".old")))
+          StateStore.commit(spark, dir)(_ => ())
         return
       }
       // percolation tokenizes with the SAME function this very batch's
@@ -880,17 +884,15 @@ object IngestPipeline {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(rootPath)) return
-    StateStore.liveBuckets(spark, root, prefix = "batch=")
+    dropDirs(spark, root, StateStore.liveBuckets(spark, root, prefix = "batch=")
       .filter { d =>
         val id = d.stripPrefix("batch=").toLong
         id != BootstrapBatchId && id < horizonBatchId
-      }
-      .foreach(d => fs.delete(new Path(s"$root/$d"), true): Unit)
+      })
     // compacted range dirs wholly below the horizon go too — GC is the
     // operator's explicit provenance-deletion choice
-    StateStore.liveBuckets(spark, root, prefix = "batches=")
-      .filter(d => rangeSpan(d).exists(_._2 < horizonBatchId))
-      .foreach(d => fs.delete(new Path(s"$root/$d"), true): Unit)
+    dropDirs(spark, root, StateStore.liveBuckets(spark, root, prefix = "batches=")
+      .filter(d => rangeSpan(d).exists(_._2 < horizonBatchId)))
   }
 
   private def rangeSpan(dirName: String): Option[(Long, Long)] =
@@ -945,8 +947,7 @@ object IngestPipeline {
     try StateStore.commit(spark, s"$root/$target")(tmp =>
       combined.write.parquet(tmp))
     finally combined.unpersist(): Unit
-    (batchDirs ++ rangeDirs.filterNot(_ == target))
-      .foreach(d => fs.delete(new Path(s"$root/$d"), true): Unit)
+    dropDirs(spark, root, batchDirs ++ rangeDirs.filterNot(_ == target))
   }
 
   /** The reserved batch id under which [[bootstrap]] logs its admission

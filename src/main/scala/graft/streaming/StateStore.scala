@@ -98,57 +98,75 @@ object StateStore {
     if (fs.exists(backup)) fs.delete(backup, true): Unit
   }
 
-  /** Advance the monotonic commit counter `_seq` under `dir` — the
-    * content-versioned marker that closes [[versionStamp]]'s mtime-
-    * granularity alias window (round-16 verdict #5): two commits landing
-    * in one filesystem mtime tick with unchanged entry sizes are
-    * indistinguishable by (mtime, length), but each bumps this counter
-    * and the stamp folds its VALUE in. Bumped BEFORE the swap
-    * (pre-increment): a completed commit has always moved the counter,
-    * and a crash between bump and swap at worst costs an optimistic
-    * reader one spurious retry. Read-increment-write is safe under the
-    * store's single-writer-per-root contract; tmp-then-rename keeps the
-    * marker itself torn-write-free. An unparseable marker restarts at 1
-    * — still a stamp CHANGE, which is all the seqlock needs. */
-  private def bumpSeq(fs: FileSystem, dir: Path): Unit = {
+  /** The `_seq` commit counter under `dir`, 0 when the marker is absent.
+    * An unparseable marker throws NumberFormatException; callers decide
+    * what that means (a token read treats it as uncacheable, a bump
+    * restarts the counter). */
+  private def readSeq(fs: FileSystem, dir: Path): Long =
+    try {
+      val in = fs.open(new Path(dir, "_seq"))
+      (try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim.toLong
+    } catch { case _: java.io.FileNotFoundException => 0L }
+
+  /** Write `value` as the `_seq` marker under `dir`, tmp-then-rename so
+    * the marker itself is never torn. */
+  private def writeSeq(fs: FileSystem, dir: Path, value: Long): Unit = {
     val marker = new Path(dir, "_seq")
-    val next = (try {
-      if (!fs.exists(marker)) 0L
-      else {
-        val in = fs.open(marker)
-        (try new String(in.readAllBytes(), "UTF-8").trim finally in.close()).toLong
-      }
-    } catch { case _: Throwable => 0L }) + 1L
-    fs.mkdirs(dir)
     val tmp = new Path(dir, "_seq.tmp")
+    fs.mkdirs(dir)
     val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
+    try out.write(value.toString.getBytes("UTF-8")) finally out.close()
     if (!fs.rename(tmp, marker)) {
-      // local fs refuses rename-onto-existing: replace under the
-      // single-writer contract
+      // local fs refuses rename-onto-existing: replace under the lock
       fs.delete(marker, true)
-      if (!fs.rename(tmp, marker))
+      if (!fs.rename(tmp, marker)) {
+        fs.delete(tmp, true)
         throw new IOException(s"cannot advance commit counter $marker")
+      }
     }
   }
+
+  private val seqLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Advance the monotonic commit counter `_seq` under `dir`. Bumped
+    * BEFORE the swap (pre-increment): a completed commit has always moved
+    * the counter, and a crash between bump and swap at worst costs a
+    * cached reader one refill. Bumps of one directory are serialized
+    * in-process: sibling roots committed from parallel merge threads
+    * share their parent's counter. An unparseable marker restarts at 1 —
+    * still a change, which is all the token needs; an IO failure fails
+    * the commit. */
+  private def bumpSeq(fs: FileSystem, dir: Path): Unit =
+    seqLocks.computeIfAbsent(dir.toString, _ => new Object).synchronized {
+      writeSeq(fs, dir, seqForBump(fs, dir) + 1)
+    }
+
+  private def seqForBump(fs: FileSystem, dir: Path): Long =
+    try readSeq(fs, dir) catch { case _: NumberFormatException => 0L }
 
   /** Swap in a new state version: `write` receives the `.tmp` path and must
     * fully materialize the new state there; the swap then promotes it. The
     * caller's DataFrame must already be decoupled from `<path>`'s files
     * (cache + count) — the old state is renamed during the swap.
-    * The commit counter bumps in `<path>`'s PARENT (the swap replaces
-    * `<path>` itself), so a stamp over the enclosing root sees it. */
+    * The commit moves both counters [[stateToken]] reads: the parent's is
+    * bumped before the write, and the new version carries its own `_seq`
+    * one past the replaced version's (and past any counter the write
+    * itself left in the tmp dir). */
   def commit(spark: SparkSession, statePath: String)(write: String => Unit): Unit = {
+    val target = new Path(statePath)
     val tmp = new Path(statePath + ".tmp")
     val fs = fsOf(spark, tmp)
-    beginCommit(statePath)
+    val fenced = fenceOf(target)
+    beginCommit(fenced)
     try {
       recover(spark, statePath)
-      Option(new Path(statePath).getParent).foreach(bumpSeq(fs, _))
+      Option(target.getParent).foreach(bumpSeq(fs, _))
       if (fs.exists(tmp)) fs.delete(tmp, true)
       write(tmp.toString)
+      if (fs.exists(tmp) && fs.getFileStatus(tmp).isDirectory)
+        writeSeq(fs, tmp, math.max(seqForBump(fs, target), seqForBump(fs, tmp)) + 1)
       swapIn(spark, tmp.toString, statePath)
-    } finally endCommit(statePath)
+    } finally endCommit(fenced)
   }
 
   /** Bucketed commit — the delta-sized write path. `write` materializes
@@ -164,23 +182,26 @@ object StateStore {
     * micro-batch rewrites an already-promoted bucket with identical
     * content (event_id latest-wins for row state; the postings merge's
     * double anti-join) — which is the documented contract of both
-    * incremental merges. */
+    * incremental merges. The root's and its parent's `_seq` counters are
+    * bumped before any swap. */
   def commitBuckets(spark: SparkSession, rootPath: String, bucketDirs: Seq[String])
                    (write: String => Unit): Unit = {
     val root = new Path(rootPath)
     val tmpRoot = new Path(rootPath + ".tmpbatch")
     val fs = fsOf(spark, root)
-    beginCommit(rootPath)
+    val fenced = fenceOf(root)
+    beginCommit(fenced)
     try {
       if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
       fs.mkdirs(root)
       // inside the root (bucket swaps never touch root-level files), before
       // any swap — see bumpSeq for the pre-increment argument
       bumpSeq(fs, root)
+      Option(root.getParent).foreach(bumpSeq(fs, _))
       write(tmpRoot.toString)
       bucketDirs.foreach(d => swapIn(spark, s"$tmpRoot/$d", s"$rootPath/$d"))
       if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true): Unit
-    } finally endCommit(rootPath)
+    } finally endCommit(fenced)
   }
 
   /** Pin the bucket count of a bucketed state root. The first writer
@@ -386,10 +407,6 @@ object StateStore {
     }
   }
 
-  /** Heal every bucket under a bucketed state root (promote interrupted
-    * per-bucket swaps) and return the live bucket directory names.
-    * `prefix` selects the partition naming scheme — `b=` for the
-    * hash-bucketed merges, `cell=` for the IVF index's cell layout. */
   /** Total bytes of the LIVE buckets under a state root — the bucket-
     * pressure reading behind growth-gated rescale. Driver-side metadata
     * only (one listing per bucket directory, no data read): bytes, not
@@ -403,146 +420,103 @@ object StateStore {
       .sum
   }
 
-  /** A cheap content-version fingerprint of a state root for OPTIMISTIC
-    * read stability (the seqlock discipline): every child and grandchild
-    * entry under the root, mapped to (modificationTime, length) — plus,
-    * for each `_seq` commit-counter marker encountered, its VALUE. Two
-    * directory-listing levels of driver metadata — bucket dirs, marker
-    * files, fence epochs — and every commit in this store moves it: a
-    * bucket swap replaces the bucket dir (new mtime) and touches its
-    * parent, a whole-root swap replaces the subroot, a marker write adds
-    * a file, and EVERY commit/commitBuckets pre-increments a `_seq`
-    * counter inside (or, for whole-subroot swaps, beside) the swapped
-    * entry. Equal stamps before and after a read ⇒ no commit landed
-    * between them. (mtime, length) alone ticks at the filesystem's mtime
-    * resolution (ms on RawLocalFileSystem), so a same-name re-swap in
-    * one tick with unchanged sizes would ALIAS; folding the counters'
-    * monotonic values in closes that window — the cost is one small read
-    * per `_seq` file per stamp (round-16 verdict #5). Readers needing a
-    * hard guarantee still use the writer's fence slot. Used by the
-    * two-root hybrid read's opt-in one-epoch mode
-    * ([[graft.operators.Hybrid]]). */
-  def versionStamp(spark: SparkSession, rootPath: String): Map[String, (Long, Long)] = {
-    val root = new Path(rootPath)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) return Map.empty
-    val out = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    for (s <- fs.listStatus(root)) {
-      out(s.getPath.getName) = (s.getModificationTime, s.getLen)
-      if (s.isDirectory)
-        // a child can vanish mid-listing when a swap races this stamp —
-        // skipping it is safe: the rename that removed it also moved the
-        // parent's mtime, so the two stamps around that read differ anyway
-        try for (c <- fs.listStatus(s.getPath))
-          out(s"${s.getPath.getName}/${c.getPath.getName}") =
-            (c.getModificationTime, c.getLen)
-        catch { case _: java.io.FileNotFoundException => }
-    }
-    for (k <- out.keys.toSeq if k == "_seq" || k.endsWith("/_seq"))
-      try {
-        val in = fs.open(new Path(root, k))
-        val v = (try new String(in.readAllBytes(), "UTF-8").trim
-          finally in.close()).toLong
-        out(s"$k#value") = (v, v)
-      } catch { case _: Throwable => } // racing swap: the mtime entries
-        // around that commit differ anyway
-    out.toMap
-  }
-
+  /** The live bucket dirs under a state root, healed first (see
+    * [[liveBucketsUncached]]) and served from the token-checked cache
+    * ([[cached]]). A hit may skip the heal pass safely: a torn swap
+    * implies a commit whose pre-incremented `_seq` already moved the
+    * token. */
   def liveBuckets(spark: SparkSession, rootPath: String,
-                  prefix: String = "b="): Seq[String] = {
-    val cacheKey = (rootPath, prefix)
-    if (!commitsInFlight.contains(rootPath)) {
-      val fs = fsOf(spark, new Path(rootPath))
-      listingToken(fs, rootPath) match {
-        case Some(token) =>
-          val hit = listingCache.get(cacheKey)
-          if (hit != null && hit._1 == token) return hit._2
-          val listed = liveBucketsUncached(spark, rootPath, prefix)
-          // seqlock fill: cache only if the token is STILL the one read
-          // before listing — a commit landing mid-listing (other thread/
-          // process) must not pin its half-swapped view under a token
-          // that will still validate afterwards
-          if (listingToken(fs, rootPath).contains(token))
-            listingCache.put(cacheKey, (token, listed)): Unit
-          return listed
-        case None => // tokenless root (no _seq anywhere): never cached
-      }
-    }
-    liveBucketsUncached(spark, rootPath, prefix)
-  }
+                  prefix: String = "b="): Seq[String] =
+    cached(spark, rootPath, s"liveBuckets:$prefix")(
+      liveBucketsUncached(spark, rootPath, prefix))
 
-  /** Cross-batch/-query reuse of bucket listings (round-17 verdict #2):
-    * [[liveBuckets]] re-listed its root on every pruned read — several
-    * times per gate batch and per maintained query — although the listing
-    * can only change when a commit lands, and every commit in this store
-    * moves a `_seq` counter ([[bumpSeq]]: commitBuckets inside the root,
-    * whole-subroot commit in the root's parent) AND renames entries under
-    * the root (root mtime). The cache token is (root mtime+len, root
-    * `_seq`, parent `_seq`): any completed commit changes at least one
-    * component, so a token match proves the listing unchanged — one
-    * getFileStatus + ≤2 small `_seq` reads instead of two listStatus
-    * sweeps per call (an RPC-priced saving on a real DFS; a job-path
-    * constant locally). A hit may skip the heal pass safely: a torn swap
-    * implies a commit whose pre-incremented `_seq` already invalidated
-    * the token. Same-process commits additionally bypass and purge the
-    * cache while in flight ([[commitsInFlight]]) — the bump-before-swap
-    * window would otherwise let a racing reader cache the pre-swap
-    * listing under the post-bump token. Cross-process writers during a
-    * read are outside the store's single-writer contract (readers racing
-    * a swap already only get abort-and-retry semantics). Roots that have
-    * never committed through this store (no `_seq` anywhere) are never
-    * cached. */
-  private val listingCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Seq[String])]()
-  private val commitsInFlight =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def seqValueOf(fs: FileSystem, dir: Path): String = try {
-    val marker = new Path(dir, "_seq")
-    if (!fs.exists(marker)) "-"
-    else {
-      val in = fs.open(marker)
-      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-    }
-  } catch { case _: Throwable => "?" } // mid-rename of the marker itself:
-  // treated as uncacheable by listingToken — two "?" reads must not alias
-
-  private def listingToken(fs: FileSystem, rootPath: String): Option[String] = try {
+  /** The change token of a state root: its (mtime, len), its own `_seq`
+    * and its parent's `_seq`. Every [[commit]] and [[commitBuckets]]
+    * bumps the counter in the root it writes AND in that root's parent,
+    * so the token changes on any commit to the root, to its buckets, or
+    * to a direct subroot; the mtime covers renames under the root. Equal
+    * tokens therefore bracket an unchanged root. None — never equal to
+    * anything — when the root is missing, has no counter in reach (it
+    * never committed through this store), a marker is mid-rename, or a
+    * same-process commit on the root or one of its children is in
+    * flight (the bump-before-swap window). Cross-process writers during
+    * a read are outside the store's single-writer contract. */
+  private[graft] def stateToken(spark: SparkSession, rootPath: String): Option[Token] = {
     val root = new Path(rootPath)
-    if (!fs.exists(root)) return None
-    val st = fs.getFileStatus(root)
-    val own = seqValueOf(fs, root)
-    val parent = Option(root.getParent).map(seqValueOf(fs, _)).getOrElse("-")
-    if (own == "?" || parent == "?") None // racing marker write: uncacheable
-    else if (own == "-" && parent == "-") None // no counter anywhere
-    else Some(s"${st.getModificationTime}:${st.getLen}:$own:$parent")
-  } catch { case _: Throwable => None }
-
-  /** Purge cached listings for a root and mark a commit in flight there —
-    * bracketed by [[commit]]/[[commitBuckets]]. */
-  private def beginCommit(rootPath: String): Unit = {
-    commitsInFlight.add(rootPath): Unit
-    listingCache.keySet.removeIf(_._1 == rootPath): Unit
-  }
-  private def endCommit(rootPath: String): Unit = {
-    listingCache.keySet.removeIf(_._1 == rootPath): Unit
-    commitsInFlight.remove(rootPath): Unit
+    if (inFlight.containsKey(root.toString)) None
+    else try {
+      val fs = fsOf(spark, root)
+      val st = fs.getFileStatus(root)
+      val own = readSeq(fs, root)
+      val parent = Option(root.getParent).fold(0L)(readSeq(fs, _))
+      if (own == 0L && parent == 0L) None
+      else Some(Token(st.getModificationTime, st.getLen, own, parent))
+    } catch {
+      // the root vanished mid-read, or a `_seq` marker is being replaced
+      case _: IOException | _: NumberFormatException => None
+    }
   }
 
-  /** The root's current change token — (mtime, len, own `_seq`, parent
-    * `_seq`) — or None when the root cannot be tokenized (missing, no
-    * `_seq` anywhere, a racing marker write, or a same-process commit in
-    * flight). Every completed commit through this store changes at least
-    * one component (see [[liveBuckets]]'s cache argument), so two equal
-    * tokens bracket an unchanged root: the seam for `_seq`-stamped
-    * derived-value caches (round-17 verdict #4). */
-  private[graft] def stateToken(spark: SparkSession, rootPath: String): Option[String] =
-    if (commitsInFlight.contains(rootPath)) None
-    else listingToken(fsOf(spark, new Path(rootPath)), rootPath)
+  private[graft] final case class Token(mtime: Long, len: Long, seq: Long,
+                                        parentSeq: Long)
 
-  private[graft] def liveBucketsUncached(spark: SparkSession, rootPath: String,
-                                         prefix: String = "b="): Seq[String] = {
+  /** The one cache over state roots: `compute`'s value for `(rootPath,
+    * key)`, reused while the root's [[stateToken]] is unchanged. `key`
+    * must name every parameter the value depends on besides the root's
+    * committed content. Seqlock fill: the token is read before the
+    * compute and the value is stored only if the token is still the
+    * same afterwards, so a commit landing mid-compute can never pin its
+    * half-swapped view. Tokenless roots and roots with a same-process
+    * commit in flight bypass the cache. Values are driver-side metadata
+    * (listings, collected statistics rows), shared across sessions:
+    * they describe files, not a session's plans. */
+  private[streaming] def cached[T](spark: SparkSession, rootPath: String, key: String)
+                                  (compute: => T): T =
+    stateToken(spark, rootPath) match {
+      case None => compute
+      case Some(token) =>
+        val k = (new Path(rootPath).toString, key)
+        val hit = cache.get(k)
+        if (hit != null && hit._1 == token) hit._2.asInstanceOf[T]
+        else {
+          val value = compute
+          if (stateToken(spark, rootPath).contains(token)) cache.put(k, (token, value)): Unit
+          value
+        }
+    }
+
+  private val cache =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), (Token, Any)]()
+
+  /** In-flight commit count per path: a commit fences the root it writes
+    * and that root's parent (both tokens move under it), and sibling
+    * roots committed in parallel share the parent. */
+  private val inFlight =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
+
+  /** The paths a commit to `p` fences: `p` and its parent. */
+  private def fenceOf(p: Path): Seq[String] =
+    p.toString +: Option(p.getParent).map(_.toString).toSeq
+
+  private def purge(path: String): Unit =
+    cache.keySet.removeIf(_._1 == path): Unit
+
+  private def beginCommit(paths: Seq[String]): Unit = paths.foreach { p =>
+    inFlight.merge(p, 1, (a, b) => Integer.valueOf(a + b))
+    purge(p)
+  }
+
+  private def endCommit(paths: Seq[String]): Unit = paths.foreach { p =>
+    purge(p)
+    inFlight.computeIfPresent(p, (_, n) => if (n == 1) null else Integer.valueOf(n - 1))
+  }
+
+  /** Heal every bucket under a bucketed state root (promote interrupted
+    * per-bucket swaps) and return the live bucket directory names.
+    * `prefix` selects the partition naming scheme — `b=` for the
+    * hash-bucketed merges, `cell=` for the IVF index's cell layout. */
+  private def liveBucketsUncached(spark: SparkSession, rootPath: String,
+                                  prefix: String): Seq[String] = {
     val root = new Path(rootPath)
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return Seq.empty

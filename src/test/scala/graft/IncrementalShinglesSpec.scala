@@ -797,6 +797,46 @@ class IncrementalShinglesSpec extends SparkSpec {
         s"reading its posting list, got candidates $skipped")
   }
 
+  test("overlapping gate calls leave the session's AQE and shuffle-width conf as they were") {
+    // Two gate calls on ONE session, forced to overlap deterministically:
+    // gate A's sketch task waits until gate B's sketch task is running,
+    // and B's waits until A has returned. A save/restore bracket on the
+    // session conf would interleave (A sets, B saves A's value, A
+    // restores, B restores A's value) and leave AQE off; every read of
+    // the caller's conf — from inside both sketch tasks and afterwards —
+    // must see the values from before the gates.
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val spKey = "spark.sql.shuffle.partitions"
+    def confNow(): (Option[String], Option[String]) =
+      (spark.conf.getOption(aqeKey), spark.conf.getOption(spKey))
+    val before = confNow()
+    val root = Files.createTempDirectory("graft_shgate").toString + "/shingles"
+    merge(root, DocChange("1", 0, "put", "merge sort spill aa bb cc dd"))
+    GateOverlap.reset()
+    val hook = udf((t: String) => GateOverlap.pass(t))
+    def batch(tag: String): DataFrame =
+      Seq(DocChange(tag, 10, "put", s"$tag novel words here now"))
+        .toDF().withColumn("text", hook(col("text")))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def gate(tag: String) = Future(
+      IncrementalShingles.gateDecisions(spark, root, batch(tag), threshold = 0.5)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+    val a = gate("gatea")
+    assert(GateOverlap.aStarted.await(5, java.util.concurrent.TimeUnit.MINUTES),
+      "gate A's sketch task never ran")
+    val b = gate("gateb")
+    val va = Await.result(a, 10.minutes)
+    GateOverlap.aDone.countDown()
+    val vb = Await.result(b, 10.minutes)
+    assert(GateOverlap.overlapped, "the two sketch phases did not overlap")
+    assert(va === Map("gatea" -> "admitted") && vb === Map("gateb" -> "admitted"))
+    assert(GateOverlap.seen.toArray.toSet === Set(before),
+      "the caller's conf changed while a gate's sketch ran")
+    assert(confNow() === before)
+  }
+
   private def snapshot(base: String): Map[String, Map[String, String]] = {
     val dirs = new java.io.File(base).listFiles().filter(d =>
       d.isDirectory && d.getName.startsWith("b=")).map(_.getName)
@@ -807,5 +847,36 @@ class IncrementalShinglesSpec extends SparkSpec {
           .map("%02x".format(_)).mkString
       }.toMap
     }.toMap
+  }
+}
+
+/** Latches that force two gate calls' sketch tasks to overlap (see the
+  * conf-isolation test). A UDF on the batch text calls [[pass]]; tasks
+  * run in this JVM (local master), so the object is shared. Each call
+  * records the caller session's AQE and shuffle-width conf as seen while
+  * the sketch runs. */
+object GateOverlap {
+  import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+  @volatile var aStarted, bStarted, aDone: CountDownLatch = _
+  @volatile var overlapped = false
+  val seen = new ConcurrentLinkedQueue[(Option[String], Option[String])]()
+
+  def reset(): Unit = {
+    aStarted = new CountDownLatch(1); bStarted = new CountDownLatch(1)
+    aDone = new CountDownLatch(1); overlapped = false; seen.clear()
+  }
+
+  def pass(text: String): String = {
+    val conf = SparkSpec.spark.conf
+    seen.add((conf.getOption("spark.sql.adaptive.enabled"),
+      conf.getOption("spark.sql.shuffle.partitions")))
+    if (text.startsWith("gatea")) {
+      aStarted.countDown()
+      overlapped = bStarted.await(5, TimeUnit.MINUTES)
+    } else if (text.startsWith("gateb")) {
+      bStarted.countDown()
+      aDone.await(5, TimeUnit.MINUTES): Unit
+    }
+    text
   }
 }

@@ -24,6 +24,29 @@ class IvfIndexSpec extends SparkSpec {
     Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
       .head().getSeq[Float](1)
 
+  /** The file scans of `df`'s executed plan (AQE stages included). */
+  private def scans(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    Plans.collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+  }
+
+  /** The directories `df`'s file scans list. */
+  private def scannedDirs(df: org.apache.spark.sql.DataFrame): Set[String] =
+    scans(df).flatMap(_.relation.location.rootPaths.map(_.getName)).toSet
+
+  /** The `cell=` directories a probe of `probes` cells must read: the
+    * cells ranked by query·centroid, as the search ranks them. */
+  private def probedCells(p: String, q: Seq[Float], probes: Int): Set[String] =
+    IvfIndex.centroids(spark, p)
+      .withColumn("csim", aggregate(
+        zip_with(col("cent"), typedlit(q), (x, y) => x * y.cast("double")),
+        lit(0.0), (acc, v) => acc + v))
+      .orderBy(col("csim").desc, col("cell")).limit(probes)
+      .collect().map(r => s"cell=${r.getInt(0)}").toSet
+
   test("every vector lands in exactly one cell; all cells within range") {
     val e = Tables.embeddings(spark, dir)
     val stored = spark.read.parquet(path + "/vectors")
@@ -53,13 +76,11 @@ class IvfIndexSpec extends SparkSpec {
     val totalFiles = spark.read.parquet(path + "/vectors").inputFiles.length
     val probedDf = IvfIndex.search(spark, path, query, k = 10, probes = 2)
     probedDf.collect() // materialize so scan metrics are populated
-    // the cell predicate must prune at the partition level, not post-scan
-    val plan = probedDf.queryExecution.executedPlan
-    assert(plan.toString.contains("PartitionFilters: [cell"), plan.toString)
-    val filesRead = plan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.metrics("numFiles").value
-    }.sum
+    // the probe prunes BEFORE file listing: the executed scan is an
+    // explicit-directory read of exactly the probed cells' directories
+    assert(scannedDirs(probedDf) === probedCells(path, query, 2),
+      probedDf.queryExecution.executedPlan.toString)
+    val filesRead = scans(probedDf).map(_.metrics("numFiles").value).sum
     assert(filesRead > 0 && filesRead < totalFiles,
       s"probe read $filesRead of $totalFiles files")
     // and every hit comes from a probed cell
@@ -430,19 +451,15 @@ class IvfIndexSpec extends SparkSpec {
     assert(rows.map(_.getLong(0)).toSeq === (6L to 9L),
       "k must FILL with the best matching vectors of the probed cell")
     // the predicate composed with the probe still opens ONLY the probed
-    // cell's files (partition pruning survives the metadata filter), and
-    // the predicate itself reaches the scan as a pushed data filter
+    // cell's directory (the explicit-directory read survives the metadata
+    // filter), and the predicate itself reaches the scan as a pushed data
+    // filter
     val plan = filtered.queryExecution.executedPlan
-    val partFilters = plan.toString.split("PartitionFilters: \\[")
-      .drop(1).map(_.takeWhile(_ != ']')).mkString(";")
-    assert(partFilters.contains("cell"), plan.toString)
+    assert(scannedDirs(filtered) === probedCells(p, q, 1), plan.toString)
     assert(plan.toString.contains("PushedFilters: [IsNotNull(grp), EqualTo(grp,cold)"),
       plan.toString)
     val totalFiles = spark.read.parquet(p + "/vectors").inputFiles.length
-    val filesRead = plan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.metrics("numFiles").value
-    }.sum
+    val filesRead = scans(filtered).map(_.metrics("numFiles").value).sum
     assert(filesRead > 0 && filesRead < totalFiles,
       s"filtered probe read $filesRead of $totalFiles files")
     // probing every cell + predicate == exact brute-force filtered top-k

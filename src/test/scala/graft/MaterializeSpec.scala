@@ -39,6 +39,23 @@ class MaterializeSpec extends SparkSpec {
       "untouched scope must keep serving its cached instance")
   }
 
+  test("a fixture builds once per key, survives invalidate(scope), and reset deletes its dir") {
+    var builds = 0
+    def get(): String = Materialize.fixture(spark, "m_fix", "scopeF") { tmp =>
+      builds += 1
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(tmp, "state"), "x")
+      tmp
+    }
+    val dir = get()
+    assert(get() === dir && builds === 1)
+    Materialize.invalidate("scopeF")
+    assert(get() === dir && builds === 1, "invalidate(scope) must not drop a fixture")
+    Materialize.reset(spark)
+    assert(!new java.io.File(dir).exists, "reset must delete the fixture's temp dir")
+    assert((get() !== dir) && builds === 2, "a freed fixture rebuilds on the next request")
+    Materialize.reset(spark)
+  }
+
   test("invalidate(name, scope) drops exactly that artifact") {
     val a = Materialize.artifact(spark, "m_c", "scopeZ")(build(4))
     val b = Materialize.artifact(spark, "m_d", "scopeZ")(build(5))
