@@ -69,8 +69,7 @@ object RecallProbe {
     // distribution shift: the index's content turns over, its quantizer
     // doesn't — delete the originals, upsert the clustered corpus
     val corpus = clustered(spark).localCheckpoint()
-    graft.operators.IvfIndex.delete(spark, root, orig.select("vec_id"))
-    graft.operators.IvfIndex.upsert(spark, root, corpus)
+    graft.operators.IvfIndex.applyChanges(spark, root, corpus, orig.select("vec_id"))
 
     val qs = corpus.filter(col("vec_id") % 625 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))

@@ -42,11 +42,19 @@ object IvfIndex {
 
   /** Nearest-cell assignment of every vector against the (broadcast)
     * centroid table: one narrow pass, top-1 per vector via
-    * WindowGroupLimit (no global sort). */
-  private def assign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
+    * WindowGroupLimit (no global sort). `withCount` adds `n`, the number
+    * of `vectors` rows carrying the row's vec_id (the cross join gives
+    * every input row one row per cell, so the count per (vec_id, cell) is
+    * that multiplicity): a duplicate-id check that rides the assignment's
+    * own vec_id exchange. */
+  private def assign(vectors: DataFrame, centroids: DataFrame,
+                     withCount: Boolean = false): DataFrame = {
     val w = Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cell"))
-    vectors.crossJoin(broadcast(centroids))
+    val scored = vectors.crossJoin(broadcast(centroids))
       .withColumn("sim", dotDD(col("cent"), col("embedding")))
+    (if (withCount)
+      scored.withColumn("n", count(lit(1)).over(Window.partitionBy(col("vec_id"), col("cell"))))
+    else scored)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn", "sim", "cent")
@@ -89,7 +97,7 @@ object IvfIndex {
   // cell-partitioned vector files: parquet's columnar layout makes the
   // ADC scan read only (vec_id, codes) pages — the compression benefit —
   // while the codes stay transactionally glued to their vectors (every
-  // cell swap [[upsert]]/[[delete]] commits carries both, so the sidecar
+  // cell swap [[applyChanges]] commits carries both, so the sidecar
   // can never describe a different generation than the data, the failure
   // mode a codes-directory-next-to-the-vectors design would have to fence).
   // The codebooks are trained once at [[build]]/[[enablePq]] and FROZEN
@@ -336,29 +344,56 @@ object IvfIndex {
     * TRAINED centroids (the quantizer is not retrained — the standard IVF
     * maintenance contract; drifted distributions call for a rebuild), then
     * read + rewrite ONLY the touched cells, replacing rows by vec_id.
+    * One [[applyChanges]] pass with no deletes. */
+  def upsert(spark: SparkSession, path: String, vectors: DataFrame): Unit =
+    changePass(spark, path, Some(vectors), None)
+
+  /** Remove vectors by id — the changelog-delete half of incremental
+    * maintenance ([[upsert]] being the put half). Ids absent from the
+    * index are ignored (deletes of never-indexed or already-deleted keys
+    * are no-ops, the changelog contract); a call that removes nothing
+    * commits nothing. `vecIds` is a one-column (vec_id) frame. One
+    * [[applyChanges]] pass with no puts. */
+  def delete(spark: SparkSession, path: String, vecIds: DataFrame): Unit =
+    changePass(spark, path, None, Some(vecIds))
+
+  /** Upsert `puts` (vec_id, embedding[, attrs]) and delete `deletes`
+    * (vec_id) in ONE pass over the touched state — the form a changelog
+    * batch takes, and what [[upsert]] and [[delete]] call:
     *
-    * "Touched" must include the cells holding the upserted ids' OLD
-    * copies: an updated embedding can re-assign its vec_id to a different
-    * cell, and the cell — unlike the changelog merges' rowkey bucket — is
-    * a function of the (changed) embedding, not the key. The id→cell
-    * sidecar map locates those old cells by reading only the id buckets
-    * the batch's vec_ids hash to. Commit order is cells first, ids
-    * second: a replay with the OLD id map still sees the old cells as
-    * touched and re-clears them (idempotent); the reverse order would
-    * lose track of a stale copy. */
-  def upsert(spark: SparkSession, path: String, vectors: DataFrame): Unit = {
-    heal(spark, path)
-    val vecRoot = path + "/vectors"
-    val idsRoot = path + "/ids"
-    // Fail loudly on an index whose id map is absent while vectors exist
-    // (a pre-sidecar layout, or a build that crashed between its writes):
-    // upserting against an empty map would stop clearing moved vectors'
-    // old copies — the silent-duplication bug the map exists to prevent.
-    val liveIds = StateStore.liveBuckets(spark, idsRoot).toSet
-    if (liveIds.isEmpty && StateStore.liveBuckets(spark, vecRoot, "cell=").nonEmpty)
-      throw new IllegalStateException(
-        s"index at $path has vectors but no id map — rebuild it with IvfIndex.build")
-    StateStore.ensureBucketCount(spark, idsRoot, IdBuckets)
+    *   1. one collect of the touched (cell, id-bucket) pairs: the puts'
+    *      cells from the trained centroids, the deletes' id buckets; the
+    *      duplicate-put check and the put/delete overlap check ride the
+    *      same aggregate;
+    *   2. one id-map read — ONLY the id buckets the changed ids hash to —
+    *      finds the cells holding the changed ids' OLD copies (an updated
+    *      embedding can re-assign its vec_id to a different cell: the
+    *      cell, unlike the changelog merges' rowkey bucket, is a function
+    *      of the embedding, not the key);
+    *   3. one read of the touched cells, anti-joined on every changed id
+    *      and unioned with the (PQ-encoded, when the root carries
+    *      codebooks) puts;
+    *   4. one commit of the cells, then one commit of the id buckets.
+    *
+    * Per-call I/O is O(touched id buckets + touched cells), never the
+    * index. Commit order is cells first, ids second: a replay with the OLD
+    * id map still sees the old cells as touched and re-clears them
+    * (idempotent); the reverse order would lose track of a stale copy. A
+    * cell or id bucket left empty is removed
+    * ([[graft.streaming.StateStore.swapIn]]'s missing-tmp path).
+    *
+    * A vec_id appearing twice among the puts, or among both the puts and
+    * the deletes, fails loudly before any write: the pass has no order
+    * between its puts and its deletes, so such a batch has no meaning
+    * (resolve the changelog to its latest event per id first). */
+  def applyChanges(spark: SparkSession, path: String, puts: DataFrame,
+                   deletes: DataFrame): Unit =
+    changePass(spark, path, Some(puts), Some(deletes))
+
+  /** Reject a put batch that lacks the root's attribute columns or
+    * contradicts their stored types; returns the attribute names. */
+  private def checkedAttrs(spark: SparkSession, path: String,
+                           vectors: DataFrame): Seq[String] = {
     // an attribute-carrying root requires every batch to carry its attrs
     // (`_attrs` marker, [[build]]): silently writing rows WITHOUT them
     // would leave cell files whose schemas disagree, and a later filtered
@@ -388,132 +423,110 @@ object IvfIndex {
             s"contradicts [${diverged.mkString("; ")}] — cell files must " +
             "never disagree on a column's type")
       }
-    // cache the batch: the duplicate check and assign() both consume it,
-    // and the caller's frame may be expensive
-    val batch = vectors.select(
-      (Seq("vec_id", "embedding") ++ attrs).map(col): _*).cache()
-    require(batch.groupBy("vec_id").count().filter(col("count") > 1).isEmpty,
-      "upsert batch contains duplicate vec_ids — resolve to one embedding per id first")
-    val assigned = assign(batch, centroids(spark, path)).cache()
-    try {
-      // one job yields both touched-cell and touched-id-bucket sets (and
-      // materializes `assigned` while `batch` is still cached)
-      val cellAndIdB = assigned.select(col("cell"), idBucket.as("ib"))
-        .distinct().collect()
-      val newCells = cellAndIdB.map(_.getInt(0)).distinct
-      if (newCells.isEmpty) return
-      val idB = cellAndIdB.map(_.getInt(1)).distinct.sorted
-      val idDirs = idB.toSeq.map(b => s"b=$b")
-      val oldIdPaths = idDirs.filter(liveIds.contains).map(d => s"$idsRoot/$d")
-      val oldIds =
-        if (oldIdPaths.nonEmpty) spark.read.parquet(oldIdPaths: _*)
-        else assigned.select(col("vec_id"), col("cell")).limit(0)
-      val oldCells = oldIds
-        .join(broadcast(assigned.select(col("vec_id").as("upserted"))),
-          col("vec_id") === col("upserted"))
-        .select("cell").distinct().collect().map(_.getInt(0))
-
-      val touched = (newCells ++ oldCells).distinct.sorted
-      val live = StateStore.liveBuckets(spark, vecRoot, "cell=").toSet
-      val dirs = touched.toSeq.map(c => s"cell=$c")
-      val oldPaths = dirs.filter(live.contains).map(d => s"$vecRoot/$d")
-      // PQ maintenance rides the same cell rewrite: encode the batch
-      // against the FROZEN codebooks so the rewritten cells' codes column
-      // stays a pure function of their vectors ([[delete]] needs no
-      // counterpart — kept rows carry their codes through the rewrite)
-      val upserted = codebooksOpt(spark, path)
-        .map(encode(assigned, _)).getOrElse(assigned)
-      val old =
-        if (oldPaths.nonEmpty)
-          spark.read.option("basePath", vecRoot).parquet(oldPaths: _*)
-        else upserted.limit(0)
-      val merged = old
-        .join(broadcast(assigned.select(col("vec_id").as("upserted"))),
-          col("vec_id") === col("upserted"), "left_anti")
-        .unionByName(upserted)
-        .repartition(col("cell")) // one file per rewritten cell dir
-        .cache()
-      val newIds = oldIds
-        .join(broadcast(assigned.select(col("vec_id").as("upserted"))),
-          col("vec_id") === col("upserted"), "left_anti")
-        .unionByName(assigned.select(col("vec_id"), col("cell")))
-        .withColumn("b", idBucket)
-        .repartition(col("b"))
-        .cache()
-      merged.count(); newIds.count() // decouple from the files before the swaps
-      try {
-        StateStore.commitBuckets(spark, vecRoot, dirs) { tmpRoot =>
-          merged.write.partitionBy("cell").mode("overwrite").parquet(tmpRoot)
-        }
-        StateStore.commitBuckets(spark, idsRoot, idDirs) { tmpRoot =>
-          newIds.write.partitionBy("b").mode("overwrite").parquet(tmpRoot)
-        }
-      } finally { merged.unpersist(); newIds.unpersist(): Unit }
-    } finally { assigned.unpersist(); batch.unpersist(): Unit }
+    attrs
   }
 
-  /** Remove vectors by id — the changelog-delete half of incremental
-    * maintenance ([[upsert]] being the put half): the id→cell sidecar
-    * locates each id's current cell by reading ONLY the id buckets the ids
-    * hash to, the touched cells are rewritten without those rows, and the
-    * id buckets are rewritten without the ids. Per-call I/O is O(touched
-    * id buckets + touched cells), never the index. Commit order is cells
-    * first, ids second — [[upsert]]'s exact argument: a crash-replay with
-    * the OLD id map re-finds the same cells and the anti-joins no-op, so
-    * replaying a completed (or half-committed) delete converges. Ids absent from the
-    * index are ignored (deletes of never-indexed or already-deleted keys
-    * are no-ops, the changelog contract). A cell or id bucket left empty
-    * is removed ([[graft.streaming.StateStore.swapIn]]'s missing-tmp
-    * path). `vecIds` is a one-column (vec_id) frame; only its distinct
-    * BUCKET ids (≤ [[IdBuckets]]) are collected. */
-  def delete(spark: SparkSession, path: String, vecIds: DataFrame): Unit = {
+  private def changePass(spark: SparkSession, path: String,
+                         puts: Option[DataFrame],
+                         deletes: Option[DataFrame]): Unit = {
     heal(spark, path)
     val vecRoot = path + "/vectors"
     val idsRoot = path + "/ids"
+    // Fail loudly on an index whose id map is absent while vectors exist
+    // (a pre-sidecar layout, or a build that crashed between its writes):
+    // maintaining it against an empty map would stop clearing moved or
+    // deleted vectors' copies — the silent duplication the map prevents.
     val liveIds = StateStore.liveBuckets(spark, idsRoot).toSet
-    if (liveIds.isEmpty) {
-      if (StateStore.liveBuckets(spark, vecRoot, "cell=").nonEmpty)
-        throw new IllegalStateException(
-          s"index at $path has vectors but no id map — rebuild it with IvfIndex.build")
-      return // empty index: nothing to delete
-    }
-    val ids = vecIds.select(col("vec_id")).distinct().cache()
+    if (liveIds.isEmpty && StateStore.liveBuckets(spark, vecRoot, "cell=").nonEmpty)
+      throw new IllegalStateException(
+        s"index at $path has vectors but no id map — rebuild it with IvfIndex.build")
+    if (puts.isEmpty && liveIds.isEmpty) return // nothing indexed to delete
+    if (puts.isDefined) StateStore.ensureBucketCount(spark, idsRoot, IdBuckets)
+    val attrs = puts.map(checkedAttrs(spark, path, _)).getOrElse(Nil)
+    // cached: the collect below, the id anti-joins and the rewrites all
+    // consume them, and the caller's frames may be expensive
+    val counted = puts.map(p => assign(p.select(
+      (Seq("vec_id", "embedding") ++ attrs).map(col): _*), centroids(spark, path),
+      withCount = true).cache())
+    val assigned = counted.map(_.drop("n"))
+    val dels = deletes.map(_.select(col("vec_id")).cache())
+    val changedIds = (assigned.toSeq ++ dels).map(_.select("vec_id"))
+      .reduce(_ unionByName _).select(col("vec_id").as("changed"))
+    def notChanged(df: DataFrame): DataFrame =
+      df.join(broadcast(changedIds), col("vec_id") === col("changed"), "left_anti")
     try {
-      val idB = ids.select(idBucket.as("b")).distinct().collect().map(_.getInt(0)).sorted
-      val idDirs = idB.toSeq.map(b => s"b=$b").filter(liveIds.contains)
-      if (idDirs.isEmpty) return // ids hash only to absent buckets: not indexed
-      val oldIds = spark.read.parquet(idDirs.map(d => s"$idsRoot/$d"): _*)
-      val cells = oldIds.join(broadcast(ids), "vec_id")
-        .select("cell").distinct().collect().map(_.getInt(0)).sorted
-      if (cells.isEmpty) return // none of the ids is indexed
+      // ONE collect: per changed id its put count, delete flag and new
+      // cell, folded to the distinct (cell, id-bucket) pairs and the two
+      // batch checks — at most (nlist + 1) × IdBuckets × 4 rows
+      val touched = (counted.map(_.select(col("vec_id"), col("cell"),
+            col("n").as("np"), lit(0L).as("nd"))).toSeq ++
+          dels.map(_.select(col("vec_id"), lit(null).cast("int").as("cell"),
+            lit(0L).as("np"), lit(1L).as("nd"))))
+        .reduce(_ unionByName _)
+        .groupBy("vec_id")
+        .agg(max(col("np")).as("np"), max(col("nd")).as("nd"), max(col("cell")).as("cell"))
+        .select(col("cell"), idBucket.as("ib"),
+          (col("np") > 1).as("dup"), (col("np") > 0 && col("nd") > 0).as("both"))
+        .distinct().collect()
+      require(!touched.exists(_.getBoolean(2)),
+        "upsert batch contains duplicate vec_ids — resolve to one embedding per id first")
+      require(!touched.exists(_.getBoolean(3)),
+        "a vec_id is both upserted and deleted in one change set — " +
+          "resolve the changelog to the latest event per id first")
+      val putRows = touched.filterNot(_.isNullAt(0))
+      val newCells = putRows.map(_.getInt(0)).distinct
+      // the id buckets to rewrite: every live one a changed id hashes to,
+      // and every one a put lands in
+      val putIdDirs = putRows.map(r => s"b=${r.getInt(1)}").toSet
+      val idDirs = touched.map(_.getInt(1)).distinct.sorted.toSeq.map(b => s"b=$b")
+        .filter(d => liveIds.contains(d) || putIdDirs.contains(d))
+      val oldIdPaths = idDirs.filter(liveIds.contains).map(d => s"$idsRoot/$d")
+      // no put, and every deleted id hashes to an absent bucket: not indexed
+      if (newCells.isEmpty && oldIdPaths.isEmpty) return
+      // (no old id paths implies puts, so `assigned` is defined there)
+      val oldIds =
+        if (oldIdPaths.nonEmpty) spark.read.parquet(oldIdPaths: _*)
+        else assigned.get.select(col("vec_id"), col("cell")).limit(0)
+      val oldCells = oldIds.join(broadcast(changedIds), col("vec_id") === col("changed"))
+        .select("cell").distinct().collect().map(_.getInt(0))
+      if (newCells.isEmpty && oldCells.isEmpty) return // no deleted id is indexed
+      // a cell listed by the id map but already gone on disk is a replay
+      // of a pass that crashed between its two commits: skip its read and
+      // its rewrite, still rewrite the id buckets so the map catches up
       val live = StateStore.liveBuckets(spark, vecRoot, "cell=").toSet
-      // a cell listed by the sidecar but already gone on disk is a replay
-      // of a delete that crashed between its two commits — skip the read,
-      // still rewrite the id buckets below so the map catches up
-      val dirs = cells.toSeq.map(c => s"cell=$c").filter(live.contains)
-      val newIds = oldIds.join(broadcast(ids), Seq("vec_id"), "left_anti")
+      val liveDirs = (newCells ++ oldCells).distinct.sorted.toSeq
+        .map(c => s"cell=$c").filter(live.contains)
+      val dirs = (newCells.toSeq.map(c => s"cell=$c") ++ liveDirs).distinct.sorted
+      // PQ maintenance rides the same cell rewrite: encode the puts
+      // against the FROZEN codebooks so the rewritten cells' codes column
+      // stays a pure function of their vectors (kept rows carry their
+      // codes through the rewrite)
+      val upserted = assigned.map(a =>
+        codebooksOpt(spark, path).map(encode(a, _)).getOrElse(a))
+      val kept =
+        if (liveDirs.nonEmpty)
+          Some(notChanged(spark.read.option("basePath", vecRoot)
+            .parquet(liveDirs.map(d => s"$vecRoot/$d"): _*)))
+        else None
+      // checkpointed: decoupled from the files before the swaps replace
+      // them; one file per rewritten cell dir / id bucket
+      val merged = (kept.toSeq ++ upserted).reduceOption(_ unionByName _)
+        .map(_.repartition(col("cell")).localCheckpoint())
+      val newIds = (Seq(notChanged(oldIds)) ++
+          assigned.map(_.select(col("vec_id"), col("cell"))))
+        .reduce(_ unionByName _)
         .withColumn("b", idBucket)
-        .repartition(col("b")) // one file per rewritten id bucket
-        .cache()
-      try {
-        if (dirs.nonEmpty) {
-          val kept = spark.read.option("basePath", vecRoot)
-            .parquet(dirs.map(d => s"$vecRoot/$d"): _*)
-            .join(broadcast(ids), Seq("vec_id"), "left_anti")
-            .repartition(col("cell")) // one file per rewritten cell dir
-            .cache()
-          try {
-            kept.count(); newIds.count() // decouple from the files before the swaps
-            StateStore.commitBuckets(spark, vecRoot, dirs) { tmpRoot =>
-              kept.write.partitionBy("cell").mode("overwrite").parquet(tmpRoot)
-            }
-          } finally kept.unpersist(): Unit
-        } else newIds.count()
-        StateStore.commitBuckets(spark, idsRoot, idDirs) { tmpRoot =>
-          newIds.write.partitionBy("b").mode("overwrite").parquet(tmpRoot)
-        }
-      } finally newIds.unpersist(): Unit
-    } finally ids.unpersist(): Unit
+        .repartition(col("b"))
+        .localCheckpoint()
+      merged.foreach(m => StateStore.commitBuckets(spark, vecRoot, dirs) { tmpRoot =>
+        m.write.partitionBy("cell").mode("overwrite").parquet(tmpRoot)
+      })
+      StateStore.commitBuckets(spark, idsRoot, idDirs) { tmpRoot =>
+        newIds.write.partitionBy("b").mode("overwrite").parquet(tmpRoot)
+      }
+    } finally {
+      (counted.toSeq ++ dels).foreach(_.unpersist()): Unit
+    }
   }
 
   /** The subset of `vecIds` currently present in the index — answered
@@ -874,7 +887,7 @@ object IvfIndex {
     * actions of the previous shape made this the suite's most
     * job-heavy read (~23 jobs with AQE), and per-job driver overhead —
     * which grows with session state — multiplied through it
-    * (PQ_BATCH_AB_r15.json; IvfPqSpec pins the construction job count).
+    * (records/PQ_BATCH_AB_r15.json; IvfPqSpec pins the construction job count).
     * Dimension validation rides the batch collect, loud and per-qid.
     * Returns (qid LONG, vec_id, cell, sim, rank), rank 1..k. */
   def searchBatchPq(spark: SparkSession, path: String, queries: DataFrame,

@@ -244,7 +244,7 @@ object Percolate {
     * costs one slice allocation + array hash per doc token per registry
     * length — flat-expensive, amortizing only for very large registries.
     * The constant is MEASURED, not chosen (round 15, GramCrossoverProbe,
-    * `GRAM_CROSSOVER_r15.json`, hit-heavy registries — scan-pessimistic):
+    * `records/GRAM_CROSSOVER_r15.json`, hit-heavy registries — scan-pessimistic):
     * the scan won or tied at every size {8, 32, 128, 512} at both 1× and
     * 30× corpus (g512 @30×: scan 5.1 s vs expansion 6.0 s; g32: 1.1 vs
     * 5.7), scan cost growing sublinearly in grams (64× grams → ~8×

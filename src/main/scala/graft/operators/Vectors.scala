@@ -241,12 +241,12 @@ object Vectors {
 
   /** One maintained-IVF fixture per (session, dir): the index BUILT from
     * the corpus, then moved forward through the incremental write surface
-    * — an upsert that re-embeds ids 0–9 with the embedding of id+100
-    * (updates that can move a vector between cells), then deletes of a
-    * modulus sweep (vec_id % 37 == 11) plus id 100 itself (the query
-    * text's twin — its absence from the result is the delete proof; the
-    * upserted id 0 carrying its embedding at sim 1.0 is the upsert
-    * proof). Every mutation is expressible in SQL over the embeddings
+    * — one [[IvfIndex.applyChanges]] pass that re-embeds ids 0–9 with
+    * the embedding of id+100 (updates that can move a vector between
+    * cells) and deletes a modulus sweep (vec_id % 37 == 11) plus id 100
+    * itself (the query text's twin — its absence from the result is the
+    * delete proof; the upserted id 0 carrying its embedding at sim 1.0 is
+    * the upsert proof). Every mutation is expressible in SQL over the embeddings
     * table, so the ORACLE brute-forces the post-maintenance vector set —
     * the oracle gate checks the maintenance arithmetic end to end, while
     * file pruning and crash replay are pinned in IvfIndexSpec. Root is
@@ -264,7 +264,7 @@ object Vectors {
       val root = tmp + "/ivf"
       val e = Tables.embeddings(spark, dir)
       // built WITH PQ so the same fixture proves the codes column rides
-      // the upsert/delete cell rewrites below (q_ann_pq_maintained), and
+      // the upsert+delete cell rewrite below (q_ann_pq_maintained), and
       // WITH the label attribute so the same fixture serves the filtered
       // probe (q_ann_filtered_maintained) — attrs colocate in cell files.
       // PQ iters = 1: this fixture's PQ keys read with a corpus-sized
@@ -284,8 +284,7 @@ object Vectors {
         .filter(col("a.vec_id") < 10)
         .select(col("a.vec_id").as("vec_id"),
           col("b.embedding").as("embedding"), col("a.label").as("label"))
-      IvfIndex.upsert(spark, root, delta)
-      IvfIndex.delete(spark, root,
+      IvfIndex.applyChanges(spark, root, delta,
         e.filter(col("vec_id") % 37 === 11 || col("vec_id") === 100)
           .select("vec_id"))
       val q = e.filter(col("vec_id") === 100).select("embedding", "label").head()

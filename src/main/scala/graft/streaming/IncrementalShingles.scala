@@ -699,6 +699,139 @@ object IncrementalShingles {
       .groupBy("rowkey").agg(min(col("dup_of")).as("dup_of"))
   }
 
+  /** Largest survivor set, in (rowkey, shingle) rows, that the gate's
+    * `score` phase scores on the driver ([[intraBatchDropsLocal]]); a
+    * larger one (a bootstrap's `dedupWithin` over a whole corpus) runs the
+    * distributed [[intraBatchDrops]]. Measured on local[4] against a
+    * 2,000-doc state (records/SCORE_CROSSOVER.json): the driver path is
+    * faster at every size tried — 0.6 s against 2.5 s at 1k docs (53k
+    * rows), 10.6 s against 21.2 s at 16k docs (849k rows) — so the paths
+    * do not cross below 849k rows; the bound keeps a margin under that
+    * and caps the driver memory the survivors take. */
+  private[graft] val LocalScoreMaxRows: Long = 500000L
+
+  /** The gate's `score` phase — which state-pass survivors (rowkey, qs)
+    * to drop within the batch, as (rowkey, dup_of). Each survivor is
+    * flagged as an UPDATE when its rowkey is already live in the state
+    * (a key-fetch against only the batch keys' own doc buckets). At most
+    * `maxLocalRows` (rowkey, shingle) rows: the survivors are collected
+    * once, the flags come from the driver-keyed [[IncrementalPostings
+    * .prunedDocs]] (no bucket-id job), and the pairs are scored on the
+    * driver — two jobs. Above it: the distributed plan, checkpointed so
+    * the final decisions select — the frame the admission log's durable
+    * write executes — is a cheap join of checkpointed batch-bounded
+    * inputs, and `log_commit` measures the write, not a replay of the
+    * scoring plan. Both paths return the same rows. */
+  private[graft] def scoreSurvivors(spark: SparkSession, rootPath: String,
+      survivors: DataFrame, threshold: Double, dfCap: Int,
+      maxLocalRows: Long = LocalScoreMaxRows): DataFrame =
+    boundedRows(survivors, maxLocalRows) match {
+      case Some(rows) =>
+        val keys = rows.map(_._1).toSeq
+        val stored =
+          if (keys.isEmpty) Set.empty[String]
+          else IncrementalPostings.prunedDocs(spark, rootPath, keys)
+            .select("rowkey").collect().map(_.getString(0)).toSet
+        import spark.implicits._
+        intraBatchDropsLocal(rows.toSeq.map { case (k, qs) => (k, qs.toSeq, stored(k)) },
+          threshold, dfCap).toDF("rowkey", "dup_of")
+      case None =>
+        val existing = IncrementalPostings
+          .prunedDocsForKeys(spark, rootPath, survivors.select("rowkey"))
+          .select(col("rowkey"), lit(true).as("exists"))
+        val flagged = survivors.join(existing, Seq("rowkey"), "left_outer")
+          .select(col("rowkey"), col("qs"),
+            coalesce(col("exists"), lit(false)).as("exists"))
+        intraBatchDrops(flagged, threshold, dfCap).localCheckpoint()
+    }
+
+  /** `df`'s (rowkey, qs) rows on the driver when their `qs` sizes total
+    * at most `maxRows`, else None — in ONE job: each partition stops
+    * shipping once its own total passes the bound, so an over-bound set
+    * moves at most (partitions × bound) shingles to the driver. */
+  private def boundedRows(df: DataFrame,
+      maxRows: Long): Option[Array[(String, Array[String])]] = {
+    val parts = df.select("rowkey", "qs").rdd.mapPartitions { it =>
+      var n = 0L
+      val out = Array.newBuilder[(String, Array[String])]
+      while (it.hasNext && n <= maxRows) {
+        val r = it.next()
+        val qs = if (r.isNullAt(1)) Array.empty[String] else r.getSeq[String](1).toArray
+        n += qs.length
+        out += ((r.getString(0), qs))
+      }
+      Iterator.single((n, out.result()))
+    }.collect()
+    if (parts.iterator.map(_._1).sum > maxRows) None
+    else Some(parts.flatMap(_._2))
+  }
+
+  /** [[intraBatchDrops]] computed on the driver for a batch-bounded
+    * survivor set of (rowkey, qs, exists): the same df-capped buckets,
+    * pair counts and per-doc counts over the capped universe, the same
+    * 4-place HALF_UP rounding of the Jaccard (Spark's `round` on a double
+    * rounds its shortest decimal form, `BigDecimal.valueOf`), and the same
+    * update-vs-novel drop rule. Keys order the way Spark orders strings
+    * — by UTF-8 bytes, unsigned, not by UTF-16 code units — so the same
+    * member of a pair is `da`, and the same partner wins `min(dup_of)`. */
+  private[graft] def intraBatchDropsLocal(docs: Seq[(String, Seq[String], Boolean)],
+      threshold: Double, dfCap: Int): Seq[(String, String)] = {
+    import scala.collection.mutable
+    val keys = docs.map(_._1).distinct
+      .map(k => (k, k.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._2, b._2) < 0)
+      .map(_._1).toArray
+    val rank = keys.iterator.zipWithIndex.toMap
+    val exists = new Array[Boolean](keys.length)
+    val members = mutable.HashMap[String, mutable.ArrayBuffer[Int]]()
+    docs.foreach { case (k, qs, ex) =>
+      val r = rank(k)
+      exists(r) ||= ex
+      qs.foreach(s => members.getOrElseUpdate(s, mutable.ArrayBuffer[Int]()) += r)
+    }
+    // the capped buckets (member ranks ascending) and, per doc, the
+    // capped buckets holding it — its count over the capped universe
+    val buckets = members.valuesIterator.map(_.distinct.sorted.toArray)
+      .filter(_.length <= dfCap).toArray
+    val docBuckets = Array.fill(keys.length)(mutable.ArrayBuilder.make[Int])
+    buckets.indices.foreach(i => buckets(i).foreach(r => docBuckets(r) += i))
+    val held = docBuckets.map(_.result())
+    // dropped key → the smallest partner it lost to
+    val dupOf = Array.fill(keys.length)(-1)
+    def drop(r: Int, partner: Int): Unit =
+      if (dupOf(r) < 0 || partner < dupOf(r)) dupOf(r) = partner
+    // pair counts of a with every b > a in key order, accumulated in one
+    // dense array (reset through the touched list) — no map of pairs
+    val co = new Array[Int](keys.length)
+    val touched = mutable.ArrayBuffer[Int]()
+    var a = 0
+    while (a < keys.length) {
+      held(a).foreach { i =>
+        val ids = buckets(i)
+        var j = java.util.Arrays.binarySearch(ids, a) + 1
+        while (j < ids.length) {
+          val b = ids(j)
+          if (co(b) == 0) touched += b
+          co(b) += 1
+          j += 1
+        }
+      }
+      touched.foreach { b =>
+        val c = co(b).toLong
+        val jaccard = java.math.BigDecimal.valueOf(
+            c.toDouble / (held(a).length + held(b).length - c).toDouble)
+          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+        if (jaccard >= threshold) {
+          if (!exists(b)) drop(b, a) else if (!exists(a)) drop(a, b)
+        }
+        co(b) = 0
+      }
+      touched.clear()
+      a += 1
+    }
+    dupOf.indices.filter(dupOf(_) >= 0).map(r => (keys(r), keys(dupOf(r))))
+  }
+
   /** The gate's per-rowkey verdicts — (rowkey, verdict, dup_of) for every
     * put rowkey in the batch, verdict ∈ {admitted, state_dup, batch_dup};
     * `dup_of` names what the drop lost to (the best-matching stored
@@ -828,21 +961,8 @@ object IncrementalShingles {
     // the score phase slowed — so it STAYS.)
     val survivors = clock.time("probe")(
       latest.join(dupBest, Seq("rowkey"), "left_anti").localCheckpoint())
-    // which survivors are UPDATES of already-stored docs: a key-fetch
-    // against only the batch keys' own doc buckets (metadata-bounded,
-    // same shape as the probe's fetch)
-    val existing = IncrementalPostings
-      .prunedDocsForKeys(spark, rootPath, survivors.select("rowkey"))
-      .select(col("rowkey"), lit(true).as("exists"))
-    val flagged = survivors.join(existing, Seq("rowkey"), "left_outer")
-      .select(col("rowkey"), col("qs"), coalesce(col("exists"), lit(false)).as("exists"))
-    // checkpointed (batch-pair-bounded rows): attributes the intra-batch
-    // scoring to its own phase AND leaves the final decisions select —
-    // the frame the admission log's durable write executes — a cheap
-    // join of three checkpointed batch-bounded inputs, so `log_commit`
-    // measures the write, not a replay of the scoring plan
     val drops = clock.time("score")(
-      intraBatchDrops(flagged, threshold, scheme.dfCap).localCheckpoint())
+      scoreSurvivors(spark, rootPath, survivors, threshold, scheme.dfCap))
     latest.select("rowkey")
       .join(dupBest.withColumnRenamed("dup_of", "s_dup_of")
         .withColumn("state_dup", lit(true)), Seq("rowkey"), "left_outer")

@@ -797,23 +797,23 @@ object IngestPipeline {
 
   /** Fold the gated batch's vector column into the IVF index: the LATEST
     * event per rowkey decides (same granularity as every other merge) —
-    * deletes leave the index ([[IvfIndex.delete]]), puts with a non-null
-    * embedding upsert against the trained quantizer
-    * ([[IvfIndex.upsert]]). The first non-empty admitted batch TRAINS the
-    * index ([[IvfIndex.build]] — at scale, pre-build from a hash-sample
-    * instead and let the stream take over). Replay converges from any
-    * crash point: a half-built index (committed centroids, missing
-    * vectors) is completed by the upsert path against the same trained
-    * centroids, and both upsert and delete are idempotent under a fixed
-    * admitted set. Rowkeys must be decimal vec_id strings — the vector
-    * family's numeric-id contract; non-decimal keys fail loudly rather
-    * than silently collapsing into one null id.
+    * deletes leave the index and puts with a non-null embedding upsert
+    * against the trained quantizer, in one [[IvfIndex.applyChanges]]
+    * pass. The first non-empty admitted batch TRAINS the index
+    * ([[IvfIndex.build]] — at scale, pre-build from a hash-sample instead
+    * and let the stream take over). Replay converges from any crash
+    * point: a half-built index (committed centroids, missing vectors) is
+    * completed by the pass against the same trained centroids, and the
+    * pass is idempotent under a fixed admitted set. Rowkeys must be
+    * decimal vec_id strings — the vector family's numeric-id contract;
+    * non-decimal keys fail loudly rather than silently collapsing into
+    * one null id.
     *
     * One crash shape needs an explicit repair rather than dispatch: a
     * crash inside [[graft.operators.IvfIndex.build]] between the vectors
     * write and the ids write leaves centroids+vectors with no id map.
-    * On replay `exists()` is true, so the upsert/delete path would run —
-    * and both fail loudly on the missing map ("rebuild it with
+    * On replay `exists()` is true, so the change pass would run — and
+    * it fails loudly on the missing map ("rebuild it with
     * IvfIndex.build"), wedging the stream until manual repair. Since
     * `build` only ever runs on the FIRST non-empty admitted batch, every
     * vector in the torn index came from THIS logged batch — re-running
@@ -824,16 +824,18 @@ object IngestPipeline {
       gated.select("rowkey", "event_id", "op", "embedding"))
     val puts = latest.filter(col("op") =!= "delete" && col("embedding").isNotNull)
       .select(asVecId.as("vec_id"), col("embedding"))
-    val torn = graft.operators.IvfIndex.exists(spark, vroot) &&
+    val exists = graft.operators.IvfIndex.exists(spark, vroot)
+    val torn = exists &&
       StateStore.liveBuckets(spark, vroot + "/ids").isEmpty &&
       StateStore.liveBuckets(spark, vroot + "/vectors", "cell=").nonEmpty
-    if (!graft.operators.IvfIndex.exists(spark, vroot) || torn) {
+    if (!exists || torn) {
       if (!puts.isEmpty) graft.operators.IvfIndex.build(puts, vroot, nlist, iters)
       // deletes against a not-yet-built index are no-ops by definition
     } else {
+      // one pass: the latest event per rowkey decides, so no vec_id is
+      // both a put and a delete here
       val dels = latest.filter(col("op") === "delete").select(asVecId.as("vec_id"))
-      graft.operators.IvfIndex.delete(spark, vroot, dels)
-      if (!puts.isEmpty) graft.operators.IvfIndex.upsert(spark, vroot, puts)
+      graft.operators.IvfIndex.applyChanges(spark, vroot, puts, dels)
     }
   }
 

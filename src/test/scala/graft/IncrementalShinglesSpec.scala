@@ -848,6 +848,95 @@ class IncrementalShinglesSpec extends SparkSpec {
       }.toMap
     }.toMap
   }
+
+  // ---- the gate's score phase on the driver ----
+
+  /** The distributed intra-batch pass's drops, as a set. */
+  private def sparkDrops(docs: Seq[(String, Seq[String], Boolean)], threshold: Double,
+                         dfCap: Int): Set[(String, String)] =
+    IncrementalShingles.intraBatchDrops(docs.toDF("rowkey", "qs", "exists"), threshold, dfCap)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+
+  test("driver-side intra-batch scoring equals the distributed pass: non-BMP keys and shingles, dfCap edges, rounding ties, updates") {
+    // keys whose UTF-16 order differs from their UTF-8 byte order (a
+    // supplementary character sorts BEFORE U+E000..U+FFFF in UTF-16, after
+    // them in UTF-8), so the pair member called `da` and the winning
+    // `min(dup_of)` both depend on using Spark's order
+    val keyPool = Seq("a", "b", "ab", "Z", "\u00e9", "\uE000", "\uFF61", "\uFF61b",
+      "\uD83D\uDE00", "\uD83D\uDE00a", "\uD835\uDD38", "k1", "k2", "k10")
+    val shPool = Seq("x y z", "y z w", "z w v", "\uD83D\uDE03 a b", "\uFF70 c d",
+      "\uD835\uDD39 e f", "p q r", "q r s", "\u00e9 t u")
+    val dfCap = 3
+    // independent sub-batches over disjoint key and shingle universes (a
+    // per-batch prefix): one Spark pass scores all of them at once
+    val docs = (1 to 40).flatMap { seed =>
+      val rnd = new scala.util.Random(seed)
+      val keys = rnd.shuffle(keyPool).take(3 + rnd.nextInt(6))
+      keys.map { k =>
+        val qs = rnd.shuffle(shPool).take(1 + rnd.nextInt(5)).map(sh => s"$seed:$sh").sorted
+        (s"$seed:$k", qs, rnd.nextInt(3) == 0)
+      }
+    }
+    // the data holds buckets of exactly dfCap docs and of dfCap + 1
+    val bucketSizes = docs.flatMap { case (k, qs, _) => qs.map(_ -> k) }
+      .groupBy(_._1).values.map(_.size).toSet
+    assert(bucketSizes.contains(dfCap) && bucketSizes.contains(dfCap + 1), bucketSizes)
+    // 0.3333 and 0.6667 are where 1/3 and 2/3 land after 4-place rounding
+    for (t <- Seq(0.0, 0.25, 0.3333, 0.5, 0.6667, 0.75, 1.0)) {
+      val local = IncrementalShingles.intraBatchDropsLocal(docs, t, dfCap).toSet
+      assert(local === sparkDrops(docs, t, dfCap), s"threshold $t")
+      if (t == 0.6667) assert(local.nonEmpty, "the 2/3 tie must drop something")
+    }
+  }
+
+  test("driver-side scoring rounds like Spark: 7/160 = 0.04375 rounds HALF_UP on its decimal form") {
+    // |A∩B| = 7, |A∪B| = 80 + 87 - 7 = 160: the double 0.04375 lies just
+    // below its decimal; Spark's round takes the decimal form to 0.0438
+    val a = (1 to 80).map(i => f"s$i%03d")
+    val b = (1 to 7).map(i => f"s$i%03d") ++ (1 to 80).map(i => f"t$i%03d")
+    val docs = Seq(("a", a, false), ("b", b, false))
+    for (t <- Seq(0.0437, 0.0438, 0.0439)) {
+      val local = IncrementalShingles.intraBatchDropsLocal(docs, t, 200).toSet
+      assert(local === sparkDrops(docs, t, 200), s"threshold $t")
+      assert(local === (if (t <= 0.0438) Set(("b", "a")) else Set.empty[(String, String)]),
+        s"threshold $t")
+    }
+  }
+
+  test("the gate's score phase: at most 2 jobs below the driver bound, the distributed plan above it, the same drops") {
+    val root = Files.createTempDirectory("graft_shingS").toString + "/shingles"
+    merge(root,
+      DocChange("5", 0, "put", "original content here totally stored"),
+      DocChange("7", 1, "put", "another stored document kept apart"))
+    // survivors of one batch: an update of 5 near-dupped by two novel
+    // docs, and an unrelated pair of novel near-dups
+    val survivors = Seq(
+        "5" -> "rewritten fresh text now appears",
+        "0" -> "rewritten fresh text now shows",
+        "9" -> "rewritten fresh text now appears again",
+        "m" -> "quick brown fox jumps high",
+        "n" -> "quick brown fox jumps low")
+      .toDF("rowkey", "text")
+      .select(col("rowkey"), array_sort(array_distinct(
+        IncrementalShingles.WordShingles.sketch(col("text")))).as("qs"))
+      .localCheckpoint()
+    def drops(maxLocalRows: Long): (Set[(String, String)], Int) = {
+      var out = Set.empty[(String, String)]
+      val jobs = SpecMetrics.jobsRun(spark) {
+        out = IncrementalShingles.scoreSurvivors(spark, root, survivors, 0.5,
+          IncrementalShingles.WordShingles.dfCap, maxLocalRows)
+          .collect().map(r => (r.getString(0), r.getString(1))).toSet
+      }
+      (out, jobs)
+    }
+    val (local, localJobs) = drops(IncrementalShingles.LocalScoreMaxRows)
+    val (distributed, distributedJobs) = drops(0L)
+    assert(local === distributed)
+    assert(local === Set(("0", "5"), ("9", "5"), ("n", "m")), local)
+    assert(localJobs <= 2, s"driver path ran $localJobs jobs")
+    assert(distributedJobs > 2, s"distributed path ran only $distributedJobs jobs")
+  }
+
 }
 
 /** Latches that force two gate calls' sketch tasks to overlap (see the
@@ -879,4 +968,5 @@ object GateOverlap {
     }
     text
   }
+
 }

@@ -548,4 +548,203 @@ class IvfIndexSpec extends SparkSpec {
     }
     assert(diverged.getMessage.contains("type"), diverged.getMessage)
   }
+
+  // ---- the fused change pass: applyChanges == delete, then upsert ----
+
+  /** Every stored vector row (all columns, arrays as lists), every id-map
+    * row, and the live `cell=` directories of the index at `p`. */
+  private def indexState(p: String): (Set[List[Any]], Set[(Long, Int)], Set[String]) = {
+    val v = spark.read.parquet(p + "/vectors")
+    val rows = v.select(v.columns.sorted.toSeq.map(col): _*).collect()
+      .map(_.toSeq.toList.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case x => x
+      }).toSet
+    val ids = spark.read.parquet(p + "/ids").select("vec_id", "cell").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet
+    val dirs = new java.io.File(p + "/vectors").listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("cell=")).map(_.getName).toSet
+    (rows, ids, dirs)
+  }
+
+  /** The `_seq` commit counter of the `vectors/` root under `p`. */
+  private def vectorsSeq(p: String): Long = {
+    val f = java.nio.file.Paths.get(p, "vectors", "_seq")
+    if (Files.exists(f)) new String(Files.readAllBytes(f), "UTF-8").trim.toLong else 0L
+  }
+
+  /** Apply (puts, dels) to two copies of the index at `base` — delete
+    * then upsert on one, one [[IvfIndex.applyChanges]] pass on the other
+    * — and require the same stored rows, id map and cell directories, and
+    * the (vec_id, cell) pairs `expected` (worked out without the index
+    * code); returns the fused copy's path. */
+  private def fusedMatchesSequential(base: String, puts: org.apache.spark.sql.DataFrame,
+      dels: org.apache.spark.sql.DataFrame, expected: Set[(Long, Int)]): String = {
+    val work = Files.createTempDirectory("graft_ivfFused").toString
+    val (seq, fused) = (s"$work/seq", s"$work/fused")
+    copyDir(base, seq)
+    copyDir(base, fused)
+    IvfIndex.delete(spark, seq, dels)
+    IvfIndex.upsert(spark, seq, puts)
+    val before = vectorsSeq(fused)
+    IvfIndex.applyChanges(spark, fused, puts, dels)
+    assert(vectorsSeq(fused) === before + 1, "one pass commits the cells once")
+    val (want, got) = (indexState(seq), indexState(fused))
+    assert(got._1 === want._1, "stored vector rows diverge")
+    assert(got._2 === want._2, "id maps diverge")
+    assert(got._3 === want._3, "cell directories diverge")
+    val stored = spark.read.parquet(fused + "/vectors").select("vec_id", "cell").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(got._2 === stored, "the id map must mirror the stored cells")
+    assert(stored === expected)
+    fused
+  }
+
+  /** A randomized change set against the stored index at `p`: `moves`
+    * stored ids re-embedded with other stored vectors' embeddings (most
+    * change cell), `fresh` new ids, `drops` deleted stored ids and
+    * `absent` deletes of never-indexed ids — puts and deletes disjoint.
+    * Put embeddings come only from cells outside `avoid`, and the stored
+    * ids of `avoid` are deleted too, so those cells end empty. */
+  private def randomChanges(p: String, seed: Long, moves: Int, fresh: Int,
+      drops: Int, absent: Int, avoid: Set[Int] = Set.empty, attrs: Seq[String] = Nil)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Set[(Long, Int)]) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    val rows = spark.read.parquet(p + "/vectors")
+      .select((Seq("vec_id", "cell", "embedding") ++ attrs).map(col): _*)
+      .collect().sortBy(_.getLong(0))
+    val (emptied, rest) = rows.partition(r => avoid.contains(r.getInt(1)))
+    val shuffled = rnd.shuffle(rest.toSeq)
+    val movers = shuffled.take(moves)
+    val deleted = shuffled.slice(moves, moves + drops).map(_.getLong(0)) ++ emptied.map(_.getLong(0))
+    def donor() = rest(rnd.nextInt(rest.length))
+    val putRows = movers.map(r => (r.getLong(0), donor())) ++
+      (0 until fresh).map(i => (5000000L + seed * 1000 + i, donor()))
+    val schema = spark.read.parquet(p + "/vectors")
+      .select((Seq("vec_id", "embedding") ++ attrs).map(col): _*).schema
+    val puts = spark.createDataFrame(spark.sparkContext.parallelize(putRows.map {
+      case (id, d) => org.apache.spark.sql.Row.fromSeq(
+        Seq(id, d.getSeq[Float](2)) ++ attrs.indices.map(i => d.get(3 + i)))
+    }), schema)
+    val dels = (deleted ++ (0 until absent).map(i => 9000000L + seed * 1000 + i)).toDF("vec_id")
+    // a put lands in its donor's cell: the donor was assigned against the
+    // same trained centroids
+    val expected = rows.map(r => r.getLong(0) -> r.getInt(1)).toMap --
+      deleted ++ putRows.map { case (id, d) => id -> d.getInt(1) }
+    (puts, dels, expected.toSet)
+  }
+
+  test("applyChanges equals delete-then-upsert: moved, new, deleted and absent ids; an emptied cell loses its directory") {
+    val base = Files.createTempDirectory("graft_ivfEq").toString + "/ivf"
+    IvfIndex.build(Tables.embeddings(spark, dir), base, nlist = nlist, iters = 2)
+    for (seed <- 1L to 3L) {
+      val (puts, dels, want) = randomChanges(base, seed, moves = 25, fresh = 10, drops = 30, absent = 5)
+      fusedMatchesSequential(base, puts, dels, want)
+    }
+    // every stored id of the smallest cell deleted, no put landing there:
+    // the cell's directory goes (a put's cell is its stored vector's)
+    val victim = spark.read.parquet(base + "/ids").groupBy("cell").count()
+      .orderBy(col("count"), col("cell")).head().getInt(0)
+    val (puts, dels, want) = randomChanges(base, 7L, moves = 20, fresh = 5, drops = 10,
+      absent = 3, avoid = Set(victim))
+    val fused = fusedMatchesSequential(base, puts, dels, want)
+    assert(!new java.io.File(s"$fused/vectors/cell=$victim").exists())
+    assert(new java.io.File(s"$base/vectors/cell=$victim").exists())
+  }
+
+  test("applyChanges equals delete-then-upsert on PQ and attribute roots (codes and attrs columns included)") {
+    val e = Tables.embeddings(spark, dir)
+    val pq = Files.createTempDirectory("graft_ivfEqPq").toString + "/ivf"
+    IvfIndex.build(e.select("vec_id", "embedding"), pq, nlist = nlist, iters = 2,
+      pq = Some(IvfIndex.PqSpec(m = 8, k = 4, iters = 1)))
+    val (pPuts, pDels, pWant) = randomChanges(pq, 11L, moves = 20, fresh = 8, drops = 20, absent = 4)
+    val fusedPq = fusedMatchesSequential(pq, pPuts, pDels, pWant)
+    assert(spark.read.parquet(fusedPq + "/vectors")
+      .filter(col("codes").isNull || size(col("codes")) =!= 8).isEmpty)
+    val at = Files.createTempDirectory("graft_ivfEqAt").toString + "/ivf"
+    IvfIndex.build(e.select("vec_id", "embedding", "label"), at, nlist = nlist,
+      iters = 2, attrs = Seq("label"))
+    val (aPuts, aDels, aWant) = randomChanges(at, 12L, moves = 20, fresh = 8, drops = 20,
+      absent = 4, attrs = Seq("label"))
+    fusedMatchesSequential(at, aPuts, aDels, aWant)
+  }
+
+  test("applyChanges with deletes hashing only to absent id buckets: no-op alone, equal to delete-then-upsert beside puts") {
+    import spark.implicits._
+    // six vectors fill at most six of the sixteen id buckets
+    val base = Files.createTempDirectory("graft_ivfAbs").toString + "/ivf"
+    val six = Tables.embeddings(spark, dir).filter(col("vec_id") < 6).select("vec_id", "embedding")
+    IvfIndex.build(six, base, nlist = 2, iters = 2)
+    val live = new java.io.File(base + "/ids").listFiles().map(_.getName).filter(_.startsWith("b=")).toSet
+    def bucket(id: Long): String = {
+      val crc = new java.util.zip.CRC32()
+      crc.update(id.toString.getBytes("UTF-8"))
+      s"b=${java.lang.Math.floorMod(crc.getValue, IvfIndex.IdBuckets.toLong)}"
+    }
+    val absentIds = (7000000L until 7000100L).filter(id => !live.contains(bucket(id))).take(4)
+    assert(absentIds.size === 4)
+    val dels = absentIds.toDF("vec_id")
+    // alone: nothing indexed, nothing committed
+    val seq0 = vectorsSeq(base)
+    val before = indexState(base)
+    IvfIndex.applyChanges(spark, base, six.limit(0), dels)
+    assert(vectorsSeq(base) === seq0 && indexState(base) === before)
+    // beside puts (a move and a new id): the same state as the two calls
+    val moved = six.filter(col("vec_id") === 5).select(lit(0L).as("vec_id"), col("embedding"))
+    val fresh = six.filter(col("vec_id") === 4).select(lit(6000000L).as("vec_id"), col("embedding"))
+    val cells = before._2.toMap
+    fusedMatchesSequential(base, moved.unionByName(fresh), dels,
+      before._2 - (0L -> cells(0L)) ++ Set(0L -> cells(5L), 6000000L -> cells(4L)))
+  }
+
+  test("applyChanges fails loudly on a vec_id that is both put and deleted, before any write") {
+    import spark.implicits._
+    val p = Files.createTempDirectory("graft_ivfOv").toString + "/ivf"
+    IvfIndex.build(Tables.embeddings(spark, dir), p, nlist = nlist, iters = 2)
+    val before = indexState(p)
+    val seq0 = vectorsSeq(p)
+    val ex = intercept[IllegalArgumentException] {
+      IvfIndex.applyChanges(spark, p, Seq((5L, query), (1000001L, query)).toDF("vec_id", "embedding"),
+        Seq(5L, 7L).toDF("vec_id"))
+    }
+    assert(ex.getMessage.contains("both upserted and deleted"), ex.getMessage)
+    assert(indexState(p) === before && vectorsSeq(p) === seq0)
+  }
+
+  test("applyChanges replay converges from the crash state between its cells and ids commits") {
+    val base = Files.createTempDirectory("graft_ivfFC").toString
+    val full = s"$base/full"
+    IvfIndex.build(Tables.embeddings(spark, dir), full, nlist = nlist, iters = 2)
+    val crash = s"$base/crash"
+    copyDir(full, crash)
+    val (puts, dels, _) = randomChanges(full, 21L, moves = 15, fresh = 5, drops = 15, absent = 2)
+    IvfIndex.applyChanges(spark, full, puts, dels)
+    // crash state: the new cells committed over the OLD id map
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$crash/vectors"))
+    copyDir(s"$full/vectors", s"$crash/vectors")
+    IvfIndex.applyChanges(spark, crash, puts, dels) // the replay
+    assert(indexState(crash) === indexState(full))
+  }
+
+  test("a pipeline flush with puts and deletes advances the vectors root's _seq by exactly one") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_ivfPipeSeq").toString + "/pipe"
+    val vroot = graft.streaming.IngestPipeline.vectorsRoot(root)
+    def applyV(id: Long, changes: Seq[VecDocChange]): Unit =
+      graft.streaming.IngestPipeline.applyBatch(spark, changes.toDF(), root, id,
+        threshold = 0.5, annNlist = 2, annIters = 1)
+    applyV(0, Seq(
+      VecDocChange("1", 0, "put", "alpha beta gamma delta", Seq(1f, 0f, 0f, 0f)),
+      VecDocChange("2", 1, "put", "totally different words entirely here", Seq(0f, 1f, 0f, 0f)),
+      VecDocChange("3", 2, "put", "a third unrelated document body text", Seq(0f, 0f, 1f, 0f))))
+    val seq0 = vectorsSeq(vroot)
+    applyV(1, Seq(
+      VecDocChange("1", 10, "put", "alpha beta gamma delta", Seq(0f, 0f, 0f, 1f)),
+      VecDocChange("2", 11, "delete", "", Nil),
+      VecDocChange("4", 12, "put", "yet another fully distinct sentence", Seq(0.6f, 0.8f, 0f, 0f))))
+    assert(vectorsSeq(vroot) === seq0 + 1)
+    assert(spark.read.parquet(vroot + "/vectors").select("vec_id").collect()
+      .map(_.getLong(0)).toSet === Set(1L, 3L, 4L))
+  }
 }

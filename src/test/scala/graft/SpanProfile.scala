@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * repartition(doc_id) of the token arrays, LeftOuter summary join) vs
   * the r17 shape (one Fanout.scan, dup-mark left join, summary derived
   * in the per-doc aggregation). Interleaving cancels box-mode drift to
-  * first order — the protocol INGEST_AB_r16 established. Run:
+  * first order — the protocol records/INGEST_AB_r16.json established. Run:
   *   sbt -batch "Test/runMain graft.SpanProfile [sfDir] [trials]"
   */
 object SpanProfile {
