@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, MapType, StructField, StructType}
 import graft.streaming.StateStore
 
 /** Persisted IVF (inverted-file) vector index — the materialized form of
@@ -73,6 +73,21 @@ object IvfIndex {
 
   /** Bucket count of the id→cell sidecar map (see [[upsert]]). */
   val IdBuckets = 16
+
+  /** The stored schemas of the centroid table and the id→cell map — what
+    * [[build]] and [[applyChanges]] write, so every read of them is
+    * planned without a footer read. */
+  private val centroidSchema = StructType(Seq(
+    StructField("cell", IntegerType), StructField("cent", ArrayType(DoubleType))))
+  private val idsSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("cell", IntegerType)))
+
+  private def readIds(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(idsSchema).parquet(paths: _*)
+
+  /** (vec_id, cell) rows in [[idsSchema]]'s types. */
+  private def idRows(df: DataFrame): DataFrame =
+    df.select(col("vec_id").cast("long").as("vec_id"), col("cell"))
 
   private def idBucket: Column =
     pmod(crc32(col("vec_id").cast("string")), lit(IdBuckets)).cast("int")
@@ -194,7 +209,7 @@ object IvfIndex {
     "sim", "cent", "rn", "csim", "b", "adc", "upserted", "qid", "qv")
 
   /** The attribute columns a root was built with (the `_attrs` marker
-    * written by [[build]]); empty for a plain or pre-attribute index. */
+    * written by [[build]]); empty for an index built without attributes. */
   private[graft] def attrsOf(spark: SparkSession, path: String): Seq[String] =
     StateStore.readTag(spark, path, "_attrs")
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
@@ -300,7 +315,7 @@ object IvfIndex {
       StateStore.commit(spark0, path + "/vectors")(tmp =>
         assigned.write.partitionBy("cell").parquet(tmp))
       StateStore.commit(spark0, path + "/ids")(tmp =>
-        assigned.select(col("vec_id"), col("cell")).withColumn("b", idBucket)
+        idRows(assigned).withColumn("b", idBucket)
           .repartition(col("b"))
           .write.partitionBy("b").parquet(tmp))
       // after the swap (which replaces the whole ids dir, marker included)
@@ -329,7 +344,7 @@ object IvfIndex {
   def centroids(spark: SparkSession, path: String): DataFrame = {
     heal(spark, path)
     StateStore.recover(spark, path + "/centroids")
-    spark.read.parquet(path + "/centroids")
+    spark.read.schema(centroidSchema).parquet(path + "/centroids")
   }
 
   /** True if the index at `path` has a committed centroid table — the
@@ -433,7 +448,7 @@ object IvfIndex {
     val vecRoot = path + "/vectors"
     val idsRoot = path + "/ids"
     // Fail loudly on an index whose id map is absent while vectors exist
-    // (a pre-sidecar layout, or a build that crashed between its writes):
+    // (a build that crashed between its writes):
     // maintaining it against an empty map would stop clearing moved or
     // deleted vectors' copies — the silent duplication the map prevents.
     val liveIds = StateStore.liveBuckets(spark, idsRoot).toSet
@@ -485,8 +500,8 @@ object IvfIndex {
       if (newCells.isEmpty && oldIdPaths.isEmpty) return
       // (no old id paths implies puts, so `assigned` is defined there)
       val oldIds =
-        if (oldIdPaths.nonEmpty) spark.read.parquet(oldIdPaths: _*)
-        else assigned.get.select(col("vec_id"), col("cell")).limit(0)
+        if (oldIdPaths.nonEmpty) readIds(spark, oldIdPaths)
+        else idRows(assigned.get).limit(0)
       val oldCells = oldIds.join(broadcast(changedIds), col("vec_id") === col("changed"))
         .select("cell").distinct().collect().map(_.getInt(0))
       if (newCells.isEmpty && oldCells.isEmpty) return // no deleted id is indexed
@@ -512,8 +527,7 @@ object IvfIndex {
       // them; one file per rewritten cell dir / id bucket
       val merged = (kept.toSeq ++ upserted).reduceOption(_ unionByName _)
         .map(_.repartition(col("cell")).localCheckpoint())
-      val newIds = (Seq(notChanged(oldIds)) ++
-          assigned.map(_.select(col("vec_id"), col("cell"))))
+      val newIds = (Seq(notChanged(oldIds)) ++ assigned.map(idRows))
         .reduce(_ unionByName _)
         .withColumn("b", idBucket)
         .repartition(col("b"))
@@ -542,7 +556,7 @@ object IvfIndex {
     val idB = vecIds.select(idBucket.as("b")).distinct().collect().map(_.getInt(0)).sorted
     val dirs = idB.toSeq.map(b => s"b=$b").filter(live.contains)
     if (dirs.isEmpty) return vecIds.select(col("vec_id")).limit(0)
-    spark.read.parquet(dirs.map(d => s"$idsRoot/$d"): _*)
+    readIds(spark, dirs.map(d => s"$idsRoot/$d"))
       .join(vecIds.select("vec_id").distinct(), "vec_id")
       .select("vec_id")
   }
@@ -576,7 +590,7 @@ object IvfIndex {
       .collect().map(_.getInt(0)).sorted
     val idDirs = idB.toSeq.map(b => s"b=$b").filter(liveIds.contains)
     if (idDirs.isEmpty) return empty
-    val cells = spark.read.parquet(idDirs.map(d => s"$idsRoot/$d"): _*)
+    val cells = readIds(spark, idDirs.map(d => s"$idsRoot/$d"))
       .join(broadcast(ids), "vec_id")
       .select("cell").distinct().collect().map(_.getInt(0)).sorted
     val live = StateStore.liveBuckets(spark, vecRoot, "cell=").toSet
@@ -600,8 +614,7 @@ object IvfIndex {
     * symmetric with the rerank twin's "no vector, nothing to rerank
     * with"). Returns (vec_id, <attrs…>) with the STORED schema on every
     * code path — empty paths read it from the `_attrs_schema` marker
-    * ([[build]]), falling back to one live cell's footer for roots built
-    * before the marker existed. Fails loudly on an attribute-less root:
+    * ([[build]]). Fails loudly on an attribute-less root:
     * silently returning zero columns would make every predicate
     * vacuously unresolvable downstream. */
   def attrsForIds(spark: SparkSession, path: String, vecIds: DataFrame): DataFrame = {
@@ -622,12 +635,8 @@ object IvfIndex {
       // paths' column order always agrees with the non-empty select
       val stored = StateStore.readTag(spark, path, "_attrs_schema")
         .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-        .getOrElse {
-          val live = StateStore.liveBuckets(spark, vecRoot, "cell=")
-          require(live.nonEmpty, s"index at $path has neither an " +
-            "_attrs_schema marker nor a live cell to derive the schema from")
-          spark.read.parquet(s"$vecRoot/${live.head}").schema
-        }
+        .getOrElse(throw new IllegalStateException(
+          s"index at $path stores attributes but no _attrs_schema marker"))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(cols.map(n => stored(n))))
@@ -638,7 +647,7 @@ object IvfIndex {
       .collect().map(_.getInt(0)).sorted
     val idDirs = idB.toSeq.map(b => s"b=$b").filter(liveIds.contains)
     if (idDirs.isEmpty) return empty
-    val cells = spark.read.parquet(idDirs.map(d => s"$idsRoot/$d"): _*)
+    val cells = readIds(spark, idDirs.map(d => s"$idsRoot/$d"))
       .join(broadcast(ids), "vec_id")
       .select("cell").distinct().collect().map(_.getInt(0)).sorted
     val live = StateStore.liveBuckets(spark, vecRoot, "cell=").toSet
@@ -661,7 +670,7 @@ object IvfIndex {
     val live = StateStore.liveBuckets(spark, idsRoot)
     val nlist = centroids(spark, path).count()
     if (live.isEmpty || nlist == 0) return 1.0
-    val agg = spark.read.parquet(live.map(d => s"$idsRoot/$d"): _*)
+    val agg = readIds(spark, live.map(d => s"$idsRoot/$d"))
       .groupBy("cell").agg(count(lit(1)).as("n"))
       .agg(max(col("n")).as("mx"), sum(col("n")).as("total")).head()
     if (agg.isNullAt(0)) 1.0

@@ -55,8 +55,8 @@ object IncrementalPostings {
     StructField("field", StringType),
     StructField("b", IntegerType)))
 
-  /** The default field name — what every single-field root indexes as,
-    * and what legacy pre-field entries/dstats rows adopt. The reference
+  /** The default field name — what every single-field root indexes as.
+    * The reference
     * maps each HBase qualifier to its own Solr field
     * (HbaseSolrIndexCoprocesser.java:45-49); a single-text-column root is
     * the one-qualifier case. */
@@ -70,39 +70,6 @@ object IncrementalPostings {
   private def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** Adopt entries written before the tf column existed ((tok, doc_id)
-    * rows): default tf to 1, so pre-upgrade state roots keep merging and
-    * reading. Occurrence counts degrade to document counts for legacy
-    * rows, and the default is PERSISTENT for a document until that
-    * document is itself re-put — a bucket rewrite carries untouched
-    * docs' rows through the anti-join unchanged (it never re-tokenizes
-    * them), so only a new put recomputes true tf. The positions column
-    * (the payload [[phraseSearch]] intersects) likewise defaults — to
-    * NULL, not an empty array: a legacy row has UNKNOWN positions, and
-    * phrase search fails loudly on null rather than silently never
-    * matching the doc ([[phraseSearch]]'s contract). */
-  private def withTf(entries: DataFrame): DataFrame = {
-    val tf =
-      if (entries.columns.contains("tf"))
-        // fill per-ROW legacy nulls too: on a root mixing pre- and
-        // post-upgrade buckets (mergeSchema read) or under the explicit-
-        // schema read (readEntriesRaw), a pre-tf file surfaces tf as
-        // null — the documented default is 1, uniformly
-        entries.withColumn("tf", coalesce(col("tf"), lit(1L)))
-      else entries.withColumn("tf", lit(1L))
-    val pos =
-      if (tf.columns.contains("positions")) tf
-      else tf.withColumn("positions", lit(null).cast("array<int>"))
-    // field adoption (the multi-field upgrade, round 11): a pre-field row
-    // indexed the root's single text column, so it IS the default field.
-    // Unlike positions, the default is exact — no information was lost —
-    // and on a root mixing pre- and post-upgrade buckets readMerged
-    // surfaces NULL for the legacy rows, coalesced here.
-    if (pos.columns.contains("field"))
-      pos.withColumn("field", coalesce(col("field"), lit(DefaultField)))
-    else pos.withColumn("field", lit(DefaultField))
-  }
-
   private def docBucket(numBuckets: Int): Column =
     pmod(crc32(col("rowkey")), lit(numBuckets)).cast("int")
   private def tokBucket(numBuckets: Int): Column =
@@ -111,19 +78,15 @@ object IncrementalPostings {
   /** The live bucket dirs a DataFrame of keys hashes into — the frame
     * twin of [[StateStore.bucketDirsFor]] for key sets that are DATA
     * (too many to collect): only the distinct bucket ids (bounded by the
-    * bucket count) come to the driver. A missing `_nbuckets` marker
-    * (pre-marker root) falls back to all live dirs. */
+    * bucket count) come to the driver. */
   private def bucketDirsForFrame(spark: SparkSession, root: String,
                                  keys: DataFrame, key: String): Seq[String] = {
     val live = StateStore.liveBuckets(spark, root)
     if (live.isEmpty) return Seq.empty // no state: skip the bucket-id job
-    StateStore.bucketCount(spark, root) match {
-      case Some(n) =>
-        val wanted = keys.select(pmod(crc32(col(key)), lit(n)).cast("int").as("b"))
-          .distinct().collect().map(r => s"b=${r.getInt(0)}").toSet
-        live.filter(wanted.contains)
-      case None => live
-    }
+    val n = StateStore.pinnedBucketCount(spark, root)
+    val wanted = keys.select(pmod(crc32(col(key)), lit(n)).cast("int").as("b"))
+      .distinct().collect().map(r => s"b=${r.getInt(0)}").toSet
+    live.filter(wanted.contains)
   }
 
   /** Per-doc-bucket, PER-FIELD stats rows (live doc count + total token
@@ -182,50 +145,13 @@ object IncrementalPostings {
       toks.withColumn("field", lit(f))
     }.reduce(_ unionByName _)
 
-  /** Multi-bucket state read with schema MERGE across files: bucket
-    * files written before a payload column existed (tf, positions — the
-    * upgrade paths [[withTf]] adopts) must surface the column as null
-    * for THEIR rows only. Schema-less inference reads ONE file's footer
-    * and, on a root mixing pre- and post-upgrade buckets, can drop the
-    * column for every row — a merge would then rewrite real positions
-    * as null, permanent data loss masquerading as a clean upgrade.
-    * Footer-merge cost is bounded by the touched files. */
-  private def readMerged(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(paths: _*)
-
-  /** Entries read under the EXPLICIT post-upgrade schema instead of a
-    * mergeSchema footer sweep: parquet surfaces a column absent from a
-    * file as null under an explicit schema, so pre-tf/positions/field
-    * files keep exactly the null-for-their-rows semantics the
-    * mergeSchema read gave them ([[withTf]] fills the defaults either
-    * way) — WITHOUT the distributed footer-merge job mergeSchema runs
-    * per read. That job was pure fixed cost on the flush path (gate
-    * probe + two entry merges per batch), and its footer sweep grows
-    * with the touched-file count at scale. The entries schema is closed
-    * (tok, doc_id, tf, positions, field — the multi-field upgrade is the
-    * newest column), unlike the DOCS schema, which is root-dependent
-    * (multi-field roots store their field columns), so docs reads keep
-    * mergeSchema. */
-  private def readEntriesRaw(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.schema(StructType(entriesSchema.filterNot(_.name == "b")))
-      .parquet(paths: _*)
-
-  private def readBuckets(spark: SparkSession, root: String, dirs: Seq[String],
-                          fallback: => DataFrame): DataFrame = {
-    val live = StateStore.liveBuckets(spark, root).toSet
-    val paths = dirs.filter(live.contains).map(d => s"$root/$d")
-    if (paths.nonEmpty) readMerged(spark, paths) else fallback
-  }
-
-  /** [[readBuckets]] for ENTRY buckets — the explicit-schema read
-    * ([[readEntriesRaw]]), no footer-merge job. */
-  private def readEntryBuckets(spark: SparkSession, root: String,
-                               dirs: Seq[String],
-                               fallback: => DataFrame): DataFrame = {
-    val live = StateStore.liveBuckets(spark, root).toSet
-    val paths = dirs.filter(live.contains).map(d => s"$root/$d")
-    if (paths.nonEmpty) readEntriesRaw(spark, paths) else fallback
-  }
+  /** Entries rows of the given bucket dirs under the entries schema —
+    * a fixed schema, so no footer is read to plan the scan. */
+  private def readEntries(spark: SparkSession, paths: Seq[String]): DataFrame =
+    if (paths.nonEmpty)
+      spark.read.schema(StructType(entriesSchema.filterNot(_.name == "b")))
+        .parquet(paths: _*)
+    else emptyDf(spark, entriesSchema).drop("b")
 
   /** Fold one micro-batch (rowkey STRING, event_id LONG, op put|delete,
     * text STRING) into the persisted postings state. The touched-bucket
@@ -264,7 +190,7 @@ object IncrementalPostings {
       tokenizerName, keepPositions)
   }
 
-  private def mergeImpl(spark: SparkSession, batch: DataFrame, rootPath: String,
+  private def mergeImpl(spark: SparkSession, batch0: DataFrame, rootPath: String,
                         fields: Seq[String], tokenize: Column => Column,
                         numBuckets: Int, tokenizerName: Option[String],
                         keepPositions: Boolean): Unit = {
@@ -284,6 +210,10 @@ object IncrementalPostings {
     StateStore.ensureTag(spark, rootPath, "_fields", fields.mkString(","))
     val docsRoot = rootPath + "/docs"
     val entriesRoot = rootPath + "/entries"
+    // the batch in the docs state's own schema, the one every docs read
+    // takes: the stored docs never carry a column no read resolves
+    val batch = batch0.select(docsSchemaFor(spark, rootPath).fields.toSeq
+      .map(f => col(f.name).cast(f.dataType)): _*)
 
     val withB = batch.withColumn("b", docBucket(numBuckets))
     val touchedDocB = withB.select("b").distinct().collect().map(_.getInt(0)).sorted
@@ -293,7 +223,8 @@ object IncrementalPostings {
     val docDirs = touchedDocB.toSeq.map(b => s"b=$b")
     // Bucket dirs are read directly (no partition discovery); bucket ids
     // are recomputed from the keys where needed.
-    val oldDocs = readBuckets(spark, docsRoot, docDirs, batch.limit(0))
+    val liveDocs = StateStore.liveBuckets(spark, docsRoot).toSet
+    val oldDocs = readDocs(spark, rootPath, docDirs.filter(liveDocs.contains))
 
     // Only rowkeys present in the batch can change; everything is derived
     // from this (small) touched set.
@@ -322,9 +253,9 @@ object IncrementalPostings {
       .unionByName(additions.select(tokBucket(numBuckets).as("b")))
       .distinct().collect().map(_.getInt(0)).sorted
     val entryDirs = touchedTokB.toSeq.map(b => s"b=$b")
-    val oldEntries = withTf(readEntryBuckets(spark, entriesRoot, entryDirs,
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        entriesSchema).drop("b")))
+    val liveEntries = StateStore.liveBuckets(spark, entriesRoot).toSet
+    val oldEntries = readEntries(spark,
+      entryDirs.filter(liveEntries.contains).map(d => s"$entriesRoot/$d"))
     // Double anti-join (see crash protocol in the class doc): removals for
     // the delta, additions so replay over an already-promoted bucket
     // cannot duplicate them.
@@ -366,19 +297,6 @@ object IncrementalPostings {
       }
       StateStore.commitBuckets(spark, statsRoot, docDirs) { tmp =>
         stats.write.partitionBy("b").mode("overwrite").parquet(tmp)
-      }
-      // Adopt pre-sidecar roots: any committed docs bucket still missing
-      // its stats row gets one now (one-time, legacy buckets only), so a
-      // partially-adopted sidecar can never under-count the corpus.
-      val missing = (StateStore.liveBuckets(spark, docsRoot).toSet --
-        StateStore.liveBuckets(spark, statsRoot).toSet).toSeq.sorted
-      if (missing.nonEmpty) {
-        val legacy = bucketStats(
-          spark.read.parquet(missing.map(d => s"$docsRoot/$d"): _*)
-            .withColumn("b", docBucket(numBuckets)), tokenize, fields)
-        StateStore.commitBuckets(spark, statsRoot, missing) { tmp =>
-          legacy.write.partitionBy("b").mode("overwrite").parquet(tmp)
-        }
       }
       // df sidecar (opt-in, [[enableDfSidecar]]): each touched entries
       // bucket's dfs twin is recomputed from the already-cached post-merge
@@ -435,30 +353,6 @@ object IncrementalPostings {
   def rescale(spark: SparkSession, rootPath: String, newBuckets: Int,
               tokenizerName: Option[String] = None): Unit = {
     tokenizerName.foreach(n => StateStore.ensureTag(spark, rootPath, "_tokenizer", n))
-    // the tokenizer-free dl derivation below is only valid when every
-    // live entry carries a REAL tf: legacy pre-tf entry files (the
-    // upgrade path withTf/readMerged's mergeSchema exists for) surface tf
-    // as null (mixed root) or lose the column entirely (all-legacy root),
-    // and summing withTf's tf=1 default would silently write dl_sum as
-    // distinct-term counts — skewed BM25 length norms with no error.
-    // Fail loudly, and BEFORE the bucket swaps: throwing after docs/
-    // entries had re-bucketed would strand the root mixed-count, where
-    // the prescribed remedy (a put merge) itself fails ensureBucketCount.
-    // Pre-swap, the root is untouched and a re-merge then rescale works.
-    locally {
-      val entRoot = rootPath + "/entries"
-      val entDirs = StateStore.liveBuckets(spark, entRoot)
-      if (entDirs.nonEmpty) {
-        val raw = readMerged(spark, entDirs.map(d => s"$entRoot/$d"))
-        val legacy = !raw.columns.contains("tf") ||
-          raw.filter(col("tf").isNull).limit(1).count() > 0
-        if (legacy) throw new IllegalStateException(
-          s"entries under $entRoot contain legacy rows without a tf " +
-            "column; the tokenizer-free dl recompute cannot derive " +
-            "document lengths from them — re-index those docs (a put " +
-            "merge rewrites their buckets with true tf) before rescale")
-      }
-    }
     StateStore.rescale(spark, rootPath + "/docs", "rowkey", newBuckets)
     StateStore.rescale(spark, rootPath + "/entries", "tok", newBuckets)
     val docsRoot = rootPath + "/docs"
@@ -475,14 +369,13 @@ object IncrementalPostings {
       // back to whitespace for an anonymous custom tokenizer — wrong
       // dl units with no error. Deriving from the index itself cannot
       // mismatch the index.
-      // per-FIELD recompute (the `_fields` marker names the root's fields;
-      // pre-marker roots are single-field by construction): a field's dl
-      // is the sum of the doc's entries' tfs FOR THAT FIELD — same
-      // tokenizer-free derivation as before, now keyed (doc, field) so a
-      // multi-field root's sidecar keeps exact per-field N/avgdl
+      // per-FIELD recompute (the `_fields` marker names the root's
+      // fields): a field's dl is the sum of the doc's entries' tfs FOR
+      // THAT FIELD, keyed (doc, field) so a multi-field root's sidecar
+      // keeps exact per-field N/avgdl
       val fields = StateStore.readTag(spark, rootPath, "_fields")
         .map(_.split(",").toSeq).getOrElse(Seq(DefaultField))
-      val live = readMerged(spark, dirs.map(d => s"$docsRoot/$d"))
+      val live = readDocs(spark, rootPath, dirs)
         .withColumn("b", docBucket(newBuckets))
         .filter(col("op") =!= "delete")
       val dl = allEntries(spark, rootPath)
@@ -529,11 +422,7 @@ object IncrementalPostings {
     * pruned [[prunedEntries]] instead). */
   private[streaming] def allEntries(spark: SparkSession, rootPath: String): DataFrame = {
     val root = rootPath + "/entries"
-    val dirs = StateStore.liveBuckets(spark, root)
-    withTf(
-      if (dirs.nonEmpty) readEntriesRaw(spark, dirs.map(d => s"$root/$d"))
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        entriesSchema).drop("b"))
+    readEntries(spark, StateStore.liveBuckets(spark, root).map(d => s"$root/$d"))
   }
 
   /** The maintained inverted index, in `Index.postings` shape:
@@ -602,8 +491,7 @@ object IncrementalPostings {
     StateStore.ensureBucketCount(spark, dfsRoot(rootPath), n)
     val dirs = StateStore.liveBuckets(spark, entriesRoot)
     if (dirs.nonEmpty) {
-      val dfs = dfsOf(withTf(readEntriesRaw(spark,
-        dirs.map(d => s"$entriesRoot/$d"))), n).cache()
+      val dfs = dfsOf(readEntries(spark, dirs.map(d => s"$entriesRoot/$d")), n).cache()
       dfs.count() // decouple from any prior dfs files before the swaps
       try StateStore.commitBuckets(spark, dfsRoot(rootPath), dirs) { tmp =>
         dfs.sortWithinPartitions("b", "tok")
@@ -646,7 +534,8 @@ object IncrementalPostings {
     * pinned to the entries' bucket count at enable time, so the same
     * `b=NN` names address the same tokens' dfs buckets — no second
     * distinct-bucket-id job. Falls back to its own derivation when the
-    * counts are not provably equal (a root mid-adoption). */
+    * counts are not provably equal (a rescale that stopped between its
+    * swaps). */
   private[graft] def dfsForTokensFrameIn(spark: SparkSession, rootPath: String,
       entryDirs: Seq[String], toks: DataFrame): Option[DataFrame] = {
     if (!dfSidecarEnabled(spark, rootPath)) return None
@@ -724,18 +613,9 @@ object IncrementalPostings {
 
   /** Live view of the maintained document state (tombstones filtered);
     * empty with the documented schema before the first merge. */
-  def docsState(spark: SparkSession, rootPath: String): DataFrame = {
-    val root = rootPath + "/docs"
-    val dirs = StateStore.liveBuckets(spark, root)
-    // marker-derived schema (docsSchemaFor): single-footer inference
-    // could miss a field column absent from the one sampled bucket
-    val docs =
-      if (dirs.nonEmpty)
-        spark.read.schema(docsSchemaFor(spark, rootPath))
-          .parquet(dirs.map(d => s"$root/$d"): _*)
-      else emptyDocs(spark, rootPath)
-    docs.filter(col("op") =!= "delete")
-  }
+  def docsState(spark: SparkSession, rootPath: String): DataFrame =
+    readDocs(spark, rootPath, StateStore.liveBuckets(spark, rootPath + "/docs"))
+      .filter(col("op") =!= "delete")
 
 
   /** The entries rows for exactly `toks`, reading ONLY the buckets those
@@ -746,10 +626,8 @@ object IncrementalPostings {
                                        toks: Seq[String]): DataFrame = {
     val entriesRoot = rootPath + "/entries"
     val dirs = StateStore.bucketDirsFor(spark, entriesRoot, toks)
-    val entries = withTf(
-      if (dirs.nonEmpty) readEntriesRaw(spark, dirs.map(d => s"$entriesRoot/$d"))
-      else emptyDf(spark, entriesSchema).drop("b"))
-    entries.filter(col("tok").isin(toks: _*))
+    readEntries(spark, dirs.map(d => s"$entriesRoot/$d"))
+      .filter(col("tok").isin(toks: _*))
   }
 
   /** The entries rows matching a DataFrame of tokens whose VALUES are data
@@ -759,8 +637,7 @@ object IncrementalPostings {
     * read only those bucket dirs, and join. Per-call I/O is O(touched
     * entry buckets), never the index — the batch-probe analogue of
     * [[prunedEntries]]. A token's posting list is complete within its
-    * bucket, so per-token counts over the result are exact. A missing
-    * `_nbuckets` marker (pre-marker root) falls back to all live dirs. */
+    * bucket, so per-token counts over the result are exact. */
   private[graft] def prunedEntriesForTokens(spark: SparkSession, rootPath: String,
                                             toks: DataFrame): DataFrame =
     prunedEntriesForTokensIn(spark, rootPath,
@@ -783,29 +660,16 @@ object IncrementalPostings {
   private[graft] def prunedEntriesForTokensIn(spark: SparkSession,
       rootPath: String, dirs: Seq[String], toks: DataFrame): DataFrame = {
     val entriesRoot = rootPath + "/entries"
-    val entries = withTf(
-      if (dirs.nonEmpty) readEntriesRaw(spark, dirs.map(d => s"$entriesRoot/$d"))
-      else emptyDf(spark, entriesSchema).drop("b"))
-    entries.join(toks.select("tok").distinct(), "tok")
+    readEntries(spark, dirs.map(d => s"$entriesRoot/$d"))
+      .join(toks.select("tok").distinct(), "tok")
   }
 
-  /** The LIVE doc rows matching a DataFrame of rowkeys — bucket-pruned
-    * like [[prunedEntriesForTokens]]: the keys stay distributed, only
-    * their distinct bucket ids (≤ bucket count) are collected, and only
-    * those doc buckets are opened. The batch form of the HBase-Get-shaped
-    * [[prunedDocs]] fetch. */
   /** The docs state's schema from the root's own `_fields` marker — the
     * authority for which per-field columns a fields root stores (the
-    * marker is ensured at every fields merge, and it is what keeps
-    * single- and multi-field writers off each other's roots), so the
-    * read-path fetches resolve every field column WITHOUT a mergeSchema
-    * footer sweep: that sweep ran as a distributed job per fetch — pure
-    * fixed cost on the gate and on every maintained query's read path —
-    * and a SINGLE-footer inference could miss columns added after that
-    * bucket last merged (the UNRESOLVED_COLUMN crash this schema
-    * derivation, like the sweep before it, exists to prevent). Files
-    * written before a field column existed surface it as null for their
-    * rows, exactly as under mergeSchema. */
+    * marker is ensured at every merge, before the docs are written, and
+    * it is what keeps single- and multi-field writers off each other's
+    * roots). Every docs read and the merge's own batch take it, so a
+    * docs scan is planned without opening a footer. */
   private def docsSchemaFor(spark: SparkSession, rootPath: String): StructType =
     StateStore.readTag(spark, rootPath, "_fields") match {
       case Some(fs) => StructType(
@@ -821,17 +685,24 @@ object IncrementalPostings {
   private def emptyDocs(spark: SparkSession, rootPath: String): DataFrame =
     emptyDf(spark, docsSchemaFor(spark, rootPath))
 
+  /** The docs rows (tombstones included) of the given docs bucket dirs,
+    * under [[docsSchemaFor]]. */
+  private def readDocs(spark: SparkSession, rootPath: String,
+                       dirs: Seq[String]): DataFrame =
+    if (dirs.nonEmpty)
+      spark.read.schema(docsSchemaFor(spark, rootPath))
+        .parquet(dirs.map(d => s"$rootPath/docs/$d"): _*)
+    else emptyDocs(spark, rootPath)
+
+  /** The LIVE doc rows matching a DataFrame of rowkeys — bucket-pruned
+    * like [[prunedEntriesForTokens]]: the keys stay distributed, only
+    * their distinct bucket ids (≤ bucket count) are collected, and only
+    * those doc buckets are opened. The batch form of the HBase-Get-shaped
+    * [[prunedDocs]] fetch. */
   private[graft] def prunedDocsForKeys(spark: SparkSession, rootPath: String,
-                                       keys: DataFrame): DataFrame = {
-    val docsRoot = rootPath + "/docs"
-    val dirs = bucketDirsForFrame(spark, docsRoot, keys, "rowkey")
-    val docs =
-      if (dirs.nonEmpty)
-        spark.read.schema(docsSchemaFor(spark, rootPath))
-          .parquet(dirs.map(d => s"$docsRoot/$d"): _*)
-      else emptyDocs(spark, rootPath)
-    docs.filter(col("op") =!= "delete").join(keys.select("rowkey").distinct(), "rowkey")
-  }
+                                       keys: DataFrame): DataFrame =
+    readDocs(spark, rootPath, bucketDirsForFrame(spark, rootPath + "/docs", keys, "rowkey"))
+      .filter(col("op") =!= "delete").join(keys.select("rowkey").distinct(), "rowkey")
 
   /** The LIVE doc rows for exactly `rowkeys`, reading only the buckets
     * those keys hash to — the HBase-Get-shaped fetch for hit lists with a
@@ -839,16 +710,9 @@ object IncrementalPostings {
     * lists (e.g. [[termSearch]]'s) stay DataFrame-joined against the full
     * docs state instead: collecting them would move data, not metadata. */
   private[graft] def prunedDocs(spark: SparkSession, rootPath: String,
-                                    rowkeys: Seq[String]): DataFrame = {
-    val docsRoot = rootPath + "/docs"
-    val dirs = StateStore.bucketDirsFor(spark, docsRoot, rowkeys)
-    val docs =
-      if (dirs.nonEmpty)
-        spark.read.schema(docsSchemaFor(spark, rootPath))
-          .parquet(dirs.map(d => s"$docsRoot/$d"): _*)
-      else emptyDocs(spark, rootPath)
-    docs.filter(col("op") =!= "delete").filter(col("rowkey").isin(rowkeys: _*))
-  }
+                                    rowkeys: Seq[String]): DataFrame =
+    readDocs(spark, rootPath, StateStore.bucketDirsFor(spark, rootPath + "/docs", rowkeys))
+      .filter(col("op") =!= "delete").filter(col("rowkey").isin(rowkeys: _*))
 
   /** The reference's read topology over the MAINTAINED state — multi-term
     * AND via posting intersection, then key-fetch of the live rows (Solr
@@ -943,19 +807,27 @@ object IncrementalPostings {
   private def local(spark: SparkSession, c: Collected): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(c._2: _*), c._1)
 
+  /** The dstats sidecar's rows (n_docs, dl_sum, field) — a fixed
+    * schema, like the entries and docs reads. */
+  private val statsSchema = StructType(Seq(
+    StructField("n_docs", LongType), StructField("dl_sum", LongType),
+    StructField("field", StringType)))
+
+  private def readStats(spark: SparkSession, root: String): DataFrame = {
+    val dirs = StateStore.liveBuckets(spark, root)
+    if (dirs.nonEmpty) spark.read.schema(statsSchema).parquet(dirs.map(d => s"$root/$d"): _*)
+    else emptyDf(spark, statsSchema)
+  }
+
   /** Corpus-level ranking statistics over the maintained state — one row
     * (n_docs, avgdl) summed from the per-bucket stats sidecar: ≤
     * bucket-count rows of metadata, no docs scan. avgdl is the exact
     * integer token-length sum over the exact live count, divided once in
     * double — the same arithmetic as the corpus-scoped BM25's `avg`.
-    * The sidecar aggregate is cached on the sidecar root's token; a
-    * pre-sidecar root (no live sidecar buckets) falls back to a corpus
-    * aggregate measured with the CALLER's tokenizer, which is never
-    * cached — only the sidecar answer is tokenizer-free. */
-  def docStats(spark: SparkSession, rootPath: String,
-               tokenize: Column => Column = split(_, " ")): DataFrame = {
+    * The aggregate is cached on the sidecar root's token. */
+  def docStats(spark: SparkSession, rootPath: String): DataFrame = {
     val root = rootPath + "/dstats"
-    val sidecar = StateStore.cached(spark, root, "docStats") {
+    local(spark, StateStore.cached(spark, root, "docStats") {
       // guard symmetry with the `_fields` WRITE marker: a single-field
       // ranked read against a multi-field root would filter the sidecar
       // to a field that doesn't exist and score every document with NULL
@@ -966,28 +838,11 @@ object IncrementalPostings {
             "single-field ranked reads have no statistics here — use " +
             "bm25SearchFields/termSearchFields with explicit field boosts")
       }
-      val dirs = StateStore.liveBuckets(spark, root)
-      // the sidecar went per-field in round 11: single-field reads take
-      // the default field's rows (≡ all rows on a single-field root;
-      // legacy pre-field rows surface field = NULL under mergeSchema and
-      // ARE the default field). Summing across fields here would silently
-      // hand a multi-field root's combined length mass to a single-field
-      // ranking.
-      Option.when(dirs.nonEmpty) {
-        val raw = readMerged(spark, dirs.map(d => s"$root/$d"))
-        collected(avgdl(
-          if (raw.columns.contains("field"))
-            raw.filter(coalesce(col("field"), lit(DefaultField)) === DefaultField)
-          else raw))
-      }
-    }
-    sidecar.map(local(spark, _)).getOrElse(
-      // pre-sidecar root: a one-time corpus-sized fallback aggregate,
-      // measured with the CALLER's tokenizer so dl and avgdl stay in the
-      // same units (one merge through the current code adopts the
-      // sidecar for the touched buckets and onward)
-      avgdl(docsState(spark, rootPath).select(lit(1L).as("n_docs"),
-        size(tokenize(col("text"))).cast("long").as("dl_sum"))))
+      // single-field reads take the default field's rows: summing across
+      // fields would hand a multi-field root's combined length mass to a
+      // single-field ranking
+      collected(avgdl(readStats(spark, root).filter(col("field") === DefaultField)))
+    })
   }
 
   private def avgdl(per: DataFrame): DataFrame =
@@ -999,19 +854,13 @@ object IncrementalPostings {
     * (docs that HAVE the field — Lucene's per-field similarity statistic)
     * and avgdl its exact-integer length sum over that count. ≤ bucket ×
     * field rows of metadata, no docs scan, cached on the sidecar root's
-    * token. Legacy pre-field rows adopt [[DefaultField]]. */
+    * token. */
   def fieldStats(spark: SparkSession, rootPath: String): DataFrame = {
     val root = rootPath + "/dstats"
     local(spark, StateStore.cached(spark, root, "fieldStats") {
-      val dirs = StateStore.liveBuckets(spark, root)
-      require(dirs.nonEmpty,
+      require(StateStore.liveBuckets(spark, root).nonEmpty,
         s"no dstats sidecar at $rootPath — merge a batch first")
-      val raw = readMerged(spark, dirs.map(d => s"$root/$d"))
-      val per =
-        if (raw.columns.contains("field"))
-          raw.withColumn("field", coalesce(col("field"), lit(DefaultField)))
-        else raw.withColumn("field", lit(DefaultField))
-      collected(per.groupBy("field")
+      collected(readStats(spark, root).groupBy("field")
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("dl_sum")).as("dl_sum"))
         .select(col("field"), col("n_docs"),
           (col("dl_sum").cast("double") / col("n_docs")).as("avgdl")))
@@ -1086,7 +935,7 @@ object IncrementalPostings {
     * affect results and are dropped BEFORE the positions
     * check); output is ≤ |matching doc| rows. Fails loudly on a
     * positions-free row of a HIT doc, like [[phraseSearch]] — a
-    * positions-free row of a non-hit doc (legacy or keepPositions=false
+    * positions-free row of a non-hit doc (a keepPositions=false
     * re-put) no longer aborts the query (round-12 ADVICE). */
   private def phraseTfFields(spark: SparkSession, ent: DataFrame,
                              hitKeys: DataFrame,
@@ -1116,8 +965,8 @@ object IncrementalPostings {
         when(col("pos0").isNull, raise_error(concat(
           lit("no position payload for term '"), col("tok"),
           lit("' of doc "), col("doc_id"),
-          lit(" (pre-positions row or keepPositions=false root); "),
-          lit("re-put the doc or use the corpus-scoped phrase boost"))))
+          lit(" (keepPositions=false root); "),
+          lit("use the corpus-scoped phrase boost"))))
           .otherwise(col("pos0")).as("pos"))
       // count(1), not countDistinct(slot) (which plans an Expand): for a
       // fixed (doc, field, start), slot s contributes at most ONE row —
@@ -1318,7 +1167,7 @@ object IncrementalPostings {
         hits0.join(broadcast(a.select(col("doc_id"))), Seq("doc_id"), "left_semi")
           .localCheckpoint())
       .getOrElse(hits0)
-    val stats = docStats(spark, rootPath, tokenize)
+    val stats = docStats(spark, rootPath)
     // the length fetch opens only the hit docs' own buckets: the hit KEYS
     // stay distributed, but their distinct bucket ids are collectable
     // metadata (prunedDocsForKeys) — same O(touched buckets) discipline
@@ -1362,7 +1211,7 @@ object IncrementalPostings {
       .groupBy("grp").agg(max(col("df")).as("df"))
     val hits = tagged.groupBy("grp", "doc_id").agg(sum(col("tf")).as("tf"))
       .join(broadcast(dfg), "grp")
-    val stats = docStats(spark, rootPath, tokenize)
+    val stats = docStats(spark, rootPath)
     prunedDocsForKeys(spark, rootPath, hits.select(col("doc_id").as("rowkey")))
       .select(col("rowkey").as("doc_id"), size(tokenize(col("text"))).cast("long").as("dl"))
       .join(broadcast(hits), "doc_id")
@@ -1440,24 +1289,22 @@ object IncrementalPostings {
     * rows, and the matched rows are key-fetched from only their own doc
     * buckets ([[prunedDocsForKeys]]) — no corpus scan anywhere.
     *
-    * Positions are NULL on rows written before the positions payload (or
-    * under `keepPositions = false` — the shingle family); a phrase query
-    * over such a root fails loudly rather than silently never matching
-    * the affected docs — re-put the docs (any put recomputes its rows) or
-    * keep phrase queries on the corpus-scoped path for legacy roots. */
+    * Positions are NULL on a `keepPositions = false` root (the shingle
+    * family); a phrase query over one fails loudly rather than silently
+    * never matching — keep phrase queries on the corpus-scoped path
+    * there. */
   def phraseSearch(spark: SparkSession, rootPath: String,
                    phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phraseSearch needs at least one term")
     import spark.implicits._
     val slots = phrase.zipWithIndex.toDF("tok", "slot")
     val starts = prunedEntries(spark, rootPath, phrase.distinct)
-      .select(col("tok"), col("doc_id"),
-        coalesce(col("field"), lit(DefaultField)).as("field"),
+      .select(col("tok"), col("doc_id"), col("field"),
         when(col("positions").isNull, raise_error(concat(
           lit("no position payload for term '"), col("tok"),
           lit("' of doc "), col("doc_id"),
-          lit(" (pre-positions row or keepPositions=false root); "),
-          lit("re-put the doc or use the corpus-scoped phrase query"))))
+          lit(" (keepPositions=false root); "),
+          lit("use the corpus-scoped phrase query"))))
           .otherwise(col("positions")).as("positions"))
       .join(broadcast(slots), "tok")
       .select(col("doc_id"), col("field"), col("slot"),
@@ -1483,8 +1330,8 @@ object IncrementalPostings {
       .select(col("doc_id"),
         when(col("positions").isNull, raise_error(concat(
           lit(s"no position payload for term '$term' of doc "), col("doc_id"),
-          lit(" (pre-positions row or keepPositions=false root); "),
-          lit("re-put the doc or use the corpus-scoped highlight"))))
+          lit(" (keepPositions=false root); "),
+          lit("use the corpus-scoped highlight"))))
           .otherwise(col("positions")).as("positions"))
       .select(col("doc_id"),
         array_join(transform(col("positions"),

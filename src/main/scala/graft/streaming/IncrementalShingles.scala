@@ -114,8 +114,8 @@ object IncrementalShingles {
 
   /** A probe/merge against a root whose `_scheme` marker disagrees with
     * the presented scheme is a silent-garbage generator (word shingles
-    * never match md5 grams) — fail loudly instead. Roots written before
-    * the marker existed validate nothing and adopt on their next merge. */
+    * never match md5 grams) — fail loudly instead. A root without the
+    * marker has never been merged: every merge records it first. */
   private def requireScheme(spark: SparkSession, rootPath: String,
                             scheme: SketchScheme): Unit =
     StateStore.readTag(spark, rootPath, "_scheme").foreach { recorded =>

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.operators.Percolate
 
 /** The reference's whole write path as ONE pipeline: a changelog
@@ -747,7 +748,10 @@ object IngestPipeline {
     * them one at a time would leave most of a 1000-slot cluster idle
     * between stages. The one ordering that matters — the NEXT batch's
     * gate must read a fully-merged shingle state — is preserved because
-    * this method joins every merge before returning. */
+    * this method joins every merge before returning. Each merge runs
+    * under the caller's Spark local properties (job group, description,
+    * scheduler pool), snapshotted at submit: a pool thread otherwise
+    * keeps the properties of whichever thread first started it. */
   private def mergeAll(spark: SparkSession, batch: DataFrame,
                        decisions: DataFrame, pipelineRoot: String,
                        numBuckets: Int, tokenize: Column => Column,
@@ -762,11 +766,12 @@ object IngestPipeline {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
+    val props = Bridge.localProperties(spark)
     // fatal throwables (OOM, stack overflow) never complete a Future's
     // promise — an unwrapped one would hang the Await below forever
     // instead of failing the batch; wrap them so they propagate
     def merge(f: => Unit): Future[Unit] = Future {
-      try f catch {
+      try Bridge.withLocalProperties(spark, props)(f) catch {
         case t: Throwable if !scala.util.control.NonFatal(t) =>
           throw new RuntimeException("fatal error in state merge", t)
       }

@@ -98,15 +98,59 @@ object StateStore {
     if (fs.exists(backup)) fs.delete(backup, true): Unit
   }
 
+  /** The trimmed content of the marker file `name` under `dir`, None when
+    * it is absent: one open, no existence probe. */
+  private def readMarker(fs: FileSystem, dir: Path, name: String): Option[String] =
+    try {
+      val in = fs.open(new Path(dir, name))
+      Some((try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim)
+    } catch { case _: java.io.FileNotFoundException => None }
+
   /** The `_seq` commit counter under `dir`, 0 when the marker is absent.
     * An unparseable marker throws NumberFormatException; callers decide
     * what that means (a token read treats it as uncacheable, a bump
     * restarts the counter). */
   private def readSeq(fs: FileSystem, dir: Path): Long =
-    try {
-      val in = fs.open(new Path(dir, "_seq"))
-      (try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim.toLong
-    } catch { case _: java.io.FileNotFoundException => 0L }
+    readMarker(fs, dir, "_seq").fold(0L)(_.toLong)
+
+  /** The on-disk format of every state root, stamped in a `_format`
+    * marker by the commit path alone: [[commit]] writes it into its tmp
+    * dir beside `_seq`, [[commitBuckets]] into the root it writes. A root
+    * holding bucket dirs (`b=…`, `cell=…`) is read and written only
+    * under this exact stamp: [[commit]], [[commitBuckets]], a marker
+    * write ([[ensureTag]]) and a [[liveBuckets]] refill refuse one
+    * without it, or with another, before anything is written or bumped. */
+  val Format = "1"
+
+  private val FormatMarker = "_format"
+
+  private def isBucketDir(name: String): Boolean =
+    name.startsWith("b=") || name.startsWith("cell=")
+
+  /** Refuse `root` unless its stamp is [[Format]] or, unstamped, its
+    * listing `names` holds no bucket dir (a fresh or flat root). */
+  private def checkFormat(root: Path, stamp: Option[String], names: => Seq[String]): Unit =
+    stamp match {
+      case Some(Format) =>
+      case Some(other) => throw new IOException(
+        s"state at $root is in on-disk format $other; this build reads and " +
+          s"writes only format $Format")
+      case None if names.exists(isBucketDir) => throw new IOException(
+        s"state at $root holds bucket dirs but no $FormatMarker stamp; it " +
+          s"is not in on-disk format $Format, the only one this build reads " +
+          "and writes")
+      case None =>
+    }
+
+  /** [[checkFormat]] for a write: reads the stamp first and lists the
+    * root only when it is absent. True when the root carries the stamp. */
+  private def requireFormat(fs: FileSystem, root: Path): Boolean = {
+    val stamp = readMarker(fs, root, FormatMarker)
+    checkFormat(root, stamp,
+      try fs.listStatus(root).map(_.getPath.getName).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil })
+    stamp.isDefined
+  }
 
   /** Write `value` as the `_seq` marker under `dir`, tmp-then-rename so
     * the marker itself is never torn. */
@@ -151,7 +195,8 @@ object StateStore {
     * The commit moves both counters [[stateToken]] reads: the parent's is
     * bumped before the write, and the new version carries its own `_seq`
     * one past the replaced version's (and past any counter the write
-    * itself left in the tmp dir). */
+    * itself left in the tmp dir), and the [[Format]] stamp. A target in
+    * another format is refused before the bump. */
   def commit(spark: SparkSession, statePath: String)(write: String => Unit): Unit = {
     val target = new Path(statePath)
     val tmp = new Path(statePath + ".tmp")
@@ -160,11 +205,15 @@ object StateStore {
     beginCommit(fenced)
     try {
       recover(spark, statePath)
+      requireFormat(fs, target)
       Option(target.getParent).foreach(bumpSeq(fs, _))
       if (fs.exists(tmp)) fs.delete(tmp, true)
       write(tmp.toString)
-      if (fs.exists(tmp) && fs.getFileStatus(tmp).isDirectory)
+      if (fs.exists(tmp) && fs.getFileStatus(tmp).isDirectory) {
+        val out = fs.create(new Path(tmp, FormatMarker), true)
+        try out.write(Format.getBytes("UTF-8")) finally out.close()
         writeSeq(fs, tmp, math.max(seqForBump(fs, target), seqForBump(fs, tmp)) + 1)
+      }
       swapIn(spark, tmp.toString, statePath)
     } finally endCommit(fenced)
   }
@@ -183,7 +232,8 @@ object StateStore {
     * content (event_id latest-wins for row state; the postings merge's
     * double anti-join) — which is the documented contract of both
     * incremental merges. The root's and its parent's `_seq` counters are
-    * bumped before any swap. */
+    * bumped before any swap; a root in another format is refused before
+    * that, and a fresh one is stamped with [[Format]]. */
   def commitBuckets(spark: SparkSession, rootPath: String, bucketDirs: Seq[String])
                    (write: String => Unit): Unit = {
     val root = new Path(rootPath)
@@ -192,8 +242,10 @@ object StateStore {
     val fenced = fenceOf(root)
     beginCommit(fenced)
     try {
+      val stamped = requireFormat(fs, root)
       if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
       fs.mkdirs(root)
+      if (!stamped) ensureTag(spark, rootPath, FormatMarker, Format)
       // inside the root (bucket swaps never touch root-level files), before
       // any swap — see bumpSeq for the pre-increment argument
       bumpSeq(fs, root)
@@ -208,38 +260,16 @@ object StateStore {
     * records `numBuckets` in a `_nbuckets` marker; every later writer must
     * present the same value — a mismatched count would hash rowkeys into
     * the wrong directories and silently duplicate state (the existing copy
-    * in the old bucket is never read). Fails loudly instead. The marker is
-    * written tmp-then-rename (same torn-write discipline as the swaps),
-    * and adopting a marker onto a pre-marker root cross-checks the
-    * existing bucket indices against the presented count. */
+    * in the old bucket is never read). Fails loudly instead. */
   def ensureBucketCount(spark: SparkSession, rootPath: String, numBuckets: Int): Unit = {
     require(numBuckets > 0, "numBuckets must be positive")
-    val marker = new Path(rootPath + "/_nbuckets")
-    val fs = fsOf(spark, marker)
     bucketCount(spark, rootPath) match {
       case Some(recorded) =>
         if (recorded != numBuckets)
           throw new IOException(
             s"state at $rootPath was bucketed with numBuckets=$recorded; " +
               s"refusing to merge with numBuckets=$numBuckets")
-      case None =>
-        // legacy/new root: any existing bucket index must fit the count
-        val tooBig = liveBuckets(spark, rootPath)
-          .map(_.stripPrefix("b=").toInt).filter(_ >= numBuckets)
-        if (tooBig.nonEmpty)
-          throw new IOException(
-            s"state at $rootPath has bucket dirs ${tooBig.map("b=" + _).mkString(",")} " +
-              s"outside numBuckets=$numBuckets; it was bucketed with a larger count")
-        fs.mkdirs(new Path(rootPath))
-        val tmp = new Path(rootPath + "/_nbuckets.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(numBuckets.toString.getBytes("UTF-8")) finally out.close()
-        if (!fs.rename(tmp, marker)) {
-          fs.delete(tmp, true)
-          // a concurrent/previous writer won the rename — re-validate
-          if (!bucketCount(spark, rootPath).contains(numBuckets))
-            throw new IOException(s"cannot record bucket count at $marker")
-        }
+      case None => ensureTag(spark, rootPath, "_nbuckets", numBuckets.toString)
     }
   }
 
@@ -247,8 +277,8 @@ object StateStore {
     * the same discipline as the `_nbuckets` marker ([[ensureBucketCount]])
     * for properties with no numeric cross-check: the first writer records
     * `value`; every later writer must present the same value or fail
-    * loudly; a missing marker on an existing root is adopted (recorded on
-    * the next write). Written tmp-then-rename. */
+    * loudly. Written tmp-then-rename, and only into a root of this
+    * [[Format]]. */
   def ensureTag(spark: SparkSession, rootPath: String, tag: String,
                 value: String): Unit = {
     val marker = new Path(s"$rootPath/$tag")
@@ -260,6 +290,7 @@ object StateStore {
             s"state at $rootPath was written with $tag=$recorded; " +
               s"refusing to proceed with $tag=$value")
       case None =>
+        requireFormat(fs, new Path(rootPath))
         fs.mkdirs(new Path(rootPath))
         val tmp = new Path(s"$rootPath/$tag.tmp")
         val out = fs.create(tmp, true)
@@ -275,32 +306,28 @@ object StateStore {
 
   /** The recorded value of a [[ensureTag]] marker, if present. */
   def readTag(spark: SparkSession, rootPath: String, tag: String): Option[String] = {
-    val marker = new Path(s"$rootPath/$tag")
-    val fs = fsOf(spark, marker)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      Some(try new String(in.readAllBytes(), "UTF-8").trim finally in.close())
-    }
+    val root = new Path(rootPath)
+    readMarker(fsOf(spark, root), root, tag)
   }
 
   /** The pinned bucket count of a state root, if one has been recorded. */
-  def bucketCount(spark: SparkSession, rootPath: String): Option[Int] = {
-    val marker = new Path(rootPath + "/_nbuckets")
-    val fs = fsOf(spark, marker)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val text = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      try Some(text.toInt)
+  def bucketCount(spark: SparkSession, rootPath: String): Option[Int] =
+    readTag(spark, rootPath, "_nbuckets").map { text =>
+      try text.toInt
       catch {
         case _: NumberFormatException =>
           throw new IOException(
-            s"unreadable bucket-count marker $marker (content: '$text'); " +
-              "delete it to re-adopt the root with an explicit numBuckets")
+            s"unreadable bucket-count marker $rootPath/_nbuckets (content: '$text'); " +
+              "delete it to re-pin the root with an explicit numBuckets")
       }
     }
-  }
+
+  /** [[bucketCount]] for a root known to hold buckets: every writer pins
+    * the count before its first bucket commit, so a missing marker is a
+    * damaged root and fails loudly. */
+  private[streaming] def pinnedBucketCount(spark: SparkSession, rootPath: String): Int =
+    bucketCount(spark, rootPath).getOrElse(throw new IOException(
+      s"state at $rootPath holds bucket dirs but no _nbuckets marker"))
 
   /** Re-bucket a hash-bucketed state root to `newBuckets` — the planned
     * resize a growing deployment runs when buckets outgrow their rewrite
@@ -361,15 +388,7 @@ object StateStore {
     commit(spark, rootPath) { tmp =>
       fs.mkdirs(new Path(tmp))
       if (dirs.nonEmpty) {
-        // mergeSchema: buckets written before a payload column existed
-        // (e.g. postings entries pre-tf or pre-positions) coexist with
-        // upgraded ones; a single-footer schema inference could sample
-        // an OLD file and the whole-root rewrite would silently drop the
-        // new column for every row — permanent loss on the one operation
-        // that touches all buckets at once. Merged, old rows carry nulls
-        // and the upgraded payload survives.
-        val all = spark.read.option("mergeSchema", "true")
-          .parquet(dirs.map(d => s"$rootPath/$d"): _*)
+        val all = spark.read.parquet(dirs.map(d => s"$rootPath/$d"): _*)
           .withColumn("b", pmod(crc32(col(keyCol)), lit(newBuckets)).cast("int"))
         val placed = oldCount match {
           case Some(n) if newBuckets % n == 0 => all // map-side fan-out, no exchange
@@ -390,21 +409,18 @@ object StateStore {
   /** The live bucket dirs under `root` that `keys` hash into — the same
     * CRC32-of-UTF-8 as the write-side bucket columns, so a key-addressed
     * read (the HBase-Get shape) opens |touched buckets| dirs, never the
-    * state. A missing `_nbuckets` marker (pre-marker root) falls back to
-    * all live dirs. */
+    * state. */
   def bucketDirsFor(spark: SparkSession, root: String,
                     keys: Seq[String]): Seq[String] = {
     val live = liveBuckets(spark, root)
-    bucketCount(spark, root) match {
-      case Some(n) =>
-        val wanted = keys.map { k =>
-          val crc = new java.util.zip.CRC32()
-          crc.update(k.getBytes("UTF-8"))
-          s"b=${java.lang.Math.floorMod(crc.getValue, n.toLong)}"
-        }.toSet
-        live.filter(wanted.contains)
-      case None => live
-    }
+    if (live.isEmpty) return Nil
+    val n = pinnedBucketCount(spark, root).toLong
+    val wanted = keys.map { k =>
+      val crc = new java.util.zip.CRC32()
+      crc.update(k.getBytes("UTF-8"))
+      s"b=${java.lang.Math.floorMod(crc.getValue, n)}"
+    }.toSet
+    live.filter(wanted.contains)
   }
 
   /** Total bytes of the LIVE buckets under a state root — the bucket-
@@ -514,7 +530,8 @@ object StateStore {
   /** Heal every bucket under a bucketed state root (promote interrupted
     * per-bucket swaps) and return the live bucket directory names.
     * `prefix` selects the partition naming scheme — `b=` for the
-    * hash-bucketed merges, `cell=` for the IVF index's cell layout. */
+    * hash-bucketed merges, `cell=` for the IVF index's cell layout. A root
+    * in another format ([[checkFormat]]) is refused. */
   private def liveBucketsUncached(spark: SparkSession, rootPath: String,
                                   prefix: String): Seq[String] = {
     val root = new Path(rootPath)
@@ -523,8 +540,11 @@ object StateStore {
     fs.listStatus(root).map(_.getPath.getName)
       .filter(n => n.startsWith(prefix) && n.endsWith(".old"))
       .foreach(n => recover(spark, s"$rootPath/${n.stripSuffix(".old")}"))
-    fs.listStatus(root).map(_.getPath.getName)
-      .filter(n => n.startsWith(prefix) && !n.endsWith(".old") && !n.endsWith(".tmp"))
-      .toSeq.sorted
+    val names = fs.listStatus(root).map(_.getPath.getName).toSeq
+    checkFormat(root,
+      if (names.contains(FormatMarker)) readMarker(fs, root, FormatMarker) else None,
+      names)
+    names.filter(n => n.startsWith(prefix) && !n.endsWith(".old") && !n.endsWith(".tmp"))
+      .sorted
   }
 }

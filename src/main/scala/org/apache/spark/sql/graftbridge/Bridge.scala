@@ -9,8 +9,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * the sql package; libraries that define native Catalyst expressions reach
   * the constructor through a shim in `org.apache.spark.sql` — the same
   * pattern used by public Spark-extension projects. The same access
-  * re-binds a plan to another session of its context. This is the only
-  * file outside the `graft` namespace. */
+  * re-binds a plan to another session of its context, and reaches the
+  * thread-local job properties a worker thread must carry. This is the
+  * only file outside the `graft` namespace. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -23,6 +24,20 @@ object Bridge {
     val s = spark.newSession()
     settings.foreach { case (k, v) => s.sessionState.conf.setConfString(k, v) }
     s
+  }
+
+  /** A copy of the calling thread's Spark local properties: job group,
+    * description, scheduler pool and every other tag its jobs carry. */
+  def localProperties(spark: SparkSession): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(spark.sparkContext.getLocalProperties)
+
+  /** Run `body` on this thread with (a copy of) `props` as its Spark
+    * local properties, then restore the thread's own. */
+  def withLocalProperties[T](spark: SparkSession, props: java.util.Properties)(body: => T): T = {
+    val sc = spark.sparkContext
+    val own = sc.getLocalProperties
+    sc.setLocalProperties(org.apache.spark.util.Utils.cloneProperties(props))
+    try body finally sc.setLocalProperties(own)
   }
 
   /** `df`'s analyzed plan as a DataFrame of `spark`, another session of

@@ -159,21 +159,24 @@ class IncrementalMergeSpec extends SparkSpec {
       IncrementalIndex.mergeBatch(spark, ev.filter(col("event_id") >= 500), base) // default 16
     }
     assert(e.getMessage.contains("numBuckets=4"))
-    // a pre-marker (legacy) root is cross-checked against its bucket dirs:
-    // b=<i> outside the presented count proves the count wrong
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(base + "/_nbuckets"), false)
-    val e2 = intercept[java.io.IOException] {
-      IncrementalIndex.mergeBatch(spark, ev.filter(col("event_id") >= 500), base, numBuckets = 2)
-    }
-    assert(e2.getMessage.contains("outside numBuckets=2"))
-    // re-adopting with the true count works
-    StateStore.ensureBucketCount(spark, base, 4)
     // the matching count still works
     IncrementalIndex.mergeBatch(spark, ev.filter(col("event_id") >= 500), base, numBuckets = 4)
     assert(stateMap(IncrementalIndex.readState(spark, base)) ===
       stateMap(IncrementalIndex.compact(ev)))
+    // a root from before the markers (bucket dirs, no `_nbuckets`, no
+    // `_format`) is refused whatever count is presented, the true one
+    // included, and no marker is written into it
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    for (m <- Seq("_nbuckets", "_format"))
+      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$base/$m"), false))
+    for (n <- Seq(2, 4)) {
+      val e2 = intercept[java.io.IOException] {
+        IncrementalIndex.mergeBatch(spark, ev.filter(col("event_id") >= 500), base, numBuckets = n)
+      }
+      assert(e2.getMessage.contains(base) && e2.getMessage.contains("_format"))
+      assert(StateStore.bucketCount(spark, base).isEmpty)
+    }
   }
 
   test("tombstone GC drops only expired deletes; live rows and newer tombstones survive") {

@@ -775,4 +775,55 @@ class IncrementalPostingsSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq
     assert(grouped === Seq("3", "1", "2"))
   }
+
+  /** Every file and directory under `root` (relative path → bytes; a
+    * directory maps to no bytes). */
+  private def tree(root: String): Map[String, Seq[Byte]] = {
+    val base = new java.io.File(root).toPath
+    val out = Map.newBuilder[String, Seq[Byte]]
+    def walk(f: java.io.File): Unit = {
+      val rel = base.relativize(f.toPath).toString
+      if (f.isDirectory) { out += rel -> Nil; f.listFiles().foreach(walk) }
+      else out += rel -> Files.readAllBytes(f.toPath).toSeq
+    }
+    walk(base.toFile)
+    out.result()
+  }
+
+  test("a root whose _format stamp is gone is refused by a merge and a read; the merge writes nothing") {
+    val root = Files.createTempDirectory("graft_postFmt").toString + "/postings"
+    IncrementalPostings.mergeBatch(spark, Seq(
+      DocChange("1", 0, "put", "alpha beta"),
+      DocChange("2", 1, "put", "beta gamma")).toDF(), root)
+    val entries = s"$root/entries"
+    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(s"$entries/_format"))) ===
+      graft.streaming.StateStore.Format)
+    Files.delete(java.nio.file.Paths.get(s"$entries/_format"))
+    val before = tree(root)
+    val merge = intercept[java.io.IOException] {
+      IncrementalPostings.mergeBatch(spark, Seq(
+        DocChange("1", 2, "put", "delta"),
+        DocChange("3", 3, "put", "beta epsilon")).toDF(), root)
+    }
+    assert(merge.getMessage.contains(entries) && merge.getMessage.contains("_format"))
+    assert(tree(root) === before, "the refused merge changed the root")
+    val read = intercept[java.io.IOException] {
+      IncrementalPostings.termSearch(spark, root, Seq("beta")).collect()
+    }
+    assert(read.getMessage.contains(entries))
+  }
+
+  test("a postings merge plans its docs read from the root's schema, with no footer job") {
+    val root = Files.createTempDirectory("graft_postJobs").toString + "/postings"
+    IncrementalPostings.mergeBatch(spark, Seq(
+      DocChange("1", 0, "put", "alpha beta"),
+      DocChange("2", 1, "put", "beta gamma")).toDF(), root)
+    val batch = Seq(DocChange("1", 2, "put", "gamma delta")).toDF()
+    // one job fewer than a docs read that merges every footer's schema
+    val jobs = SpecMetrics.jobsRun(spark)(
+      IncrementalPostings.mergeBatch(spark, batch, root))
+    assert(jobs <= 22, s"$jobs jobs")
+    assert(IncrementalPostings.termSearch(spark, root, Seq("delta"))
+      .select("rowkey").collect().map(_.getString(0)).toSeq === Seq("1"))
+  }
 }

@@ -1234,6 +1234,23 @@ class IngestPipelineSpec extends SparkSpec {
       .map(r => (r.getAs[String]("rowkey"), r.getAs[String]("query_id"))).toSet
     assert(hit === Set(("1", "q")))
   }
+
+  test("every job of a flush, its concurrent state merges included, carries the caller's job group") {
+    val root = Files.createTempDirectory("graft_pipeGroup").toString + "/pipe"
+    // a first flush starts the merge threads outside any job group
+    applyB(root, 0, Seq(DocChange("1", 0, "put", "alpha beta gamma delta")))
+    val sc = spark.sparkContext
+    sc.setJobGroup("flush-group", "a flush under a caller's job group")
+    val props =
+      try SpecMetrics.jobProperties(spark)(applyB(root, 1, Seq(
+        DocChange("2", 1, "put", "totally different words entirely here"),
+        DocChange("1", 2, "delete", ""))))
+      finally sc.clearJobGroup()
+    assert(props.nonEmpty)
+    val strays = props.map(_.getProperty("spark.jobGroup.id")).filter(_ != "flush-group")
+    assert(strays.size === 0, s"of ${props.size} jobs")
+    assert(liveKeys(root) === Set("2"))
+  }
 }
 
 /** A changelog row carrying a facet field beside the text — the shape a

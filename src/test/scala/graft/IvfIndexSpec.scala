@@ -747,4 +747,21 @@ class IvfIndexSpec extends SparkSpec {
     assert(spark.read.parquet(vroot + "/vectors").select("vec_id").collect()
       .map(_.getLong(0)).toSet === Set(1L, 3L, 4L))
   }
+
+  test("applyChanges reads the centroids and the id map with their stored schemas") {
+    import spark.implicits._
+    val p = Files.createTempDirectory("graft_ivfJobs").toString + "/ivf"
+    val vecs = (0 until 8).map { i =>
+      val th = 2 * math.Pi * i / 8
+      (i.toLong, Seq(math.cos(th).toFloat, math.sin(th).toFloat))
+    }.toDF("vec_id", "embedding")
+    IvfIndex.build(vecs, p, nlist = 2, iters = 1)
+    val puts = Seq((1L, Seq(0.0f, 1.0f)), (9L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
+    val dels = Seq(3L).toDF("vec_id")
+    // two jobs fewer than reads that infer their schema from a footer
+    val jobs = SpecMetrics.jobsRun(spark)(IvfIndex.applyChanges(spark, p, puts, dels))
+    assert(jobs <= 19, s"$jobs jobs")
+    assert(spark.read.parquet(p + "/ids").select("vec_id").collect().map(_.getLong(0)).sorted
+      .toSeq === Seq(0L, 1L, 2L, 4L, 5L, 6L, 7L, 9L))
+  }
 }

@@ -327,43 +327,4 @@ class MultifieldSpec extends SparkSpec {
     }
     assert(exF.getMessage.contains("_fields"))
   }
-
-  test("legacy pre-field state adopts the default field on read") {
-    // a root written before the field column existed: simulate by
-    // stripping the column from committed entries and dstats bucket files
-    // — exactly what a pre-round-11 root's parquet footers look like
-    val root = newRoot("legacy")
-    IncrementalPostings.mergeBatch(spark,
-      Seq(("1", 0L, "put", "merge sort rows"), ("2", 1L, "put", "scan merge"))
-        .toDF("rowkey", "event_id", "op", "text"),
-      root)
-    for (sub <- Seq("entries", "dstats")) {
-      val dirs = new java.io.File(s"$root/$sub").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("b="))
-      for (d <- dirs) {
-        val stripped = spark.read.parquet(d.toString).drop("field").cache()
-        stripped.count()
-        val tmp = d.toString + ".strip"
-        stripped.write.mode("overwrite").parquet(tmp)
-        stripped.unpersist()
-        graft.operators.Materialize.deleteLocalDir(d.toString)
-        assert(new java.io.File(tmp).renameTo(d))
-      }
-    }
-    // single-field reads see the stripped rows as the default field
-    val got = IncrementalPostings.termSearch(spark, root, Seq("merge"))
-      .select("rowkey").collect().map(_.getString(0)).toSet
-    assert(got === Set("1", "2"))
-    val fs = IncrementalPostings.fieldStats(spark, root).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(fs === Map("text" -> 2L))
-    // ... and a post-upgrade merge over the legacy root still removes the
-    // updated doc's OLD (adopted) postings
-    IncrementalPostings.mergeBatch(spark,
-      Seq(("1", 2L, "put", "fresh words")).toDF("rowkey", "event_id", "op", "text"),
-      root)
-    val after = IncrementalPostings.termSearch(spark, root, Seq("merge"))
-      .select("rowkey").collect().map(_.getString(0)).toSet
-    assert(after === Set("2"), "the adopted legacy postings of doc 1 must be removed")
-  }
 }

@@ -143,6 +143,17 @@ class SnapshotSpec extends SparkSpec {
       .filter(col("batch_id") === 2).count() === 0L)
     // the zombie's next epoch check fails — it cannot write the restored root
     intercept[WriterFence.FencedException](zombie.check(spark))
+    // every bucketed root of the restored pipeline carries the format stamp
+    def bucketed(f: java.io.File): Seq[java.io.File] = {
+      val kids = f.listFiles().toSeq
+      (if (kids.exists(k => k.isDirectory && k.getName.startsWith("b="))) Seq(f) else Nil) ++
+        kids.filter(_.isDirectory).flatMap(bucketed)
+    }
+    val roots = bucketed(new java.io.File(root))
+    assert(roots.size >= 4, roots)
+    for (r <- roots)
+      assert(new String(Files.readAllBytes(new java.io.File(r, "_format").toPath)) ===
+        graft.streaming.StateStore.Format, r)
     // and the restored root keeps taking new batches
     IngestPipeline.applyBatch(spark, Seq(
       DocChange("9", 40, "put", "fresh ingest after the restore completes")).toDF(),

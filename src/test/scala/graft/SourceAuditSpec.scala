@@ -38,4 +38,12 @@ class SourceAuditSpec extends AnyFunSuite {
         w.endsWith("s.sessionState.conf.setConfString(k, v) }"))
     assert(writes.isEmpty, writes.mkString("session conf writes:\n", "\n", ""))
   }
+
+  test("no read merges parquet schemas") {
+    // Every state root is written in one on-disk format (StateStore's
+    // `_format` stamp), so each state read knows its schema; a
+    // mergeSchema read opens every footer of the files it scans.
+    val reads = matches("""mergeSchema""".r)
+    assert(reads.isEmpty, reads.mkString("schema-merging reads:\n", "\n", ""))
+  }
 }

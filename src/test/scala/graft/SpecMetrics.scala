@@ -47,14 +47,20 @@ object SpecMetrics {
 
   /** Number of Spark JOBS submitted while `f` runs — pins "this operator
     * pays N actions", catching a silently reintroduced pre-flight
-    * validation job or per-call collect. Listener events are posted
-    * asynchronously; the bus is drained before counting. */
-  def jobsRun(spark: org.apache.spark.sql.SparkSession)(f: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    * validation job or per-call collect. */
+  def jobsRun(spark: org.apache.spark.sql.SparkSession)(f: => Unit): Int =
+    jobProperties(spark)(f).size
+
+  /** The local properties (job group, description, …) of every Spark job
+    * submitted while `f` runs, from whichever thread. Listener events are
+    * posted asynchronously; the bus is drained before returning. */
+  def jobProperties(spark: org.apache.spark.sql.SparkSession)
+                   (f: => Unit): Seq[java.util.Properties] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet(): Unit
+        seen.add(Option(j.properties).getOrElse(new java.util.Properties)): Unit
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -66,10 +72,10 @@ object SpecMetrics {
       var waited = 0
       while (stable < 2 && waited < 100) {
         Thread.sleep(50)
-        if (n.get() == prev) stable += 1 else { stable = 0; prev = n.get() }
+        if (seen.size == prev) stable += 1 else { stable = 0; prev = seen.size }
         waited += 1
       }
     } finally spark.sparkContext.removeSparkListener(listener)
-    n.get()
+    seen.toArray(Array.empty[java.util.Properties]).toSeq
   }
 }

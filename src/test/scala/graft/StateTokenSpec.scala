@@ -3,10 +3,8 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 import graft.operators.IvfIndex
-import graft.streaming.{IncrementalPostings, StateStore}
+import graft.streaming.StateStore
 
 /** The StateStore change token and its one cache: nothing a cache holds
   * survives a commit that changed what it describes. Each case pins the
@@ -46,28 +44,6 @@ class StateTokenSpec extends SparkSpec {
       "the listing cached against the first build was served after the rebuild")
     // and the probe reads every cell of the new layout
     assert(IvfIndex.search(spark, path, Seq(1f, 0f), k = 48, probes = 4).count() === 48L)
-  }
-
-  test("docStats of a pre-sidecar root is never cached across tokenizers") {
-    val root = Files.createTempDirectory("graft_tokpre").toString + "/postings"
-    IncrementalPostings.mergeBatch(spark, Seq(
-      DocChange("1", 1, "put", "alpha beta gamma"),
-      DocChange("2", 2, "put", "delta epsilon")).toDF(), root)
-    // a pre-sidecar root: the dstats root keeps its `_seq` (so it has a
-    // token) but holds no bucket dirs
-    val dstats = new Path(root + "/dstats")
-    val fs = fsFor(root)
-    fs.listStatus(dstats).map(_.getPath).filter(_.getName.startsWith("b="))
-      .foreach(fs.delete(_, true))
-    assert(fs.exists(new Path(dstats, "_seq")))
-    assert(StateStore.stateToken(spark, dstats.toString).isDefined)
-    def avgdl(tokenize: Column => Column): Double =
-      IncrementalPostings.docStats(spark, root, tokenize).head().getDouble(1)
-    val words = avgdl(split(_, " "))
-    val letters = avgdl(t => split(t, ""))
-    assert(words === 2.5)
-    assert(letters === (16.0 + 13.0) / 2,
-      "the fallback aggregate measured with one tokenizer was served to another")
   }
 
   test("a parent listing taken between a subroot commit's bump and swap is not served after it") {
