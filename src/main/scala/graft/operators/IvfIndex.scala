@@ -74,23 +74,43 @@ object IvfIndex {
   /** Bucket count of the id→cell sidecar map (see [[upsert]]). */
   val IdBuckets = 16
 
-  /** The stored schemas of the centroid table and the id→cell map — what
-    * [[build]] and [[applyChanges]] write, so every read of them is
-    * planned without a footer read. */
+  /** The stored schemas of the centroid table, the PQ codebooks and the
+    * id→cell map — what [[build]] and [[applyChanges]] write, so every
+    * read of them is planned without a footer read. */
   private val centroidSchema = StructType(Seq(
     StructField("cell", IntegerType), StructField("cent", ArrayType(DoubleType))))
+  private val codebookSchema = StructType(Seq(
+    StructField("s", IntegerType), StructField("code", IntegerType),
+    StructField("cw", ArrayType(DoubleType))))
   private val idsSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("cell", IntegerType)))
 
-  private def readIds(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.schema(idsSchema).parquet(paths: _*)
+  /** The stored vector columns of a cell file; the root's codes and
+    * attribute columns follow them ([[cellSchema]]). */
+  private val vecSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType))))
 
-  /** (vec_id, cell) rows in [[idsSchema]]'s types. */
+  /** The cell files' schema as the root's markers give it: [[vecSchema]],
+    * then `codes ARRAY<INT>` when `codes` (the root carries codebooks),
+    * then `attrs` ([[storedAttrs]]), then the `cell` partition column. */
+  private def cellSchema(codes: Boolean, attrs: Seq[StructField] = Nil): StructType =
+    StructType(vecSchema.fields.toSeq ++
+      (if (codes) Seq(StructField("codes", ArrayType(IntegerType))) else Nil) ++
+      attrs :+ StructField("cell", IntegerType))
+
+  private def readIds(spark: SparkSession, idsRoot: String, dirs: Seq[String]): DataFrame =
+    StateStore.readBuckets(spark, idsRoot, dirs, Some(idsSchema))
+
+  /** (vec_id, cell, b) rows in [[idsSchema]]'s types, placed in their id
+    * bucket. */
   private def idRows(df: DataFrame): DataFrame =
     df.select(col("vec_id").cast("long").as("vec_id"), col("cell"))
+      .withColumn("b", StateStore.bucketOf(col("vec_id"), IdBuckets))
 
-  private def idBucket: Column =
-    pmod(crc32(col("vec_id").cast("string")), lit(IdBuckets)).cast("int")
+  /** `vectors`' (vec_id, embedding) in [[vecSchema]]'s types, then `attrs`. */
+  private def asStored(vectors: DataFrame, attrs: Seq[String]): DataFrame =
+    vectors.select((col("vec_id").cast("long").as("vec_id") +:
+      col("embedding").cast("array<float>").as("embedding") +: attrs.map(col)): _*)
 
   /** Heal an interrupted ROOT swap before touching the index. [[rebuild]]
     * promotes a whole replacement index over `path` with the StateStore
@@ -193,7 +213,7 @@ object IvfIndex {
   private def codebooksOpt(spark: SparkSession, path: String): Option[DataFrame] = {
     StateStore.recover(spark, path + "/codebooks")
     if (StateStore.nonEmpty(spark, path + "/codebooks"))
-      Some(spark.read.parquet(path + "/codebooks"))
+      Some(spark.read.schema(codebookSchema).parquet(path + "/codebooks"))
     else None
   }
 
@@ -213,6 +233,21 @@ object IvfIndex {
   private[graft] def attrsOf(spark: SparkSession, path: String): Seq[String] =
     StateStore.readTag(spark, path, "_attrs")
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+
+  /** The attribute columns with their stored types (the `_attrs_schema`
+    * marker [[build]] pins beside `_attrs`); empty for an index built
+    * without attributes. */
+  private def storedAttrs(spark: SparkSession, path: String): Seq[StructField] = {
+    val attrs = attrsOf(spark, path)
+    if (attrs.isEmpty) Nil
+    else {
+      val schema = StateStore.readTag(spark, path, "_attrs_schema")
+        .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+        .getOrElse(throw new IllegalStateException(
+          s"index at $path stores attributes but no _attrs_schema marker"))
+      attrs.map(schema(_))
+    }
+  }
 
   /** `dataType` with nullability forced true RECURSIVELY — container
     * `containsNull`/`valueContainsNull` and nested struct fields included,
@@ -261,8 +296,7 @@ object IvfIndex {
     // make later upserts clear the wrong cells silently.
     val spark0 = vectors.sparkSession
     heal(spark0, path) // resolve any interrupted root swap before replacing
-    val full = vectors.select(
-      (Seq("vec_id", "embedding") ++ attrs).map(col): _*)
+    val full = asStored(vectors, attrs)
     val e = full.select(col("vec_id"), col("embedding"))
     // input-only validation BEFORE the destructive delete below: a call
     // rejected on its parameters must not have wiped a healthy index first
@@ -302,22 +336,17 @@ object IvfIndex {
       val cb = trainCodebooks(e, spec, pqDim.get)
       StateStore.commit(spark0, path + "/codebooks")(tmp =>
         cb.write.mode("overwrite").parquet(tmp))
-      spark0.read.parquet(path + "/codebooks")
+      spark0.read.schema(codebookSchema).parquet(path + "/codebooks")
     }
-    // repartition by the partition column: one file per cell/id-bucket dir,
-    // so a probe opens |probed cells| files, not |cells × writer partitions|
-    // (the final assign runs on `full`, so attribute columns ride into the
-    // cell files — training above never touched them)
+    // the final assign runs on `full`, so attribute columns ride into the
+    // cell files — training above never touched them
     val assignedRaw = assign(full, centroids)
-    val assigned = cbOpt.map(encode(assignedRaw, _)).getOrElse(assignedRaw)
-      .repartition(col("cell")).cache()
+    val assigned = cbOpt.map(encode(assignedRaw, _)).getOrElse(assignedRaw).cache()
     try {
-      StateStore.commit(spark0, path + "/vectors")(tmp =>
-        assigned.write.partitionBy("cell").parquet(tmp))
-      StateStore.commit(spark0, path + "/ids")(tmp =>
-        idRows(assigned).withColumn("b", idBucket)
-          .repartition(col("b"))
-          .write.partitionBy("b").parquet(tmp))
+      StateStore.commit(spark0, path + "/vectors")(
+        StateStore.writeBucketFiles(assigned, _, "cell", Seq("vec_id")))
+      StateStore.commit(spark0, path + "/ids")(
+        StateStore.writeBucketFiles(idRows(assigned), _, "b", Seq("vec_id")))
       // after the swap (which replaces the whole ids dir, marker included)
       StateStore.ensureBucketCount(assigned.sparkSession, path + "/ids", IdBuckets)
       if (attrs.nonEmpty) {
@@ -405,40 +434,34 @@ object IvfIndex {
                    deletes: DataFrame): Unit =
     changePass(spark, path, Some(puts), Some(deletes))
 
-  /** Reject a put batch that lacks the root's attribute columns or
-    * contradicts their stored types; returns the attribute names. */
-  private def checkedAttrs(spark: SparkSession, path: String,
-                           vectors: DataFrame): Seq[String] = {
+  /** Reject a put batch that lacks the root's attribute columns
+    * ([[storedAttrs]]) or contradicts their stored types. */
+  private def checkAttrs(path: String, vectors: DataFrame,
+                         attrs: Seq[StructField]): Unit = {
     // an attribute-carrying root requires every batch to carry its attrs
     // (`_attrs` marker, [[build]]): silently writing rows WITHOUT them
     // would leave cell files whose schemas disagree, and a later filtered
     // probe would resolve the predicate column as missing
-    val attrs = attrsOf(spark, path)
-    val absent = attrs.filterNot(vectors.columns.contains)
+    val absent = attrs.map(_.name).filterNot(vectors.columns.contains)
     if (absent.nonEmpty) throw new IllegalStateException(
-      s"index at $path stores attribute columns [${attrs.mkString(",")}] " +
+      s"index at $path stores attribute columns [${attrs.map(_.name).mkString(",")}] " +
         s"but the upsert batch is missing [${absent.mkString(",")}] — " +
         "every upsert into an attribute-carrying index must supply them")
     // ... with the STORED types: presence alone lets a batch whose
     // touched cells happen to have no live files (all-deleted) commit a
     // type-divergent cell file that unionByName never sees — a later
     // whole-dir read then fails far from the offending upsert
-    StateStore.readTag(spark, path, "_attrs_schema")
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .foreach { stored =>
-        val diverged = attrs.flatMap { a =>
-          // nested nullability is a parquet read-back artifact, not a
-          // type divergence: compare with containers/fields normalized
-          val got = deepNullable(vectors.schema(a).dataType)
-          val want = deepNullable(stored(a).dataType)
-          if (got != want) Some(s"$a: batch $got vs stored $want") else None
-        }
-        if (diverged.nonEmpty) throw new IllegalStateException(
-          s"index at $path stores attribute types the upsert batch " +
-            s"contradicts [${diverged.mkString("; ")}] — cell files must " +
-            "never disagree on a column's type")
-      }
-    attrs
+    val diverged = attrs.flatMap { a =>
+      // nested nullability is a parquet read-back artifact, not a
+      // type divergence: compare with containers/fields normalized
+      val got = deepNullable(vectors.schema(a.name).dataType)
+      val want = deepNullable(a.dataType)
+      if (got != want) Some(s"${a.name}: batch $got vs stored $want") else None
+    }
+    if (diverged.nonEmpty) throw new IllegalStateException(
+      s"index at $path stores attribute types the upsert batch " +
+        s"contradicts [${diverged.mkString("; ")}] — cell files must " +
+        "never disagree on a column's type")
   }
 
   private def changePass(spark: SparkSession, path: String,
@@ -457,12 +480,12 @@ object IvfIndex {
         s"index at $path has vectors but no id map — rebuild it with IvfIndex.build")
     if (puts.isEmpty && liveIds.isEmpty) return // nothing indexed to delete
     if (puts.isDefined) StateStore.ensureBucketCount(spark, idsRoot, IdBuckets)
-    val attrs = puts.map(checkedAttrs(spark, path, _)).getOrElse(Nil)
+    val attrFields = storedAttrs(spark, path)
+    puts.foreach(checkAttrs(path, _, attrFields))
     // cached: the collect below, the id anti-joins and the rewrites all
     // consume them, and the caller's frames may be expensive
-    val counted = puts.map(p => assign(p.select(
-      (Seq("vec_id", "embedding") ++ attrs).map(col): _*), centroids(spark, path),
-      withCount = true).cache())
+    val counted = puts.map(p => assign(asStored(p, attrFields.map(_.name)),
+      centroids(spark, path), withCount = true).cache())
     val assigned = counted.map(_.drop("n"))
     val dels = deletes.map(_.select(col("vec_id")).cache())
     val changedIds = (assigned.toSeq ++ dels).map(_.select("vec_id"))
@@ -480,7 +503,7 @@ object IvfIndex {
         .reduce(_ unionByName _)
         .groupBy("vec_id")
         .agg(max(col("np")).as("np"), max(col("nd")).as("nd"), max(col("cell")).as("cell"))
-        .select(col("cell"), idBucket.as("ib"),
+        .select(col("cell"), StateStore.bucketOf(col("vec_id"), IdBuckets).as("ib"),
           (col("np") > 1).as("dup"), (col("np") > 0 && col("nd") > 0).as("both"))
         .distinct().collect()
       require(!touched.exists(_.getBoolean(2)),
@@ -495,13 +518,10 @@ object IvfIndex {
       val putIdDirs = putRows.map(r => s"b=${r.getInt(1)}").toSet
       val idDirs = touched.map(_.getInt(1)).distinct.sorted.toSeq.map(b => s"b=$b")
         .filter(d => liveIds.contains(d) || putIdDirs.contains(d))
-      val oldIdPaths = idDirs.filter(liveIds.contains).map(d => s"$idsRoot/$d")
+      val oldIdDirs = idDirs.filter(liveIds.contains)
       // no put, and every deleted id hashes to an absent bucket: not indexed
-      if (newCells.isEmpty && oldIdPaths.isEmpty) return
-      // (no old id paths implies puts, so `assigned` is defined there)
-      val oldIds =
-        if (oldIdPaths.nonEmpty) readIds(spark, oldIdPaths)
-        else idRows(assigned.get).limit(0)
+      if (newCells.isEmpty && oldIdDirs.isEmpty) return
+      val oldIds = readIds(spark, idsRoot, oldIdDirs)
       val oldCells = oldIds.join(broadcast(changedIds), col("vec_id") === col("changed"))
         .select("cell").distinct().collect().map(_.getInt(0))
       if (newCells.isEmpty && oldCells.isEmpty) return // no deleted id is indexed
@@ -516,28 +536,22 @@ object IvfIndex {
       // against the FROZEN codebooks so the rewritten cells' codes column
       // stays a pure function of their vectors (kept rows carry their
       // codes through the rewrite)
-      val upserted = assigned.map(a =>
-        codebooksOpt(spark, path).map(encode(a, _)).getOrElse(a))
+      val cb = codebooksOpt(spark, path)
+      val upserted = assigned.map(a => cb.map(encode(a, _)).getOrElse(a))
       val kept =
         if (liveDirs.nonEmpty)
-          Some(notChanged(spark.read.option("basePath", vecRoot)
-            .parquet(liveDirs.map(d => s"$vecRoot/$d"): _*)))
+          Some(notChanged(StateStore.readBuckets(spark, vecRoot, liveDirs,
+            Some(cellSchema(cb.isDefined, attrFields)))))
         else None
       // checkpointed: decoupled from the files before the swaps replace
-      // them; one file per rewritten cell dir / id bucket
+      // them
       val merged = (kept.toSeq ++ upserted).reduceOption(_ unionByName _)
-        .map(_.repartition(col("cell")).localCheckpoint())
-      val newIds = (Seq(notChanged(oldIds)) ++ assigned.map(idRows))
-        .reduce(_ unionByName _)
-        .withColumn("b", idBucket)
-        .repartition(col("b"))
+        .map(_.localCheckpoint())
+      val newIds = (Seq(notChanged(oldIds)) ++ assigned)
+        .map(idRows).reduce(_ unionByName _)
         .localCheckpoint()
-      merged.foreach(m => StateStore.commitBuckets(spark, vecRoot, dirs) { tmpRoot =>
-        m.write.partitionBy("cell").mode("overwrite").parquet(tmpRoot)
-      })
-      StateStore.commitBuckets(spark, idsRoot, idDirs) { tmpRoot =>
-        newIds.write.partitionBy("b").mode("overwrite").parquet(tmpRoot)
-      }
+      merged.foreach(StateStore.writeBuckets(spark, vecRoot, dirs, _, "cell", Seq("vec_id")))
+      StateStore.writeBuckets(spark, idsRoot, idDirs, newIds, "b", Seq("vec_id"))
     } finally {
       (counted.toSeq ++ dels).foreach(_.unpersist()): Unit
     }
@@ -551,12 +565,9 @@ object IvfIndex {
   def existingIds(spark: SparkSession, path: String, vecIds: DataFrame): DataFrame = {
     heal(spark, path)
     val idsRoot = path + "/ids"
-    val live = StateStore.liveBuckets(spark, idsRoot).toSet
-    if (live.isEmpty) return vecIds.select(col("vec_id")).limit(0)
-    val idB = vecIds.select(idBucket.as("b")).distinct().collect().map(_.getInt(0)).sorted
-    val dirs = idB.toSeq.map(b => s"b=$b").filter(live.contains)
+    val dirs = StateStore.bucketDirsFor(spark, idsRoot, vecIds, "vec_id")
     if (dirs.isEmpty) return vecIds.select(col("vec_id")).limit(0)
-    readIds(spark, dirs.map(d => s"$idsRoot/$d"))
+    readIds(spark, idsRoot, dirs)
       .join(vecIds.select("vec_id").distinct(), "vec_id")
       .select("vec_id")
   }
@@ -575,31 +586,23 @@ object IvfIndex {
     val vecRoot = path + "/vectors"
     val idsRoot = path + "/ids"
     val ids = vecIds.select(col("vec_id").cast("long").as("vec_id")).distinct()
-    val liveIds = StateStore.liveBuckets(spark, idsRoot).toSet
-    // fixed schema, not ids.limit(0): the empty frame must carry the
-    // STORED types (vec_id LONG, embedding ARRAY<FLOAT>) — inheriting the
-    // caller's vec_id type (e.g. INT) made the result schema differ
-    // across code paths for the same call (round-13 ADVICE)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)))))
-    if (liveIds.isEmpty) return empty
-    val idB = ids.select(idBucket.as("b")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val idDirs = idB.toSeq.map(b => s"b=$b").filter(liveIds.contains)
-    if (idDirs.isEmpty) return empty
-    val cells = readIds(spark, idDirs.map(d => s"$idsRoot/$d"))
+    // every path returns the STORED types (vec_id LONG, embedding
+    // ARRAY<FLOAT>), never the caller's vec_id type (round-13 ADVICE)
+    StateStore.readBuckets(spark, vecRoot, cellDirsOf(spark, idsRoot, vecRoot, ids),
+      Some(vecSchema)).join(broadcast(ids), "vec_id")
+  }
+
+  /** The live cell dirs holding `ids` (vec_id LONG, distinct): the id map
+    * read from only the id buckets the ids hash to, and one collect of
+    * their cells (≤ nlist rows). */
+  private def cellDirsOf(spark: SparkSession, idsRoot: String, vecRoot: String,
+                         ids: DataFrame): Seq[String] = {
+    val idDirs = StateStore.bucketDirsFor(spark, idsRoot, ids, "vec_id")
+    if (idDirs.isEmpty) return Nil
+    val cells = readIds(spark, idsRoot, idDirs)
       .join(broadcast(ids), "vec_id")
-      .select("cell").distinct().collect().map(_.getInt(0)).sorted
-    val live = StateStore.liveBuckets(spark, vecRoot, "cell=").toSet
-    val dirs = cells.toSeq.map(c => s"cell=$c").filter(live.contains)
-    if (dirs.isEmpty) return empty
-    spark.read.option("basePath", vecRoot)
-      .parquet(dirs.map(d => s"$vecRoot/$d"): _*)
-      .join(broadcast(ids), "vec_id")
-      .select("vec_id", "embedding")
+      .select("cell").distinct().collect().map(r => s"cell=${r.getInt(0)}").toSet
+    StateStore.liveBuckets(spark, vecRoot, "cell=").filter(cells.contains)
   }
 
   /** The stored attribute rows for exactly `vecIds` — [[vectorsForIds]]'s
@@ -619,44 +622,19 @@ object IvfIndex {
     * vacuously unresolvable downstream. */
   def attrsForIds(spark: SparkSession, path: String, vecIds: DataFrame): DataFrame = {
     heal(spark, path)
-    val attrs = attrsOf(spark, path)
+    val attrs = storedAttrs(spark, path)
     require(attrs.nonEmpty,
       s"index at $path stores no attribute columns — build it with attrs = …")
-    val vecRoot = path + "/vectors"
-    val idsRoot = path + "/ids"
-    val cols = "vec_id" +: attrs
     // a null id (a caller's failed long cast) can never match a stored
     // LONG key — dropping it here is the same "absent id, no row"
     // semantics, and keeps the driver-side bucket collect total
     val ids = vecIds.select(col("vec_id").cast("long").as("vec_id"))
       .filter(col("vec_id").isNotNull).distinct()
-    def empty: DataFrame = {
-      // fields projected in `cols` order on BOTH sources, so the empty
-      // paths' column order always agrees with the non-empty select
-      val stored = StateStore.readTag(spark, path, "_attrs_schema")
-        .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-        .getOrElse(throw new IllegalStateException(
-          s"index at $path stores attributes but no _attrs_schema marker"))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(cols.map(n => stored(n))))
-    }
-    val liveIds = StateStore.liveBuckets(spark, idsRoot).toSet
-    if (liveIds.isEmpty) return empty
-    val idB = ids.select(idBucket.as("b")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val idDirs = idB.toSeq.map(b => s"b=$b").filter(liveIds.contains)
-    if (idDirs.isEmpty) return empty
-    val cells = readIds(spark, idDirs.map(d => s"$idsRoot/$d"))
+    val schema = StructType(vecSchema("vec_id") +: attrs)
+    StateStore.readBuckets(spark, path + "/vectors",
+      cellDirsOf(spark, path + "/ids", path + "/vectors", ids), Some(schema))
       .join(broadcast(ids), "vec_id")
-      .select("cell").distinct().collect().map(_.getInt(0)).sorted
-    val live = StateStore.liveBuckets(spark, vecRoot, "cell=").toSet
-    val dirs = cells.toSeq.map(c => s"cell=$c").filter(live.contains)
-    if (dirs.isEmpty) return empty
-    spark.read.option("basePath", vecRoot)
-      .parquet(dirs.map(d => s"$vecRoot/$d"): _*)
-      .join(broadcast(ids), "vec_id")
-      .select(cols.map(col): _*)
+      .select(schema.fieldNames.toSeq.map(col): _*)
   }
 
   /** Cell-occupancy skew of a built index: the largest cell's size over
@@ -670,7 +648,7 @@ object IvfIndex {
     val live = StateStore.liveBuckets(spark, idsRoot)
     val nlist = centroids(spark, path).count()
     if (live.isEmpty || nlist == 0) return 1.0
-    val agg = readIds(spark, live.map(d => s"$idsRoot/$d"))
+    val agg = readIds(spark, idsRoot, live)
       .groupBy("cell").agg(count(lit(1)).as("n"))
       .agg(max(col("n")).as("mx"), sum(col("n")).as("total")).head()
     if (agg.isNullAt(0)) 1.0
@@ -740,10 +718,7 @@ object IvfIndex {
     }
     // attribute columns survive the retrain: re-read them with the
     // vectors and hand the set back to build, which re-pins the marker
-    val attrs = attrsOf(spark, path)
-    val live = spark.read.parquet(path + "/vectors")
-      .select((Seq("vec_id", "embedding") ++ attrs).map(col): _*)
-      .localCheckpoint()
+    val (attrs, live) = liveVectors(spark, path)
     StateStore.commit(spark, path)(tmp =>
       build(live, tmp, nlist, iters, pqSpec, attrs))
   }
@@ -763,12 +738,19 @@ object IvfIndex {
     // attribute columns survive the retrofit exactly as they survive
     // rebuild: an attr-carrying index passed through enablePq must not
     // come back metadata-less with its filtered reads broken
-    val attrs = attrsOf(spark, path)
-    val live = spark.read.parquet(path + "/vectors")
-      .select((Seq("vec_id", "embedding") ++ attrs).map(col): _*)
-      .localCheckpoint()
+    val (attrs, live) = liveVectors(spark, path)
     StateStore.commit(spark, path)(tmp =>
       build(live, tmp, nlist, iters, Some(pq), attrs))
+  }
+
+  /** Every live vector with its attribute columns, checkpointed — the
+    * training set of a whole-root retrain — and the attribute names. */
+  private def liveVectors(spark: SparkSession, path: String): (Seq[String], DataFrame) = {
+    val vecRoot = path + "/vectors"
+    val attrs = storedAttrs(spark, path)
+    (attrs.map(_.name), StateStore.readBuckets(spark, vecRoot,
+      StateStore.liveBuckets(spark, vecRoot, "cell="),
+      Some(StructType(vecSchema.fields.toSeq ++ attrs))).localCheckpoint())
   }
 
   /** PQ-shortlisted probed search — the memory-bounded form of [[search]]:
@@ -824,7 +806,7 @@ object IvfIndex {
     val adcLit = typedlit(adc.map(_.toSeq).toSeq)
     // ONE explicit probed-directory relation serves the ADC scan, the
     // empty fallback, and the rerank (heals + cached listing inside)
-    val vecs = probedVectorsRead(spark, path, probed)
+    val vecs = probedVectorsRead(spark, path, probed, cellSchema(codes = true))
     val short = vecs
       .select(col("vec_id"), col("codes")) // column-pruned: no float read
       .withColumn("adc", aggregate(
@@ -869,7 +851,7 @@ object IvfIndex {
     val cellList = probed.select("cell").distinct().collect().map(_.getInt(0)).toSeq
     val simRank = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
     // explicit probed-directory read (heals + cached listing inside)
-    probedVectorsRead(spark, path, cellList)
+    probedVectorsRead(spark, path, cellList, cellSchema(codes = false))
       .join(broadcast(probed), "cell")
       .withColumn("sim", dotDD(col("embedding"), col("qv")))
       .withColumn("rn", row_number().over(simRank))
@@ -965,7 +947,7 @@ object IvfIndex {
     // second spark.read would re-run parquet schema inference (a small
     // Spark job) per call on the hot path; explicit probed-directory
     // read (heals + cached listing inside)
-    val vecs = probedVectorsRead(spark, path, cellList)
+    val vecs = probedVectorsRead(spark, path, cellList, cellSchema(codes = true))
     val shortW = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("vec_id"))
     val short = vecs
       .select(col("vec_id"), col("cell"), col("codes")) // column-pruned
@@ -989,32 +971,22 @@ object IvfIndex {
       .orderBy("qid", "rank")
   }
 
-  /** The probed cells' vectors as ONE explicit-directory read (round-17
-    * verdict #6, guide §6 file listing): every probed read previously
-    * opened `spark.read.parquet(<root>/vectors)` — whole-root partition
-    * discovery that lists EVERY `cell=` directory per call (nlist
-    * listings, and past spark.sql.sources.parallelPartitionDiscovery
-    * .threshold a distributed listing JOB) before the `isin` filter
-    * pruned the partitions. This reads only the probed cells' own
-    * directories (basePath keeps the partition column), serves the live
-    * listing from the `_seq`-token cache, and heals torn swaps exactly
-    * where the old liveBuckets pre-call did. A probe set whose cells are
-    * all empty (no dir — partitionBy writes no dir for an empty cell)
-    * returns the first live cell filtered to nothing, so the schema and
-    * column types match the stored files exactly. An index with no live
-    * cells at all keeps failing loudly, as the whole-root read did. */
+  /** The probed cells' rows as ONE explicit-directory read under
+    * `schema` (round-17 verdict #6, guide §6 file listing): only the
+    * probed cells' own directories are listed — never whole-root
+    * partition discovery — the live listing comes from the `_seq`-token
+    * cache (healing torn swaps), and the fixed schema plans the scan
+    * without a footer-inference job. Probed cells that are all empty (no
+    * dir — an empty cell writes none) give zero rows of `schema`. An
+    * index with no live cells at all fails loudly. */
   private def probedVectorsRead(spark: SparkSession, path: String,
-      cells: Seq[Int]): DataFrame = {
+      cells: Seq[Int], schema: StructType): DataFrame = {
     val vecRoot = path + "/vectors"
     val live = StateStore.liveBuckets(spark, vecRoot, "cell=")
     require(live.nonEmpty,
       s"index at $path has no live vector cells — build it with IvfIndex.build")
     val wanted = cells.map(c => s"cell=$c").toSet
-    val dirs = live.filter(wanted.contains)
-    val src = if (dirs.nonEmpty) dirs else live.take(1)
-    val df = spark.read.option("basePath", vecRoot)
-      .parquet(src.map(d => s"$vecRoot/$d"): _*)
-    if (dirs.nonEmpty) df else df.filter(lit(false))
+    StateStore.readBuckets(spark, vecRoot, live.filter(wanted.contains), Some(schema))
   }
 
   /** Probed ANN search: rank cells by query·centroid, then scan only the
@@ -1060,7 +1032,8 @@ object IvfIndex {
       .select("cell").collect().map(_.getInt(0)).toSeq
     // explicit probed-directory read: heals + lists via the cached
     // liveBuckets, and file discovery opens only the probed cells' dirs
-    probedVectorsRead(spark, path, probed)
+    probedVectorsRead(spark, path, probed,
+        cellSchema(codes = false, storedAttrs(spark, path)))
       .filter(predicate) // pre-top-k: never under-fills k (scan-pushed)
       .withColumn("sim", dotDD(col("embedding"), qv))
       .select(col("vec_id"), col("cell"), col("sim"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -13,9 +13,8 @@ import org.apache.spark.sql.expressions.Window
   * SUBSET of a row's cells, so row state is the union of per-cell
   * histories, not the latest event's payload).
   *
-  * Layout mirrors [[IncrementalIndex]]: `b=<i>` bucket dirs keyed by
-  * `pmod(crc32(rowkey), numBuckets)`, per-bucket prefix-atomic commits
-  * ([[StateStore.commitBuckets]]), merges rewriting only touched buckets.
+  * Layout: [[StateStore]]'s bucket layout keyed by `rowkey`, merged by
+  * [[StateStore.mergeKeyed]].
   *
   * Retention contract (= HBase major compaction):
   *  - per (rowkey, qualifier), only the `maxVersions` NEWEST puts (by
@@ -55,9 +54,6 @@ object CellStore {
   val DefaultBuckets = 16
   val DefaultMaxVersions = 3
 
-  private def bucketCol(numBuckets: Int): Column =
-    pmod(crc32(col("rowkey")), lit(numBuckets)).cast("int")
-
   /** Versioned-cell compaction of (state ∪ batch) changes. Input schema:
     * `rowkey STRING, qualifier STRING (NULL for row deletes), event_id
     * LONG, op STRING ('put'|'delete'), …payload`. Output adds `version`
@@ -89,57 +85,23 @@ object CellStore {
   }
 
   /** Merge one batch of cell mutations into the bucketed state at
-    * `statePath`. Same crash contract as [[IncrementalIndex.mergeBatch]]:
-    * touched-bucket list is bounded driver metadata, the rewrite is
-    * prefix-atomic per bucket, and replay is idempotent. */
+    * `statePath` ([[StateStore.mergeKeyed]]). The stored `version` is
+    * recomputed by [[compactCells]], so the state side drops it before
+    * the union with the (version-less) batch. */
   def mergeCells(spark: SparkSession, batch: DataFrame, statePath: String,
                  maxVersions: Int = DefaultMaxVersions,
-                 numBuckets: Int = DefaultBuckets): Unit = {
-    val withB = batch.withColumn("b", bucketCol(numBuckets))
-    val touched = withB.select("b").distinct().collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return
-    StateStore.ensureBucketCount(spark, statePath, numBuckets)
-    val live = StateStore.liveBuckets(spark, statePath).toSet
-    val touchedDirs = touched.toSeq.map(b => s"b=$b")
-    val oldPaths = touchedDirs.filter(live.contains).map(d => s"$statePath/$d")
-    // stored `version` is recomputed by compactCells; drop it so state
-    // rows and (version-less) batch rows union cleanly
-    val oldTouched =
-      if (oldPaths.nonEmpty)
-        spark.read.parquet(oldPaths: _*).drop("version")
-          .withColumn("b", bucketCol(numBuckets))
-      else withB.limit(0)
-    val merged = compactCells(oldTouched.unionByName(withB), maxVersions)
-      .repartition(col("b")).cache()
-    merged.count() // materialize before the swap touches the input paths
-    try StateStore.commitBuckets(spark, statePath, touchedDirs) { tmpRoot =>
-      merged.sortWithinPartitions("b", "rowkey", "qualifier")
-        .write.partitionBy("b").mode("overwrite").parquet(tmpRoot)
-    } finally merged.unpersist(): Unit
-  }
+                 numBuckets: Int = DefaultBuckets): Unit =
+    StateStore.mergeKeyed(spark, statePath, batch, numBuckets, Seq("rowkey", "qualifier"))(
+      (old, b) => compactCells(old.drop("version").unionByName(b), maxVersions))
 
   /** Live cell versions (tombstone rows filtered). Pure scan-project —
     * `version` is served from storage, no query-time window. */
-  def readCells(spark: SparkSession, statePath: String): DataFrame = {
-    val dirs = StateStore.liveBuckets(spark, statePath)
-    require(dirs.nonEmpty, s"no committed cell state at $statePath")
-    spark.read.parquet(dirs.map(d => s"$statePath/$d"): _*)
-      .filter(col("op") =!= "delete")
-  }
+  def readCells(spark: SparkSession, statePath: String): DataFrame =
+    StateStore.scanLive(spark, statePath)
 
   /** Point fetch of one row's cell versions (HBase `Get` with
     * `setMaxVersions`): opens only the keys' buckets. */
   def getCells(spark: SparkSession, statePath: String,
-               rowkeys: Seq[String]): DataFrame = {
-    require(rowkeys.nonEmpty, "getCells needs at least one rowkey")
-    val live = StateStore.liveBuckets(spark, statePath)
-    require(live.nonEmpty, s"no committed cell state at $statePath")
-    val wanted = StateStore.bucketDirsFor(spark, statePath, rowkeys.distinct)
-    val (dirs, none) =
-      if (wanted.nonEmpty) (wanted, false) else (live.take(1), true)
-    val rows = spark.read.parquet(dirs.map(d => s"$statePath/$d"): _*)
-      .filter(col("op") =!= "delete")
-      .filter(col("rowkey").isin(rowkeys.distinct: _*))
-    if (none) rows.limit(0) else rows
-  }
+               rowkeys: Seq[String]): DataFrame =
+    StateStore.getKeyed(spark, statePath, rowkeys)
 }

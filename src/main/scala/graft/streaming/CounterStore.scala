@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -13,9 +13,8 @@ import org.apache.spark.sql.expressions.Window
   * hot counter costs O(1) storage regardless of increment volume —
   * exactly why HBase ships Increment instead of read-modify-write puts.
   *
-  * Layout mirrors [[CellStore]]: `b=<i>` bucket dirs keyed by
-  * `pmod(crc32(rowkey), numBuckets)`, prefix-atomic per-bucket commits,
-  * merges rewriting only touched buckets.
+  * Layout: [[StateStore]]'s bucket layout keyed by `rowkey`, merged by
+  * [[StateStore.mergeKeyed]].
   *
   * Semantics:
   *  - `op = 'incr'` rows add `delta` to cell (rowkey, qualifier);
@@ -44,9 +43,6 @@ import org.apache.spark.sql.expressions.Window
 object CounterStore {
 
   val DefaultBuckets = 16
-
-  private def bucketCol(numBuckets: Int): Column =
-    pmod(crc32(col("rowkey")), lit(numBuckets)).cast("int")
 
   /** Compact (state partials ∪ raw batch) to fresh per-cell partials.
     * Input schema: `rowkey STRING, qualifier STRING (NULL for row
@@ -146,74 +142,46 @@ object CounterStore {
       lit(false).as("agg"))
 
   /** Merge one batch of increment/delete mutations (schema: rowkey,
-    * qualifier, event_id, op, delta) into the bucketed counter state.
-    * Same crash contract as [[CellStore.mergeCells]]; same monotone
-    * high-water replay contract as the object doc. Returns the number of
-    * raw increments suppressed as high-water replays (also readable
-    * afterwards via [[lastMergeHwDrops]]). */
+    * qualifier, event_id, op, delta) into the bucketed counter state
+    * ([[StateStore.mergeKeyed]]); same monotone high-water replay
+    * contract as the object doc. Returns the number of raw increments
+    * suppressed as high-water replays (also readable afterwards via
+    * [[lastMergeHwDrops]]). */
   def mergeCounters(spark: SparkSession, batch: DataFrame, statePath: String,
                     numBuckets: Int = DefaultBuckets): Long = {
-    val withB = normalize(batch).withColumn("b", bucketCol(numBuckets))
-    val touched = withB.select("b").distinct().collect().map(_.getInt(0)).sorted
-    // an empty batch suppresses nothing: reset BEFORE the early return so
-    // the last-merge-wins metric can never attribute a previous merge's
-    // drops to a no-op batch
+    // an empty batch suppresses nothing: reset BEFORE the merge so the
+    // last-merge-wins metric can never attribute a previous merge's drops
+    // to a no-op batch
     hwDropsByRoot.put(rootKey(statePath), 0L)
-    if (touched.isEmpty) return 0L
-    StateStore.ensureBucketCount(spark, statePath, numBuckets)
-    val live = StateStore.liveBuckets(spark, statePath).toSet
-    val touchedDirs = touched.toSeq.map(b => s"b=$b")
-    val oldPaths = touchedDirs.filter(live.contains).map(d => s"$statePath/$d")
-    val oldTouched =
-      if (oldPaths.nonEmpty)
-        spark.read.parquet(oldPaths: _*).withColumn("b", bucketCol(numBuckets))
-      else withB.limit(0)
-    // annotate once, cache: the kept rows feed the fold, the hw-dropped
-    // rows feed the replay-suppression metric — one window pass for both
-    val ann = annotated(oldTouched.unionByName(withB)).cache()
-    val merged = fold(ann)
-      .withColumn("b", bucketCol(numBuckets))
-      .repartition(col("b")).cache()
-    merged.count() // materialize before the swap touches the input paths
-    val hwDrops = ann.filter(col("hw_dropped")).count()
-    hwDropsByRoot.put(rootKey(statePath), hwDrops)
-    if (hwDrops > 0)
-      System.err.println(s"CounterStore.mergeCounters: $hwDrops " +
-        s"raw increment(s) at or below their cell's high water were " +
-        s"suppressed as replays at $statePath — expected under checkpoint " +
-        s"replay; outside a replay window this is the monotone-arrival " +
-        s"contract being violated (out-of-order increments dropped)")
-    try StateStore.commitBuckets(spark, statePath, touchedDirs) { tmpRoot =>
-      merged.sortWithinPartitions("b", "rowkey", "qualifier")
-        .write.partitionBy("b").mode("overwrite").parquet(tmpRoot)
-    } finally { merged.unpersist(); ann.unpersist(): Unit }
-    hwDrops
+    // annotated once and cached: the kept rows feed the fold, the
+    // hw-dropped rows the replay-suppression metric — one window pass
+    var ann: DataFrame = null
+    try StateStore.mergeKeyed(spark, statePath, normalize(batch), numBuckets,
+        Seq("rowkey", "qualifier")) { (old, raw) =>
+      ann = annotated(old.unionByName(raw)).cache()
+      val hwDrops = ann.filter(col("hw_dropped")).count()
+      hwDropsByRoot.put(rootKey(statePath), hwDrops)
+      if (hwDrops > 0)
+        System.err.println(s"CounterStore.mergeCounters: $hwDrops " +
+          s"raw increment(s) at or below their cell's high water were " +
+          s"suppressed as replays at $statePath — expected under checkpoint " +
+          s"replay; outside a replay window this is the monotone-arrival " +
+          s"contract being violated (out-of-order increments dropped)")
+      fold(ann)
+    } finally if (ann != null) ann.unpersist(): Unit
+    lastMergeHwDrops(statePath)
   }
 
   /** Live counters (tombstone rows filtered): (rowkey, qualifier, total,
     * n_incr, last_id). Pure scan-project. */
-  def readCounters(spark: SparkSession, statePath: String): DataFrame = {
-    val dirs = StateStore.liveBuckets(spark, statePath)
-    require(dirs.nonEmpty, s"no committed counter state at $statePath")
-    spark.read.parquet(dirs.map(d => s"$statePath/$d"): _*)
-      .filter(col("op") =!= "delete")
-      .select("rowkey", "qualifier", "total", "n_incr", "last_id")
-  }
+  def readCounters(spark: SparkSession, statePath: String): DataFrame =
+    StateStore.scanLive(spark, statePath).select(CounterCols.map(col): _*)
 
   /** Point fetch of one row's counters (HBase `Get` over counter
     * columns): opens only the keys' buckets. */
   def getCounters(spark: SparkSession, statePath: String,
-                  rowkeys: Seq[String]): DataFrame = {
-    require(rowkeys.nonEmpty, "getCounters needs at least one rowkey")
-    val live = StateStore.liveBuckets(spark, statePath)
-    require(live.nonEmpty, s"no committed counter state at $statePath")
-    val wanted = StateStore.bucketDirsFor(spark, statePath, rowkeys.distinct)
-    val (dirs, none) =
-      if (wanted.nonEmpty) (wanted, false) else (live.take(1), true)
-    val rows = spark.read.parquet(dirs.map(d => s"$statePath/$d"): _*)
-      .filter(col("op") =!= "delete")
-      .filter(col("rowkey").isin(rowkeys.distinct: _*))
-      .select("rowkey", "qualifier", "total", "n_incr", "last_id")
-    if (none) rows.limit(0) else rows
-  }
+                  rowkeys: Seq[String]): DataFrame =
+    StateStore.getKeyed(spark, statePath, rowkeys).select(CounterCols.map(col): _*)
+
+  private val CounterCols = Seq("rowkey", "qualifier", "total", "n_incr", "last_id")
 }

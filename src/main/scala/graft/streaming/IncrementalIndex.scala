@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -19,27 +19,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (/root/reference/README.md:19-20) is replaced by checkpointed source
   * offsets — exactly-once per micro-batch.
   *
-  * State layout — BUCKETED for delta-sized writes, the property that makes
-  * the reference's design incremental (SolrIndexTools.java:93-144 flushes
-  * only the delta, never the index): the state root holds `b=<i>`
-  * directories, one per `pmod(crc32(rowkey), numBuckets)` value. A merge
-  * reads and rewrites ONLY the buckets the batch's rowkeys hash into —
-  * untouched bucket directories are never opened (byte-identical across
-  * the merge, asserted in IncrementalMergeSpec). Each micro-batch merge
-  * shuffles only on `rowkey`; write volume is O(batch + touched-bucket
-  * state), not O(state). At 100 TB, numBuckets is sized so one bucket is a
-  * comfortable rewrite unit (the same knob as LSM compaction granularity);
-  * on object stores the same layout maps onto a MERGE-capable table format
-  * (SCALE.md §streaming).
+  * State layout: [[StateStore]]'s bucket layout keyed by `rowkey` — a
+  * merge rewrites only the buckets the batch's rowkeys hash into
+  * ([[StateStore.mergeKeyed]]), so write volume is O(batch + touched-
+  * bucket state), not O(state). At 100 TB, numBuckets is sized so one
+  * bucket is a comfortable rewrite unit (the same knob as LSM compaction
+  * granularity); on object stores the same layout maps onto a
+  * MERGE-capable table format (SCALE.md §streaming).
   */
 object IncrementalIndex {
 
   /** Default state bucket count. Local tests use a handful; a real
     * deployment sizes this so one bucket ≈ a comfortable rewrite unit. */
   val DefaultBuckets = 16
-
-  private def bucketCol(numBuckets: Int): Column =
-    pmod(crc32(col("rowkey")), lit(numBuckets)).cast("int")
 
   /** Latest-wins compaction of a (possibly already-compacted ∪ new) slice
     * of the changelog: one row per rowkey, deletes dropped. Read-side
@@ -74,57 +66,22 @@ object IncrementalIndex {
     * Reference semantics: client.add = upsert-by-id, client.deleteById =
     * drop (SolrIndexTools.java:60,63,127,129). The state persists the
     * latest event per rowkey INCLUDING tombstones; readers apply
-    * `op != 'delete'` (or use [[readState]]).
-    *
-    * The touched-bucket list is collected to the driver: it is bounded by
-    * `numBuckets` (metadata, not data). Re-merging the same batch is
-    * idempotent — latest-wins by event_id — which is what makes the
-    * per-bucket (prefix-atomic) commit crash-safe; see
-    * [[StateStore.commitBuckets]].
+    * `op != 'delete'` (or use [[readState]]). Re-merging the same batch
+    * is idempotent — latest-wins by event_id.
     *
     * `rollup` threads an incrementally-maintained aggregate through the
     * same pass ([[IncrementalRollup]]): after the row swap, the touched
     * buckets' partial aggregates are recomputed from the post-merge rows
-    * the merge already holds cached and swapped in under the same
-    * prefix-atomic discipline — replay-idempotent because the partials
-    * are a pure function of the (idempotently re-merged) bucket
+    * the merge already holds cached — replay-idempotent because the
+    * partials are a pure function of the (idempotently re-merged) bucket
     * contents. */
   def mergeBatch(spark: SparkSession, batch: DataFrame, statePath: String,
                  numBuckets: Int = DefaultBuckets,
-                 rollup: Option[IncrementalRollup.Spec] = None): Unit = {
-    val withB = batch.withColumn("b", bucketCol(numBuckets))
-    val touched = withB.select("b").distinct().collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return // empty micro-batch: no bucket to rewrite
-    StateStore.ensureBucketCount(spark, statePath, numBuckets)
-    val live = StateStore.liveBuckets(spark, statePath).toSet
-    val touchedDirs = touched.toSeq.map(b => s"b=$b")
-    val oldPaths = touchedDirs.filter(live.contains).map(d => s"$statePath/$d")
-    // Bucket dirs are read directly (no partition discovery), so the
-    // bucket id is recomputed from the rowkey — it is a pure function of
-    // the key, identical in file and formula.
-    val oldTouched =
-      if (oldPaths.nonEmpty)
-        spark.read.parquet(oldPaths: _*).withColumn("b", bucketCol(numBuckets))
-      else withB.limit(0)
-    // event_id totally orders state rows vs batch rows. Repartitioning by
-    // bucket collapses each rewritten bucket dir to ONE file (readers open
-    // |buckets| files, not |buckets × writer partitions| — the small-files
-    // problem); the extra shuffle is batch-sized, and bucket count stays
-    // the knob that sizes the rewrite unit.
-    val merged = compactAll(oldTouched.unionByName(withB))
-      .repartition(col("b")).cache()
-    merged.count() // materialize before the swap touches the input paths
-    // written clustered by rowkey: point lookups push a key predicate that
-    // parquet page stats can then prune (see IncrementalPostings' write)
-    try {
-      StateStore.commitBuckets(spark, statePath, touchedDirs) { tmpRoot =>
-        merged.sortWithinPartitions("b", "rowkey")
-          .write.partitionBy("b").mode("overwrite").parquet(tmpRoot)
-      }
-      rollup.foreach(spec =>
-        IncrementalRollup.updateBuckets(spark, merged, spec, touchedDirs, numBuckets))
-    } finally merged.unpersist(): Unit
-  }
+                 rollup: Option[IncrementalRollup.Spec] = None): Unit =
+    StateStore.mergeKeyed(spark, statePath, batch, numBuckets, Seq("rowkey"),
+      andThen = (merged, dirs) => rollup.foreach(spec =>
+        IncrementalRollup.updateBuckets(spark, merged, spec, dirs, numBuckets)))(
+      (old, b) => compactAll(old.unionByName(b)))
 
   /** Garbage-collect tombstones older than the source's replay horizon —
     * the retention discipline the state design names: a tombstone must
@@ -140,55 +97,21 @@ object IncrementalIndex {
     if (dirs.isEmpty) return
     StateStore.ensureBucketCount(spark, statePath, numBuckets)
     val expired = col("op") === "delete" && col("event_id") < horizonEventId
-    val all = spark.read.parquet(dirs.map(d => s"$statePath/$d"): _*)
-      .withColumn("b", bucketCol(numBuckets))
-    val touched = all.filter(expired)
-      .select("b").distinct().collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return
-    val touchedDirs = touched.toSeq.map(b => s"b=$b")
-    val kept = spark.read.parquet(touchedDirs.map(d => s"$statePath/$d"): _*)
-      .withColumn("b", bucketCol(numBuckets))
-      .filter(!expired)
-      .repartition(col("b")) // one file per rewritten bucket (see mergeBatch)
-      .cache()
-    kept.count()
-    try StateStore.commitBuckets(spark, statePath, touchedDirs) { tmpRoot =>
-      kept.sortWithinPartitions("b", "rowkey") // GC preserves the clustering
-        .write.partitionBy("b").mode("overwrite").parquet(tmpRoot)
-    } finally kept.unpersist(): Unit
+    val touched = StateStore.touchedBuckets(
+      StateStore.readBuckets(spark, statePath, dirs).filter(expired), "rowkey", numBuckets)
+    if (touched.nonEmpty)
+      StateStore.rewriteKeyed(spark, statePath, touched, numBuckets, Seq("rowkey"),
+        empty = sys.error("expired tombstones sit in live buckets"))(_.filter(!expired))
   }
 
   /** Read the live view of the persisted state (tombstones filtered). */
-  def readState(spark: SparkSession, statePath: String): DataFrame = {
-    val dirs = StateStore.liveBuckets(spark, statePath)
-    spark.read.parquet(dirs.map(d => s"$statePath/$d"): _*)
-      .filter(col("op") =!= "delete")
-  }
+  def readState(spark: SparkSession, statePath: String): DataFrame =
+    StateStore.scanLive(spark, statePath)
 
-  /** Point lookup (HBase `Get`/multi-Get — the fetch half of the
-    * reference's search-then-fetch topology) against the maintained
-    * state: opens ONLY the buckets the keys hash to
-    * ([[StateStore.bucketDirsFor]]), and inside each bucket the pushed
-    * rowkey predicate prunes parquet pages via the clustered write order.
-    * Per-call I/O is |touched buckets|, never the state. Tombstoned and
-    * absent keys return no row; a root with no committed state at all
-    * fails with a clear error (its schema is payload-defined, so there is
-    * nothing to shape an empty result from). */
-  def get(spark: SparkSession, statePath: String, rowkeys: Seq[String]): DataFrame = {
-    require(rowkeys.nonEmpty, "get needs at least one rowkey")
-    val live = StateStore.liveBuckets(spark, statePath)
-    require(live.nonEmpty, s"no committed index state at $statePath")
-    val wanted = StateStore.bucketDirsFor(spark, statePath, rowkeys.distinct)
-    // keys hashing only to absent buckets: schema-correct empty frame
-    // (read any one live dir for the schema, return no rows)
-    val (dirs, none) =
-      if (wanted.nonEmpty) (wanted, false)
-      else (live.take(1), true)
-    val rows = spark.read.parquet(dirs.map(d => s"$statePath/$d"): _*)
-      .filter(col("op") =!= "delete")
-      .filter(col("rowkey").isin(rowkeys.distinct: _*))
-    if (none) rows.limit(0) else rows
-  }
+  /** Point lookup against the maintained state — [[StateStore.getKeyed]]:
+    * per-call I/O is |touched buckets|, never the state. */
+  def get(spark: SparkSession, statePath: String, rowkeys: Seq[String]): DataFrame =
+    StateStore.getKeyed(spark, statePath, rowkeys)
 
   /** Wire a streaming changelog (schema: rowkey STRING, event_id LONG,
     * op STRING, …) into the merge sink. `firstDelaySeconds` mirrors the

@@ -67,28 +67,6 @@ object IncrementalPostings {
     StructField("rowkey", StringType), StructField("event_id", LongType),
     StructField("op", StringType), StructField("text", StringType)))
 
-  private def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  private def docBucket(numBuckets: Int): Column =
-    pmod(crc32(col("rowkey")), lit(numBuckets)).cast("int")
-  private def tokBucket(numBuckets: Int): Column =
-    pmod(crc32(col("tok")), lit(numBuckets)).cast("int")
-
-  /** The live bucket dirs a DataFrame of keys hashes into — the frame
-    * twin of [[StateStore.bucketDirsFor]] for key sets that are DATA
-    * (too many to collect): only the distinct bucket ids (bounded by the
-    * bucket count) come to the driver. */
-  private def bucketDirsForFrame(spark: SparkSession, root: String,
-                                 keys: DataFrame, key: String): Seq[String] = {
-    val live = StateStore.liveBuckets(spark, root)
-    if (live.isEmpty) return Seq.empty // no state: skip the bucket-id job
-    val n = StateStore.pinnedBucketCount(spark, root)
-    val wanted = keys.select(pmod(crc32(col(key)), lit(n)).cast("int").as("b"))
-      .distinct().collect().map(r => s"b=${r.getInt(0)}").toSet
-    live.filter(wanted.contains)
-  }
-
   /** Per-doc-bucket, PER-FIELD stats rows (live doc count + total token
     * length) for the dstats sidecar — a pure function of each bucket's
     * docs content, which is what makes the sidecar idempotent under
@@ -145,13 +123,12 @@ object IncrementalPostings {
       toks.withColumn("field", lit(f))
     }.reduce(_ unionByName _)
 
-  /** Entries rows of the given bucket dirs under the entries schema —
-    * a fixed schema, so no footer is read to plan the scan. */
-  private def readEntries(spark: SparkSession, paths: Seq[String]): DataFrame =
-    if (paths.nonEmpty)
-      spark.read.schema(StructType(entriesSchema.filterNot(_.name == "b")))
-        .parquet(paths: _*)
-    else emptyDf(spark, entriesSchema).drop("b")
+  /** Entries rows of the given entries bucket dirs under the entries
+    * schema — a fixed schema, so no footer is read to plan the scan. */
+  private def readEntries(spark: SparkSession, rootPath: String,
+                          dirs: Seq[String]): DataFrame =
+    StateStore.readBuckets(spark, rootPath + "/entries", dirs,
+      Some(StructType(entriesSchema.filterNot(_.name == "b"))))
 
   /** Fold one micro-batch (rowkey STRING, event_id LONG, op put|delete,
     * text STRING) into the persisted postings state. The touched-bucket
@@ -215,26 +192,20 @@ object IncrementalPostings {
     val batch = batch0.select(docsSchemaFor(spark, rootPath).fields.toSeq
       .map(f => col(f.name).cast(f.dataType)): _*)
 
-    val withB = batch.withColumn("b", docBucket(numBuckets))
-    val touchedDocB = withB.select("b").distinct().collect().map(_.getInt(0)).sorted
-    if (touchedDocB.isEmpty) return // empty micro-batch: nothing to rewrite
+    val docDirs = StateStore.touchedBuckets(batch, "rowkey", numBuckets)
+    if (docDirs.isEmpty) return // empty micro-batch: nothing to rewrite
     StateStore.ensureBucketCount(spark, docsRoot, numBuckets)
     StateStore.ensureBucketCount(spark, entriesRoot, numBuckets)
-    val docDirs = touchedDocB.toSeq.map(b => s"b=$b")
-    // Bucket dirs are read directly (no partition discovery); bucket ids
-    // are recomputed from the keys where needed.
     val liveDocs = StateStore.liveBuckets(spark, docsRoot).toSet
     val oldDocs = readDocs(spark, rootPath, docDirs.filter(liveDocs.contains))
 
     // Only rowkeys present in the batch can change; everything is derived
     // from this (small) touched set.
     val touched = batch.select("rowkey").distinct()
-    // repartition by bucket: one file per rewritten bucket dir, so reads
-    // open |buckets| files, not |buckets × writer partitions| (see
-    // IncrementalIndex.mergeBatch)
-    val mergedDocs = IncrementalIndex.compactAll(oldDocs.unionByName(batch))
-      .withColumn("b", docBucket(numBuckets))
-      .repartition(col("b")).cache()
+    // placed by bucket: the stats aggregate and the docs write need no
+    // further exchange
+    val mergedDocs = StateStore.decouple(IncrementalIndex.compactAll(oldDocs.unionByName(batch))
+      .withColumn("b", StateStore.bucketOf(col("rowkey"), numBuckets)))
     // removals: the touched docs' PREVIOUS tokens (tok-keyed delta);
     // additions: their tokens after the merge. A stale batch event leaves
     // both sides equal, so the entries are rewritten unchanged — idempotent.
@@ -249,23 +220,18 @@ object IncrementalPostings {
     val additions = docToks(mergedDocs.drop("b").join(broadcast(touched), "rowkey"),
       tokenize, keepPositions, fields).cache()
 
-    val touchedTokB = removals.select(tokBucket(numBuckets).as("b"))
-      .unionByName(additions.select(tokBucket(numBuckets).as("b")))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val entryDirs = touchedTokB.toSeq.map(b => s"b=$b")
+    val entryDirs = StateStore.touchedBuckets(
+      removals.select("tok").unionByName(additions.select("tok")), "tok", numBuckets)
     val liveEntries = StateStore.liveBuckets(spark, entriesRoot).toSet
-    val oldEntries = readEntries(spark,
-      entryDirs.filter(liveEntries.contains).map(d => s"$entriesRoot/$d"))
+    val oldEntries = readEntries(spark, rootPath, entryDirs.filter(liveEntries.contains))
     // Double anti-join (see crash protocol in the class doc): removals for
     // the delta, additions so replay over an already-promoted bucket
     // cannot duplicate them.
-    val newEntries = oldEntries
+    val newEntries = StateStore.decouple(oldEntries
       .join(removals, Seq("tok", "field", "doc_id"), "left_anti")
       .join(additions, Seq("tok", "field", "doc_id"), "left_anti")
       .unionByName(additions)
-      .withColumn("b", tokBucket(numBuckets))
-      .repartition(col("b")) // one file per rewritten entry bucket
-      .cache()
+      .withColumn("b", StateStore.bucketOf(col("tok"), numBuckets)))
 
     // Per-bucket doc stats for the touched buckets: a pure function of the
     // bucket's post-merge content, so replay reproduces identical rows —
@@ -276,28 +242,16 @@ object IncrementalPostings {
     StateStore.ensureBucketCount(spark, statsRoot, numBuckets)
     val stats = bucketStats(mergedDocs, tokenize, fields)
 
-    mergedDocs.count(); newEntries.count() // decouple from the input files
     try {
-      // Bucket files are written CLUSTERED by their read key (entries by
-      // tok, docs by rowkey) — Lucene's sorted term dictionary expressed
-      // as parquet page statistics: a term/key predicate pushed into the
-      // scan then skips the pages (and at scale, row groups) outside the
-      // key's range instead of decoding the whole bucket. The sort runs
-      // over the already-cached delta (batch-sized); [b, key] ordering
-      // satisfies the partitioned writer's required [b] prefix, so no
-      // order-destroying re-sort is inserted.
+      // Bucket files are clustered by their read key (entries by tok, docs
+      // by rowkey) — Lucene's sorted term dictionary expressed as parquet
+      // page statistics.
       if (entryDirs.nonEmpty)
-        StateStore.commitBuckets(spark, entriesRoot, entryDirs) { tmp =>
-          newEntries.sortWithinPartitions("b", "tok")
-            .write.partitionBy("b").mode("overwrite").parquet(tmp)
-        }
-      StateStore.commitBuckets(spark, docsRoot, docDirs) { tmp =>
-        mergedDocs.sortWithinPartitions("b", "rowkey")
-          .write.partitionBy("b").mode("overwrite").parquet(tmp)
-      }
-      StateStore.commitBuckets(spark, statsRoot, docDirs) { tmp =>
-        stats.write.partitionBy("b").mode("overwrite").parquet(tmp)
-      }
+        StateStore.writeBuckets(spark, entriesRoot, entryDirs, newEntries,
+          clusterBy = Seq("tok"))
+      StateStore.writeBuckets(spark, docsRoot, docDirs, mergedDocs,
+        clusterBy = Seq("rowkey"))
+      StateStore.writeBuckets(spark, statsRoot, docDirs, stats)
       // df sidecar (opt-in, [[enableDfSidecar]]): each touched entries
       // bucket's dfs twin is recomputed from the already-cached post-merge
       // content — pure function of bucket content, so replay reproduces
@@ -306,11 +260,8 @@ object IncrementalPostings {
       // recomputes it from the already-new entries — dstats' argument).
       if (entryDirs.nonEmpty && dfSidecarEnabled(spark, rootPath)) {
         StateStore.ensureBucketCount(spark, dfsRoot(rootPath), numBuckets)
-        StateStore.commitBuckets(spark, dfsRoot(rootPath), entryDirs) { tmp =>
-          dfsOf(newEntries.drop("b"), numBuckets)
-            .sortWithinPartitions("b", "tok")
-            .write.partitionBy("b").mode("overwrite").parquet(tmp)
-        }
+        StateStore.writeBuckets(spark, dfsRoot(rootPath), entryDirs, dfsOf(newEntries),
+          clusterBy = Seq("tok"))
       }
     } finally {
       mergedDocs.unpersist(); newEntries.unpersist()
@@ -327,8 +278,8 @@ object IncrementalPostings {
     * entries at merge time ([[docToks]] drops deletes), so GC rewrites only
     * the doc buckets holding expired tombstones and never opens an entry
     * bucket — [[termSearch]] results are unchanged by construction. The
-    * docs root shares `IncrementalIndex`'s layout (latest event per rowkey,
-    * `crc32(rowkey)` buckets), so the rewrite is the proven one. */
+    * docs root is row-keyed like `IncrementalIndex`'s state, so the
+    * rewrite is the same one. */
   def gcTombstones(spark: SparkSession, rootPath: String, horizonEventId: Long,
                    numBuckets: Int = IncrementalIndex.DefaultBuckets): Unit =
     IncrementalIndex.gcTombstones(spark, rootPath + "/docs", horizonEventId, numBuckets)
@@ -376,7 +327,7 @@ object IncrementalPostings {
       val fields = StateStore.readTag(spark, rootPath, "_fields")
         .map(_.split(",").toSeq).getOrElse(Seq(DefaultField))
       val live = readDocs(spark, rootPath, dirs)
-        .withColumn("b", docBucket(newBuckets))
+        .withColumn("b", StateStore.bucketOf(col("rowkey"), newBuckets))
         .filter(col("op") =!= "delete")
       val dl = allEntries(spark, rootPath)
         .groupBy("doc_id", "field").agg(sum("tf").as("dl"))
@@ -391,8 +342,7 @@ object IncrementalPostings {
           .withColumn("field", lit(f))
       }.reduce(_ unionByName _).cache()
       stats.count() // decouple from the old dstats files before the swap
-      try StateStore.commit(spark, statsRoot)(tmp =>
-        stats.write.partitionBy("b").mode("overwrite").parquet(tmp))
+      try StateStore.commit(spark, statsRoot)(StateStore.writeBucketFiles(stats, _))
       finally stats.unpersist(): Unit
     }
     else if (StateStore.nonEmpty(spark, statsRoot)) {
@@ -420,10 +370,8 @@ object IncrementalPostings {
   /** All live entries rows (tok, doc_id) — the full-index read behind the
     * vocabulary and batch-probe paths (per-TERM reads use the bucket-
     * pruned [[prunedEntries]] instead). */
-  private[streaming] def allEntries(spark: SparkSession, rootPath: String): DataFrame = {
-    val root = rootPath + "/entries"
-    readEntries(spark, StateStore.liveBuckets(spark, root).map(d => s"$root/$d"))
-  }
+  private[streaming] def allEntries(spark: SparkSession, rootPath: String): DataFrame =
+    readEntries(spark, rootPath, StateStore.liveBuckets(spark, rootPath + "/entries"))
 
   /** The maintained inverted index, in `Index.postings` shape:
     * (tok, sorted doc ids, document frequency, total occurrence count). */
@@ -469,13 +417,16 @@ object IncrementalPostings {
   def dfSidecarEnabled(spark: SparkSession, rootPath: String): Boolean =
     StateStore.readTag(spark, rootPath, "_dfs").contains("1")
 
-  /** The (b, tok, df) rows for one set of entries buckets — the pure
-    * function of bucket content both the backfill and the per-merge
-    * maintenance write: a token's posting list is complete within its
-    * bucket, so per-bucket df is exact. */
-  private def dfsOf(entries: DataFrame, numBuckets: Int): DataFrame =
-    entries.withColumn("b", tokBucket(numBuckets))
-      .groupBy("b", "tok").agg(countDistinct(col("doc_id")).as("df"))
+  /** The (b, tok, df) rows for one set of entries buckets (rows carrying
+    * their bucket column `b`) — the pure function of bucket content both
+    * the backfill and the per-merge maintenance write: a token's posting
+    * list is complete within its bucket, so per-bucket df is exact. */
+  private def dfsOf(entries: DataFrame): DataFrame =
+    entries.groupBy("b", "tok").agg(countDistinct(col("doc_id")).as("df"))
+
+  /** The sidecar's stored schema. */
+  private val dfsSchema = StructType(Seq(
+    StructField("tok", StringType), StructField("df", LongType)))
 
   /** Turn the df sidecar ON for an existing root and backfill it from the
     * live entries (one pass — vocabulary-shaped aggregate, committed
@@ -491,12 +442,11 @@ object IncrementalPostings {
     StateStore.ensureBucketCount(spark, dfsRoot(rootPath), n)
     val dirs = StateStore.liveBuckets(spark, entriesRoot)
     if (dirs.nonEmpty) {
-      val dfs = dfsOf(readEntries(spark, dirs.map(d => s"$entriesRoot/$d")), n).cache()
-      dfs.count() // decouple from any prior dfs files before the swaps
-      try StateStore.commitBuckets(spark, dfsRoot(rootPath), dirs) { tmp =>
-        dfs.sortWithinPartitions("b", "tok")
-          .write.partitionBy("b").mode("overwrite").parquet(tmp)
-      } finally dfs.unpersist(): Unit
+      // decoupled from any prior dfs files before the swaps
+      val dfs = StateStore.decouple(dfsOf(readEntries(spark, rootPath, dirs)
+        .withColumn("b", StateStore.bucketOf(col("tok"), n))))
+      try StateStore.writeBuckets(spark, dfsRoot(rootPath), dirs, dfs, clusterBy = Seq("tok"))
+      finally dfs.unpersist(): Unit
     }
   }
 
@@ -509,13 +459,8 @@ object IncrementalPostings {
                                   toks: Seq[String]): Option[DataFrame] = {
     if (!dfSidecarEnabled(spark, rootPath)) return None
     val root = dfsRoot(rootPath)
-    val dirs = StateStore.bucketDirsFor(spark, root, toks)
-    if (dirs.isEmpty)
-      return Some(emptyDf(spark, StructType(Seq(
-        StructField("tok", StringType), StructField("df", LongType)))))
-    Some(spark.read.parquet(dirs.map(d => s"$root/$d"): _*)
-      .filter(col("tok").isin(toks: _*))
-      .select("tok", "df"))
+    Some(StateStore.readBuckets(spark, root, StateStore.bucketDirsFor(spark, root, toks),
+      Some(dfsSchema)).filter(col("tok").isin(toks: _*)))
   }
 
   /** [[dfsForTokens]] for a token FRAME (values are data, bucket ids are
@@ -525,8 +470,7 @@ object IncrementalPostings {
                                        toks: DataFrame): Option[DataFrame] = {
     if (!dfSidecarEnabled(spark, rootPath)) return None
     val root = dfsRoot(rootPath)
-    val dirs = bucketDirsForFrame(spark, root, toks, "tok")
-    dfsReadDirs(spark, root, dirs, toks)
+    dfsReadDirs(spark, root, StateStore.bucketDirsFor(spark, root, toks, "tok"), toks)
   }
 
   /** [[dfsForTokensFrame]] served from an ENTRY-dir list already resolved
@@ -550,14 +494,9 @@ object IncrementalPostings {
   }
 
   private def dfsReadDirs(spark: SparkSession, root: String, dirs: Seq[String],
-                          toks: DataFrame): Option[DataFrame] = {
-    if (dirs.isEmpty)
-      return Some(emptyDf(spark, StructType(Seq(
-        StructField("tok", StringType), StructField("df", LongType)))))
-    Some(spark.read.parquet(dirs.map(d => s"$root/$d"): _*)
-      .join(toks.select("tok").distinct(), "tok")
-      .select("tok", "df"))
-  }
+                          toks: DataFrame): Option[DataFrame] =
+    Some(StateStore.readBuckets(spark, root, dirs, Some(dfsSchema))
+      .join(toks.select("tok").distinct(), "tok"))
 
   /** The full sidecar (tok, df) view — the cheap source for saturation
     * monitoring once the sidecar exists (two columns of vocabulary-sized
@@ -565,11 +504,7 @@ object IncrementalPostings {
   private[graft] def dfsAll(spark: SparkSession, rootPath: String): Option[DataFrame] = {
     if (!dfSidecarEnabled(spark, rootPath)) return None
     val root = dfsRoot(rootPath)
-    val dirs = StateStore.liveBuckets(spark, root)
-    if (dirs.isEmpty)
-      return Some(emptyDf(spark, StructType(Seq(
-        StructField("tok", StringType), StructField("df", LongType)))))
-    Some(spark.read.parquet(dirs.map(d => s"$root/$d"): _*).select("tok", "df"))
+    Some(StateStore.readBuckets(spark, root, StateStore.liveBuckets(spark, root), Some(dfsSchema)))
   }
 
   /** Prefix completions from the MAINTAINED vocabulary, ranked by corpus
@@ -624,9 +559,7 @@ object IncrementalPostings {
     * counts (df) over this frame are exact. */
   private[graft] def prunedEntries(spark: SparkSession, rootPath: String,
                                        toks: Seq[String]): DataFrame = {
-    val entriesRoot = rootPath + "/entries"
-    val dirs = StateStore.bucketDirsFor(spark, entriesRoot, toks)
-    readEntries(spark, dirs.map(d => s"$entriesRoot/$d"))
+    readEntries(spark, rootPath, StateStore.bucketDirsFor(spark, rootPath + "/entries", toks))
       .filter(col("tok").isin(toks: _*))
   }
 
@@ -651,18 +584,15 @@ object IncrementalPostings {
     * fixed cost was dominated by repeated identical metadata jobs). */
   private[graft] def entryBucketDirsForFrame(spark: SparkSession,
       rootPath: String, toks: DataFrame): Seq[String] =
-    bucketDirsForFrame(spark, rootPath + "/entries", toks, "tok")
+    StateStore.bucketDirsFor(spark, rootPath + "/entries", toks, "tok")
 
   /** [[prunedEntriesForTokens]] over an already-resolved dir list
     * ([[entryBucketDirsForFrame]]). Passing a SUPERSET of the tokens'
     * own dirs is sound — the token join restricts rows either way; the
     * trade is scan width for driver jobs, the caller's call. */
   private[graft] def prunedEntriesForTokensIn(spark: SparkSession,
-      rootPath: String, dirs: Seq[String], toks: DataFrame): DataFrame = {
-    val entriesRoot = rootPath + "/entries"
-    readEntries(spark, dirs.map(d => s"$entriesRoot/$d"))
-      .join(toks.select("tok").distinct(), "tok")
-  }
+      rootPath: String, dirs: Seq[String], toks: DataFrame): DataFrame =
+    readEntries(spark, rootPath, dirs).join(toks.select("tok").distinct(), "tok")
 
   /** The docs state's schema from the root's own `_fields` marker — the
     * authority for which per-field columns a fields root stores (the
@@ -678,21 +608,14 @@ object IncrementalPostings {
       case None => docsSchema
     }
 
-  /** Zero rows in the docs state's OWN schema ([[docsSchemaFor]]): a
+  /** The docs rows (tombstones included) of the given docs bucket dirs,
+    * under [[docsSchemaFor]] — no dirs give zero rows in that schema: a
     * multi-field root's docs carry per-field columns, and an empty fetch
     * must still resolve them (the per-field dl melt selects the field
     * columns even when the hit list is empty). */
-  private def emptyDocs(spark: SparkSession, rootPath: String): DataFrame =
-    emptyDf(spark, docsSchemaFor(spark, rootPath))
-
-  /** The docs rows (tombstones included) of the given docs bucket dirs,
-    * under [[docsSchemaFor]]. */
   private def readDocs(spark: SparkSession, rootPath: String,
                        dirs: Seq[String]): DataFrame =
-    if (dirs.nonEmpty)
-      spark.read.schema(docsSchemaFor(spark, rootPath))
-        .parquet(dirs.map(d => s"$rootPath/docs/$d"): _*)
-    else emptyDocs(spark, rootPath)
+    StateStore.readBuckets(spark, rootPath + "/docs", dirs, Some(docsSchemaFor(spark, rootPath)))
 
   /** The LIVE doc rows matching a DataFrame of rowkeys — bucket-pruned
     * like [[prunedEntriesForTokens]]: the keys stay distributed, only
@@ -701,7 +624,7 @@ object IncrementalPostings {
     * [[prunedDocs]] fetch. */
   private[graft] def prunedDocsForKeys(spark: SparkSession, rootPath: String,
                                        keys: DataFrame): DataFrame =
-    readDocs(spark, rootPath, bucketDirsForFrame(spark, rootPath + "/docs", keys, "rowkey"))
+    readDocs(spark, rootPath, StateStore.bucketDirsFor(spark, rootPath + "/docs", keys, "rowkey"))
       .filter(col("op") =!= "delete").join(keys.select("rowkey").distinct(), "rowkey")
 
   /** The LIVE doc rows for exactly `rowkeys`, reading only the buckets
@@ -813,11 +736,8 @@ object IncrementalPostings {
     StructField("n_docs", LongType), StructField("dl_sum", LongType),
     StructField("field", StringType)))
 
-  private def readStats(spark: SparkSession, root: String): DataFrame = {
-    val dirs = StateStore.liveBuckets(spark, root)
-    if (dirs.nonEmpty) spark.read.schema(statsSchema).parquet(dirs.map(d => s"$root/$d"): _*)
-    else emptyDf(spark, statsSchema)
-  }
+  private def readStats(spark: SparkSession, root: String): DataFrame =
+    StateStore.readBuckets(spark, root, StateStore.liveBuckets(spark, root), Some(statsSchema))
 
   /** Corpus-level ranking statistics over the maintained state — one row
     * (n_docs, avgdl) summed from the per-bucket stats sidecar: ≤

@@ -102,12 +102,8 @@ object IncrementalRollup {
     StateStore.ensureTag(spark, spec.path, "_rollup", spec.tagValue)
     val live = merged.filter(col("op") =!= "delete")
     val aggs = partialAggs(spec)
-    val partials = live.groupBy((col("b") +: spec.groupCols.map(col)): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .repartition(col("b")) // one file per rewritten rollup bucket
-    StateStore.commitBuckets(spark, spec.path, touchedDirs) { tmpRoot =>
-      partials.write.partitionBy("b").mode("overwrite").parquet(tmpRoot)
-    }
+    StateStore.writeBuckets(spark, spec.path, touchedDirs,
+      live.groupBy((col("b") +: spec.groupCols.map(col)): _*).agg(aggs.head, aggs.tail: _*))
   }
 
   /** The maintained aggregate: collapse the per-bucket partials. Returns
@@ -156,7 +152,7 @@ object IncrementalRollup {
       df
     }
     if (dirs.isEmpty) return empty
-    val partials = spark.read.parquet(dirs.map(d => s"${spec.path}/$d"): _*)
+    val partials = StateStore.readBuckets(spark, spec.path, dirs)
     val aggs = sum(col("n")).as("n") +:
       (sumName(spec).map(s => sum(col(s)).as(s)).toSeq ++
         spec.distinctCol.map(c =>
@@ -192,14 +188,12 @@ object IncrementalRollup {
         .getFileSystem(spark.sessionState.newHadoopConf())
       fs.mkdirs(new org.apache.hadoop.fs.Path(tmp))
       if (dirs.nonEmpty) {
-        val rows = spark.read.parquet(dirs.map(d => s"$statePath/$d"): _*)
-          .withColumn("b", pmod(crc32(col("rowkey")), lit(n)).cast("int"))
-          .filter(col("op") =!= "delete")
+        val rows = StateStore.scanLive(spark, statePath)
+          .withColumn("b", StateStore.bucketOf(col("rowkey"), n))
         val aggs = partialAggs(spec)
-        rows.groupBy((col("b") +: spec.groupCols.map(col)): _*)
-          .agg(aggs.head, aggs.tail: _*)
-          .repartition(col("b"))
-          .write.partitionBy("b").mode("overwrite").parquet(tmp)
+        StateStore.writeBucketFiles(
+          rows.groupBy((col("b") +: spec.groupCols.map(col)): _*).agg(aggs.head, aggs.tail: _*),
+          tmp)
       }
       // the commit swap replaces the whole root: re-materialize markers
       val out = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_nbuckets"), true)

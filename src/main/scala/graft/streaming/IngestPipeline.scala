@@ -657,40 +657,17 @@ object IngestPipeline {
                  tokenizerName: Option[String] = None,
                  textTransform: Option[Column => Column] = None,
                  gateMaxCandidates: Int = 0): Unit = {
-    applyBatchTimed(spark, batch, pipelineRoot, batchId, threshold, numBuckets,
+    applyBatchPhased(spark, batch, pipelineRoot, batchId, threshold, numBuckets,
       tokenize, scheme, admitIf, annNlist, annIters, semanticThreshold,
       semanticProbes, tokenizerName, textTransform, gateMaxCandidates): Unit
   }
 
-  /** [[applyBatch]] returning (gateSeconds, mergeSeconds) — the per-batch
-    * cost split between the admission decision (probe + durable log
-    * commit) and the four state merges. Bench-facing: the per-batch fixed
-    * cost is the ingest path's scaling knob, and a docs/s number alone
-    * cannot say WHICH half stopped amortizing. */
-  private[graft] def applyBatchTimed(spark: SparkSession, rawBatch: DataFrame,
-                 pipelineRoot: String, batchId: Long, threshold: Double = 0.8,
-                 numBuckets: Int = IncrementalIndex.DefaultBuckets,
-                 tokenize: Column => Column = split(_, " "),
-                 scheme: IncrementalShingles.SketchScheme =
-                   IncrementalShingles.WordShingles,
-                 admitIf: Option[Column] = None,
-                 annNlist: Int = 16, annIters: Int = 5,
-                 semanticThreshold: Option[Double] = None,
-                 semanticProbes: Int = 2,
-                 tokenizerName: Option[String] = None,
-                 textTransform: Option[Column => Column] = None,
-                 gateMaxCandidates: Int = 0): (Double, Double) = {
-    val (g, m, _) = applyBatchPhased(spark, rawBatch, pipelineRoot, batchId,
-      threshold, numBuckets, tokenize, scheme, admitIf, annNlist, annIters,
-      semanticThreshold, semanticProbes, tokenizerName, textTransform,
-      gateMaxCandidates)
-    (g, m)
-  }
-
-  /** [[applyBatchTimed]] with the gate's wall time further attributed to
-    * its sub-phases via [[PhaseClock]] — (gateSeconds, mergeSeconds,
-    * gatePhases): `sketch` / `probe` / `score` ([[IncrementalShingles
-    * .gateDecisions]]) and `log_commit` (the durable verdict write).
+  /** [[applyBatch]] returning (gateSeconds, mergeSeconds, gatePhases) —
+    * the per-batch cost split between the admission decision (probe +
+    * durable log commit) and the state merges, with the gate's wall time
+    * further attributed to its sub-phases via [[PhaseClock]]: `sketch` /
+    * `probe` / `score` ([[IncrementalShingles.gateDecisions]]) and
+    * `log_commit` (the durable verdict write).
     * A replayed batch (decisions already logged) reports an empty/zero
     * phase list — the gate re-reads the log, it does not re-decide. */
   private[graft] def applyBatchPhased(spark: SparkSession, rawBatch: DataFrame,
@@ -1071,7 +1048,7 @@ object IngestPipeline {
                    tombstoned: Boolean): Seq[(String, String, Double)] = {
       val dirs = StateStore.liveBuckets(spark, root)
       if (dirs.isEmpty) return Seq((name, "buckets", 0.0))
-      val df = spark.read.parquet(dirs.map(d => s"$root/$d"): _*)
+      val df = StateStore.readBuckets(spark, root, dirs)
       val base = Seq((name, "buckets", dirs.size.toDouble))
       if (tombstoned) {
         val agg = df.agg(count(lit(1)).as("n"),

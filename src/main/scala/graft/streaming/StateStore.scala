@@ -3,7 +3,9 @@ package graft.streaming
 import java.io.IOException
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, crc32, lit, pmod}
+import org.apache.spark.sql.types.StructType
 
 /** Atomic-swap persistence for materialized state directories, through the
   * Hadoop `FileSystem` API — the same code path runs on local disk (tests),
@@ -43,6 +45,21 @@ import org.apache.spark.sql.SparkSession
   * writer's promote fails loudly); the replayed micro-batch then
   * re-merges idempotently. A reader never observes a half-written bucket:
   * promotion is a directory rename.
+  *
+  * Bucket layout — every maintained structure is a root of bucket dirs
+  * (`b=<i>`, or `cell=<i>` for the IVF cells), and this object alone
+  * decides it:
+  *   - placement: a key lives in bucket `pmod(crc32(key), n)` over its
+  *     UTF-8 string form ([[bucketOf]], whose driver twin resolves a
+  *     key-addressed read), `n` pinned per root ([[ensureBucketCount]]);
+  *   - one file per bucket dir, clustered by the dir's read key, so a
+  *     reader opens |buckets| files and a pushed key predicate prunes
+  *     parquet pages ([[writeBuckets]]);
+  *   - a merge rewrites only the buckets its batch hashes into, through
+  *     [[commitBuckets]] — untouched dirs are never opened. Each bucket
+  *     swap is atomic and the sequence is prefix-atomic, which is safe
+  *     because every merge is idempotent under replay ([[mergeKeyed]]
+  *     for the row-keyed stores).
   */
 object StateStore {
 
@@ -119,8 +136,10 @@ object StateStore {
     * holding bucket dirs (`b=…`, `cell=…`) is read and written only
     * under this exact stamp: [[commit]], [[commitBuckets]], a marker
     * write ([[ensureTag]]) and a [[liveBuckets]] refill refuse one
-    * without it, or with another, before anything is written or bumped. */
-  val Format = "1"
+    * without it, or with another, before anything is written or bumped.
+    * Format 2 stores the IVF cells' `vec_id` as LONG; format 1 stored the
+    * type of whichever frame a build or upsert was given. */
+  val Format = "2"
 
   private val FormatMarker = "_format"
 
@@ -219,19 +238,19 @@ object StateStore {
   }
 
   /** Bucketed commit — the delta-sized write path. `write` materializes
-    * ONLY the touched buckets under one tmp root (one job, e.g.
-    * `df.write.partitionBy("b")`); each directory named in `bucketDirs`
-    * (e.g. `b=3`) is then swapped in independently. Untouched bucket
-    * directories are never opened, renamed, or rewritten — at 100 TB a
-    * micro-batch rewrites the buckets it hashes into, not the state.
+    * ONLY the touched buckets under one tmp root (state is written by
+    * [[writeBuckets]]; the raw form serves writers of raw files); each
+    * directory named in `bucketDirs` (e.g. `b=3`) is then swapped in
+    * independently. Untouched bucket directories are never opened,
+    * renamed, or rewritten — at 100 TB a micro-batch rewrites the buckets
+    * it hashes into, not the state.
     *
     * Each per-bucket swap is atomic, the SEQUENCE is not: a crash midway
     * leaves a prefix of the buckets promoted. That is safe exactly when
     * the caller's merge is idempotent — replaying the checkpointed
     * micro-batch rewrites an already-promoted bucket with identical
     * content (event_id latest-wins for row state; the postings merge's
-    * double anti-join) — which is the documented contract of both
-    * incremental merges. The root's and its parent's `_seq` counters are
+    * double anti-join). The root's and its parent's `_seq` counters are
     * bumped before any swap; a root in another format is refused before
     * that, and a fresh one is stamped with [[Format]]. */
   def commitBuckets(spark: SparkSession, rootPath: String, bucketDirs: Seq[String])
@@ -332,8 +351,8 @@ object StateStore {
   /** Re-bucket a hash-bucketed state root to `newBuckets` — the planned
     * resize a growing deployment runs when buckets outgrow their rewrite
     * unit (the LSM-compaction-granularity knob named in
-    * [[IncrementalIndex]]'s state-layout doc). The bucket id is
-    * `pmod(crc32(keyCol), n)`, a pure function of the key and the count,
+    * [[IncrementalIndex]]'s state-layout doc). The bucket id
+    * ([[bucketOf]]) is a pure function of the key and the count,
     * so changing the count moves rows between directories and is
     * fundamentally an O(state) rewrite — `rescale` does it in ONE pass:
     * read every live bucket, recompute the bucket column under
@@ -367,7 +386,6 @@ object StateStore {
   def rescale(spark: SparkSession, rootPath: String, keyCol: String,
               newBuckets: Int): Unit = {
     require(newBuckets > 0, "newBuckets must be positive")
-    import org.apache.spark.sql.functions.{col, crc32, lit, pmod}
     val dirs = liveBuckets(spark, rootPath) // heals interrupted swaps first
     val oldCount = bucketCount(spark, rootPath)
     if (oldCount.contains(newBuckets)) return // already at the target count
@@ -388,14 +406,13 @@ object StateStore {
     commit(spark, rootPath) { tmp =>
       fs.mkdirs(new Path(tmp))
       if (dirs.nonEmpty) {
-        val all = spark.read.parquet(dirs.map(d => s"$rootPath/$d"): _*)
-          .withColumn("b", pmod(crc32(col(keyCol)), lit(newBuckets)).cast("int"))
-        val placed = oldCount match {
-          case Some(n) if newBuckets % n == 0 => all // map-side fan-out, no exchange
-          case _ => all.repartition(col("b"))
+        val all = readBuckets(spark, rootPath, dirs)
+          .withColumn("b", bucketOf(col(keyCol), newBuckets))
+        oldCount match {
+          case Some(n) if newBuckets % n == 0 => // map-side fan-out, no exchange
+            writeClustered(all, tmp, "b", Seq(keyCol))
+          case _ => writeBucketFiles(all, tmp, "b", Seq(keyCol))
         }
-        placed.sortWithinPartitions("b", keyCol)
-          .write.partitionBy("b").mode("overwrite").parquet(tmp)
       }
       carry.foreach { name =>
         org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$rootPath/$name"),
@@ -414,13 +431,170 @@ object StateStore {
                     keys: Seq[String]): Seq[String] = {
     val live = liveBuckets(spark, root)
     if (live.isEmpty) return Nil
-    val n = pinnedBucketCount(spark, root).toLong
-    val wanted = keys.map { k =>
-      val crc = new java.util.zip.CRC32()
-      crc.update(k.getBytes("UTF-8"))
-      s"b=${java.lang.Math.floorMod(crc.getValue, n)}"
-    }.toSet
+    val n = pinnedBucketCount(spark, root)
+    val wanted = keys.map(k => s"b=${bucketOf(k, n)}").toSet
     live.filter(wanted.contains)
+  }
+
+  /** [[bucketDirsFor]] for a key FRAME whose values are data (too many to
+    * collect): only the distinct bucket ids — bounded by the bucket count
+    * — come to the driver, in one job, skipped when the root holds no
+    * bucket. */
+  def bucketDirsFor(spark: SparkSession, root: String, keys: DataFrame,
+                    key: String): Seq[String] = {
+    val live = liveBuckets(spark, root)
+    if (live.isEmpty) return Nil
+    val wanted = touchedBuckets(keys, key, pinnedBucketCount(spark, root)).toSet
+    live.filter(wanted.contains)
+  }
+
+  // ---- the bucket layout: placement, reader, writer, keyed merge ----
+
+  /** The bucket of `key` under `n` buckets: CRC32 of the key's UTF-8
+    * string form, mod `n` — the placement column every bucketed write
+    * partitions by. */
+  def bucketOf(key: Column, n: Int): Column =
+    pmod(crc32(key.cast("string")), lit(n)).cast("int")
+
+  /** [[bucketOf]]'s driver twin: the bucket a key-addressed read opens.
+    * The two must agree on every key, or a read silently misses rows. */
+  def bucketOf(key: String, n: Int): Int = {
+    val crc = new java.util.zip.CRC32()
+    crc.update(key.getBytes("UTF-8"))
+    java.lang.Math.floorMod(crc.getValue, n.toLong).toInt
+  }
+
+  /** The bucket dirs (`b=<i>`, sorted) that `keys(key)` hashes into under
+    * `n` — the touched-bucket list of a merge or a pruned read: one job,
+    * at most `n` rows to the driver. */
+  def touchedBuckets(keys: DataFrame, key: String, n: Int): Seq[String] =
+    keys.select(bucketOf(col(key), n)).distinct().collect()
+      .map(_.getInt(0)).sorted.toSeq.map(b => s"b=$b")
+
+  /** The rows of bucket dirs `dirs` under `root` — the one bucket reader.
+    * With `schema` the scan is planned from it (no footer-inference job),
+    * no dirs give an empty frame of it, and a schema field named after the
+    * dirs' partition column (`cell` of `cell=3`) is read from the paths.
+    * Without one — payload-defined row state — the files' own schema is
+    * inferred, and `dirs` must not be empty. */
+  def readBuckets(spark: SparkSession, root: String, dirs: Seq[String],
+                  schema: Option[StructType] = None): DataFrame = {
+    val paths = dirs.map(d => s"$root/$d")
+    schema match {
+      case Some(s) if dirs.isEmpty =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+      case Some(s) =>
+        val partCol = dirs.head.takeWhile(_ != '=')
+        val reader = spark.read.schema(s)
+        (if (s.fieldNames.contains(partCol)) reader.option("basePath", root) else reader)
+          .parquet(paths: _*)
+      case None =>
+        require(dirs.nonEmpty, s"no committed state at $root")
+        spark.read.parquet(paths: _*)
+    }
+  }
+
+  /** Write `rows` as bucket dirs under `dir`, one file per dir: placed by
+    * `partCol` (a frame already hash-partitioned by it — cached right
+    * after `repartition(col(partCol))`, as [[decouple]] leaves it — plans
+    * no second exchange) and clustered by `partCol +: clusterBy`. The
+    * file layout of a whole-root [[commit]]; [[writeBuckets]] is the
+    * per-bucket one. */
+  def writeBucketFiles(rows: DataFrame, dir: String, partCol: String = "b",
+                       clusterBy: Seq[String] = Nil): Unit =
+    writeClustered(rows.repartition(col(partCol)), dir, partCol, clusterBy)
+
+  private def writeClustered(rows: DataFrame, dir: String, partCol: String,
+                             clusterBy: Seq[String]): Unit =
+    rows.sortWithinPartitions((partCol +: clusterBy).map(col): _*)
+      .write.partitionBy(partCol).mode("overwrite").parquet(dir)
+
+  /** The bucket writer: swap in the dirs `bucketDirs` of `root` from
+    * `rows` ([[writeBucketFiles]]'s layout, [[commitBuckets]]' swap). A
+    * dir named but left with no rows is removed. `rows` must not read the
+    * files it replaces ([[decouple]]). */
+  def writeBuckets(spark: SparkSession, root: String, bucketDirs: Seq[String],
+                   rows: DataFrame, partCol: String = "b",
+                   clusterBy: Seq[String] = Nil): Unit =
+    commitBuckets(spark, root, bucketDirs)(writeBucketFiles(rows, _, partCol, clusterBy))
+
+  /** `rows` placed by `partCol`, cached and materialized — decoupled from
+    * the files it was read from, so a swap may replace them. The caller
+    * unpersists it. */
+  def decouple(rows: DataFrame, partCol: String = "b"): DataFrame = {
+    val d = rows.repartition(col(partCol)).cache()
+    d.count()
+    d
+  }
+
+  /** The key of every row-keyed store: rows are the latest event per
+    * `rowkey`, tombstones (`op = 'delete'`) included. */
+  private val Key = "rowkey"
+
+  /** The keyed merge of the row-keyed stores: pin the count, resolve the
+    * buckets the batch's rowkeys hash into, read their live rows, fold
+    * them with the batch, decouple, and rewrite exactly those buckets.
+    * `fold(old, batch)` receives both sides with the bucket column `b`
+    * and must be idempotent under replay — its per-store semantics (what
+    * wins, what is dropped) are the caller's. `andThen` runs on the
+    * decoupled rows after the swap, before they are released. An empty
+    * batch commits nothing. */
+  def mergeKeyed(spark: SparkSession, root: String, batch: DataFrame,
+                 numBuckets: Int, clusterBy: Seq[String],
+                 andThen: (DataFrame, Seq[String]) => Unit = (_, _) => ())
+                (fold: (DataFrame, DataFrame) => DataFrame): Unit = {
+    val dirs = touchedBuckets(batch, Key, numBuckets)
+    if (dirs.isEmpty) return
+    val placed = batch.withColumn("b", bucketOf(col(Key), numBuckets))
+    rewriteKeyed(spark, root, dirs, numBuckets, clusterBy, placed.limit(0), andThen)(
+      fold(_, placed))
+  }
+
+  /** Rewrite the bucket dirs `dirs` of a row-keyed root as `f` of their
+    * live rows (`empty`, when none of them is live) — the body of
+    * [[mergeKeyed]], and of a maintenance pass that picks its buckets
+    * from the state itself (tombstone GC). */
+  def rewriteKeyed(spark: SparkSession, root: String, dirs: Seq[String],
+                   numBuckets: Int, clusterBy: Seq[String], empty: => DataFrame,
+                   andThen: (DataFrame, Seq[String]) => Unit = (_, _) => ())
+                  (f: DataFrame => DataFrame): Unit = {
+    ensureBucketCount(spark, root, numBuckets)
+    val live = liveBuckets(spark, root).toSet
+    val oldDirs = dirs.filter(live.contains)
+    val old =
+      if (oldDirs.nonEmpty)
+        readBuckets(spark, root, oldDirs).withColumn("b", bucketOf(col(Key), numBuckets))
+      else empty
+    val rows = decouple(f(old).withColumn("b", bucketOf(col(Key), numBuckets)))
+    try {
+      writeBuckets(spark, root, dirs, rows, "b", clusterBy)
+      andThen(rows, dirs)
+    } finally rows.unpersist(): Unit
+  }
+
+  /** The live rows (tombstones filtered) of a row-keyed root; fails on a
+    * root with no committed state. */
+  def scanLive(spark: SparkSession, root: String): DataFrame =
+    readBuckets(spark, root, liveBuckets(spark, root)).filter(col("op") =!= "delete")
+
+  /** The keyed `Get` (HBase `Get`/multi-Get — the fetch half of the
+    * reference's search-then-fetch topology) over a row-keyed root: opens
+    * ONLY the buckets the keys hash to ([[bucketDirsFor]]), and inside
+    * each the pushed rowkey predicate prunes parquet pages via the
+    * clustered write order. Tombstoned and absent keys return no row; a
+    * root with no committed state fails (its schema is payload-defined,
+    * so there is nothing to shape an empty result from). */
+  def getKeyed(spark: SparkSession, root: String, keys: Seq[String]): DataFrame = {
+    require(keys.nonEmpty, s"a Get on $root needs at least one rowkey")
+    val live = liveBuckets(spark, root)
+    require(live.nonEmpty, s"no committed state at $root")
+    val wanted = bucketDirsFor(spark, root, keys.distinct)
+    // keys hashing only to absent buckets: one live dir shapes the empty
+    // result
+    val rows = readBuckets(spark, root, if (wanted.nonEmpty) wanted else live.take(1))
+      .filter(col("op") =!= "delete")
+      .filter(col(Key).isin(keys.distinct: _*))
+    if (wanted.nonEmpty) rows else rows.limit(0)
   }
 
   /** Total bytes of the LIVE buckets under a state root — the bucket-

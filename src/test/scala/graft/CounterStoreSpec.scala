@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
-import graft.streaming.CounterStore
+import graft.streaming.{CellStore, CounterStore}
 
 /** The commutative-aggregate counter state: sums fold at merge time,
   * tombstones reset, and the high-water contract makes batch replay a
@@ -115,14 +115,21 @@ class CounterStoreSpec extends SparkSpec {
   }
 
   test("getCounters opens only the requested keys' buckets") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ctr4").toString + "/state"
-    CounterStore.mergeCounters(spark,
-      df((1 to 40).map(i => (s"r$i", "n", i.toLong, "incr", 1.0))),
-      root, numBuckets = 8)
-    val got = CounterStore.getCounters(spark, root, Seq("r7"))
-    assert(got.collect().map(_.getString(0)).toSeq === Seq("r7"))
-    val opened = got.inputFiles.map(_.replaceAll(".*/(b=\\d+)/.*", "$1")).distinct
-    assert(opened.length < 8, s"point get opened every bucket: ${opened.toSeq}")
+    // the keyed Get every row-keyed store shares: getCounters and getCells
+    val rows = (1 to 40).map(i => (s"r$i", "n", i.toLong, "incr", 1.0))
+    val stores = Seq[(String, String => Unit, (String, Seq[String]) => DataFrame)](
+      ("getCounters", r => CounterStore.mergeCounters(spark, df(rows), r, numBuckets = 8): Unit,
+        CounterStore.getCounters(spark, _, _)),
+      ("getCells", CellStore.mergeCells(spark, df(rows.map(_.copy(_4 = "put"))), _, numBuckets = 8),
+        CellStore.getCells(spark, _, _)))
+    for ((name, merge, get) <- stores) withClue(s"$name: ") {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_ctr4").toString + "/state"
+      merge(root)
+      val got = get(root, Seq("r7"))
+      assert(got.collect().map(_.getAs[String]("rowkey")).toSeq === Seq("r7"))
+      val opened = got.inputFiles.map(_.replaceAll(".*/(b=\\d+)/.*", "$1")).distinct
+      assert(opened.length < 8, s"point get opened every bucket: ${opened.toSeq}")
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.streaming.{IncrementalIndex, StateStore}
+import graft.streaming.{CellStore, CounterStore, IncrementalIndex, IncrementalPostings, StateStore}
 
 /** The core invariant of the incremental design, on real fixture data:
   * folding the changelog through per-chunk merges (the streaming
@@ -99,25 +99,67 @@ class IncrementalMergeSpec extends SparkSpec {
 
   test("a merge rewrites ONLY the buckets the batch touches (untouched dirs byte-identical)") {
     // The delta-sized-write property — the reference's whole point
-    // (SolrIndexTools.java:93-144 flushes the delta, never the index).
+    // (SolrIndexTools.java:93-144 flushes the delta, never the index) —
+    // for every bucketed store, each rewritten bucket dir holding ONE file.
+    import spark.implicits._
+    def bucketOf(key: String): String = {
+      val crc = new java.util.zip.CRC32()
+      crc.update(key.getBytes("UTF-8"))
+      s"b=${java.lang.Math.floorMod(crc.getValue, IncrementalIndex.DefaultBuckets.toLong)}"
+    }
     val ev = changelog
-    val base = Files.createTempDirectory("graft_incD").toString + "/state"
-    IncrementalIndex.mergeBatch(spark, ev, base)
-    val before = snapshot(base)
     val oneKey = ev.select("rowkey").orderBy("rowkey").limit(1)
       .collect().head.getString(0)
-    IncrementalIndex.mergeBatch(spark,
-      ev.filter(col("rowkey") === oneKey)
-        .withColumn("event_id", col("event_id") + 1000000L), base)
-    val after = snapshot(base)
-    val crc = new java.util.zip.CRC32()
-    crc.update(oneKey.getBytes("UTF-8"))
-    val touched = s"b=${java.lang.Math.floorMod(crc.getValue, IncrementalIndex.DefaultBuckets.toLong)}"
-    assert(before.keySet === after.keySet)
-    assert(before.contains(touched))
-    for (d <- before.keySet if d != touched)
-      assert(before(d) === after(d), s"untouched bucket $d was rewritten")
-    assert(before(touched) !== after(touched), "touched bucket should be rewritten")
+    def later(df: DataFrame): DataFrame =
+      df.filter(col("rowkey") === oneKey).withColumn("event_id", col("event_id") + 1000000L)
+    val del = col("op") === "delete"
+    val cells = ev.select(col("rowkey"), when(!del, lit("q")).as("qualifier"),
+      col("event_id"), col("op"), col("payload").as("value"))
+    val counters = ev.select(col("rowkey"), when(!del, lit("n")).as("qualifier"),
+      col("event_id"), when(del, "delete").otherwise("incr").as("op"),
+      col("payload").as("delta"))
+    val docs = ev.select(col("rowkey"), col("event_id"), col("op"),
+      concat_ws(" ", concat(lit("t"), col("event_id") % 50),
+        concat(lit("u"), col("event_id") % 7)).as("text"))
+    val fresh = Seq((oneKey, 2000000L, "put", "zzfresh1 zzfresh2"))
+      .toDF("rowkey", "event_id", "op", "text")
+    // the entry buckets a doc update rewrites: its old tokens' and its new
+    // tokens' (read before the update)
+    def tokenBuckets(root: String): Set[String] =
+      (IncrementalPostings.docsState(spark, root).filter(col("rowkey") === oneKey)
+        .collect().flatMap(_.getAs[String]("text").split(" ")).toSet ++
+        Set("zzfresh1", "zzfresh2")).map(bucketOf)
+    val keyBucket = (_: String) => Set(bucketOf(oneKey))
+    // (store, initial merge, update of oneKey only, bucketed root, dirs to rewrite)
+    val stores = Seq[(String, String => Unit, String => Unit, String => String, String => Set[String])](
+      ("IncrementalIndex", IncrementalIndex.mergeBatch(spark, ev, _),
+        IncrementalIndex.mergeBatch(spark, later(ev), _), identity, keyBucket),
+      ("CellStore", CellStore.mergeCells(spark, cells, _),
+        CellStore.mergeCells(spark, later(cells), _), identity, keyBucket),
+      ("CounterStore", r => CounterStore.mergeCounters(spark, counters, r): Unit,
+        r => CounterStore.mergeCounters(spark, later(counters), r): Unit, identity, keyBucket),
+      ("postings docs", IncrementalPostings.mergeBatch(spark, docs, _),
+        IncrementalPostings.mergeBatch(spark, fresh, _), _ + "/docs", keyBucket),
+      ("postings entries", IncrementalPostings.mergeBatch(spark, docs, _),
+        IncrementalPostings.mergeBatch(spark, fresh, _), _ + "/entries", tokenBuckets))
+    for ((store, load, update, bucketed, rewrites) <- stores) withClue(s"$store: ") {
+      val root = Files.createTempDirectory("graft_incD").toString + "/state"
+      load(root)
+      val dir = bucketed(root)
+      val before = snapshot(dir)
+      val touched = rewrites(root)
+      update(root)
+      val after = snapshot(dir)
+      // a touched bucket may be new (a fresh token's)
+      assert(after.keySet === before.keySet ++ touched)
+      for (d <- before.keySet -- touched)
+        assert(before(d) === after(d), s"untouched bucket $d was rewritten")
+      for (d <- touched) {
+        assert(before.get(d) !== after.get(d), s"touched bucket $d should be rewritten")
+        assert(after(d).keys.count(f => f.startsWith("part-") && f.endsWith(".parquet")) === 1,
+          s"rewritten bucket $d holds ${after(d).keys.toSeq.sorted}")
+      }
+    }
   }
 
   test("get opens only the key's bucket dir and respects tombstones (the HBase Get)") {
@@ -206,6 +248,18 @@ class IncrementalMergeSpec extends SparkSpec {
     IncrementalIndex.mergeBatch(spark,
       ev.filter(col("rowkey") === dead && col("op") =!= "delete").limit(1), base)
     assert(stateMap(IncrementalIndex.readState(spark, base)).contains(dead))
+  }
+
+  test("a row-state merge runs a pinned number of Spark jobs") {
+    // the touched-bucket collect, the state read's schema inference, the
+    // decoupling count, the bucket write — and the map stages AQE submits
+    // as jobs of their own
+    val ev = changelog
+    val base = Files.createTempDirectory("graft_incJ").toString + "/state"
+    IncrementalIndex.mergeBatch(spark, ev.filter(col("event_id") < 500), base)
+    val jobs = SpecMetrics.jobsRun(spark)(
+      IncrementalIndex.mergeBatch(spark, ev.filter(col("event_id") >= 500), base))
+    assert(jobs === 9, s"$jobs jobs")
   }
 
   test("replaying the same micro-batch is a no-op (prefix-atomic commit safety)") {

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.streaming.{IncrementalIndex, IncrementalPostings, IncrementalShingles, IngestPipeline}
+import graft.streaming.{IncrementalIndex, IncrementalPostings, IncrementalShingles, IngestPipeline, StateStore}
 
 /** A changelog row that also carries the document's vector — the
   * multimodal ingest shape ([[IngestPipeline.applyBatch]]'s optional
@@ -140,6 +140,57 @@ class IngestPipelineSpec extends SparkSpec {
     assert(postingRows(crash) === postingRows(clean))
     assert(shingleRows(crash) === shingleRows(clean))
     assert(logRows(crash) === logRows(clean))
+  }
+
+  test("a flush cancelled in its merges throws, heals, and replays to an uncancelled run's states") {
+    val base = Files.createTempDirectory("graft_pipeCancel").toString
+    val cancelled = s"$base/cancelled"
+    val clean = s"$base/clean"
+    val b0 = Seq(
+      DocChange("1", 0, "put", "alpha beta gamma delta"),
+      DocChange("2", 1, "put", "totally different words entirely here"))
+    val b1 = Seq(
+      DocChange("3", 10, "put", "novel unseen sentence with fresh tokens"),
+      DocChange("4", 11, "put", "another distinct line of plain words"),
+      DocChange("1", 12, "delete", ""))
+    applyB(clean, 0, b0); applyB(clean, 1, b1)
+    applyB(cancelled, 0, b0)
+    // once batch 1's verdicts are logged every job is a merge job: the
+    // first one to start cancels the flush's group, and every later one
+    val sc = spark.sparkContext
+    val group = s"flush-cancel-${System.nanoTime()}"
+    val logged = new java.io.File(s"$cancelled/admissions/batch=1")
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val canceller = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (logged.isDirectory && fired.compareAndSet(false, true))
+          sc.cancelJobGroupAndFutureJobs(group)
+    }
+    sc.addSparkListener(canceller)
+    sc.setJobGroup(group, "a flush cancelled in its merges", interruptOnCancel = true)
+    try intercept[Exception](applyB(cancelled, 1, b1))
+    finally { sc.clearJobGroup(); sc.removeSparkListener(canceller) }
+    assert(fired.get)
+    val roots = Seq("state") ++
+      Seq("postings", "shingles").flatMap(r => Seq("docs", "entries", "dstats").map(s"$r/" + _))
+    for (r <- roots)
+      assert(StateStore.liveBuckets(spark, s"$cancelled/$r").forall(_.matches("b=\\d+")), r)
+    // the replay of the same batch id follows the logged verdicts
+    applyB(cancelled, 1, b1)
+    def leftovers(f: java.io.File): Seq[String] =
+      if (Seq(".tmp", ".tmpbatch", ".old").exists(f.getName.endsWith)) Seq(f.getPath)
+      else Option(f.listFiles()).toSeq.flatten.flatMap(leftovers)
+    assert(leftovers(new java.io.File(cancelled)).isEmpty)
+    // the rows of every bucket dir, by dir
+    def rows(root: String, r: String): Map[String, Seq[String]] = {
+      val dirs = StateStore.liveBuckets(spark, s"$root/$r")
+      spark.read.parquet(dirs.map(d => s"$root/$r/$d"): _*)
+        .withColumn("dir", regexp_extract(input_file_name(), "/(b=\\d+)/", 1))
+        .collect().toSeq.groupBy(_.getAs[String]("dir"))
+        .map { case (d, rs) => d -> rs.map(_.toString).sorted }
+    }
+    for (r <- roots) assert(rows(cancelled, r) === rows(clean, r), r)
+    assert(logRows(cancelled) === logRows(clean))
   }
 
   test("admission-log GC drops only batches behind the replay horizon") {

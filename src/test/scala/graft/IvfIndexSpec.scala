@@ -758,9 +758,10 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.build(vecs, p, nlist = 2, iters = 1)
     val puts = Seq((1L, Seq(0.0f, 1.0f)), (9L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
     val dels = Seq(3L).toDF("vec_id")
-    // two jobs fewer than reads that infer their schema from a footer
+    // three jobs fewer than reads that infer their schema from a footer:
+    // the centroids, the id map and the touched cells
     val jobs = SpecMetrics.jobsRun(spark)(IvfIndex.applyChanges(spark, p, puts, dels))
-    assert(jobs <= 19, s"$jobs jobs")
+    assert(jobs <= 18, s"$jobs jobs")
     assert(spark.read.parquet(p + "/ids").select("vec_id").collect().map(_.getLong(0)).sorted
       .toSeq === Seq(0L, 1L, 2L, 4L, 5L, 6L, 7L, 9L))
   }

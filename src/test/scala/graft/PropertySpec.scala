@@ -79,6 +79,30 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("bucket placement: the column and its driver twin agree on random keys") {
+    // merges place rows by the column and Gets resolve buckets by the
+    // driver twin: a key on which the two disagree is silently missed
+    import graft.streaming.StateStore
+    val char = Gen.frequency(4 -> Gen.alphaNumChar, 1 -> Gen.const(' '),
+      2 -> Gen.choose('\u00e0', '\u00ff'), 2 -> Gen.choose('\u4e00', '\u9fa5'))
+    val keyGen = Gen.choose(0, 12).flatMap(Gen.listOfN(_, char)).map(_.mkString)
+    val keys = (Seq("", " ", "\uD83D\uDE00", "clé", "键值") ++
+      (1 to 300).map(i => keyGen.pureApply(Gen.Parameters.default, Seed(i.toLong)))).distinct
+    val ids = (1 to 100).map(i => Gen.choose(Long.MinValue, Long.MaxValue)
+      .pureApply(Gen.Parameters.default, Seed(i.toLong)))
+    for (n <- Seq(1, 7, 16, 1024)) {
+      val placed = keys.toDF("k").select(col("k"), StateStore.bucketOf(col("k"), n))
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      keys.foreach(k =>
+        assert(placed(k) === StateStore.bucketOf(k, n), s"key '$k' under $n buckets"))
+      // numeric keys (the IVF id map's vec_id) place by their decimal form
+      val placedIds = ids.toDF("k").select(col("k"), StateStore.bucketOf(col("k"), n))
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      ids.foreach(k =>
+        assert(placedIds(k) === StateStore.bucketOf(k.toString, n), s"id $k under $n buckets"))
+    }
+  }
+
   test("near-dup probe: self-match at 1.0 and true-Jaccard scores over random corpora") {
     import graft.streaming.IncrementalShingles
     def shingleSet(text: String): Set[String] = {

@@ -46,4 +46,13 @@ class SourceAuditSpec extends AnyFunSuite {
     val reads = matches("""mergeSchema""".r)
     assert(reads.isEmpty, reads.mkString("schema-merging reads:\n", "\n", ""))
   }
+
+  test("only StateStore places keys in buckets and writes bucket dirs") {
+    // One bucket layout: a second placement hash or bucket writer would
+    // let a store's writes and its key-addressed reads disagree on where
+    // a key lives. (java.util.zip.CRC32 sampling is not placement.)
+    val layout = matches("""\bcrc32\(|partitionBy\("(b|cell)"\)""".r)
+      .filterNot(_.startsWith("src/main/scala/graft/streaming/StateStore.scala:"))
+    assert(layout.isEmpty, layout.mkString("bucket layout outside StateStore:\n", "\n", ""))
+  }
 }
