@@ -177,9 +177,9 @@ class Graft(spark: SparkSession, dir: String,
   def moreLikeThisMaintained(rootPath: String, seedKey: String, k: Int = 10): DataFrame =
     IncrementalPostings.moreLikeThis(spark, rootPath, seedKey, k)
 
-  /** Fuzzy term query (`term~maxEdits`) over the MAINTAINED index: the
-    * edit-distance expansion scans the vocabulary only, then termSearch
-    * mechanics serve the expansion set. */
+  /** Fuzzy term query (`term~maxEdits`) over the MAINTAINED index: one
+    * collect of the entry rows whose token is within the edit bound (an
+    * entries scan, never the corpus), then the hit docs' keyed fetch. */
   def fuzzySearchMaintained(rootPath: String, term: String,
                             maxEdits: Int = 1): DataFrame =
     IncrementalPostings.fuzzySearch(spark, rootPath, term, maxEdits)

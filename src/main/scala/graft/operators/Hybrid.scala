@@ -393,7 +393,7 @@ object Hybrid {
      filteredVecLeg(spark, ivfRoot, qv, predicate, probes, legDepth))
 
   /** The filtered LEXICAL leg: one entry-bucket read yields the candidate
-    * ids (checkpointed hit frame); their metadata comes back by key, the
+    * ids (the collected hit frame); their metadata comes back by key, the
     * predicate prunes them, and only the SURVIVORS' doc buckets are
     * opened for the dl fetch — a selective predicate cuts the expensive
     * half of lexical scoring, not just the final rank (restricting

@@ -336,10 +336,10 @@ object Index {
       .orderBy("doc_id")
 
   private def qFuzzyMaintained(spark: SparkSession, dir: String): DataFrame =
-    // Solr fuzzy (term~1) over MAINTAINED state: the edit-distance
-    // expansion runs against the maintained VOCABULARY (entries only,
-    // bounded by |vocab|), then termSearch mechanics serve the expansion
-    // — same semantics as the corpus-scoped q_fuzzy_search.
+    // Solr fuzzy (term~1) over MAINTAINED state: one collect of the
+    // entry rows whose token is within the edit bound (entries only),
+    // then the hit docs' keyed fetch — same semantics as the
+    // corpus-scoped q_fuzzy_search.
     graft.streaming.IncrementalPostings
       .fuzzySearch(spark, maintainedFixture(spark, dir), "merge", maxEdits = 1)
       .orderBy("event_id")
@@ -405,18 +405,18 @@ object Index {
         Analyzer.expandQuery(Search.synonymQueryTerms, Search.demoSynonyms))
 
   private def qWildcardMaintained(spark: SparkSession, dir: String): DataFrame =
-    // Solr wildcard over MAINTAINED state: prefix expands against the
-    // maintained vocabulary, expansion postings bucket-pruned, hit rows
-    // key-fetched — the fuzzy topology with a prefix predicate. Same
-    // oracle semantics as the corpus-scoped q_wildcard_search.
+    // Solr wildcard over MAINTAINED state: one collect of the entry rows
+    // whose token has the prefix, hit rows key-fetched — the fuzzy
+    // topology with a prefix predicate. Same oracle semantics as the
+    // corpus-scoped q_wildcard_search.
     graft.streaming.IncrementalPostings
       .wildcardSearch(spark, maintainedFixture(spark, dir), "s")
       .orderBy("event_id")
 
   private def qMmMaintained(spark: SparkSession, dir: String): DataFrame =
-    // edismax mm over MAINTAINED state: at-least-2-of-3 via the bucket-
-    // pruned entries' count-distinct, match count carried on the fetched
-    // rows.
+    // edismax mm over MAINTAINED state: at-least-2-of-3 counted on the
+    // driver from the bucket-pruned entry rows, match count carried on
+    // the keyed fetch's rows.
     graft.streaming.IncrementalPostings
       .termSearchMinMatch(spark, maintainedFixture(spark, dir),
         Seq("merge", "sort", "scan"), minMatch = 2)

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Incremental maintenance of the materialized posting-list table — the
   * reference's actual product (HBase mutations kept in sync with a Solr
@@ -529,22 +529,22 @@ object IncrementalPostings {
       .limit(k)
 
   /** Fuzzy term query over MAINTAINED state — Solr's `term~maxEdits`:
-    * live docs containing ANY vocabulary term within the edit bound.
-    * Two-phase, like the corpus-scoped q_fuzzy_search: the edit-distance
-    * scan runs once per distinct VOCABULARY term (the same entries-only
-    * read suggest/spellCorrect use — bounded by |vocab|, never the
-    * corpus), then the expansion set is served exactly like termSearch —
-    * entries bucket-pruned to the expansion's buckets, hits key-fetched
-    * from only their own doc buckets. */
+    * live docs containing ANY indexed term within the edit bound. The
+    * edit distance has no bucket to prune to, so the entries are scanned
+    * (entries only, never the corpus) with the predicate pushed into the
+    * scan; only the matching tokens' rows come back
+    * ([[expansionSearch]]). */
   def fuzzySearch(spark: SparkSession, rootPath: String, term: String,
-                  maxEdits: Int = 1): DataFrame = {
-    val expansion = vocabulary(spark, rootPath)
-      .filter(levenshtein(col("tok"), lit(term)) <= maxEdits)
-      .select("tok")
-    val hits = prunedEntriesForTokens(spark, rootPath, expansion)
-      .select(col("doc_id").as("rowkey"))
-    prunedDocsForKeys(spark, rootPath, hits)
-  }
+                  maxEdits: Int = 1): DataFrame =
+    expansionSearch(spark, rootPath, levenshtein(col("tok"), lit(term)) <= maxEdits)
+
+  /** The live docs holding any token that satisfies `tokMatches` — the
+    * fuzzy and wildcard reads: one collect of the matching entry rows'
+    * doc ids, then the driver-keyed docs fetch ([[prunedDocs]]), lazy. */
+  private def expansionSearch(spark: SparkSession, rootPath: String,
+                              tokMatches: Column): DataFrame =
+    prunedDocs(spark, rootPath, allEntries(spark, rootPath).filter(tokMatches)
+      .select("doc_id").collect().map(_.getString(0)).distinct.toSeq)
 
   /** Live view of the maintained document state (tombstones filtered);
     * empty with the documented schema before the first merge. */
@@ -628,107 +628,132 @@ object IncrementalPostings {
       .filter(col("op") =!= "delete").join(keys.select("rowkey").distinct(), "rowkey")
 
   /** The LIVE doc rows for exactly `rowkeys`, reading only the buckets
-    * those keys hash to — the HBase-Get-shaped fetch for hit lists with a
-    * KNOWN bound (the probe's candidates are df-capped). Unbounded hit
-    * lists (e.g. [[termSearch]]'s) stay DataFrame-joined against the full
-    * docs state instead: collecting them would move data, not metadata. */
+    * those keys hash to — the HBase-Get-shaped fetch. The driver resolves
+    * the buckets from the keys themselves, so the fetch is one job: the
+    * second step of every maintained read, whose hit list is on the
+    * driver already (the probe's df-capped candidates, the term, phrase,
+    * fuzzy and wildcard hits). */
   private[graft] def prunedDocs(spark: SparkSession, rootPath: String,
                                     rowkeys: Seq[String]): DataFrame =
     readDocs(spark, rootPath, StateStore.bucketDirsFor(spark, rootPath + "/docs", rowkeys))
       .filter(col("op") =!= "delete").filter(col("rowkey").isin(rowkeys: _*))
 
+  /** The query terms' posting rows (tok, doc_id, tf) from the bucket-
+    * pruned entries — what the term-matching and ranked reads collect.
+    * Lazy and exposed, so specs can pin its buckets and its read schema
+    * (no `positions`). */
+  private[graft] def postingRows(spark: SparkSession, rootPath: String,
+                                 toks: Seq[String]): DataFrame =
+    prunedEntries(spark, rootPath, toks).select("tok", "doc_id", "tf")
+
+  /** Per hit doc, how many of `groups` it matches — a group matches when
+    * the doc holds any of its terms — from one collect of the groups'
+    * [[postingRows]]. A token listed in several groups counts for each. */
+  private def groupMatches(spark: SparkSession, rootPath: String,
+                           groups: Seq[Seq[String]]): Map[String, Int] = {
+    val groupsOf = groups.zipWithIndex
+      .flatMap { case (g, i) => g.distinct.map(_ -> i) }
+      .groupMap(_._1)(_._2)
+    postingRows(spark, rootPath, groupsOf.keys.toSeq).collect()
+      .groupMapReduce(_.getString(1))(r => groupsOf(r.getString(0)).toSet)(_ ++ _)
+      .map { case (doc, gs) => doc -> gs.size }
+  }
+
   /** The reference's read topology over the MAINTAINED state — multi-term
     * AND via posting intersection, then key-fetch of the live rows (Solr
     * hit list → HBase Get, /root/reference/README.md:12-13) — with no
-    * corpus scan anywhere. The entries read is bucket-pruned to the query
-    * terms ([[prunedEntries]]); the (small) hit list broadcasts into the
-    * fetch join. */
+    * corpus scan anywhere: the query terms' entry rows are collected once
+    * ([[postingRows]]), intersected on the driver, and the hit docs come
+    * back through the lazy keyed fetch ([[prunedDocs]]), so the caller's
+    * action is the read's second and last job. */
   def termSearch(spark: SparkSession, rootPath: String, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "termSearch needs at least one term")
-    val uniq = terms.distinct
-    val hits = prunedEntries(spark, rootPath, uniq)
-      .groupBy(col("doc_id").as("rowkey"))
-      .agg(countDistinct(col("tok")).as("nt"))
-      .filter(col("nt") === uniq.length)
-      .select("rowkey")
-    docsState(spark, rootPath).join(broadcast(hits), "rowkey")
+    termSearchGroups(spark, rootPath, terms.distinct.map(Seq(_)))
   }
 
   /** Wildcard/prefix search over the maintained state — Solr's
-    * `field:pre*`: the prefix expands against the maintained VOCABULARY
-    * (a term-dictionary range scan, the same cost shape as Solr's; the
-    * expansion is data, never collected), then the expansion's postings
-    * are served bucket-pruned and the hit docs key-fetched — the
-    * [[fuzzySearch]] topology with a prefix predicate in place of edit
-    * distance. */
+    * `field:pre*`: the [[fuzzySearch]] read with a prefix predicate in
+    * place of edit distance (the prefix pushes into the entries scan as a
+    * parquet `StringStartsWith`). */
   def wildcardSearch(spark: SparkSession, rootPath: String,
                      prefix: String): DataFrame = {
     require(prefix.nonEmpty, "wildcard search needs a non-empty prefix")
-    val expansion = vocabulary(spark, rootPath)
-      .filter(col("tok").startsWith(prefix))
-      .select("tok")
-    val hits = prunedEntriesForTokens(spark, rootPath, expansion)
-      .select(col("doc_id").as("rowkey"))
-    prunedDocsForKeys(spark, rootPath, hits)
+    expansionSearch(spark, rootPath, col("tok").startsWith(prefix))
   }
 
   /** Minimum-should-match retrieval over the maintained state — Solr
     * edismax's `mm` parameter: docs matching at least `minMatch` of the
-    * query terms, with the match count carried for ranking. Same
-    * bucket-pruned entries + broadcast-hit-list fetch as [[termSearch]]
-    * (`termSearch` ≡ `minMatch = terms.size`). */
+    * query terms, with the match count carried for ranking (`n_matched`,
+    * a driver-literal lookup on the fetched rows). Same two steps as
+    * [[termSearch]] (`termSearch` ≡ `minMatch = terms.size`). */
   def termSearchMinMatch(spark: SparkSession, rootPath: String,
                          terms: Seq[String], minMatch: Int): DataFrame = {
     val uniq = terms.distinct
     require(minMatch >= 1 && minMatch <= uniq.size,
       s"minMatch must be in [1, ${uniq.size}], got $minMatch")
-    val hits = prunedEntries(spark, rootPath, uniq)
-      .groupBy(col("doc_id").as("rowkey"))
-      .agg(countDistinct(col("tok")).as("n_matched"))
-      .filter(col("n_matched") >= minMatch)
-    docsState(spark, rootPath).join(broadcast(hits), "rowkey")
+    val hits = groupMatches(spark, rootPath, uniq.map(Seq(_)))
+      .collect { case (doc, n) if n >= minMatch => doc -> n.toLong }
+    prunedDocs(spark, rootPath, hits.keys.toSeq)
+      .withColumn("n_matched", typedlit(hits).apply(col("rowkey")))
   }
 
   /** Grouped-OR retrieval over the maintained state — the query shape
     * query-time synonym expansion produces (Solr's SynonymGraphFilter at
     * query time): each group is an OR of interchangeable terms, groups
     * AND together. `termSearch(ts)` ≡ `termSearchGroups(ts.map(Seq(_)))`.
-    * Same bucket-pruned topology: entries open only the expansion terms'
-    * buckets, the (tok → group) tag is driver-literal config broadcast
-    * into the hit aggregation, and the hit list broadcasts into the
-    * live-row fetch. Per-query I/O is Σ|postings(expansion)|, never the
-    * corpus. */
+    * Same two steps: one collect of the expansion terms' bucket-pruned
+    * entry rows, the group count on the driver, then the lazy keyed
+    * fetch. Per-query I/O is Σ|postings(expansion)| plus the hit docs'
+    * buckets, never the corpus. */
   def termSearchGroups(spark: SparkSession, rootPath: String,
                        groups: Seq[Seq[String]]): DataFrame = {
     require(groups.nonEmpty && groups.forall(_.nonEmpty),
       "grouped search needs at least one non-empty term group")
-    import spark.implicits._
-    val uniq = groups.map(_.distinct)
-    val tokGroup = uniq.zipWithIndex
-      .flatMap { case (g, i) => g.map(t => (t, i)) }.toDF("tok", "grp")
-    val hits = prunedEntries(spark, rootPath, uniq.flatten.distinct)
-      .join(broadcast(tokGroup), "tok")
-      .groupBy(col("doc_id").as("rowkey"))
-      .agg(countDistinct(col("grp")).as("ng"))
-      .filter(col("ng") === uniq.size)
-      .select("rowkey")
-    docsState(spark, rootPath).join(broadcast(hits), "rowkey")
+    prunedDocs(spark, rootPath, groupMatches(spark, rootPath, groups)
+      .collect { case (doc, n) if n == groups.size => doc }.toSeq)
   }
 
-  /** A ranking-statistics aggregate collected to the driver — the value
-    * [[docStats]]/[[fieldStats]] keep in [[StateStore.cached]]. Those
-    * aggregates are ≤ bucket × field rows, re-derived by a full Spark
-    * action on every ranked maintained read although they only change
-    * when a commit lands on the sidecar root; served from the cache they
-    * come back as a LocalRelation, so the consumer's `broadcast(...)`/
-    * `head()` runs driver-side with zero Spark jobs. */
-  private type Collected =
-    (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])
+  /** A ranking-statistics aggregate or a ranked answer on the driver:
+    * [[docStats]]/[[fieldStats]] keep theirs in [[StateStore.cached]],
+    * and the ranked reads assemble theirs from collected rows. Served
+    * back as a LocalRelation ([[local]]), a consumer's `collect()`,
+    * `head()` or `broadcast(...)` runs driver-side with zero Spark
+    * jobs. */
+  private[graft] type Collected = (StructType, Array[Row])
 
-  private def collected(df: DataFrame): Collected = (df.schema, df.collect())
-
-  private def local(spark: SparkSession, c: Collected): DataFrame =
+  private[graft] def local(spark: SparkSession, c: Collected): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(c._2: _*), c._1)
+
+  /** Spark's `round(x, scale)` on a double, on the driver: HALF_UP on the
+    * double's shortest decimal form (`BigDecimal.valueOf`), NaN and
+    * infinities passed through. */
+  private[graft] def roundHalfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** Spark's string order on the driver: UTF-8 bytes, unsigned — not the
+    * JVM's UTF-16 code-unit order, which differs beyond the BMP. */
+  private[graft] val sparkStringOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int = java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  /** `scored` ordered like `orderBy(score.desc, key)` — ties broken by
+    * [[sparkStringOrder]] — and cut to `k`. */
+  private[graft] def topK(scored: Seq[(String, Double)], k: Int): Seq[(String, Double)] =
+    scored.sortWith { case ((ka, sa), (kb, sb)) =>
+      if (sa != sb) sa > sb else sparkStringOrder.lt(ka, kb)
+    }.take(k)
+
+  /** A (key, score) answer as a local frame — the schema the distributed
+    * `groupBy(key).agg(round(sum(..), 4).as(score))` gave it. */
+  private[graft] def scoredFrame(spark: SparkSession, key: String, score: String,
+                                 rows: Seq[(String, Double)]): DataFrame =
+    local(spark, (StructType(Seq(StructField(key, StringType),
+        StructField(score, DoubleType))),
+      rows.map { case (k, s) => Row(k, s) }.toArray))
 
   /** The dstats sidecar's rows (n_docs, dl_sum, field) — a fixed
     * schema, like the entries and docs reads. */
@@ -744,10 +769,16 @@ object IncrementalPostings {
     * bucket-count rows of metadata, no docs scan. avgdl is the exact
     * integer token-length sum over the exact live count, divided once in
     * double — the same arithmetic as the corpus-scoped BM25's `avg`.
-    * The aggregate is cached on the sidecar root's token. */
-  def docStats(spark: SparkSession, rootPath: String): DataFrame = {
+    * The row is cached on the sidecar root's token. */
+  def docStats(spark: SparkSession, rootPath: String): DataFrame =
+    local(spark, docStatsCollected(spark, rootPath))
+
+  private val docStatsSchema = StructType(Seq(StructField("n_docs", LongType),
+    StructField("avgdl", DoubleType)))
+
+  private def docStatsCollected(spark: SparkSession, rootPath: String): Collected = {
     val root = rootPath + "/dstats"
-    local(spark, StateStore.cached(spark, root, "docStats") {
+    StateStore.cached(spark, root, "docStats") {
       // guard symmetry with the `_fields` WRITE marker: a single-field
       // ranked read against a multi-field root would filter the sidecar
       // to a field that doesn't exist and score every document with NULL
@@ -761,13 +792,29 @@ object IncrementalPostings {
       // single-field reads take the default field's rows: summing across
       // fields would hand a multi-field root's combined length mass to a
       // single-field ranking
-      collected(avgdl(readStats(spark, root).filter(col("field") === DefaultField)))
-    })
+      val per = statsRows(spark, root).filter(_._1 == DefaultField)
+      (docStatsSchema, Array(avgdl(per).fold(Row(null, null)) {
+        case (n, a) => Row(n, a) }))
+    }
   }
 
-  private def avgdl(per: DataFrame): DataFrame =
-    per.agg(sum(col("n_docs")).as("n_docs"), sum(col("dl_sum")).as("dl_sum"))
-      .select(col("n_docs"), (col("dl_sum").cast("double") / col("n_docs")).as("avgdl"))
+  /** The sidecar's (field, n_docs, dl_sum) rows — one job, ≤ bucket ×
+    * field rows. */
+  private def statsRows(spark: SparkSession, root: String): Seq[(String, Long, Long)] =
+    readStats(spark, root).collect().toSeq
+      .map(r => (r.getString(2), r.getLong(0), r.getLong(1)))
+
+  /** (n_docs, avgdl) over per-bucket rows — the long sums and the one
+    * double division `sum(n_docs)`, `sum(dl_sum).cast(double) / n_docs`
+    * made in Spark; None for no rows (Spark's NULL sums), and a NULL
+    * avgdl for no live doc. */
+  private def avgdl(per: Seq[(String, Long, Long)]): Option[(Long, java.lang.Double)] =
+    if (per.isEmpty) None
+    else {
+      val n = per.map(_._2).sum
+      val dl = per.map(_._3).sum
+      Some((n, if (n == 0L) null else java.lang.Double.valueOf(dl.toDouble / n.toDouble)))
+    }
 
   /** PER-FIELD ranking statistics from the dstats sidecar — one row per
     * field (field, n_docs, avgdl), where n_docs is the field's docCount
@@ -780,10 +827,9 @@ object IncrementalPostings {
     local(spark, StateStore.cached(spark, root, "fieldStats") {
       require(StateStore.liveBuckets(spark, root).nonEmpty,
         s"no dstats sidecar at $rootPath — merge a batch first")
-      collected(readStats(spark, root).groupBy("field")
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("dl_sum")).as("dl_sum"))
-        .select(col("field"), col("n_docs"),
-          (col("dl_sum").cast("double") / col("n_docs")).as("avgdl")))
+      (StructType(StructField("field", StringType) +: docStatsSchema.fields),
+        statsRows(spark, root).groupBy(_._1).toArray.flatMap { case (f, per) =>
+          avgdl(per).map { case (n, a) => Row(f, n, a) } })
     })
   }
 
@@ -916,8 +962,8 @@ object IncrementalPostings {
     * frequencies come from the round-9 POSITIONS payload
     * ([[phraseTfFields]]); the whole read is ONE bucket-pruned entry pass
     * over the union of the qf and phrase terms' buckets
-    * (`localCheckpoint`ed, the [[termHits]] discipline — qf tf and phrase
-    * positions are both served from it) and the hit docs' keyed fetch —
+    * (`localCheckpoint`ed — qf tf and phrase positions are both served
+    * from it) and the hit docs' keyed fetch —
     * no corpus scan. Returns the live hit rows with `tf_<field>` counts,
     * `pf_<field>` phrase counts, and the combined `score`. */
   def phraseBoostSearchFields(spark: SparkSession, rootPath: String,
@@ -1017,19 +1063,58 @@ object IncrementalPostings {
       .limit(k)
   }
 
-  /** The query terms' posting rows with their per-term df joined in —
-    * (tok, doc_id, tf, df) from the bucket-pruned entries; the shared
-    * head of both ranked-retrieval reads. */
+  /** A query term's posting in a hit doc, with the term's df: one row of
+    * the ranked reads' hit list. */
+  private final case class TermHit(tok: String, docId: String, tf: Long, df: Long)
+
+  /** The query terms' hit list — one collect of their bucket-pruned
+    * [[postingRows]], each term's df counted on the driver (a term's
+    * posting list is complete within its bucket, so the count is
+    * exact); the shared head of the ranked reads. */
   private def termHits(spark: SparkSession, rootPath: String,
-                       terms: Seq[String]): DataFrame = {
+                       terms: Seq[String]): Seq[TermHit] = {
     require(terms.nonEmpty, "ranked retrieval needs at least one term")
-    val ent = prunedEntries(spark, rootPath, terms.distinct)
-      .select("tok", "doc_id", "tf")
-    // checkpointed: the hit frame feeds the fetch's bucket-id collect AND
-    // the scoring join (bm25 additionally broadcasts it) — one read of
-    // the pruned entry buckets instead of one per consumer
-    ent.join(broadcast(ent.groupBy("tok").agg(count(lit(1)).as("df"))), "tok")
-      .localCheckpoint()
+    val rows = postingRows(spark, rootPath, terms.distinct).collect()
+    val df = rows.groupMapReduce(_.getString(0))(_ => 1L)(_ + _)
+    rows.toSeq.map(r => TermHit(r.getString(0), r.getString(1), r.getLong(2), df(r.getString(0))))
+  }
+
+  /** The BM25 term weight (k1=1.2, b=0.75) exactly as Spark evaluates
+    * the ranked reads' `contrib` column: the same constant-folded 2.2 and
+    * 0.25 literals, the same operation order, long-to-double promotion
+    * where Spark casts, and `StrictMath.log` — the method both the
+    * interpreted and the generated code of Spark's `log` call. */
+  private def bm25Weight(nDocs: Long, avgdl: Double, tf: Long, df: Long, dl: Long): Double =
+    StrictMath.log(1.0 + ((nDocs - df).toDouble + 0.5) / (df.toDouble + 0.5)) *
+      (2.2 * tf.toDouble) /
+      (tf.toDouble + 1.2 * (0.25 + 0.75 * dl.toDouble / avgdl))
+
+  /** The hit docs' lengths for BM25 — (rowkey, dl) from only their own
+    * doc buckets ([[prunedDocs]]); lazy and exposed, so specs can pin
+    * the fetch's buckets. */
+  private[graft] def lengthFetch(spark: SparkSession, rootPath: String,
+      keys: Seq[String], tokenize: Column => Column = split(_, " ")): DataFrame =
+    prunedDocs(spark, rootPath, keys)
+      .select(col("rowkey"), size(tokenize(col("text"))).cast("long").as("dl"))
+
+  /** Every hit doc's BM25 score, on the driver: N/avgdl from the cached
+    * [[docStats]] row, dl from one [[lengthFetch]] job, each doc's term
+    * weights summed in term order and rounded to 4 places like Spark's
+    * `round(sum(contrib), 4)`. A hit whose doc is no longer live scores
+    * nothing, as the inner join it replaces dropped it. */
+  private def bm25Scores(spark: SparkSession, rootPath: String, hits: Seq[TermHit],
+                         tokenize: Column => Column): Seq[(String, Double)] = {
+    val stats = docStatsCollected(spark, rootPath)._2.head
+    if (hits.isEmpty) return Nil
+    require(!stats.isNullAt(0) && !stats.isNullAt(1),
+      s"no ranking statistics at $rootPath for ${hits.size} hits")
+    val (nDocs, avg) = (stats.getLong(0), stats.getDouble(1))
+    val dl = lengthFetch(spark, rootPath, hits.map(_.docId).distinct, tokenize)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    hits.filter(h => dl.contains(h.docId)).groupBy(_.docId).toSeq.map { case (doc, hs) =>
+      doc -> roundHalfUp(hs.sortBy(_.tok)
+        .map(h => bm25Weight(nDocs, avg, h.tf, h.df, dl(doc))).sum, 4)
+    }
   }
 
   /** BM25 ranked retrieval served ENTIRELY from the maintained state —
@@ -1038,70 +1123,50 @@ object IncrementalPostings {
     * tf and df from the query terms' BUCKET-PRUNED entries (a term's
     * posting list is complete within its bucket, so both are exact),
     * N/avgdl from the [[docStats]] sidecar (metadata-sized), and dl from
-    * the hit rows' text at fetch time. The hit list (Σ df(term) rows)
-    * broadcasts into the docs join — the same hit-list-into-fetch
-    * topology as [[termSearch]]. Arithmetic is operation-for-operation
-    * the corpus-scoped `Index.qBm25Topk`'s (constant-folded 2.2/0.25
-    * literals, one round at the end), so converged state ranks
-    * identically — spec-pinned and oracle-checked (`q_bm25_maintained`).
-    * `tokenize` must match the one the state was merged with. */
+    * the hit docs' keyed fetch. Two jobs: the entries collect and the
+    * fetch; the scores and the top k are assembled on the driver and come
+    * back as a local frame. Arithmetic is operation-for-operation the
+    * corpus-scoped `Index.qBm25Topk`'s ([[bm25Weight]], one round at the
+    * end; ties by doc_id in Spark's string order), so converged state
+    * ranks identically — spec-pinned and oracle-checked
+    * (`q_bm25_maintained`). `tokenize` must match the one the state was
+    * merged with. */
   def bm25Search(spark: SparkSession, rootPath: String, terms: Seq[String],
                  k: Int = 20, tokenize: Column => Column = split(_, " ")): DataFrame =
-    bm25Scored(spark, rootPath, terms, tokenize)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+    scoredFrame(spark, "doc_id", "score",
+      topK(bm25Scores(spark, rootPath, termHits(spark, rootPath, terms), tokenize), k))
 
-  /** The query terms' hit rows — (tok, doc_id, tf, df), checkpointed —
+  private val hitsSchema = StructType(Seq(StructField("tok", StringType),
+    StructField("doc_id", StringType), StructField("tf", LongType),
+    StructField("df", LongType)))
+
+  /** The query terms' hit list as a local frame (tok, doc_id, tf, df) —
     * exposed so a caller composing a predicate (Hybrid's filtered
     * lexical leg) can derive the candidate ids from ONE entry-bucket
     * read and hand the frame back to [[bm25ScoredFrom]]. */
   private[graft] def bm25Hits(spark: SparkSession, rootPath: String,
-      terms: Seq[String]): DataFrame = termHits(spark, rootPath, terms)
+      terms: Seq[String]): DataFrame =
+    local(spark, (hitsSchema, termHits(spark, rootPath, terms)
+      .map(h => Row(h.tok, h.docId, h.tf, h.df)).toArray))
 
-  /** [[bm25Search]]'s scored candidates PRE top-k — every doc matching at
-    * least one term, as (doc_id, score). The seam a FILTERED search
-    * composes a predicate into: filtering here, before the rank
-    * truncation, keeps k-fill semantics (the leg fills its depth from
-    * MATCHING docs — post-filtering a ranked list returns only the
-    * matchers that happened to rank), while scoring stats stay the full
-    * state's (Lucene's fq discipline: a filter never changes idf/avgdl).
-    * Candidate-bounded (Σ df(term) docs), never corpus-sized. */
-  private[graft] def bm25Scored(spark: SparkSession, rootPath: String,
-      terms: Seq[String],
-      tokenize: Column => Column = split(_, " ")): DataFrame =
-    bm25ScoredFrom(spark, rootPath, termHits(spark, rootPath, terms),
-      None, tokenize)
-
-  /** [[bm25Scored]] over an already-built hit frame ([[bm25Hits]]),
-    * optionally RESTRICTED to `among` (a (doc_id) frame): the semi-join
-    * applies before the doc-length fetch, so only the surviving hits'
-    * buckets are opened — a selective predicate prunes the expensive
-    * half of scoring, not just the rank. Restricting candidates never
+  /** [[bm25Search]]'s scored candidates PRE top-k over a [[bm25Hits]]
+    * frame, as (doc_id, score), optionally RESTRICTED to `among` (a
+    * (doc_id) frame, collected) — the seam a FILTERED search composes a
+    * predicate into: filtering here, before the rank truncation, keeps
+    * k-fill semantics (the leg fills its depth from MATCHING docs), and
+    * the restriction applies before the doc-length fetch, so only the
+    * surviving hits' buckets are opened. Restricting candidates never
     * changes a survivor's score: tf/df/dl are per-doc or per-term facts
-    * and n_docs/avgdl are state-level ([[docStats]]), none affected by
-    * which OTHER candidates are scored. */
+    * and n_docs/avgdl are state-level ([[docStats]]) — Lucene's fq
+    * discipline. */
   private[graft] def bm25ScoredFrom(spark: SparkSession, rootPath: String,
-      hits0: DataFrame, among: Option[DataFrame],
+      hits: DataFrame, among: Option[DataFrame],
       tokenize: Column => Column = split(_, " ")): DataFrame = {
-    val hits = among.map(a =>
-        hits0.join(broadcast(a.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-          .localCheckpoint())
-      .getOrElse(hits0)
-    val stats = docStats(spark, rootPath)
-    // the length fetch opens only the hit docs' own buckets: the hit KEYS
-    // stay distributed, but their distinct bucket ids are collectable
-    // metadata (prunedDocsForKeys) — same O(touched buckets) discipline
-    // as the probe's fetch, instead of scanning every doc bucket for dl
-    prunedDocsForKeys(spark, rootPath, hits.select(col("doc_id").as("rowkey")))
-      .select(col("rowkey").as("doc_id"), size(tokenize(col("text"))).cast("long").as("dl"))
-      .join(broadcast(hits), "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-          (lit(2.2) * col("tf")) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-      .groupBy("doc_id")
-      .agg(round(sum(col("contrib")), 4).as("score"))
+    val allowed = among.map(_.select("doc_id").collect().map(_.getString(0)).toSet)
+    val kept = hits.select("tok", "doc_id", "tf", "df").collect().toSeq
+      .map(r => TermHit(r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      .filter(h => allowed.forall(_.contains(h.docId)))
+    scoredFrame(spark, "doc_id", "score", bm25Scores(spark, rootPath, kept, tokenize))
   }
 
   /** BM25 with query-time synonym expansion over the maintained state —
@@ -1151,16 +1216,21 @@ object IncrementalPostings {
     * sidecar), same arithmetic as the corpus-scoped `q_tfidf_topk`
     * (score = Σ tf·ln(N/df), one round at the end), so a converged corpus
     * ranks identically. No docs read at all: unlike BM25 there is no
-    * length normalization, so the whole query is answered from the
-    * entries plus one metadata row. */
+    * length normalization, so the whole query is answered from one
+    * entries collect plus one metadata row, scored on the driver. */
   def tfidfSearch(spark: SparkSession, rootPath: String, terms: Seq[String],
                   k: Int = 20): DataFrame = {
-    termHits(spark, rootPath, terms)
-      .crossJoin(broadcast(docStats(spark, rootPath).select("n_docs")))
-      .groupBy("doc_id")
-      .agg(round(sum(col("tf") * log(col("n_docs") / col("df"))), 4).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+    val stats = docStatsCollected(spark, rootPath)._2.head
+    val hits = termHits(spark, rootPath, terms)
+    require(hits.isEmpty || !stats.isNullAt(0),
+      s"no ranking statistics at $rootPath for ${hits.size} hits")
+    // Spark's `tf * log(n_docs / df)`: the long division promotes both
+    // sides to double
+    val n = if (hits.isEmpty) 0.0 else stats.getLong(0).toDouble
+    scoredFrame(spark, "doc_id", "score", topK(hits.groupBy(_.docId).toSeq.map {
+      case (doc, hs) => doc -> roundHalfUp(hs.sortBy(_.tok)
+        .map(h => h.tf.toDouble * StrictMath.log(n / h.df.toDouble)).sum, 4)
+    }, k))
   }
 
   /** More-like-this over the MAINTAINED state — Solr's MLT served with
@@ -1187,27 +1257,19 @@ object IncrementalPostings {
 
   /** Phrase query over the MAINTAINED state — Solr's `"t0 t1 …"~0` served
     * from the entries' position lists by adjacency intersection, the
-    * classic positional-index algorithm: an occurrence of slot-i's term at
-    * position p witnesses a phrase START at p − i, and a document matches
-    * iff some start is witnessed by EVERY slot (row count per start ==
-    * phrase length: slot s's witness is pinned to position start + s and
-    * a term's positions are distinct, so each slot contributes at most
-    * one row — plain count(1) IS the distinct-slot count, without
-    * countDistinct's Expand. Repeated terms in the phrase are distinct
-    * slots, so "a a" requires two adjacent positions, not one counted
-    * twice).
-    * The start-group key includes FIELD (like [[phraseTfFields]]): a
-    * multi-field root stores one entry row per (tok, doc, field), so a
-    * (doc, start) group without field would mix witnesses across fields
-    * — 'a'@1 in title plus 'a'@1 in body would count as two slots of a
-    * two-term phrase, and a genuine per-field match could be rejected
-    * when cross-field rows push the count past the phrase length. A
-    * phrase matches within ONE field; matching fields collapse to the
-    * doc set afterwards.
-    * Read shape is [[termSearch]]'s: the entries read is bucket-pruned to
-    * the phrase's distinct terms, per-query work is Σ tf(term) position
-    * rows, and the matched rows are key-fetched from only their own doc
-    * buckets ([[prunedDocsForKeys]]) — no corpus scan anywhere.
+    * classic positional-index algorithm: a document matches iff some
+    * start position p has slot i's term at p + i for every slot i
+    * ([[phraseAt]]). Repeated terms in the phrase are distinct slots, so
+    * "a a" requires two adjacent positions, not one counted twice.
+    * The check runs per (doc, FIELD) (like [[phraseTfFields]]): a
+    * multi-field root stores one entry row per (tok, doc, field), and a
+    * phrase matches within ONE field — 'a'@1 in title and 'b'@2 in body
+    * never combine into "a b". Matching fields collapse to the doc set
+    * afterwards.
+    * Read shape is [[termSearch]]'s: one collect of the phrase's distinct
+    * terms' bucket-pruned entry rows ([[positionRows]]), the adjacency
+    * check on the driver, and the lazy keyed fetch of the matching docs
+    * ([[prunedDocs]]) — no corpus scan anywhere.
     *
     * Positions are NULL on a `keepPositions = false` root (the shingle
     * family); a phrase query over one fails loudly rather than silently
@@ -1216,26 +1278,34 @@ object IncrementalPostings {
   def phraseSearch(spark: SparkSession, rootPath: String,
                    phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phraseSearch needs at least one term")
-    import spark.implicits._
-    val slots = phrase.zipWithIndex.toDF("tok", "slot")
-    val starts = prunedEntries(spark, rootPath, phrase.distinct)
-      .select(col("tok"), col("doc_id"), col("field"),
-        when(col("positions").isNull, raise_error(concat(
-          lit("no position payload for term '"), col("tok"),
-          lit("' of doc "), col("doc_id"),
-          lit(" (keepPositions=false root); "),
-          lit("use the corpus-scoped phrase query"))))
-          .otherwise(col("positions")).as("positions"))
-      .join(broadcast(slots), "tok")
-      .select(col("doc_id"), col("field"), col("slot"),
-        explode(col("positions")).as("pos"))
-      .groupBy(col("doc_id"), col("field"),
-        (col("pos") - col("slot")).as("start"))
-      .agg(count(lit(1)).as("nslots"))
-      .filter(col("nslots") === phrase.length)
-    prunedDocsForKeys(spark, rootPath,
-      starts.select(col("doc_id").as("rowkey")).distinct())
+    val hits = positionRows(spark, rootPath, phrase.distinct).collect().toSeq
+      .map { r =>
+        if (r.isNullAt(3)) throw new IllegalStateException(
+          s"no position payload for term '${r.getString(0)}' of doc " +
+            s"${r.getString(2)} (keepPositions=false root); " +
+            "use the corpus-scoped phrase query")
+        ((r.getString(2), r.getString(1)), r.getString(0) -> r.getSeq[Int](3).toSet)
+      }
+      .groupMap(_._1)(_._2)
+      .collect { case ((doc, _), toks) if phraseAt(toks.toMap, phrase) => doc }
+    prunedDocs(spark, rootPath, hits.toSeq.distinct)
   }
+
+  /** Whether some start position p has `phrase(i)` at p + i for every
+    * slot i, given one (doc, field)'s positions per token. Slot 0 pins
+    * every candidate start, and each slot is checked at its own offset,
+    * so a repeated term ("a a") needs two adjacent positions. */
+  private def phraseAt(positions: Map[String, Set[Int]], phrase: Seq[String]): Boolean =
+    positions.getOrElse(phrase.head, Set.empty[Int]).exists(p =>
+      phrase.indices.forall(i => positions.get(phrase(i)).exists(_.contains(p + i))))
+
+  /** The phrase terms' entry rows with their positions payload — (tok,
+    * field, doc_id, positions) from the bucket-pruned entries; the one
+    * collect of [[phraseSearch]], lazy and exposed so specs can pin its
+    * buckets. */
+  private[graft] def positionRows(spark: SparkSession, rootPath: String,
+                                  toks: Seq[String]): DataFrame =
+    prunedEntries(spark, rootPath, toks).select("tok", "field", "doc_id", "positions")
 
   /** Solr highlighting served from MAINTAINED state: each live doc's
     * sorted position list for `term`, straight from the entries' position

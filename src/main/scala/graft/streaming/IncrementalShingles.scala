@@ -305,8 +305,10 @@ object IncrementalShingles {
     *      reported score is uncapped truth.
     *
     * Per-query I/O: |query-shingle entry buckets| + |candidate doc
-    * buckets|, never the index or the corpus. Returns (rowkey, jaccard)
-    * ≥ `threshold`, best match first. */
+    * buckets|, never the index or the corpus. Two jobs — the entries
+    * collect and the candidates' fetch; the score runs on the driver.
+    * Returns (rowkey, jaccard) ≥ `threshold`, best match first, as a
+    * local frame. */
   def nearDuplicates(spark: SparkSession, rootPath: String, text: String,
                      threshold: Double = 0.8,
                      dfCap: Int = graft.operators.Dedup.DfCap,
@@ -379,7 +381,7 @@ object IncrementalShingles {
     requireScheme(spark, rootPath, scheme)
     val qsh = scheme.sketchLocal(text).distinct
     if (qsh.isEmpty) // too short to sketch: no candidates — empty, not an error
-      return spark.range(0).select(lit("").as("rowkey"), lit(0.0).as("jaccard"))
+      return noDuplicates(spark)
     val probeSh =
       if (maxQueryShingles > 0 && qsh.size > maxQueryShingles) {
         def crc(s: String): Long = {
@@ -408,77 +410,57 @@ object IncrementalShingles {
         probeSh.filterNot(sat)
       }.getOrElse(probeSh)
     if (readSh.isEmpty) // every probe shingle saturated: no candidates
-      return spark.range(0).select(lit("").as("rowkey"), lit(0.0).as("jaccard"))
-    // one pass over the pruned entries: per-shingle df and posting list
-    // together, cap filter, then the union of surviving posting lists.
-    // The candidate list is collected — bounded by dfCap × |query
-    // shingles| by construction — so the live-row fetch below prunes to
-    // the candidates' own doc buckets (the HBase-Get shape).
-    val candAgg = IncrementalPostings.prunedEntries(spark, rootPath, readSh)
-      .groupBy("tok")
-      .agg(count(lit(1)).as("df"), collect_set(col("doc_id")).as("ids"))
-      .filter(col("df") <= dfCap)
+      return noDuplicates(spark)
+    // one collect of the pruned entries: per-shingle df and posting list
+    // together on the driver, cap filter, then the union of surviving
+    // posting lists — bounded by dfCap × |query shingles| by
+    // construction, so the live-row fetch below prunes to the
+    // candidates' own doc buckets (the HBase-Get shape).
+    val lists = IncrementalPostings.prunedEntries(spark, rootPath, readSh)
+      .select("tok", "doc_id").collect().toSeq
+      .groupMap(_.getString(0))(_.getString(1)).toSeq
+      .collect { case (tok, ids) if ids.size <= dfCap => (ids.size, tok, ids) }
     val candIds: Seq[String] =
       if (maxCandidates > 0) {
-        // same driver-side bound as the unbudgeted collect (dfCap ×
-        // |probeSh| rows ceiling); the per-list ids order from
-        // collect_set is nondeterministic but harmless — lists are
-        // consumed whole, so membership, not order, decides the set
-        val lists = candAgg.select(col("df"), col("tok"), col("ids"))
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getSeq[String](2)))
-          .sortBy { case (df, tok, _) => (df, tok) }
+        // lists are consumed whole, rarest first, so membership — not the
+        // order within a list — decides the set
         val acc = scala.collection.mutable.LinkedHashSet.empty[String]
-        val it = lists.iterator
+        val it = lists.sortBy { case (df, tok, _) => (df, tok) }.iterator
         while (it.hasNext && acc.size < maxCandidates) acc ++= it.next()._3
         acc.toSeq
-      } else candAgg
-        .select(explode(col("ids")).as("rowkey"))
-        .distinct()
-        .collect().map(_.getString(0)).toSeq
+      } else lists.flatMap(_._3).distinct
     if (candIds.isEmpty)
-      return spark.range(0).select(lit("").as("rowkey"), lit(0.0).as("jaccard"))
-    // array_sort at plan time (foldable literal → constant-folded once);
-    // NOT Scala's .sorted — JVM UTF-16 order diverges from Spark's
-    // UTF8String byte order beyond the BMP, and the merge scan needs the
-    // engine's own order on both sides
-    val qArr = array_sort(typedlit(qsh))
-    // The candidate sketches are MATERIALIZED (localCheckpoint — ≤ dfCap
-    // × |query shingles| rows, the probe's own bound) before the score.
-    // Left lazy, predicate pushdown substitutes the score filter with the
-    // whole sketch-HOF expression and the |query|-sized literal, several
-    // references each, producing a plan whose FILTER node is megabytes of
-    // expression tree: every probe then pays seconds of DRIVER-side
-    // planning/codegen/task-binary broadcast per call (measured: 2.2 MiB
-    // task binaries; first collect of such a frame 8.0 s at 10× state,
-    // the SECOND collect of the same frame 0.04 s — the executors were
-    // never the cost), the term previously misread as probe-latency
-    // growth (SCALE.md §df-cap, DfSidecarProfile). Post-checkpoint the
-    // score reads `bs` as a plain attribute of a materialized frame:
-    // expressions stay small, planning stays constant. The fetch frame is
-    // exposed pre-checkpoint as [[probeFetch]] so the bucket-pruning pin
-    // (the HBase-Get shape) still has lineage to assert on.
-    val fetched = probeFetch(spark, rootPath, candIds, scheme).localCheckpoint()
-    fetched
-      .withColumn("c", graft.functions.SortedIntersectCount
-        .sorted_intersect_count(col("bs"), qArr).cast("long"))
-      .withColumn("jaccard",
-        round(col("c") / (size(col("bs")) + lit(qsh.length) - col("c")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("rowkey", "jaccard")
-      .orderBy(col("jaccard").desc, col("rowkey"))
+      return noDuplicates(spark)
+    // the fetch is the read's second job; the score runs on the driver:
+    // |A∩B| of two distinct shingle sets, the Jaccard in Spark's double
+    // division and 4-place HALF_UP round, ordered by Jaccard then rowkey
+    // in Spark's string order
+    val q = qsh.toSet
+    val scored = probeFetch(spark, rootPath, candIds, scheme).collect().toSeq.flatMap { r =>
+      val bs = r.getSeq[String](1)
+      val c = bs.count(q).toLong
+      val jaccard = IncrementalPostings.roundHalfUp(
+        c.toDouble / (bs.size + qsh.length - c).toDouble, 4)
+      if (jaccard >= threshold) Some(r.getString(0) -> jaccard) else None
+    }
+    IncrementalPostings.scoredFrame(spark, "rowkey", "jaccard",
+      IncrementalPostings.topK(scored, scored.size))
   }
+
+  /** The probe's empty answer, in its schema. */
+  private def noDuplicates(spark: SparkSession): DataFrame =
+    IncrementalPostings.scoredFrame(spark, "rowkey", "jaccard", Nil)
 
   /** The per-doc probe's candidate fetch, LAZY: the candidates' live rows
     * from only their own doc buckets ([[IncrementalPostings.prunedDocs]]),
-    * sketched — (rowkey, bs). [[nearDuplicatesWith]] checkpoints this
-    * before scoring (see there); exposed so specs can pin the fetch's
-    * bucket pruning on the exact frame the probe materializes. */
+    * sketched — (rowkey, bs), bs the distinct shingle set.
+    * [[nearDuplicatesWith]] collects this and scores on the driver;
+    * exposed so specs can pin the fetch's bucket pruning on the exact
+    * frame the probe collects. */
   private[graft] def probeFetch(spark: SparkSession, rootPath: String,
       candIds: Seq[String], scheme: SketchScheme): DataFrame =
     IncrementalPostings.prunedDocs(spark, rootPath, candIds)
-      .select(col("rowkey"),
-        array_sort(array_distinct(scheme.sketch(col("text")))).as("bs"))
+      .select(col("rowkey"), array_distinct(scheme.sketch(col("text"))).as("bs"))
 
   /** Batch form of [[nearDuplicates]] — a micro-batch of arriving
     * documents probes the maintained state in ONE job (the shape an
@@ -777,10 +759,7 @@ object IncrementalShingles {
   private[graft] def intraBatchDropsLocal(docs: Seq[(String, Seq[String], Boolean)],
       threshold: Double, dfCap: Int): Seq[(String, String)] = {
     import scala.collection.mutable
-    val keys = docs.map(_._1).distinct
-      .map(k => (k, k.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._2, b._2) < 0)
-      .map(_._1).toArray
+    val keys = docs.map(_._1).distinct.sorted(IncrementalPostings.sparkStringOrder).toArray
     val rank = keys.iterator.zipWithIndex.toMap
     val exists = new Array[Boolean](keys.length)
     val members = mutable.HashMap[String, mutable.ArrayBuffer[Int]]()
@@ -818,9 +797,8 @@ object IncrementalShingles {
       }
       touched.foreach { b =>
         val c = co(b).toLong
-        val jaccard = java.math.BigDecimal.valueOf(
-            c.toDouble / (held(a).length + held(b).length - c).toDouble)
-          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+        val jaccard = IncrementalPostings.roundHalfUp(
+          c.toDouble / (held(a).length + held(b).length - c).toDouble, 4)
         if (jaccard >= threshold) {
           if (!exists(b)) drop(b, a) else if (!exists(a)) drop(a, b)
         }

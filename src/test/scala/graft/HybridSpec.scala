@@ -313,7 +313,11 @@ class HybridSpec extends SparkSpec {
       graft.operators.Index.maintainedFixture(spark, dir),
       graft.operators.Vectors.annFixture(spark, dir),
       Seq("merge", "sort"), qv, graft.operators.Vectors.AnnFixtureNlist, 50)
-    for ((leg, name) <- Seq((bm, "bm25 leg"), (v, "vector leg"))) {
+    // the bm25 leg ranks its collected rows on the driver: a local
+    // relation that reads no file at all (its entries and length reads
+    // are pinned to the postings buckets in IncrementalPostingsSpec)
+    assert(bm.inputFiles.isEmpty, bm.inputFiles.mkString(", "))
+    for ((leg, name) <- Seq((v, "vector leg"))) {
       val inputs = leg.inputFiles
       assert(inputs.nonEmpty, name)
       for (f <- inputs)
@@ -445,7 +449,9 @@ class HybridSpec extends SparkSpec {
       Seq("merge", "sort"), q.getSeq[Float](0),
       col("label") === q.getInt(1),
       graft.operators.Vectors.AnnFixtureNlist, 50)
-    for ((leg, name) <- Seq((bm, "filtered bm25 leg"), (v, "filtered vector leg"))) {
+    // the filtered bm25 leg ranks its collected rows on the driver
+    assert(bm.inputFiles.isEmpty, bm.inputFiles.mkString(", "))
+    for ((leg, name) <- Seq((v, "filtered vector leg"))) {
       val inputs = leg.inputFiles
       assert(inputs.nonEmpty, name)
       for (f <- inputs)

@@ -391,10 +391,10 @@ class IncrementalPostingsSpec extends SparkSpec {
     // MLT of a deleted seed is empty, not an error
     assert(IncrementalPostings.moreLikeThis(spark, root, "7").count() === 0L)
     // the entries read behind the ranking opened only the query terms'
-    // buckets — checked on the pruned-entries frame the (checkpointed)
-    // hit list is built from; the final ranking frame itself reads NO
-    // entries at all (they fed the checkpoint), only docs + dstats
-    val entryFiles = IncrementalPostings.prunedEntries(spark, root,
+    // buckets — checked on the posting-rows frame the ranking collects;
+    // the ranked answer itself is assembled on the driver, so its frame
+    // reads no file at all
+    val entryFiles = IncrementalPostings.postingRows(spark, root,
         Seq("merge", "sort"))
       .inputFiles.filter(_.contains("/entries/"))
     def bucketOf(key: String): String = {
@@ -408,8 +408,8 @@ class IncrementalPostingsSpec extends SparkSpec {
       assert(wanted.exists(b => f.contains(s"/$b/")),
         s"bm25 read an entry bucket outside the query terms': $f")
     assert(IncrementalPostings.bm25Search(spark, root, Seq("merge", "sort"))
-      .inputFiles.count(_.contains("/entries/")) === 0,
-      "bm25's final frame re-read the entries instead of the checkpointed hits")
+      .inputFiles.isEmpty,
+      "bm25's answer re-reads state instead of ranking its collected rows")
     // ... and the length fetch opened only the HIT docs' buckets
     val hitDocs = fin
       .filter(array_contains(split(col("text"), " "), "merge") ||
@@ -417,7 +417,7 @@ class IncrementalPostingsSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getString(0))
     assert(hitDocs.nonEmpty)
     val wantedDocB = hitDocs.map(bucketOf).toSet
-    val docFiles = IncrementalPostings.bm25Search(spark, root, Seq("merge", "sort"))
+    val docFiles = IncrementalPostings.lengthFetch(spark, root, hitDocs.toSeq)
       .inputFiles.filter(_.contains("/docs/"))
     assert(docFiles.nonEmpty)
     for (f <- docFiles)
@@ -597,8 +597,13 @@ class IncrementalPostingsSpec extends SparkSpec {
       crc.update(key.getBytes("UTF-8"))
       s"b=${java.lang.Math.floorMod(crc.getValue, graft.streaming.IncrementalIndex.DefaultBuckets.toLong)}"
     }
+    // the entries are collected by the read (positionRows); the returned
+    // frame is the lazy keyed fetch and reads docs only
     val frame = IncrementalPostings.phraseSearch(spark, root, Seq("merge", "sort"))
-    val entryFiles = frame.inputFiles.filter(_.contains("/entries/"))
+    assert(!frame.inputFiles.exists(_.contains("/entries/")),
+      "phraseSearch's returned frame re-reads the entries it collected")
+    val entryFiles = IncrementalPostings.positionRows(spark, root, Seq("merge", "sort"))
+      .inputFiles.filter(_.contains("/entries/"))
     val wantedTokB = Set("merge", "sort").map(bucketOf)
     assert(entryFiles.nonEmpty)
     for (f <- entryFiles)
@@ -677,15 +682,17 @@ class IncrementalPostingsSpec extends SparkSpec {
           sc.requiredSchema.fieldNames.toSeq
       }
     }
+    // pinned on the entry frames the reads collect: postingRows behind
+    // term/bm25/tfidf, positionRows behind phrase
     val termSchemas = entrySchemas(
-      IncrementalPostings.termSearch(spark, withPos, Seq("merge", "sort")))
+      IncrementalPostings.postingRows(spark, withPos, Seq("merge", "sort")))
     assert(termSchemas.nonEmpty)
     for (sch <- termSchemas)
       assert(!sch.contains("positions"),
         s"term search reads the positions payload it does not use: $sch")
     // the phrase read is the one consumer that must keep the column
     val phraseSchemas = entrySchemas(
-      IncrementalPostings.phraseSearch(spark, withPos, Seq("merge", "sort")))
+      IncrementalPostings.positionRows(spark, withPos, Seq("merge", "sort")))
     assert(phraseSchemas.exists(_.contains("positions")), phraseSchemas.toString)
 
     // runtime proof: read()-syscall deltas via SpecMetrics — the task-end

@@ -308,35 +308,38 @@ class PlanSpec extends SparkSpec {
 
   test("maintained-index reads never shuffle the fetch") {
     // the reference's search-then-fetch topology: q_search_maintained's
-    // (unbounded) hit list broadcasts into the live-row join;
-    // q_neardup_probe's (cap-bounded) candidates prune the fetch harder
-    // still — an isin filter over the candidates' own doc buckets, no
-    // join at all. Neither may shuffle the docs.
+    // hit list is collected and resolved to its own doc buckets on the
+    // driver, so the fetch is an isin filter over those buckets — no
+    // join at all, and only docs files; q_neardup_probe's (cap-bounded)
+    // candidates take the same keyed fetch. Neither may shuffle the docs.
     val ps = { val df = SparkEntry.queries("q_search_maintained")(spark, dir)
       df.collect(); df.queryExecution.executedPlan.toString }
-    assert(ps.contains("BroadcastHashJoin"), ps.take(800))
-    assert(!ps.contains("SortMergeJoin"), ps.take(800))
+    assert(!ps.contains("Join"), ps.take(800))
+    val searchFiles = SparkEntry.queries("q_search_maintained")(spark, dir).inputFiles
+    assert(searchFiles.nonEmpty && searchFiles.forall(_.contains("/docs/")),
+      searchFiles.mkString(", "))
     val pp = { val df = SparkEntry.queries("q_neardup_probe")(spark, dir)
       df.collect(); df.queryExecution.executedPlan.toString }
     assert(!pp.contains("SortMergeJoin"), pp.take(800))
-    // the returned plan scores a MATERIALIZED candidate frame (round 15:
-    // the lazy score tail was a per-call planning pathology — SCALE.md
-    // §df-cap), so the scan-level pins moved with the fetch: candidate
-    // bucket pruning + the pushed isin live on probeFetch
-    // (IncrementalShinglesSpec); here pin the materialization itself
-    assert(pp.contains("ExistingRDD"),
-      s"q_neardup_probe must score a checkpointed candidate frame: ${pp.take(800)}")
+    // the probe scores its collected candidates on the driver (the lazy
+    // score tail was a per-call planning pathology — SCALE.md §df-cap),
+    // so the scan-level pins live with the fetch: candidate bucket
+    // pruning + the pushed isin on probeFetch (IncrementalShinglesSpec);
+    // here pin that the answer is a local relation, with no plan to run
+    assert(pp.contains("LocalTableScan") && !pp.contains("Exchange"),
+      s"q_neardup_probe must answer from its collected candidates: ${pp.take(800)}")
     // maintained ranked retrieval opens NO corpus file — entries, docs
-    // state, and the dstats sidecar only — and BM25's hit list broadcasts
-    // into the length fetch (never a shuffle of the docs)
+    // state, and the dstats sidecar only — and BM25's ranking is
+    // assembled on the driver from its two collects: the answer is a
+    // local relation (never a shuffle of the docs)
     for (q <- Seq("q_bm25_maintained", "q_tfidf_maintained", "q_mlt_maintained"))
       assert(!SparkEntry.queries(q)(spark, dir).inputFiles
         .exists(_.contains("documents.parquet")),
         s"$q reads the corpus instead of the maintained state")
     val pb = { val df = SparkEntry.queries("q_bm25_maintained")(spark, dir)
       df.collect(); df.queryExecution.executedPlan.toString }
-    assert(pb.contains("BroadcastHashJoin"), pb.take(800))
-    assert(!pb.contains("SortMergeJoin"), pb.take(800))
+    assert(pb.contains("LocalTableScan"), pb.take(800))
+    assert(!pb.contains("Exchange") && !pb.contains("Join"), pb.take(800))
   }
 
   test("q_percolate: registry side broadcasts; doc side never sort-merge joins") {
@@ -395,9 +398,12 @@ class PlanSpec extends SparkSpec {
     val df = SparkEntry.queries("q_synonym_maintained")(spark, dir)
     assert(!df.inputFiles.exists(_.contains("documents.parquet")),
       "maintained synonym search must be served from the postings state")
+    // the group match runs on the collected entries; the fetch is keyed
+    // to the hit docs' buckets — no join, docs files only
+    assert(df.inputFiles.nonEmpty && df.inputFiles.forall(_.contains("/docs/")),
+      df.inputFiles.mkString(", "))
     val p = { df.collect(); df.queryExecution.executedPlan.toString }
-    assert(p.contains("BroadcastHashJoin"), p.take(800))
-    assert(!p.contains("SortMergeJoin"), p.take(800))
+    assert(!p.contains("Join"), p.take(800))
   }
 
   test("q_synonym_bm25: group scoring is index-only — broadcasts, TakeOrdered, no corpus scan") {
