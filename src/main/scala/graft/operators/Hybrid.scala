@@ -123,10 +123,7 @@ object Hybrid {
       .select(col("h.doc_id").as("doc_id"), col("h.tf").as("tf"), col("df"))
     lens.join(broadcast(tf), "doc_id")
       .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-          (lit(2.2) * col("tf")) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
+      .withColumn("contrib", graft.streaming.IncrementalPostings.bm25Contrib)
       .groupBy("doc_id")
       .agg(round(sum(col("contrib")), 4).as("score"))
   }
@@ -418,7 +415,7 @@ object Hybrid {
     // job with a raw CAST error — the guard below owns the diagnosis
     val cand = hits.select(col("doc_id"),
         col("doc_id").try_cast("long").as("vec_id")).distinct()
-    // candidate-bounded (the hit frame is checkpointed) — one small job
+    // candidate-bounded (the hit frame is a local relation) — one small job
     val bad = cand.filter(col("vec_id").isNull ||
         col("vec_id").cast("string") =!= col("doc_id"))
       .select("doc_id").limit(1).collect()

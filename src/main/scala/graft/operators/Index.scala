@@ -104,7 +104,7 @@ object Index {
       .select(col("h.doc_id").as("doc_id"), col("h.tf").as("tf"), col("df"))
     tf.crossJoin(broadcast(n))
       .groupBy("doc_id")
-      .agg(round(sum(col("tf") * log(col("n_docs") / col("df"))), 4).as("score"))
+      .agg(round(sum(graft.streaming.IncrementalPostings.tfidfContrib), 4).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(20)
   }
@@ -133,10 +133,7 @@ object Index {
       .select(col("h.doc_id").as("doc_id"), col("h.tf").as("tf"), col("df"))
     lens.join(broadcast(tf), "doc_id")
       .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-          (lit(2.2) * col("tf")) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
+      .withColumn("contrib", graft.streaming.IncrementalPostings.bm25Contrib)
       .groupBy("doc_id")
       .agg(round(sum(col("contrib")), 4).as("score"))
       .orderBy(col("score").desc, col("doc_id"))

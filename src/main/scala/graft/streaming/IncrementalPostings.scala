@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Incremental maintenance of the materialized posting-list table — the
   * reference's actual product (HBase mutations kept in sync with a Solr
@@ -530,21 +531,22 @@ object IncrementalPostings {
 
   /** Fuzzy term query over MAINTAINED state — Solr's `term~maxEdits`:
     * live docs containing ANY indexed term within the edit bound. The
-    * edit distance has no bucket to prune to, so the entries are scanned
-    * (entries only, never the corpus) with the predicate pushed into the
-    * scan; only the matching tokens' rows come back
-    * ([[expansionSearch]]). */
+    * edit distance has no bucket to prune to and parquet cannot evaluate
+    * it, so EVERY entry row is read (entries only, never the corpus) and
+    * the distance is computed once per posting row — a cost that grows
+    * with the index's posting mass (Σ df), not its vocabulary; only the
+    * matching tokens' rows come back ([[expansionSearch]]). */
   def fuzzySearch(spark: SparkSession, rootPath: String, term: String,
                   maxEdits: Int = 1): DataFrame =
     expansionSearch(spark, rootPath, levenshtein(col("tok"), lit(term)) <= maxEdits)
 
   /** The live docs holding any token that satisfies `tokMatches` — the
     * fuzzy and wildcard reads: one collect of the matching entry rows'
-    * doc ids, then the driver-keyed docs fetch ([[prunedDocs]]), lazy. */
+    * doc ids, then the keyed fetch of the hit docs ([[hitDocs]]), lazy. */
   private def expansionSearch(spark: SparkSession, rootPath: String,
                               tokMatches: Column): DataFrame =
-    prunedDocs(spark, rootPath, allEntries(spark, rootPath).filter(tokMatches)
-      .select("doc_id").collect().map(_.getString(0)).distinct.toSeq)
+    hitDocs(spark, rootPath, allEntries(spark, rootPath).filter(tokMatches)
+      .select("doc_id").collect().map(_.getString(0)).toSet)
 
   /** Live view of the maintained document state (tombstones filtered);
     * empty with the documented schema before the first merge. */
@@ -563,33 +565,25 @@ object IncrementalPostings {
       .filter(col("tok").isin(toks: _*))
   }
 
-  /** The entries rows matching a DataFrame of tokens whose VALUES are data
-    * (too many to collect) but whose touched-BUCKET set is driver metadata
-    * bounded by the bucket count: collect the distinct bucket ids the
-    * tokens hash to (same move as the merge's touched-bucket collect),
-    * read only those bucket dirs, and join. Per-call I/O is O(touched
-    * entry buckets), never the index — the batch-probe analogue of
-    * [[prunedEntries]]. A token's posting list is complete within its
-    * bucket, so per-token counts over the result are exact. */
-  private[graft] def prunedEntriesForTokens(spark: SparkSession, rootPath: String,
-                                            toks: DataFrame): DataFrame =
-    prunedEntriesForTokensIn(spark, rootPath,
-      entryBucketDirsForFrame(spark, rootPath, toks), toks)
-
-  /** The entry-bucket dirs `toks` hash into — the ONE distinct-bucket-id
-    * driver job of [[prunedEntriesForTokens]], exposed so a caller with
-    * several tok-keyed pruned reads of the SAME token set (the gate
-    * probe: entries + dfs sidecar + candidate entries) runs the job once
-    * and shares the result (round-17 verdict #2 — the probe's per-batch
-    * fixed cost was dominated by repeated identical metadata jobs). */
+  /** The entry-bucket dirs a DataFrame of tokens hashes into — tokens
+    * whose VALUES are data (too many to collect) but whose touched-BUCKET
+    * set is driver metadata bounded by the bucket count: one distinct-
+    * bucket-id job, the same move as the merge's touched-bucket collect.
+    * Exposed so a caller with several tok-keyed pruned reads of the SAME
+    * token set (the gate probe: entries + dfs sidecar + candidate
+    * entries) runs the job once and shares the result. */
   private[graft] def entryBucketDirsForFrame(spark: SparkSession,
       rootPath: String, toks: DataFrame): Seq[String] =
     StateStore.bucketDirsFor(spark, rootPath + "/entries", toks, "tok")
 
-  /** [[prunedEntriesForTokens]] over an already-resolved dir list
-    * ([[entryBucketDirsForFrame]]). Passing a SUPERSET of the tokens'
-    * own dirs is sound — the token join restricts rows either way; the
-    * trade is scan width for driver jobs, the caller's call. */
+  /** The entries rows matching a DataFrame of tokens, from an already-
+    * resolved dir list ([[entryBucketDirsForFrame]]) — the batch-probe
+    * analogue of [[prunedEntries]]: per-call I/O is O(touched entry
+    * buckets), never the index, and since a token's posting list is
+    * complete within its bucket, per-token counts over the result are
+    * exact. Passing a SUPERSET of the tokens' own dirs is sound — the
+    * token join restricts rows either way; the trade is scan width for
+    * driver jobs, the caller's call. */
   private[graft] def prunedEntriesForTokensIn(spark: SparkSession,
       rootPath: String, dirs: Seq[String], toks: DataFrame): DataFrame =
     readEntries(spark, rootPath, dirs).join(toks.select("tok").distinct(), "tok")
@@ -618,7 +612,7 @@ object IncrementalPostings {
     StateStore.readBuckets(spark, rootPath + "/docs", dirs, Some(docsSchemaFor(spark, rootPath)))
 
   /** The LIVE doc rows matching a DataFrame of rowkeys — bucket-pruned
-    * like [[prunedEntriesForTokens]]: the keys stay distributed, only
+    * like [[prunedEntriesForTokensIn]]: the keys stay distributed, only
     * their distinct bucket ids (≤ bucket count) are collected, and only
     * those doc buckets are opened. The batch form of the HBase-Get-shaped
     * [[prunedDocs]] fetch. */
@@ -628,15 +622,41 @@ object IncrementalPostings {
       .filter(col("op") =!= "delete").join(keys.select("rowkey").distinct(), "rowkey")
 
   /** The LIVE doc rows for exactly `rowkeys`, reading only the buckets
-    * those keys hash to — the HBase-Get-shaped fetch. The driver resolves
-    * the buckets from the keys themselves, so the fetch is one job: the
-    * second step of every maintained read, whose hit list is on the
-    * driver already (the probe's df-capped candidates, the term, phrase,
-    * fuzzy and wildcard hits). */
+    * those keys hash to — the HBase-Get-shaped fetch for a BOUNDED key
+    * list (the probe's df-capped candidates, a seed doc, the gate's
+    * batch keys). The driver resolves the buckets from the keys
+    * themselves, so the fetch is one job, and the keys reach the parquet
+    * scan as a pushed `isin`. */
   private[graft] def prunedDocs(spark: SparkSession, rootPath: String,
                                     rowkeys: Seq[String]): DataFrame =
+    liveDocsIn(spark, rootPath, rowkeys).filter(col("rowkey").isin(rowkeys: _*))
+
+  /** The LIVE doc rows of a hit list — the second step of every
+    * maintained read whose hits are on the driver already (term, phrase,
+    * fuzzy and wildcard hits, BM25's length fetch). Buckets resolve on
+    * the driver as in [[prunedDocs]], so the fetch is one job, but the
+    * keys ship as a broadcast set tested by a UDF, not as a plan
+    * literal: a hit list has no upper bound (a frequent term, a
+    * one-letter prefix), and an `isin` of n keys grows the plan, its
+    * planning time and every task binary with n, while the broadcast
+    * leaves the plan the same size for any n (measured in CHANGES.md).
+    * The membership test does not reach parquet; a hit list spread over
+    * its buckets' key ranges would prune no row group there anyway. The
+    * set ships as a `java.util.HashSet`, which serializes several times
+    * faster than a Scala set. */
+  private[graft] def hitDocs(spark: SparkSession, rootPath: String,
+                             rowkeys: Set[String]): DataFrame = {
+    val keys = spark.sparkContext.broadcast(new java.util.HashSet[String](rowkeys.asJava))
+    val isHit = udf((k: String) => keys.value.contains(k))
+    liveDocsIn(spark, rootPath, rowkeys.toSeq).filter(isHit(col("rowkey")))
+  }
+
+  /** The live rows of the doc buckets `rowkeys` hash to, resolved on the
+    * driver — the scan both keyed fetches filter. */
+  private def liveDocsIn(spark: SparkSession, rootPath: String,
+                         rowkeys: Seq[String]): DataFrame =
     readDocs(spark, rootPath, StateStore.bucketDirsFor(spark, rootPath + "/docs", rowkeys))
-      .filter(col("op") =!= "delete").filter(col("rowkey").isin(rowkeys: _*))
+      .filter(col("op") =!= "delete")
 
   /** The query terms' posting rows (tok, doc_id, tf) from the bucket-
     * pruned entries — what the term-matching and ranked reads collect.
@@ -664,7 +684,7 @@ object IncrementalPostings {
     * hit list → HBase Get, /root/reference/README.md:12-13) — with no
     * corpus scan anywhere: the query terms' entry rows are collected once
     * ([[postingRows]]), intersected on the driver, and the hit docs come
-    * back through the lazy keyed fetch ([[prunedDocs]]), so the caller's
+    * back through the lazy keyed fetch ([[hitDocs]]), so the caller's
     * action is the read's second and last job. */
   def termSearch(spark: SparkSession, rootPath: String, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "termSearch needs at least one term")
@@ -684,8 +704,9 @@ object IncrementalPostings {
   /** Minimum-should-match retrieval over the maintained state — Solr
     * edismax's `mm` parameter: docs matching at least `minMatch` of the
     * query terms, with the match count carried for ranking (`n_matched`,
-    * a driver-literal lookup on the fetched rows). Same two steps as
-    * [[termSearch]] (`termSearch` ≡ `minMatch = terms.size`). */
+    * looked up on the fetched rows in a broadcast map, like the keys
+    * themselves). Same two steps as [[termSearch]] (`termSearch` ≡
+    * `minMatch = terms.size`). */
   def termSearchMinMatch(spark: SparkSession, rootPath: String,
                          terms: Seq[String], minMatch: Int): DataFrame = {
     val uniq = terms.distinct
@@ -693,8 +714,10 @@ object IncrementalPostings {
       s"minMatch must be in [1, ${uniq.size}], got $minMatch")
     val hits = groupMatches(spark, rootPath, uniq.map(Seq(_)))
       .collect { case (doc, n) if n >= minMatch => doc -> n.toLong }
-    prunedDocs(spark, rootPath, hits.keys.toSeq)
-      .withColumn("n_matched", typedlit(hits).apply(col("rowkey")))
+    val matched = spark.sparkContext.broadcast(new java.util.HashMap[String, java.lang.Long](
+      hits.map { case (doc, n) => doc -> java.lang.Long.valueOf(n) }.asJava))
+    hitDocs(spark, rootPath, hits.keySet)
+      .withColumn("n_matched", udf((k: String) => matched.value.get(k)).apply(col("rowkey")))
   }
 
   /** Grouped-OR retrieval over the maintained state — the query shape
@@ -709,8 +732,8 @@ object IncrementalPostings {
                        groups: Seq[Seq[String]]): DataFrame = {
     require(groups.nonEmpty && groups.forall(_.nonEmpty),
       "grouped search needs at least one non-empty term group")
-    prunedDocs(spark, rootPath, groupMatches(spark, rootPath, groups)
-      .collect { case (doc, n) if n == groups.size => doc }.toSeq)
+    hitDocs(spark, rootPath, groupMatches(spark, rootPath, groups)
+      .collect { case (doc, n) if n == groups.size => doc }.toSet)
   }
 
   /** A ranking-statistics aggregate or a ranked answer on the driver:
@@ -1079,28 +1102,50 @@ object IncrementalPostings {
     rows.toSeq.map(r => TermHit(r.getString(0), r.getString(1), r.getLong(2), df(r.getString(0))))
   }
 
-  /** The BM25 term weight (k1=1.2, b=0.75) exactly as Spark evaluates
-    * the ranked reads' `contrib` column: the same constant-folded 2.2 and
-    * 0.25 literals, the same operation order, long-to-double promotion
-    * where Spark casts, and `StrictMath.log` — the method both the
-    * interpreted and the generated code of Spark's `log` call. */
-  private def bm25Weight(nDocs: Long, avgdl: Double, tf: Long, df: Long, dl: Long): Double =
-    StrictMath.log(1.0 + ((nDocs - df).toDouble + 0.5) / (df.toDouble + 0.5)) *
-      (2.2 * tf.toDouble) /
-      (tf.toDouble + 1.2 * (0.25 + 0.75 * dl.toDouble / avgdl))
+  /** A query term's BM25 weight in one doc (k1=1.2, b=0.75 as the
+    * constant-folded literals 2.2 and 0.25) over columns tf, df, dl,
+    * n_docs and avgdl — the one form of the formula, evaluated over a
+    * distributed join or over collected hits ([[weighed]]). */
+  private[graft] val bm25Contrib: Column =
+    log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
+      (lit(2.2) * col("tf")) /
+      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
+
+  /** A query term's TF-IDF weight in one doc, tf·ln(N/df), over columns
+    * tf, df and n_docs. */
+  private[graft] val tfidfContrib: Column = col("tf") * log(col("n_docs") / col("df"))
+
+  private val weighSchema = StructType(Seq(StructField("doc_id", StringType),
+    StructField("tok", StringType), StructField("tf", LongType),
+    StructField("df", LongType), StructField("dl", LongType),
+    StructField("n_docs", LongType), StructField("avgdl", DoubleType)))
+
+  /** Each doc's score over collected (doc_id, tok, tf, df, dl, n_docs,
+    * avgdl) rows: `contrib` is selected over them as a local relation,
+    * which the optimizer evaluates on the driver (ConvertToLocalRelation,
+    * no job) with the same expression a distributed read runs; each doc's
+    * weights are then summed in term order, NULLs skipped like Spark's
+    * `sum`, and rounded like `round(sum(contrib), 4)`. */
+  private def weighed(spark: SparkSession, contrib: Column,
+                      rows: Seq[Row]): Seq[(String, Double)] =
+    local(spark, (weighSchema, rows.toArray))
+      .select(col("doc_id"), col("tok"), contrib).collect().toSeq
+      .groupBy(_.getString(0)).toSeq.map { case (doc, ws) =>
+        doc -> roundHalfUp(ws.sortBy(_.getString(1)).filterNot(_.isNullAt(2))
+          .map(_.getDouble(2)).sum, 4)
+      }
 
   /** The hit docs' lengths for BM25 — (rowkey, dl) from only their own
-    * doc buckets ([[prunedDocs]]); lazy and exposed, so specs can pin
-    * the fetch's buckets. */
+    * doc buckets ([[hitDocs]]); lazy and exposed, so specs can pin the
+    * fetch's buckets. */
   private[graft] def lengthFetch(spark: SparkSession, rootPath: String,
-      keys: Seq[String], tokenize: Column => Column = split(_, " ")): DataFrame =
-    prunedDocs(spark, rootPath, keys)
+      keys: Set[String], tokenize: Column => Column = split(_, " ")): DataFrame =
+    hitDocs(spark, rootPath, keys)
       .select(col("rowkey"), size(tokenize(col("text"))).cast("long").as("dl"))
 
   /** Every hit doc's BM25 score, on the driver: N/avgdl from the cached
-    * [[docStats]] row, dl from one [[lengthFetch]] job, each doc's term
-    * weights summed in term order and rounded to 4 places like Spark's
-    * `round(sum(contrib), 4)`. A hit whose doc is no longer live scores
+    * [[docStats]] row, dl from one [[lengthFetch]] job, [[bm25Contrib]]
+    * [[weighed]] over the hits. A hit whose doc is no longer live scores
     * nothing, as the inner join it replaces dropped it. */
   private def bm25Scores(spark: SparkSession, rootPath: String, hits: Seq[TermHit],
                          tokenize: Column => Column): Seq[(String, Double)] = {
@@ -1108,13 +1153,10 @@ object IncrementalPostings {
     if (hits.isEmpty) return Nil
     require(!stats.isNullAt(0) && !stats.isNullAt(1),
       s"no ranking statistics at $rootPath for ${hits.size} hits")
-    val (nDocs, avg) = (stats.getLong(0), stats.getDouble(1))
-    val dl = lengthFetch(spark, rootPath, hits.map(_.docId).distinct, tokenize)
+    val dl = lengthFetch(spark, rootPath, hits.map(_.docId).toSet, tokenize)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    hits.filter(h => dl.contains(h.docId)).groupBy(_.docId).toSeq.map { case (doc, hs) =>
-      doc -> roundHalfUp(hs.sortBy(_.tok)
-        .map(h => bm25Weight(nDocs, avg, h.tf, h.df, dl(doc))).sum, 4)
-    }
+    weighed(spark, bm25Contrib, hits.filter(h => dl.contains(h.docId)).map(h =>
+      Row(h.docId, h.tok, h.tf, h.df, dl(h.docId), stats.getLong(0), stats.getDouble(1))))
   }
 
   /** BM25 ranked retrieval served ENTIRELY from the maintained state —
@@ -1125,8 +1167,8 @@ object IncrementalPostings {
     * N/avgdl from the [[docStats]] sidecar (metadata-sized), and dl from
     * the hit docs' keyed fetch. Two jobs: the entries collect and the
     * fetch; the scores and the top k are assembled on the driver and come
-    * back as a local frame. Arithmetic is operation-for-operation the
-    * corpus-scoped `Index.qBm25Topk`'s ([[bm25Weight]], one round at the
+    * back as a local frame. The weight is the corpus-scoped
+    * `Index.qBm25Topk`'s own column ([[bm25Contrib]], one round at the
     * end; ties by doc_id in Spark's string order), so converged state
     * ranks identically — spec-pinned and oracle-checked
     * (`q_bm25_maintained`). `tokenize` must match the one the state was
@@ -1201,10 +1243,7 @@ object IncrementalPostings {
       .select(col("rowkey").as("doc_id"), size(tokenize(col("text"))).cast("long").as("dl"))
       .join(broadcast(hits), "doc_id")
       .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-          (lit(2.2) * col("tf")) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
+      .withColumn("contrib", bm25Contrib)
       .groupBy("doc_id")
       .agg(round(sum(col("contrib")), 4).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -1213,24 +1252,20 @@ object IncrementalPostings {
 
   /** TF-IDF ranked retrieval from the maintained state — same read shape
     * as [[bm25Search]] (bucket-pruned entries for tf/df, N from the stats
-    * sidecar), same arithmetic as the corpus-scoped `q_tfidf_topk`
-    * (score = Σ tf·ln(N/df), one round at the end), so a converged corpus
-    * ranks identically. No docs read at all: unlike BM25 there is no
-    * length normalization, so the whole query is answered from one
-    * entries collect plus one metadata row, scored on the driver. */
+    * sidecar), the corpus-scoped `q_tfidf_topk`'s own weight column
+    * ([[tfidfContrib]]: score = Σ tf·ln(N/df), one round at the end), so
+    * a converged corpus ranks identically. No docs read at all: unlike
+    * BM25 there is no length normalization, so the whole query is
+    * answered from one entries collect plus one metadata row, scored on
+    * the driver. */
   def tfidfSearch(spark: SparkSession, rootPath: String, terms: Seq[String],
                   k: Int = 20): DataFrame = {
     val stats = docStatsCollected(spark, rootPath)._2.head
     val hits = termHits(spark, rootPath, terms)
     require(hits.isEmpty || !stats.isNullAt(0),
       s"no ranking statistics at $rootPath for ${hits.size} hits")
-    // Spark's `tf * log(n_docs / df)`: the long division promotes both
-    // sides to double
-    val n = if (hits.isEmpty) 0.0 else stats.getLong(0).toDouble
-    scoredFrame(spark, "doc_id", "score", topK(hits.groupBy(_.docId).toSeq.map {
-      case (doc, hs) => doc -> roundHalfUp(hs.sortBy(_.tok)
-        .map(h => h.tf.toDouble * StrictMath.log(n / h.df.toDouble)).sum, 4)
-    }, k))
+    scoredFrame(spark, "doc_id", "score", topK(weighed(spark, tfidfContrib,
+      hits.map(h => Row(h.docId, h.tok, h.tf, h.df, null, stats.getLong(0), null))), k))
   }
 
   /** More-like-this over the MAINTAINED state — Solr's MLT served with
@@ -1269,7 +1304,7 @@ object IncrementalPostings {
     * Read shape is [[termSearch]]'s: one collect of the phrase's distinct
     * terms' bucket-pruned entry rows ([[positionRows]]), the adjacency
     * check on the driver, and the lazy keyed fetch of the matching docs
-    * ([[prunedDocs]]) — no corpus scan anywhere.
+    * ([[hitDocs]]) — no corpus scan anywhere.
     *
     * Positions are NULL on a `keepPositions = false` root (the shingle
     * family); a phrase query over one fails loudly rather than silently
@@ -1288,7 +1323,7 @@ object IncrementalPostings {
       }
       .groupMap(_._1)(_._2)
       .collect { case ((doc, _), toks) if phraseAt(toks.toMap, phrase) => doc }
-    prunedDocs(spark, rootPath, hits.toSeq.distinct)
+    hitDocs(spark, rootPath, hits.toSet)
   }
 
   /** Whether some start position p has `phrase(i)` at p + i for every

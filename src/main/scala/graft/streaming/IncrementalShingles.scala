@@ -468,7 +468,7 @@ object IncrementalShingles {
     * over the batch, the entries read BUCKET-PRUNED to the batch's
     * shingles (the shingle VALUES are data, but the bucket ids they hash
     * to are driver metadata bounded by the bucket count —
-    * [[IncrementalPostings.prunedEntriesForTokens]], the same
+    * [[IncrementalPostings.entryBucketDirsForFrame]], the same
     * touched-bucket collect the merge itself runs), per-shingle df and
     * posting list aggregated together, candidates df-capped exactly as
     * the per-doc probe, then the candidate rows fetched from ONLY the doc

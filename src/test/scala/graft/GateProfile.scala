@@ -59,7 +59,8 @@ object GateProfile {
       val qsh = sk.select(col("qid"), explode(col("qs")).as("tok"))
       val toks = qsh.select("tok").distinct()
       val entries = t("  probe.pruned_entries_read") {
-        val e = IncrementalPostings.prunedEntriesForTokens(spark, sroot, toks)
+        val e = IncrementalPostings.prunedEntriesForTokensIn(spark, sroot,
+          IncrementalPostings.entryBucketDirsForFrame(spark, sroot, toks), toks)
         println(s"  entries_rows=${e.count()}")
         e
       }

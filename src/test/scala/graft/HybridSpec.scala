@@ -301,6 +301,19 @@ class HybridSpec extends SparkSpec {
     assert(quiet === default)
   }
 
+  /** A maintained read's frame opens files, all of them under the
+    * postings or IVF state roots and none a corpus parquet. */
+  private def assertStateRootsOnly(frame: org.apache.spark.sql.DataFrame,
+                                   name: String): Unit = {
+    val inputs = frame.inputFiles
+    assert(inputs.nonEmpty, name)
+    for (f <- inputs)
+      assert(f.contains("/postings/") || f.contains("/ivf/"),
+        s"$name read outside the postings/IVF state roots: $f")
+    assert(!inputs.exists(_.contains("/testdata/")),
+      s"$name must never scan a corpus parquet")
+  }
+
   test("the maintained twins read ONLY the two state roots — no corpus file") {
     val dir = "/root/testdata/sf0.001"
     // The twins consume the SHARED persisted leg pair, so their fused
@@ -309,23 +322,24 @@ class HybridSpec extends SparkSpec {
     // same roots, same parameters as the shared seam.
     val qv = Tables.embeddings(spark, dir).filter(col("vec_id") === 100)
       .head().getSeq[Float](1)
-    val (bm, v) = Hybrid.maintainedLegs(spark,
-      graft.operators.Index.maintainedFixture(spark, dir),
+    val postings = graft.operators.Index.maintainedFixture(spark, dir)
+    val terms = Seq("merge", "sort")
+    val (bm, v) = Hybrid.maintainedLegs(spark, postings,
       graft.operators.Vectors.annFixture(spark, dir),
-      Seq("merge", "sort"), qv, graft.operators.Vectors.AnnFixtureNlist, 50)
-    // the bm25 leg ranks its collected rows on the driver: a local
-    // relation that reads no file at all (its entries and length reads
-    // are pinned to the postings buckets in IncrementalPostingsSpec)
+      terms, qv, graft.operators.Vectors.AnnFixtureNlist, 50)
+    // the bm25 leg ranks its collected rows on the driver: its answer is
+    // a local relation that reads no file, so the rule is pinned on each
+    // frame the leg collects — the query terms' posting rows and the hit
+    // docs' length fetch — and on the vector leg's own plan
     assert(bm.inputFiles.isEmpty, bm.inputFiles.mkString(", "))
-    for ((leg, name) <- Seq((v, "vector leg"))) {
-      val inputs = leg.inputFiles
-      assert(inputs.nonEmpty, name)
-      for (f <- inputs)
-        assert(f.contains("/postings/") || f.contains("/ivf/"),
-          s"$name read outside the postings/IVF state roots: $f")
-      assert(!inputs.exists(_.contains("/testdata/")),
-        s"$name must never scan a corpus parquet")
-    }
+    val hitIds = IncrementalPostings.postingRows(spark, postings, terms)
+      .collect().map(_.getString(1)).toSet
+    assert(hitIds.nonEmpty)
+    for ((leg, name) <- Seq(
+        (IncrementalPostings.postingRows(spark, postings, terms), "bm25 leg's posting rows"),
+        (IncrementalPostings.lengthFetch(spark, postings, hitIds), "bm25 leg's length fetch"),
+        (v, "vector leg")))
+      assertStateRootsOnly(leg, name)
     // and the fused twins add NO file read of their own (legs persisted)
     for (key <- Seq("q_hybrid_maintained", "q_hybrid_weighted_maintained",
         "q_hybrid_rerank_maintained")) {
@@ -443,23 +457,34 @@ class HybridSpec extends SparkSpec {
     // them persisted, so its own plan reads cached blocks, not files)
     val q = Tables.embeddings(spark, dir).filter(col("vec_id") === 100)
       .select("embedding", "label").head()
-    val (bm, v) = Hybrid.filteredLegs(spark,
-      graft.operators.Index.maintainedFixture(spark, dir),
-      graft.operators.Vectors.annFixture(spark, dir),
-      Seq("merge", "sort"), q.getSeq[Float](0),
-      col("label") === q.getInt(1),
+    val postings = graft.operators.Index.maintainedFixture(spark, dir)
+    val ivf = graft.operators.Vectors.annFixture(spark, dir)
+    val terms = Seq("merge", "sort")
+    val predicate = col("label") === q.getInt(1)
+    val (bm, v) = Hybrid.filteredLegs(spark, postings, ivf, terms,
+      q.getSeq[Float](0), predicate,
       graft.operators.Vectors.AnnFixtureNlist, 50)
-    // the filtered bm25 leg ranks its collected rows on the driver
+    // the filtered bm25 leg ranks its collected rows on the driver: its
+    // answer is a local relation that reads no file, so the rule is
+    // pinned on each frame the leg collects — the query terms' posting
+    // rows, the candidates' attribute fetch, and the predicate
+    // survivors' length fetch — and on the vector leg's own plan
     assert(bm.inputFiles.isEmpty, bm.inputFiles.mkString(", "))
-    for ((leg, name) <- Seq((v, "filtered vector leg"))) {
-      val inputs = leg.inputFiles
-      assert(inputs.nonEmpty, name)
-      for (f <- inputs)
-        assert(f.contains("/postings/") || f.contains("/ivf/"),
-          s"$name read outside the postings/IVF state roots: $f")
-      assert(!inputs.exists(_.contains("/testdata/")),
-        s"$name must never scan a corpus parquet")
-    }
+    val candIds = IncrementalPostings.postingRows(spark, postings, terms)
+      .collect().map(_.getString(1)).toSet
+    val attrs = IvfIndex.attrsForIds(spark, ivf,
+      candIds.toSeq.map(_.toLong).toDF("vec_id"))
+    val survivors = attrs.filter(predicate).select("vec_id")
+      .collect().map(_.getLong(0).toString).toSet
+    assert(survivors.nonEmpty && survivors.size < candIds.size,
+      s"the predicate must keep some candidates and drop others: ${survivors.size} of ${candIds.size}")
+    for ((leg, name) <- Seq(
+        (IncrementalPostings.postingRows(spark, postings, terms), "filtered bm25 leg's posting rows"),
+        (attrs, "filtered bm25 leg's candidate attributes"),
+        (IncrementalPostings.lengthFetch(spark, postings, survivors),
+          "filtered bm25 leg's length fetch"),
+        (v, "filtered vector leg")))
+      assertStateRootsOnly(leg, name)
     // and the fused twin adds no corpus read of its own (legs persisted)
     val fusedInputs = Hybrid.queries("q_hybrid_filtered_maintained")(spark, dir)
       .inputFiles

@@ -417,7 +417,7 @@ class IncrementalPostingsSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getString(0))
     assert(hitDocs.nonEmpty)
     val wantedDocB = hitDocs.map(bucketOf).toSet
-    val docFiles = IncrementalPostings.lengthFetch(spark, root, hitDocs.toSeq)
+    val docFiles = IncrementalPostings.lengthFetch(spark, root, hitDocs.toSet)
       .inputFiles.filter(_.contains("/docs/"))
     assert(docFiles.nonEmpty)
     for (f <- docFiles)

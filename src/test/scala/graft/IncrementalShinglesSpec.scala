@@ -442,9 +442,10 @@ class IncrementalShinglesSpec extends SparkSpec {
     val batchShingles = arrivals.flatMap(a =>
       IncrementalShingles.shingleizeLocal(a._2)).distinct
     val wantedEntry = batchShingles.map(bucketOf).toSet
+    val toks = batchShingles.toDF("tok")
     val entryFiles = graft.streaming.IncrementalPostings
-      .prunedEntriesForTokens(spark, root,
-        batchShingles.toDF("tok"))
+      .prunedEntriesForTokensIn(spark, root, graft.streaming.IncrementalPostings
+        .entryBucketDirsForFrame(spark, root, toks), toks)
       .inputFiles.filter(_.contains("/entries/"))
     assert(entryFiles.nonEmpty)
     for (f <- entryFiles)

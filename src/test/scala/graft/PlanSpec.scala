@@ -1,5 +1,8 @@
 package graft
 
+import graft.operators.Index
+import graft.streaming.IncrementalPostings
+
 /** Physical-plan regression checks: the properties that make these queries
   * scale are asserted, not assumed — a plan that silently degrades to a
   * shuffle join or a full sort fails here before it fails on a cluster. */
@@ -309,9 +312,10 @@ class PlanSpec extends SparkSpec {
   test("maintained-index reads never shuffle the fetch") {
     // the reference's search-then-fetch topology: q_search_maintained's
     // hit list is collected and resolved to its own doc buckets on the
-    // driver, so the fetch is an isin filter over those buckets — no
-    // join at all, and only docs files; q_neardup_probe's (cap-bounded)
-    // candidates take the same keyed fetch. Neither may shuffle the docs.
+    // driver, so the fetch is a broadcast-key filter over those buckets —
+    // no join at all, and only docs files; q_neardup_probe's
+    // (cap-bounded) candidates take the keyed fetch with a pushed isin.
+    // Neither may shuffle the docs.
     val ps = { val df = SparkEntry.queries("q_search_maintained")(spark, dir)
       df.collect(); df.queryExecution.executedPlan.toString }
     assert(!ps.contains("Join"), ps.take(800))
@@ -329,13 +333,28 @@ class PlanSpec extends SparkSpec {
     assert(pp.contains("LocalTableScan") && !pp.contains("Exchange"),
       s"q_neardup_probe must answer from its collected candidates: ${pp.take(800)}")
     // maintained ranked retrieval opens NO corpus file — entries, docs
-    // state, and the dstats sidecar only — and BM25's ranking is
-    // assembled on the driver from its two collects: the answer is a
-    // local relation (never a shuffle of the docs)
-    for (q <- Seq("q_bm25_maintained", "q_tfidf_maintained", "q_mlt_maintained"))
-      assert(!SparkEntry.queries(q)(spark, dir).inputFiles
-        .exists(_.contains("documents.parquet")),
-        s"$q reads the corpus instead of the maintained state")
+    // state, and the dstats sidecar only. q_mlt_maintained's answer is
+    // a lazy plan over the entries; q_bm25_maintained and
+    // q_tfidf_maintained rank on the driver and answer with a local
+    // relation, so the pin sits on the frames they collect: the query
+    // terms' posting rows (entries files only, both reads) and BM25's
+    // length fetch of the hit docs (docs files only)
+    val mlt = SparkEntry.queries("q_mlt_maintained")(spark, dir).inputFiles
+    assert(mlt.nonEmpty && !mlt.exists(_.contains("documents.parquet")),
+      s"q_mlt_maintained reads the corpus instead of the maintained state: ${mlt.mkString(", ")}")
+    val root = Index.maintainedFixture(spark, dir)
+    val terms = Seq("merge", "sort")
+    val postingFiles = IncrementalPostings.postingRows(spark, root, terms).inputFiles
+    assert(postingFiles.nonEmpty && postingFiles.forall(_.contains("/entries/")),
+      s"q_bm25_maintained/q_tfidf_maintained posting rows: ${postingFiles.mkString(", ")}")
+    val hitIds = IncrementalPostings.postingRows(spark, root, terms).collect()
+      .map(_.getString(1)).toSet
+    val lengthFiles = IncrementalPostings.lengthFetch(spark, root, hitIds).inputFiles
+    assert(lengthFiles.nonEmpty && lengthFiles.forall(_.contains("/docs/")),
+      s"q_bm25_maintained length fetch: ${lengthFiles.mkString(", ")}")
+    for (q <- Seq("q_bm25_maintained", "q_tfidf_maintained"))
+      assert(SparkEntry.queries(q)(spark, dir).inputFiles.isEmpty,
+        s"$q must rank its collected rows, not plan a read of its own")
     val pb = { val df = SparkEntry.queries("q_bm25_maintained")(spark, dir)
       df.collect(); df.queryExecution.executedPlan.toString }
     assert(pb.contains("LocalTableScan"), pb.take(800))
