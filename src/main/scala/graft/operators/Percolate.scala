@@ -608,9 +608,11 @@ object Percolate {
       range = Some(RangePred("n_chars", 50, 400))))
 
   private def qPercolateRich(spark: SparkSession, dir: String): DataFrame =
-    // the JOIN strategy exercises the frame form end to end (the oracle
-    // key for the large-registry path); PercolateSpec pins the compiled
-    // strategy equal on the same registry
+    // the JOIN strategy end to end; a three-query registry is far under
+    // RegistryCompileMax, so this key runs matchesLocalRegistry — the
+    // large-registry frame path is covered by PercolateSpec
+    // (registryCompileMax = 0), which also pins the compiled strategy
+    // equal on the same registry
     matchesBool(Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), col("n_chars")),
       demoRichQueries,

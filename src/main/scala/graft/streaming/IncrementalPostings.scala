@@ -645,11 +645,29 @@ object IncrementalPostings {
     * set ships as a `java.util.HashSet`, which serializes several times
     * faster than a Scala set. */
   private[graft] def hitDocs(spark: SparkSession, rootPath: String,
-                             rowkeys: Set[String]): DataFrame = {
-    val keys = spark.sparkContext.broadcast(new java.util.HashSet[String](rowkeys.asJava))
-    val isHit = udf((k: String) => keys.value.contains(k))
-    liveDocsIn(spark, rootPath, rowkeys.toSeq).filter(isHit(col("rowkey")))
+                             rowkeys: Set[String]): DataFrame =
+    liveDocsIn(spark, rootPath, rowkeys.toSeq).filter(memberOf(spark, rowkeys)(col("rowkey")))
+
+  /** Membership in `keys` as a UDF over one broadcast set — the test
+    * [[hitDocs]] and [[batchEntries]] apply, whose plans then stay the
+    * same size for any number of keys. */
+  private def memberOf(spark: SparkSession, keys: Set[String]): Column => Column = {
+    val set = spark.sparkContext.broadcast(new java.util.HashSet[String](keys.asJava))
+    c => udf((k: String) => set.value.contains(k)).apply(c)
   }
+
+  /** The entry rows (tok, doc_id) of a batch's token set — the gate
+    * probe's one entries read on the driver path. The buckets resolve on
+    * the driver from the tokens themselves (no bucket-id job), and the
+    * tokens, a flush's worth (tens of thousands), ship as a broadcast
+    * set, as in [[hitDocs]]. Lazy and exposed, so specs can pin its
+    * buckets. */
+  private[graft] def batchEntries(spark: SparkSession, rootPath: String,
+                                  toks: Set[String]): DataFrame =
+    readEntries(spark, rootPath,
+        StateStore.bucketDirsFor(spark, rootPath + "/entries", toks.toSeq))
+      .filter(memberOf(spark, toks)(col("tok")))
+      .select("tok", "doc_id")
 
   /** The live rows of the doc buckets `rowkeys` hash to, resolved on the
     * driver — the scan both keyed fetches filter. */

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import graft.operators.{Analyzer, Materialize}
 
 /** Incremental maintenance of the dedup family's shingle inverted index —
@@ -463,22 +464,16 @@ object IncrementalShingles {
       .select(col("rowkey"), array_distinct(scheme.sketch(col("text"))).as("bs"))
 
   /** Batch form of [[nearDuplicates]] — a micro-batch of arriving
-    * documents probes the maintained state in ONE job (the shape an
-    * ingest pipeline runs per batch, not per doc): one shingle explode
-    * over the batch, the entries read BUCKET-PRUNED to the batch's
-    * shingles (the shingle VALUES are data, but the bucket ids they hash
-    * to are driver metadata bounded by the bucket count —
-    * [[IncrementalPostings.entryBucketDirsForFrame]], the same
-    * touched-bucket collect the merge itself runs), per-shingle df and
-    * posting list aggregated together, candidates df-capped exactly as
-    * the per-doc probe, then the candidate rows fetched from ONLY the doc
-    * buckets the candidates hash to
-    * ([[IncrementalPostings.prunedDocsForKeys]]) and scored by the exact
-    * text-derived Jaccard. Per-batch I/O is O(touched entry buckets +
-    * candidate doc buckets) — never the index, never the corpus — which
-    * is what lets [[dedupGate]] run this on EVERY ingest micro-batch.
-    * `docs` is (qid STRING, text); returns (qid, rowkey, jaccard) ≥
-    * `threshold`. */
+    * documents probes the maintained state at once (the shape an ingest
+    * pipeline runs per batch, not per doc): candidates df-capped exactly
+    * as the per-doc probe, scored by the exact Jaccard between the
+    * arrival's sketch set and the candidate's live text. A flush-sized
+    * batch runs on the driver in three jobs ([[nearDuplicatesBatchSketched]]);
+    * a larger one runs the distributed plan, whose per-batch I/O is also
+    * O(touched entry buckets + candidate doc buckets) — never the index,
+    * never the corpus — which is what lets [[dedupGate]] run this on EVERY
+    * ingest micro-batch. `docs` is (qid STRING, text), one row per qid;
+    * returns (qid, rowkey, jaccard) ≥ `threshold`. */
   def nearDuplicatesBatch(spark: SparkSession, rootPath: String, docs: DataFrame,
                           threshold: Double = 0.8,
                           dfCap: Int = graft.operators.Dedup.DfCap,
@@ -491,15 +486,17 @@ object IncrementalShingles {
       threshold, dfCap, scheme, maxCandidates)
 
   /** [[nearDuplicatesBatch]] over PRE-SKETCHED queries — `sk` is (qid,
-    * qs ARRAY<STRING>), the distinct sketch set per doc, SORTED ascending
-    * (`array_sort` — the [[graft.functions.SortedIntersectCount]] score
-    * contract; sorting happens once per document, the merge-scan runs
-    * once per candidate pair). The gate computes
-    * one sketch pass per batch and threads it through this probe AND the
-    * intra-batch pass; sketching here again would triple the per-batch
-    * sketch cost ([[gateDecisions]]). The checkpoint contract moves to
-    * the caller: `sk` should be materialized (localCheckpoint) since it
-    * feeds the bucket-id collect, the candidate join, and the score join.
+    * qs ARRAY<STRING>), the distinct sketch set per doc, SORTED ascending.
+    * The gate computes one sketch pass per batch and threads it through
+    * this probe AND the intra-batch pass ([[gateDecisions]]). `sk` should
+    * be materialized (localCheckpoint): both paths read it more than once.
+    *
+    * Two paths, the same rows:
+    *   - on the driver ([[probeLocal]]) when `sk` holds at most
+    *     `maxLocalRows` (qid, shingle) rows and the batch tokens' entry
+    *     rows fit the same bound — three jobs: the bounded collect of
+    *     `sk`, one collect of the entry rows, one |B| fetch;
+    *   - otherwise the distributed plan ([[probeDistributed]]).
     *
     * Short-circuit: a root with NO live entry buckets (fresh pipeline,
     * bootstrap) has no candidates by definition — answered from the
@@ -508,24 +505,153 @@ object IncrementalShingles {
     *
     * `maxCandidates` (0 = unbounded, the exact default) is the per-doc
     * probe's candidate budget in batch form: per qid, posting lists are
-    * consumed RAREST shingle first (df ascending, tok tiebreak) and a
-    * list is taken only while the ids consumed BEFORE it stay under the
-    * budget — whole lists, so each qid's candidate set is ≤ budget +
-    * dfCap and the selection is deterministic. One difference from the
-    * per-doc form, documented rather than hidden: the running count here
-    * is PRE-dedup (a windowed sum over list sizes — a distinct-count
-    * running total is not expressible as a window), so on replica-heavy
-    * states the batch form stops a list or two earlier than the per-doc
-    * form would; both bound the fetch identically and both keep the
-    * rarest (most selective) evidence first. Scores on every surviving
-    * candidate are the exact capped Jaccard either way. */
+    * consumed RAREST shingle first (df ascending, tok tiebreak in Spark's
+    * string order) and a list is taken only while the ids consumed BEFORE
+    * it stay under the budget — whole lists, so each qid's candidate set
+    * is ≤ budget + dfCap and the selection is deterministic. One
+    * difference from the per-doc form, documented rather than hidden: the
+    * running count here is PRE-dedup (the distributed plan's windowed sum
+    * over list sizes — a distinct-count running total is not expressible
+    * as a window — and the driver path keeps that sum), so on
+    * replica-heavy states the batch form stops a list or two earlier than
+    * the per-doc form would; both bound the fetch identically and both
+    * keep the rarest (most selective) evidence first. Scores on every
+    * surviving candidate are the exact capped Jaccard either way. */
   private[graft] def nearDuplicatesBatchSketched(spark: SparkSession,
       rootPath: String, sk: DataFrame, threshold: Double, dfCap: Int,
-      scheme: SketchScheme, maxCandidates: Int = 0): DataFrame = {
+      scheme: SketchScheme, maxCandidates: Int = 0,
+      maxLocalRows: Long = LocalScoreMaxRows): DataFrame = {
     requireScheme(spark, rootPath, scheme)
-    if (StateStore.liveBuckets(spark, rootPath + "/entries").isEmpty)
-      return spark.range(0).select(lit("").as("qid"), lit("").as("rowkey"),
-        lit(0.0).as("jaccard"))
+    if (!hasEntries(spark, rootPath)) return matchesFrame(spark, Nil)
+    boundedRows(sk, "qid", maxLocalRows)
+      .flatMap(rows => probeLocal(spark, rootPath, rows, threshold, dfCap, scheme,
+        maxCandidates, maxLocalRows))
+      .map(matchesFrame(spark, _))
+      .getOrElse(probeDistributed(spark, rootPath, sk, threshold, dfCap, scheme,
+        maxCandidates))
+  }
+
+  private def hasEntries(spark: SparkSession, rootPath: String): Boolean =
+    StateStore.liveBuckets(spark, rootPath + "/entries").nonEmpty
+
+  /** Probe matches (qid, rowkey, jaccard) as a local frame. */
+  private def matchesFrame(spark: SparkSession,
+                           matches: Seq[(String, String, Double)]): DataFrame =
+    IncrementalPostings.local(spark, (StructType(Seq(
+        StructField("qid", StringType), StructField("rowkey", StringType),
+        StructField("jaccard", DoubleType))),
+      matches.map { case (q, k, j) => Row(q, k, j) }.toArray))
+
+  /** The batch probe on the driver, for a collected batch `sk` of (qid,
+    * sorted distinct sketch set), one row per qid. One collect of the
+    * batch tokens' entry rows ([[IncrementalPostings.batchEntries]]),
+    * bounded by `maxRows` — None past it, and the caller runs the
+    * distributed plan. Then, on the driver, the distributed plan's steps
+    * over the same rows: df as the token's entry-row count, the `dfCap`
+    * cut, the candidates (the `maxCandidates` rule included), the exact
+    * overlap |A∩B| as the count of a candidate's entry rows among the
+    * qid's tokens (uncapped: the cap bounds candidate generation, never
+    * the score), |B| from one [[candidateSizes]] fetch, the `least(c, na,
+    * nb)` clamp of the torn-prefix window, and the Jaccard rounded like
+    * Spark's `round(x, 4)`. A candidate with no live doc scores nothing,
+    * as the distributed inner join drops it. */
+  private def probeLocal(spark: SparkSession, rootPath: String,
+      sk: Array[(String, Array[String])], threshold: Double, dfCap: Int,
+      scheme: SketchScheme, maxCandidates: Int,
+      maxRows: Long): Option[Seq[(String, String, Double)]] = {
+    import scala.collection.mutable
+    val toks = sk.iterator.flatMap(_._2).toSet
+    if (toks.isEmpty) return Some(Nil)
+    boundedCollect(IncrementalPostings.batchEntries(spark, rootPath, toks), maxRows)(
+        r => ((r.getString(0), r.getString(1)), 1))
+      .map { rows =>
+        // docs as dense ranks; per token, its posting list as one rank per
+        // entry row
+        val docRank = mutable.HashMap[String, Int]()
+        val docs = mutable.ArrayBuffer[String]()
+        val lists = mutable.HashMap[String, mutable.ArrayBuilder.ofInt]()
+        rows.foreach { case (tok, doc) =>
+          val d = docRank.getOrElseUpdate(doc, { docs += doc; docs.length - 1 })
+          lists.getOrElseUpdate(tok, new mutable.ArrayBuilder.ofInt) += d
+        }
+        val posting = lists.map { case (t, b) => t -> b.result() }
+        // the candidate lists: df = entry rows ≤ dfCap, ids distinct
+        val capped = posting.collect { case (t, ds) if ds.length <= dfCap => t -> ds.distinct }
+        // per qid, overlap counts over every posting row of its tokens
+        // (one dense array, reset through the touched list), and the
+        // (qid, candidate, c) triples
+        val c = new Array[Int](docs.length)
+        val touched = mutable.ArrayBuffer[Int]()
+        val isCand = new Array[Boolean](docs.length)
+        val pairs = sk.map { case (qid, qs) =>
+          qs.foreach(t => posting.get(t).foreach(_.foreach { d =>
+            if (c(d) == 0) touched += d
+            c(d) += 1
+          }))
+          val hits = qs.flatMap(t => capped.get(t).map(ids => (posting(t).length, t, ids)))
+          val taken =
+            if (maxCandidates <= 0) hits
+            else {
+              var consumed = 0L
+              hits.sortWith { case ((dfa, ta, _), (dfb, tb, _)) =>
+                if (dfa != dfb) dfa < dfb else IncrementalPostings.sparkStringOrder.lt(ta, tb)
+              }.takeWhile { case (_, _, ids) =>
+                val take = consumed < maxCandidates
+                consumed += ids.length
+                take
+              }
+            }
+          val cands = mutable.ArrayBuffer[(Int, Int)]()
+          taken.foreach(_._3.foreach { d =>
+            if (!isCand(d)) { isCand(d) = true; cands += d -> c(d) }
+          })
+          cands.foreach { case (d, _) => isCand(d) = false }
+          touched.foreach(c(_) = 0)
+          touched.clear()
+          (qid, qs.length.toLong, cands)
+        }
+        val candDocs = pairs.iterator.flatMap(_._3.iterator.map(p => docs(p._1))).toSet
+        val nb: Map[String, Long] =
+          if (candDocs.isEmpty) Map.empty
+          else candidateSizes(spark, rootPath, candDocs, scheme).collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+        pairs.toSeq.flatMap { case (qid, na, cands) =>
+          cands.flatMap { case (d, overlap) =>
+            nb.get(docs(d)).flatMap { b =>
+              val n = math.min(overlap.toLong, math.min(na, b))
+              val jaccard = IncrementalPostings.roundHalfUp(n.toDouble / (b + na - n).toDouble, 4)
+              if (jaccard >= threshold) Some((qid, docs(d), jaccard)) else None
+            }
+          }
+        }
+      }
+  }
+
+  /** The driver probe's |B| fetch, LAZY: (rowkey, nb) — the size of each
+    * candidate's live sketch set, one long per doc — from only the
+    * candidates' own doc buckets, the keys in a broadcast set
+    * ([[IncrementalPostings.hitDocs]]). Exposed so specs can pin its
+    * buckets. */
+  private[graft] def candidateSizes(spark: SparkSession, rootPath: String,
+      cands: Set[String], scheme: SketchScheme): DataFrame =
+    IncrementalPostings.hitDocs(spark, rootPath, cands)
+      .select(col("rowkey"),
+        size(array_distinct(scheme.sketch(col("text")))).cast("long").as("nb"))
+
+  /** The batch probe as one distributed plan — [[nearDuplicatesBatchSketched]]
+    * for a batch or an entries read past the driver bound: one shingle
+    * explode over the batch, the entries read BUCKET-PRUNED to the
+    * batch's shingles (the shingle VALUES are data, but the bucket ids
+    * they hash to are driver metadata bounded by the bucket count —
+    * [[IncrementalPostings.entryBucketDirsForFrame]], the same
+    * touched-bucket collect the merge itself runs), per-shingle df and
+    * posting list aggregated together, candidates df-capped, then the
+    * candidate rows fetched from ONLY the doc buckets the candidates
+    * hash to ([[IncrementalPostings.prunedDocsForKeys]]). */
+  private def probeDistributed(spark: SparkSession, rootPath: String,
+      sk: DataFrame, threshold: Double, dfCap: Int, scheme: SketchScheme,
+      maxCandidates: Int): DataFrame = {
+    if (!hasEntries(spark, rootPath)) return matchesFrame(spark, Nil)
     val qsh = sk.select(col("qid"), explode(col("qs")).as("tok"))
     // read twice (hit aggregation + overlap count) rather than
     // checkpointed: the pruned bucket scan is ~1 s while materializing
@@ -681,42 +807,42 @@ object IncrementalShingles {
       .groupBy("rowkey").agg(min(col("dup_of")).as("dup_of"))
   }
 
-  /** Largest survivor set, in (rowkey, shingle) rows, that the gate's
-    * `score` phase scores on the driver ([[intraBatchDropsLocal]]); a
-    * larger one (a bootstrap's `dedupWithin` over a whole corpus) runs the
-    * distributed [[intraBatchDrops]]. Measured on local[4] against a
-    * 2,000-doc state (records/SCORE_CROSSOVER.json): the driver path is
-    * faster at every size tried — 0.6 s against 2.5 s at 1k docs (53k
-    * rows), 10.6 s against 21.2 s at 16k docs (849k rows) — so the paths
-    * do not cross below 849k rows; the bound keeps a margin under that
-    * and caps the driver memory the survivors take. */
+  /** The driver bound of the gate's probe and score phases: the largest
+    * batch, in (rowkey, shingle) rows, whose state probe
+    * ([[probeLocal]]) and intra-batch score ([[intraBatchDropsLocal]])
+    * run on the driver, and the largest entries collect, in (tok, doc)
+    * rows, the probe takes there. A larger batch (a bootstrap's
+    * `dedupWithin` over a whole corpus) or a larger entries read runs the
+    * distributed plans. Measured on local[4]:
+    *   - score, against a 2,000-doc state (records/SCORE_CROSSOVER.json):
+    *     the driver path is faster at every size tried — 0.6 s against
+    *     2.5 s at 1k docs (53k rows), 10.6 s against 21.2 s at 16k docs
+    *     (849k rows);
+    *   - probe, a 1k-doc batch against growing states
+    *     (records/GATE_PROBE_CROSSOVER.json): the driver path is faster
+    *     at every size tried — 0.67 s against 2.05 s at a 500-doc state
+    *     (22k entry rows), 5.8 s against 14.6 s at 16k docs (702k rows).
+    * The bound keeps a margin under the largest sizes measured and caps
+    * the driver memory the rows take. */
   private[graft] val LocalScoreMaxRows: Long = 500000L
 
   /** The gate's `score` phase — which state-pass survivors (rowkey, qs)
-    * to drop within the batch, as (rowkey, dup_of). Each survivor is
-    * flagged as an UPDATE when its rowkey is already live in the state
-    * (a key-fetch against only the batch keys' own doc buckets). At most
+    * to drop within the batch, as (rowkey, dup_of). At most
     * `maxLocalRows` (rowkey, shingle) rows: the survivors are collected
-    * once, the flags come from the driver-keyed [[IncrementalPostings
-    * .prunedDocs]] (no bucket-id job), and the pairs are scored on the
-    * driver — two jobs. Above it: the distributed plan, checkpointed so
-    * the final decisions select — the frame the admission log's durable
-    * write executes — is a cheap join of checkpointed batch-bounded
-    * inputs, and `log_commit` measures the write, not a replay of the
-    * scoring plan. Both paths return the same rows. */
+    * once and scored on the driver ([[scoreLocal]]) — two jobs. Above it:
+    * the distributed plan, each survivor flagged as an UPDATE by a
+    * key-fetch against only the batch keys' own doc buckets, checkpointed
+    * so the final decisions select — the frame the admission log's
+    * durable write executes — is a cheap join of checkpointed
+    * batch-bounded inputs, and `log_commit` measures the write, not a
+    * replay of the scoring plan. Both paths return the same rows. */
   private[graft] def scoreSurvivors(spark: SparkSession, rootPath: String,
       survivors: DataFrame, threshold: Double, dfCap: Int,
       maxLocalRows: Long = LocalScoreMaxRows): DataFrame =
-    boundedRows(survivors, maxLocalRows) match {
+    boundedRows(survivors, "rowkey", maxLocalRows) match {
       case Some(rows) =>
-        val keys = rows.map(_._1).toSeq
-        val stored =
-          if (keys.isEmpty) Set.empty[String]
-          else IncrementalPostings.prunedDocs(spark, rootPath, keys)
-            .select("rowkey").collect().map(_.getString(0)).toSet
         import spark.implicits._
-        intraBatchDropsLocal(rows.toSeq.map { case (k, qs) => (k, qs.toSeq, stored(k)) },
-          threshold, dfCap).toDF("rowkey", "dup_of")
+        scoreLocal(spark, rootPath, rows.toSeq, threshold, dfCap).toDF("rowkey", "dup_of")
       case None =>
         val existing = IncrementalPostings
           .prunedDocsForKeys(spark, rootPath, survivors.select("rowkey"))
@@ -727,20 +853,45 @@ object IncrementalShingles {
         intraBatchDrops(flagged, threshold, dfCap).localCheckpoint()
     }
 
-  /** `df`'s (rowkey, qs) rows on the driver when their `qs` sizes total
-    * at most `maxRows`, else None — in ONE job: each partition stops
-    * shipping once its own total passes the bound, so an over-bound set
-    * moves at most (partitions × bound) shingles to the driver. */
-  private def boundedRows(df: DataFrame,
-      maxRows: Long): Option[Array[(String, Array[String])]] = {
-    val parts = df.select("rowkey", "qs").rdd.mapPartitions { it =>
+  /** The score phase on collected survivors: each one flagged as an
+    * UPDATE when its rowkey is already live in the state — the
+    * driver-keyed [[IncrementalPostings.prunedDocs]], one job, none when
+    * there are no survivors — then [[intraBatchDropsLocal]]. */
+  private def scoreLocal(spark: SparkSession, rootPath: String,
+      rows: Seq[(String, Array[String])], threshold: Double,
+      dfCap: Int): Seq[(String, String)] = {
+    val keys = rows.map(_._1)
+    val stored =
+      if (keys.isEmpty) Set.empty[String]
+      else IncrementalPostings.prunedDocs(spark, rootPath, keys)
+        .select("rowkey").collect().map(_.getString(0)).toSet
+    intraBatchDropsLocal(rows.map { case (k, qs) => (k, qs.toSeq, stored(k)) },
+      threshold, dfCap)
+  }
+
+  /** `df`'s (key, qs) rows on the driver when their `qs` sizes total at
+    * most `maxRows`, else None ([[boundedCollect]]). */
+  private def boundedRows(df: DataFrame, key: String,
+      maxRows: Long): Option[Array[(String, Array[String])]] =
+    boundedCollect(df.select(key, "qs"), maxRows) { r =>
+      val qs = if (r.isNullAt(1)) Array.empty[String] else r.getSeq[String](1).toArray
+      ((r.getString(0), qs), qs.length)
+    }
+
+  /** `df`'s rows, each read into a value and its weight by `read`, on the
+    * driver when the weights total at most `maxRows`, else None — in ONE
+    * job: each partition stops shipping once its own total passes the
+    * bound, so an over-bound frame moves at most (partitions × bound)
+    * weight to the driver. */
+  private def boundedCollect[T: scala.reflect.ClassTag](df: DataFrame, maxRows: Long)(
+      read: Row => (T, Int)): Option[Array[T]] = {
+    val parts = df.rdd.mapPartitions { it =>
       var n = 0L
-      val out = Array.newBuilder[(String, Array[String])]
+      val out = Array.newBuilder[T]
       while (it.hasNext && n <= maxRows) {
-        val r = it.next()
-        val qs = if (r.isNullAt(1)) Array.empty[String] else r.getSeq[String](1).toArray
-        n += qs.length
-        out += ((r.getString(0), qs))
+        val (v, w) = read(it.next())
+        n += w
+        out += v
       }
       Iterator.single((n, out.result()))
     }.collect()
@@ -858,11 +1009,11 @@ object IncrementalShingles {
                     maxCandidates: Int = 0,
                     clock: PhaseClock = new PhaseClock): DataFrame =
     gateDecisionsBody(spark, rootPath, batch, threshold, scheme,
-      maxCandidates, clock)
+      maxCandidates, clock, LocalScoreMaxRows)
 
   /** Execution settings for the gate's SKETCH action (round-18, guide
-    * §1.2 order: measured before changed). Interleaved GateProbe A/Bs at
-    * three scopes:
+    * §1.2 order: measured before changed). Interleaved A/Bs of a
+    * multi-batch ingest sample at three scopes:
     *   - whole gate: sketch 2.6→1.1 s/5 batches, probe neutral, score
     *     6.7→20.5/23.9 s — AQE's runtime join replanning is LOAD-BEARING
     *     in the intra-batch scoring pass, so AQE stays on there;
@@ -893,19 +1044,25 @@ object IncrementalShingles {
   private val sketchSessions = new java.util.concurrent.ConcurrentHashMap[
     org.apache.spark.SparkContext, SparkSession]()
 
-  private def gateDecisionsBody(spark: SparkSession, rootPath: String,
+  /** [[gateDecisions]] with its driver bound: a batch of at most
+    * `maxLocalRows` (rowkey, shingle) rows — a flush — whose tokens' entry
+    * rows fit the same bound is probed, scored and decided on the driver
+    * ([[probeLocal]], [[scoreLocal]]), and the decisions are a local
+    * frame; otherwise the distributed plans run. Both give the same
+    * decisions. */
+  private[graft] def gateDecisionsBody(spark: SparkSession, rootPath: String,
                     batch: DataFrame, threshold: Double,
                     scheme: SketchScheme, maxCandidates: Int,
-                    clock: PhaseClock): DataFrame = {
+                    clock: PhaseClock, maxLocalRows: Long): DataFrame = {
     val puts = batch.filter(col("op") =!= "delete")
     // document granularity first: the latest event per rowkey is what the
     // merge would keep, so it alone decides admission for the rowkey.
     // The sketch set is computed HERE, once — the state probe, the
     // intra-batch pass, and the score join all read the same
     // materialized arrays (sketching used to run three times per gate)
-    // Phase attribution (`clock`): the per-stage localCheckpoints below
-    // are eager, so each phase's wall time is REAL when it runs —
-    // `sketch` (latest-event dedup + sketch arrays), `probe` (the
+    // Phase attribution (`clock`): each phase ends in a collect or an
+    // eager localCheckpoint, so each phase's wall time is REAL when it
+    // runs — `sketch` (latest-event dedup + sketch arrays), `probe` (the
     // bucket-pruned state probe + survivor set), `score` (the
     // update-flag key fetch + intra-batch pair scoring). The default
     // clock is a discarded accumulator — zero behavior change for
@@ -915,16 +1072,65 @@ object IncrementalShingles {
         .agg(max_by(col("text"), col("event_id")).as("text"))
         .select(col("rowkey"),
           array_sort(array_distinct(scheme.sketch(col("text")))).as("qs"))))
-    // a put whose only near-dup is its OWN stored version is an UPDATE,
-    // not a duplicate — qid = rowkey matches must not gate it out, or
-    // every minor edit to an existing document would be silently lost
+    val onDriver = clock.time("probe") {
+      requireScheme(spark, rootPath, scheme)
+      boundedRows(latest, "rowkey", maxLocalRows).flatMap { rows =>
+        (if (hasEntries(spark, rootPath))
+          probeLocal(spark, rootPath, rows, threshold, scheme.dfCap, scheme,
+            maxCandidates, maxLocalRows)
+        else Some(Nil)).map(rows -> _)
+      }
+    }
+    onDriver match {
+      case Some((rows, matches)) =>
+        decideLocal(spark, rootPath, rows.toSeq, matches, threshold, scheme.dfCap, clock)
+      case None =>
+        decideDistributed(spark, rootPath, latest, threshold, scheme,
+          maxCandidates, clock, maxLocalRows)
+    }
+  }
+
+  /** The gate's verdicts from a driver probe's `matches` over the batch
+    * `rows`: per rowkey the best stored match other than itself (a put
+    * whose only near-dup is its OWN stored version is an UPDATE, not a
+    * duplicate) — the highest Jaccard, the smallest rowkey in Spark's
+    * string order on ties, as the distributed `min_by` picks it — then
+    * the survivors scored on the driver, and the decisions as a local
+    * frame the admission log's write reads with no plan behind it. */
+  private def decideLocal(spark: SparkSession, rootPath: String,
+      rows: Seq[(String, Array[String])], matches: Seq[(String, String, Double)],
+      threshold: Double, dfCap: Int, clock: PhaseClock): DataFrame = {
+    val best: Map[String, String] = clock.time("probe")(
+      matches.filter { case (qid, key, _) => qid != key }
+        .groupMapReduce(_._1)(m => (m._2, m._3)) { case (a @ (ka, ja), b @ (kb, jb)) =>
+          if (ja != jb) { if (ja > jb) a else b }
+          else if (IncrementalPostings.sparkStringOrder.lteq(ka, kb)) a else b
+        }
+        .map { case (qid, (key, _)) => qid -> key })
+    val drops = clock.time("score")(
+      scoreLocal(spark, rootPath, rows.filterNot(r => best.contains(r._1)),
+        threshold, dfCap)).toMap
+    IncrementalPostings.local(spark, (StructType(Seq("rowkey", "verdict", "dup_of")
+        .map(StructField(_, StringType))),
+      rows.map { case (key, _) =>
+        best.get(key).map(Row(key, "state_dup", _))
+          .orElse(drops.get(key).map(Row(key, "batch_dup", _)))
+          .getOrElse(Row(key, "admitted", null))
+      }.toArray))
+  }
+
+  /** The gate's verdicts through the distributed plans — a batch past the
+    * driver bound. */
+  private def decideDistributed(spark: SparkSession, rootPath: String,
+      latest: DataFrame, threshold: Double, scheme: SketchScheme,
+      maxCandidates: Int, clock: PhaseClock, maxLocalRows: Long): DataFrame = {
     // min_by over (-jaccard, rowkey) is deterministic: the logged dup_of
     // must not depend on aggregation order (the crash-replay spec
     // compares two independently computed decision sets)
     // checkpointed: dupBest feeds BOTH the survivor anti-join and the
     // final decisions select — without it the whole state probe (the
     // batch's most expensive plan) executes twice per gate
-    val dupBest = clock.time("probe")(nearDuplicatesBatchSketched(spark, rootPath,
+    val dupBest = clock.time("probe")(probeDistributed(spark, rootPath,
         latest.select(col("rowkey").as("qid"), col("qs")), threshold,
         scheme.dfCap, scheme, maxCandidates)
       .filter(col("qid") =!= col("rowkey"))
@@ -940,7 +1146,7 @@ object IncrementalShingles {
     val survivors = clock.time("probe")(
       latest.join(dupBest, Seq("rowkey"), "left_anti").localCheckpoint())
     val drops = clock.time("score")(
-      scoreSurvivors(spark, rootPath, survivors, threshold, scheme.dfCap))
+      scoreSurvivors(spark, rootPath, survivors, threshold, scheme.dfCap, maxLocalRows))
     latest.select("rowkey")
       .join(dupBest.withColumnRenamed("dup_of", "s_dup_of")
         .withColumn("state_dup", lit(true)), Seq("rowkey"), "left_outer")

@@ -451,13 +451,22 @@ class IncrementalShinglesSpec extends SparkSpec {
     for (f <- entryFiles)
       assert(wantedEntry.exists(b => f.contains(s"/$b/")),
         s"batch probe read an entry file outside the batch's shingle buckets: $f")
-    // ... and the probe frame's own lineage opens only TWO pruned file
-    // sets: the candidates' doc buckets (doc 1 is the only candidate —
-    // the |B| size fetch) and the batch shingles' entry buckets (the
-    // overlap count re-reads them; candidate GENERATION consumed its own
-    // read into the checkpointed pair set). Nothing unpruned anywhere.
-    val probeFiles = IncrementalShingles.nearDuplicatesBatch(spark, root,
-      arrivals.toDF("qid", "text"), threshold = 0.5).inputFiles
+    // ... and the distributed probe frame's own lineage opens only TWO
+    // pruned file sets: the candidates' doc buckets (doc 1 is the only
+    // candidate — the |B| size fetch) and the batch shingles' entry
+    // buckets (the overlap count re-reads them; candidate GENERATION
+    // consumed its own read into the checkpointed pair set). Nothing
+    // unpruned anywhere. (maxLocalRows = 0 forces the distributed plan;
+    // this batch would run on the driver.)
+    val sketched = arrivals.toDF("qid", "text")
+      .select(col("qid"), array_sort(array_distinct(
+        IncrementalShingles.WordShingles.sketch(col("text")))).as("qs"))
+      .localCheckpoint()
+    val distributed = IncrementalShingles.nearDuplicatesBatchSketched(spark, root,
+      sketched, 0.5, Dedup.DfCap, IncrementalShingles.WordShingles, maxLocalRows = 0L)
+    assert(distributed.collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+      .toSet === got)
+    val probeFiles = distributed.inputFiles
     val wantedDoc = Set(bucketOf("1"))
     assert(probeFiles.count(_.contains("/docs/")) > 0)
     for (f <- probeFiles.filter(_.contains("/docs/")))
@@ -473,6 +482,24 @@ class IncrementalShinglesSpec extends SparkSpec {
     for (f <- probeFiles)
       assert(f.contains("/docs/") || f.contains("/entries/"),
         s"batch probe read a file outside the two pruned state sets: $f")
+    // the driver path (this batch's) answers with a local frame, and the
+    // two frames it collects keep the same pruning: the batch tokens'
+    // entry rows from only their own buckets, the |B| fetch from only
+    // the candidates' doc buckets
+    assert(IncrementalShingles.nearDuplicatesBatch(spark, root,
+      arrivals.toDF("qid", "text"), threshold = 0.5).inputFiles.isEmpty)
+    val driverEntryFiles = graft.streaming.IncrementalPostings
+      .batchEntries(spark, root, batchShingles.toSet).inputFiles
+    assert(driverEntryFiles.nonEmpty)
+    for (f <- driverEntryFiles)
+      assert(f.contains("/entries/") && wantedEntry.exists(b => f.contains(s"/$b/")),
+        s"the driver probe's entries collect read outside the batch's shingle buckets: $f")
+    val sizeFiles = IncrementalShingles.candidateSizes(spark, root, Set("1"),
+      IncrementalShingles.WordShingles).inputFiles
+    assert(sizeFiles.nonEmpty)
+    for (f <- sizeFiles)
+      assert(f.contains("/docs/") && wantedDoc.exists(b => f.contains(s"/$b/")),
+        s"the driver probe's |B| fetch read outside the candidates' doc buckets: $f")
     // the admission gate: the dup'd put is dropped, the novel put and the
     // delete pass through unchanged
     val batch = Seq(
@@ -936,6 +963,133 @@ class IncrementalShinglesSpec extends SparkSpec {
     assert(local === Set(("0", "5"), ("9", "5"), ("n", "m")), local)
     assert(localJobs <= 2, s"driver path ran $localJobs jobs")
     assert(distributedJobs > 2, s"distributed path ran only $distributedJobs jobs")
+  }
+
+  // ---- the gate's state probe on the driver ----
+
+  test("driver and distributed gate probes decide alike: thresholds, budgets, updates, deletes, dfCap edges, non-BMP keys, a UTF-8 tie") {
+    import SparkSpec.clue
+    val root = Files.createTempDirectory("graft_shingP").toString + "/shingles"
+    val rnd = new scala.util.Random(20261020)
+    val vocab = (1 to 9).map(i => s"w$i")
+    def words(n: Int): String = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    // keys past the BMP and keys whose UTF-16 order differs from their
+    // UTF-8 byte order (a supplementary character sorts BEFORE
+    // U+E000..U+FFFF in UTF-16, after them in UTF-8)
+    val odd = Seq("\uD83D\uDE00", "\uD83D\uDE00a", "\uD835\uDD38", "\uFF61", "\uE000", "\u00e9")
+    val keys = odd ++ (0 until 230).map(i => s"k$i")
+    val text = keys.map(k => k -> words(4 + rnd.nextInt(6))).toMap
+    val dfCap = IncrementalShingles.WordShingles.dfCap
+    // one-shingle docs: "ea eb ec" stored dfCap times, a candidate list
+    // whose every doc scores 1.0 against a copy; "oa ob oc" stored
+    // dfCap + 1 times, over the cap, so a copy finds no candidate
+    val atCap = (0 until dfCap).map(i => DocChange(s"e$i", 500L + i, "put", "ea eb ec"))
+    val overCap = (0 to dfCap).map(i => DocChange(s"o$i", 800L + i, "put", "oa ob oc"))
+    // the tie: two stored docs with one text, keyed so that UTF-16 and
+    // UTF-8 order disagree about which is smaller
+    val tieText = "tie alpha beta gamma delta epsilon"
+    merge(root, keys.zipWithIndex.map { case (k, i) =>
+      DocChange(k, i.toLong, "put",
+        if (k == "\uFF61" || k == "\uD83D\uDE00") tieText else text(k))
+    } ++ atCap ++ overCap: _*)
+    // a second flush: updates and deletes, so the state holds tombstones
+    merge(root,
+      DocChange("k0", 1100, "delete", ""),
+      DocChange("k1", 1101, "delete", ""),
+      DocChange("k2", 1102, "put", words(7)),
+      DocChange("\uD835\uDD38", 1103, "put", text("k3")))
+    val stored = keys.filterNot(Set("k0", "k1", "k2", "\uFF61", "\uD83D\uDE00"))
+    // the batch: exact and near copies of stored texts under new keys,
+    // updates of stored keys (near their own text), a put to a deleted
+    // key, deletes, novel docs, and copies of the at-cap and over-cap
+    // docs
+    val batch = (0 until 120).flatMap { i =>
+      val src = stored(rnd.nextInt(stored.size))
+      rnd.nextInt(7) match {
+        case 0 => Seq(DocChange("n" + i, 2000L + i, "put", text(src)))
+        case 1 => Seq(DocChange("n" + i, 2000L + i, "put", text(src) + " " + words(2)))
+        case 2 => Seq(DocChange(src, 2000L + i, "put", text(src) + " " + words(1)))
+        case 3 => Seq(DocChange("\uD83D\uDE03" + i, 2000L + i, "put", "ea eb ec"))
+        case 4 => Seq(DocChange("m" + i, 2000L + i, "put", "oa ob oc"))
+        case 5 => Seq(DocChange("d" + i, 2000L + i, "delete", ""))
+        case _ => Seq(DocChange("x" + i, 2000L + i, "put", words(3 + rnd.nextInt(8))))
+      }
+    } ++ Seq(
+      DocChange("k1", 3000, "put", text("k1")),
+      DocChange("tie", 3001, "put", tieText),
+      DocChange("k5", 3002, "delete", ""))
+    val batchDf = batch.toDF().localCheckpoint()
+    def decisions(threshold: Double, budget: Int, maxLocalRows: Long): Map[String, (String, String)] =
+      IncrementalShingles.gateDecisionsBody(spark, root, batchDf, threshold,
+          IncrementalShingles.WordShingles, budget, new graft.streaming.PhaseClock, maxLocalRows)
+        .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    for (threshold <- Seq(0.3, 0.6, 0.9); budget <- Seq(0, 3)) {
+      val onDriver = decisions(threshold, budget, IncrementalShingles.LocalScoreMaxRows)
+      val distributed = decisions(threshold, budget, 0L)
+      assert(onDriver === distributed,
+        clue(s"threshold $threshold, budget $budget: driver ${onDriver.toSeq.sorted} " +
+          s"distributed ${distributed.toSeq.sorted}"))
+      assert(onDriver("tie") === ("state_dup", "\uFF61"),
+        clue(s"the tie goes to the UTF-8-smaller key: ${onDriver("tie")}"))
+      if (threshold == 0.3)
+        assert(onDriver.values.map(_._1).toSet === Set("admitted", "state_dup", "batch_dup"),
+          clue(onDriver.values.map(_._1).toSet))
+    }
+  }
+
+  test("the batch probe answers a flush-sized batch in at most 3 Spark jobs") {
+    val root = Files.createTempDirectory("graft_shingJ").toString + "/shingles"
+    val rnd = new scala.util.Random(7)
+    val vocab = (1 to 31).map(i => s"v$i")
+    def doc(): String = Seq.fill(10 + rnd.nextInt(60))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val stored = (0 until 300).map(_ => doc())
+    merge(root, stored.zipWithIndex.map { case (t, i) => DocChange(s"s$i", i.toLong, "put", t) }: _*)
+    // 1,000 arrivals, a tenth of them copies of stored docs
+    val arrivals = (0 until 1000).map(i =>
+      (s"q$i", if (i % 10 == 0) stored(i / 10) else doc())).toDF("qid", "text")
+    val sk = arrivals.select(col("qid"), array_sort(array_distinct(
+        IncrementalShingles.WordShingles.sketch(col("text")))).as("qs"))
+      .localCheckpoint()
+    def probe(maxLocalRows: Long): (Set[(String, String, Double)], Int) = {
+      var out = Set.empty[(String, String, Double)]
+      val jobs = SpecMetrics.jobsRun(spark) {
+        out = IncrementalShingles.nearDuplicatesBatchSketched(spark, root, sk, 0.2,
+            Dedup.DfCap, IncrementalShingles.WordShingles, maxLocalRows = maxLocalRows)
+          .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+      }
+      (out, jobs)
+    }
+    val (onDriver, driverJobs) = probe(IncrementalShingles.LocalScoreMaxRows)
+    val (distributed, distributedJobs) = probe(0L)
+    assert(onDriver.nonEmpty && onDriver === distributed)
+    assert(driverJobs <= 3, s"the driver probe ran $driverJobs jobs")
+    assert(distributedJobs > 3, s"the distributed probe ran only $distributedJobs jobs")
+  }
+
+  test("the df sidecar equals the entries' row count for every token after flushes with updates and deletes") {
+    import graft.streaming.IncrementalPostings
+    val root = Files.createTempDirectory("graft_shdfc").toString + "/shingles"
+    val rnd = new scala.util.Random(11)
+    val vocab = (1 to 8).map(i => s"t$i")
+    def doc(): String = Seq.fill(3 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    merge(root, (0 until 40).map(i => DocChange(s"r$i", i.toLong, "put", doc())): _*)
+    IncrementalShingles.enableDfSidecar(spark, root)
+    for (flush <- 1 to 3) {
+      val base = 100L * flush
+      merge(root, (0 until 30).map { i =>
+        val k = s"r${rnd.nextInt(50)}"
+        if (rnd.nextInt(3) == 0) DocChange(k, base + i, "delete", "")
+        else DocChange(k, base + i, "put", doc())
+      }: _*)
+      // the driver probe's df: entry rows per token, over every token
+      // either side knows
+      val toks = sidecarMap(root).keySet ++ vocabMap(root).keySet
+      val rowCounts = IncrementalPostings.batchEntries(spark, root, toks)
+        .groupBy("tok").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(rowCounts.nonEmpty)
+      assert(sidecarMap(root) === rowCounts, s"flush $flush")
+    }
   }
 
 }

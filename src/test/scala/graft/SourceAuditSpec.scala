@@ -47,6 +47,32 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(reads.isEmpty, reads.mkString("schema-merging reads:\n", "\n", ""))
   }
 
+  test("no spec source holds an unpaired surrogate escape") {
+    // sbt's forked test runner loses every later result once a report
+    // holds a lone UTF-16 surrogate, and a clue quoting a string literal
+    // is where one gets in. A high-surrogate escape must be followed at
+    // once by a low one, and a low one preceded at once by a high one.
+    // (The pattern is spelled so that this file holds no such escape.)
+    val escape = ("\\\\" + "u+([0-9a-fA-F]{4})").r
+    val root = new File("src/test/scala")
+    assert(root.isDirectory, s"run from the project root (no ${root.getAbsolutePath})")
+    val lone = for {
+      f <- sources(root)
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
+      units = escape.findAllMatchIn(line).map(m =>
+        (m.start, m.end, Integer.parseInt(m.group(1), 16).toChar)).toIndexedSeq
+      (start, end, c) <- units
+      paired =
+        if (Character.isHighSurrogate(c))
+          units.exists(u => u._1 == end && Character.isLowSurrogate(u._3))
+        else if (Character.isLowSurrogate(c))
+          units.exists(u => u._2 == start && Character.isHighSurrogate(u._3))
+        else true
+      if !paired
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(lone.isEmpty, lone.mkString("unpaired surrogate escapes:\n", "\n", ""))
+  }
+
   test("only StateStore places keys in buckets and writes bucket dirs") {
     // One bucket layout: a second placement hash or bucket writer would
     // let a store's writes and its key-addressed reads disagree on where

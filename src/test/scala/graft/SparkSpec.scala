@@ -15,6 +15,20 @@ object SparkSpec {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   spark.sparkContext.setLogLevel("ERROR")
+
+  /** `x` for an assertion clue, every code point beyond the BMP and every
+    * unpaired surrogate written as `<U+hex>`: sbt's forked test runner
+    * loses every later result when a report holds a lone surrogate, so
+    * specs whose keys go past the BMP print them through this. */
+  def clue(x: Any): String = {
+    val s = String.valueOf(x)
+    val out = new StringBuilder
+    s.codePoints().forEach { cp =>
+      if (cp > 0xFFFF || Character.isSurrogate(cp.toChar)) out ++= f"<U+$cp%04X>"
+      else out += cp.toChar
+    }
+    out.result()
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
