@@ -554,14 +554,15 @@ object IncrementalShingles {
     * the score), |B| from one [[candidateSizes]] fetch, the `least(c, na,
     * nb)` clamp of the torn-prefix window, and the Jaccard rounded like
     * Spark's `round(x, 4)`. A candidate with no live doc scores nothing,
-    * as the distributed inner join drops it. */
+    * as the distributed inner join drops it. No tokens or no live entry
+    * buckets: no matches, and no job. */
   private def probeLocal(spark: SparkSession, rootPath: String,
       sk: Array[(String, Array[String])], threshold: Double, dfCap: Int,
       scheme: SketchScheme, maxCandidates: Int,
       maxRows: Long): Option[Seq[(String, String, Double)]] = {
     import scala.collection.mutable
     val toks = sk.iterator.flatMap(_._2).toSet
-    if (toks.isEmpty) return Some(Nil)
+    if (toks.isEmpty || !hasEntries(spark, rootPath)) return Some(Nil)
     boundedCollect(IncrementalPostings.batchEntries(spark, rootPath, toks), maxRows)(
         r => ((r.getString(0), r.getString(1)), 1))
       .map { rows =>
@@ -1074,12 +1075,9 @@ object IncrementalShingles {
           array_sort(array_distinct(scheme.sketch(col("text")))).as("qs"))))
     val onDriver = clock.time("probe") {
       requireScheme(spark, rootPath, scheme)
-      boundedRows(latest, "rowkey", maxLocalRows).flatMap { rows =>
-        (if (hasEntries(spark, rootPath))
-          probeLocal(spark, rootPath, rows, threshold, scheme.dfCap, scheme,
-            maxCandidates, maxLocalRows)
-        else Some(Nil)).map(rows -> _)
-      }
+      boundedRows(latest, "rowkey", maxLocalRows).flatMap(rows =>
+        probeLocal(spark, rootPath, rows, threshold, scheme.dfCap, scheme,
+          maxCandidates, maxLocalRows).map(rows -> _))
     }
     onDriver match {
       case Some((rows, matches)) =>
