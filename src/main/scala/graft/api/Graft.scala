@@ -244,8 +244,10 @@ class Graft(spark: SparkSession, dir: String,
                            threshold: Double = 0.8): DataFrame =
     IncrementalShingles.nearDuplicatesChar(spark, rootPath, text, threshold)
 
-  /** Batch form of [[nearDuplicatesOf]]: `docs` is (qid STRING, text) —
-    * one job probes the maintained state for the whole batch. */
+  /** Batch form of [[nearDuplicatesOf]]: `docs` is (qid STRING, text),
+    * one row per qid, and the whole batch probes the maintained state at
+    * once. Rows with a null qid are dropped; a qid on more than one row
+    * fails the call with an IllegalArgumentException. */
   def nearDuplicatesOfBatch(rootPath: String, docs: DataFrame,
                             threshold: Double = 0.8,
                             maxCandidates: Int = 0): DataFrame =

@@ -664,10 +664,20 @@ object IncrementalPostings {
     * buckets. */
   private[graft] def batchEntries(spark: SparkSession, rootPath: String,
                                   toks: Set[String]): DataFrame =
-    readEntries(spark, rootPath,
-        StateStore.bucketDirsFor(spark, rootPath + "/entries", toks.toSeq))
+    batchEntries(spark, rootPath, toks, entryDirsFor(spark, rootPath, toks))
+
+  /** [[batchEntries]] over entry bucket dirs `dirs` the caller resolved
+    * with [[entryDirsFor]]. */
+  private[graft] def batchEntries(spark: SparkSession, rootPath: String,
+                                  toks: Set[String], dirs: Seq[String]): DataFrame =
+    readEntries(spark, rootPath, dirs)
       .filter(memberOf(spark, toks)(col("tok")))
       .select("tok", "doc_id")
+
+  /** The live entry bucket dirs `toks` hash to, resolved on the driver. */
+  private[graft] def entryDirsFor(spark: SparkSession, rootPath: String,
+                                  toks: Set[String]): Seq[String] =
+    StateStore.bucketDirsFor(spark, rootPath + "/entries", toks.toSeq)
 
   /** The live rows of the doc buckets `rowkeys` hash to, resolved on the
     * driver — the scan both keyed fetches filter. */

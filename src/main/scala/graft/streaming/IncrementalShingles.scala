@@ -472,8 +472,10 @@ object IncrementalShingles {
     * a larger one runs the distributed plan, whose per-batch I/O is also
     * O(touched entry buckets + candidate doc buckets) — never the index,
     * never the corpus — which is what lets [[dedupGate]] run this on EVERY
-    * ingest micro-batch. `docs` is (qid STRING, text), one row per qid;
-    * returns (qid, rowkey, jaccard) ≥ `threshold`. */
+    * ingest micro-batch. `docs` is (qid STRING, text), one row per qid:
+    * rows with a null qid are dropped, and a qid on two rows fails the
+    * call with an IllegalArgumentException, whichever path runs. Returns
+    * (qid, rowkey, jaccard) ≥ `threshold`. */
   def nearDuplicatesBatch(spark: SparkSession, rootPath: String, docs: DataFrame,
                           threshold: Double = 0.8,
                           dfCap: Int = graft.operators.Dedup.DfCap,
@@ -491,17 +493,20 @@ object IncrementalShingles {
     * this probe AND the intra-batch pass ([[gateDecisions]]). `sk` should
     * be materialized (localCheckpoint): both paths read it more than once.
     *
-    * Two paths, the same rows:
+    * Two paths, the same rows, chosen by [[probeOnDriver]]:
     *   - on the driver ([[probeLocal]]) when `sk` holds at most
-    *     `maxLocalRows` (qid, shingle) rows and the batch tokens' entry
-    *     rows fit the same bound — three jobs: the bounded collect of
-    *     `sk`, one collect of the entry rows, one |B| fetch;
-    *   - otherwise the distributed plan ([[probeDistributed]]).
+    *     `maxLocalRows` (qid, shingle) rows and the entry buckets its
+    *     tokens hash to hold at most `maxEntryRows` rows — three jobs:
+    *     the bounded collect of `sk`, one collect of the entry rows, one
+    *     |B| fetch; one job, the collect of `sk`, when the root holds no
+    *     live entry bucket;
+    *   - otherwise the distributed plan ([[probeDistributed]]), or no
+    *     job past the bounded collect when the root holds no entry.
     *
-    * Short-circuit: a root with NO live entry buckets (fresh pipeline,
-    * bootstrap) has no candidates by definition — answered from the
-    * bucket listing alone, no jobs, which is what keeps the first
-    * batches of a new pipeline gate-overhead-free.
+    * Null qids are dropped; a repeated qid throws on either path (the
+    * driver path finds it in the collected rows, the distributed one
+    * with one aggregate job), since the two would score its rows
+    * differently.
     *
     * `maxCandidates` (0 = unbounded, the exact default) is the per-doc
     * probe's candidate budget in batch form: per qid, posting lists are
@@ -520,19 +525,52 @@ object IncrementalShingles {
   private[graft] def nearDuplicatesBatchSketched(spark: SparkSession,
       rootPath: String, sk: DataFrame, threshold: Double, dfCap: Int,
       scheme: SketchScheme, maxCandidates: Int = 0,
-      maxLocalRows: Long = LocalScoreMaxRows): DataFrame = {
+      maxLocalRows: Long = LocalScoreMaxRows,
+      maxEntryRows: Long = LocalProbeMaxEntryRows): DataFrame = {
     requireScheme(spark, rootPath, scheme)
-    if (!hasEntries(spark, rootPath)) return matchesFrame(spark, Nil)
-    boundedRows(sk, "qid", maxLocalRows)
-      .flatMap(rows => probeLocal(spark, rootPath, rows, threshold, dfCap, scheme,
-        maxCandidates, maxLocalRows))
-      .map(matchesFrame(spark, _))
-      .getOrElse(probeDistributed(spark, rootPath, sk, threshold, dfCap, scheme,
-        maxCandidates))
+    val stored = hasEntries(spark, rootPath)
+    val keyed = sk.filter(col("qid").isNotNull)
+    probeOnDriver(spark, rootPath, keyed, "qid", stored, threshold, dfCap, scheme,
+        maxCandidates, maxLocalRows, maxEntryRows) match {
+      case Some((rows, matches)) =>
+        val seen = scala.collection.mutable.HashSet[String]()
+        requireOneRowPerQid(rows.iterator.map(_._1).find(!seen.add(_)))
+        matchesFrame(spark, matches)
+      case None =>
+        requireOneRowPerQid(keyed.groupBy("qid").count().filter(col("count") > 1)
+          .select("qid").limit(1).collect().headOption.map(_.getString(0)))
+        if (stored) probeDistributed(spark, rootPath, keyed, threshold, dfCap, scheme,
+          maxCandidates)
+        else matchesFrame(spark, Nil)
+    }
   }
 
+  private def requireOneRowPerQid(repeated: Option[String]): Unit =
+    repeated.foreach(q => throw new IllegalArgumentException(
+      s"nearDuplicatesBatch takes one row per qid; qid '$q' is on more than one"))
+
+  /** Whether the root holds a live entry bucket: without one no batch
+    * has a candidate, and neither probe reads the state. */
   private def hasEntries(spark: SparkSession, rootPath: String): Boolean =
     StateStore.liveBuckets(spark, rootPath + "/entries").nonEmpty
+
+  /** The batch probe's path choice, one place for [[nearDuplicatesBatchSketched]]
+    * and the gate: `sk`'s (key, qs) rows collected under `maxRows`
+    * ([[boundedRows]]), then their matches from [[probeLocal]] under
+    * `maxEntryRows` — none, and no further job, when the root holds no
+    * entry (`stored` false). Returns the collected rows with their
+    * matches, or None when the batch or its tokens' entry buckets pass
+    * their bound and the caller must run the distributed plan. */
+  private def probeOnDriver(spark: SparkSession, rootPath: String, sk: DataFrame,
+      key: String, stored: Boolean, threshold: Double, dfCap: Int,
+      scheme: SketchScheme, maxCandidates: Int,
+      maxRows: Long, maxEntryRows: Long
+  ): Option[(Array[(String, Array[String])], Seq[(String, String, Double)])] =
+    boundedRows(sk, key, maxRows).flatMap { rows =>
+      if (!stored) Some(rows -> Nil)
+      else probeLocal(spark, rootPath, rows, threshold, dfCap, scheme, maxCandidates,
+        maxEntryRows).map(rows -> _)
+    }
 
   /** Probe matches (qid, rowkey, jaccard) as a local frame. */
   private def matchesFrame(spark: SparkSession,
@@ -544,9 +582,11 @@ object IncrementalShingles {
 
   /** The batch probe on the driver, for a collected batch `sk` of (qid,
     * sorted distinct sketch set), one row per qid. One collect of the
-    * batch tokens' entry rows ([[IncrementalPostings.batchEntries]]),
-    * bounded by `maxRows` — None past it, and the caller runs the
-    * distributed plan. Then, on the driver, the distributed plan's steps
+    * batch tokens' entry rows ([[IncrementalPostings.batchEntries]]) when
+    * the entry buckets it reads hold at most `maxRows` rows by their
+    * parquet footers ([[StateStore.bucketRows]]: no job, and the collect
+    * cannot pass it); None otherwise, before any read, and the caller
+    * runs the distributed plan. Then, on the driver, the distributed plan's steps
     * over the same rows: df as the token's entry-row count, the `dfCap`
     * cut, the candidates (the `maxCandidates` rule included), the exact
     * overlap |A∩B| as the count of a candidate's entry rows among the
@@ -554,17 +594,19 @@ object IncrementalShingles {
     * the score), |B| from one [[candidateSizes]] fetch, the `least(c, na,
     * nb)` clamp of the torn-prefix window, and the Jaccard rounded like
     * Spark's `round(x, 4)`. A candidate with no live doc scores nothing,
-    * as the distributed inner join drops it. No tokens or no live entry
-    * buckets: no matches, and no job. */
+    * as the distributed inner join drops it. No tokens: no matches, and
+    * no job. The caller has checked that the root holds entries. */
   private def probeLocal(spark: SparkSession, rootPath: String,
       sk: Array[(String, Array[String])], threshold: Double, dfCap: Int,
       scheme: SketchScheme, maxCandidates: Int,
       maxRows: Long): Option[Seq[(String, String, Double)]] = {
     import scala.collection.mutable
     val toks = sk.iterator.flatMap(_._2).toSet
-    if (toks.isEmpty || !hasEntries(spark, rootPath)) return Some(Nil)
-    boundedCollect(IncrementalPostings.batchEntries(spark, rootPath, toks), maxRows)(
-        r => ((r.getString(0), r.getString(1)), 1))
+    if (toks.isEmpty) return Some(Nil)
+    val dirs = IncrementalPostings.entryDirsFor(spark, rootPath, toks)
+    if (StateStore.bucketRows(spark, rootPath + "/entries", dirs) > maxRows) return None
+    Some(IncrementalPostings.batchEntries(spark, rootPath, toks, dirs).collect()
+        .map(r => (r.getString(0), r.getString(1))))
       .map { rows =>
         // docs as dense ranks; per token, its posting list as one rank per
         // entry row
@@ -648,11 +690,11 @@ object IncrementalShingles {
     * touched-bucket collect the merge itself runs), per-shingle df and
     * posting list aggregated together, candidates df-capped, then the
     * candidate rows fetched from ONLY the doc buckets the candidates
-    * hash to ([[IncrementalPostings.prunedDocsForKeys]]). */
+    * hash to ([[IncrementalPostings.prunedDocsForKeys]]). The caller has
+    * checked that the root holds entries. */
   private def probeDistributed(spark: SparkSession, rootPath: String,
       sk: DataFrame, threshold: Double, dfCap: Int, scheme: SketchScheme,
       maxCandidates: Int): DataFrame = {
-    if (!hasEntries(spark, rootPath)) return matchesFrame(spark, Nil)
     val qsh = sk.select(col("qid"), explode(col("qs")).as("tok"))
     // read twice (hit aggregation + overlap count) rather than
     // checkpointed: the pruned bucket scan is ~1 s while materializing
@@ -809,23 +851,28 @@ object IncrementalShingles {
   }
 
   /** The driver bound of the gate's probe and score phases: the largest
-    * batch, in (rowkey, shingle) rows, whose state probe
-    * ([[probeLocal]]) and intra-batch score ([[intraBatchDropsLocal]])
-    * run on the driver, and the largest entries collect, in (tok, doc)
-    * rows, the probe takes there. A larger batch (a bootstrap's
-    * `dedupWithin` over a whole corpus) or a larger entries read runs the
-    * distributed plans. Measured on local[4]:
-    *   - score, against a 2,000-doc state (records/SCORE_CROSSOVER.json):
-    *     the driver path is faster at every size tried — 0.6 s against
-    *     2.5 s at 1k docs (53k rows), 10.6 s against 21.2 s at 16k docs
-    *     (849k rows);
-    *   - probe, a 1k-doc batch against growing states
-    *     (records/GATE_PROBE_CROSSOVER.json): the driver path is faster
-    *     at every size tried — 0.67 s against 2.05 s at a 500-doc state
-    *     (22k entry rows), 5.8 s against 14.6 s at 16k docs (702k rows).
-    * The bound keeps a margin under the largest sizes measured and caps
-    * the driver memory the rows take. */
+    * batch, in (rowkey, shingle) rows, whose state probe ([[probeLocal]])
+    * and intra-batch score ([[intraBatchDropsLocal]]) run on the driver.
+    * A larger batch (a bootstrap's `dedupWithin` over a whole corpus)
+    * runs the distributed plans. Measured on local[4], the score phase
+    * against a 2,000-doc state (records/SCORE_CROSSOVER.json): the
+    * driver path is faster at every size tried, 0.6 s against 2.5 s at
+    * 1k docs (53k rows) and 10.6 s against 21.2 s at 16k docs (849k
+    * rows). */
   private[graft] val LocalScoreMaxRows: Long = 500000L
+
+  /** The largest entries read the driver probe ([[probeLocal]]) takes, in
+    * rows of the entry buckets the batch's tokens hash to, counted from
+    * their parquet footers before the read. Set by the driver's memory,
+    * not by speed: a 1,000-doc batch against growing states
+    * (records/GATE_PROBE_CROSSOVER.json) ran on the driver 1.8–4× faster
+    * than the distributed plan at every size up to 2.8M entry rows, but
+    * in a 1 GB heap it completed at 2.84M rows, and at 5.63M its first
+    * step, the entries collect, ran out of memory. One million rows stays 2.8× under the 1 GB success, so every
+    * heap the repo runs Spark with (2 GB and up) holds it beside the rest
+    * of the session; past it the distributed plan runs, which holds no
+    * entry row on the driver. */
+  private[graft] val LocalProbeMaxEntryRows: Long = 1000000L
 
   /** The gate's `score` phase — which state-pass survivors (rowkey, qs)
     * to drop within the batch, as (rowkey, dup_of). At most
@@ -871,32 +918,28 @@ object IncrementalShingles {
   }
 
   /** `df`'s (key, qs) rows on the driver when their `qs` sizes total at
-    * most `maxRows`, else None ([[boundedCollect]]). */
+    * most `maxRows`, else None — in ONE job that moves at most about
+    * `maxRows` shingles whatever the frame holds: each of the frame's p
+    * partitions stops shipping once its own total passes `maxRows / p`,
+    * and a partition past that share answers None for the whole call. So
+    * a frame skewed across its partitions can answer None below the
+    * bound; the callers' distributed plans return the same rows. */
   private def boundedRows(df: DataFrame, key: String,
-      maxRows: Long): Option[Array[(String, Array[String])]] =
-    boundedCollect(df.select(key, "qs"), maxRows) { r =>
-      val qs = if (r.isNullAt(1)) Array.empty[String] else r.getSeq[String](1).toArray
-      ((r.getString(0), qs), qs.length)
-    }
-
-  /** `df`'s rows, each read into a value and its weight by `read`, on the
-    * driver when the weights total at most `maxRows`, else None — in ONE
-    * job: each partition stops shipping once its own total passes the
-    * bound, so an over-bound frame moves at most (partitions × bound)
-    * weight to the driver. */
-  private def boundedCollect[T: scala.reflect.ClassTag](df: DataFrame, maxRows: Long)(
-      read: Row => (T, Int)): Option[Array[T]] = {
-    val parts = df.rdd.mapPartitions { it =>
+      maxRows: Long): Option[Array[(String, Array[String])]] = {
+    val rdd = df.select(key, "qs").rdd
+    val share = maxRows / math.max(1, rdd.getNumPartitions)
+    val parts = rdd.mapPartitions { it =>
       var n = 0L
-      val out = Array.newBuilder[T]
-      while (it.hasNext && n <= maxRows) {
-        val (v, w) = read(it.next())
-        n += w
-        out += v
+      val out = Array.newBuilder[(String, Array[String])]
+      while (it.hasNext && n <= share) {
+        val r = it.next()
+        val qs = if (r.isNullAt(1)) Array.empty[String] else r.getSeq[String](1).toArray
+        n += qs.length
+        out += r.getString(0) -> qs
       }
-      Iterator.single((n, out.result()))
+      Iterator.single((n > share, out.result()))
     }.collect()
-    if (parts.iterator.map(_._1).sum > maxRows) None
+    if (parts.exists(_._1)) None
     else Some(parts.flatMap(_._2))
   }
 
@@ -1047,10 +1090,10 @@ object IncrementalShingles {
 
   /** [[gateDecisions]] with its driver bound: a batch of at most
     * `maxLocalRows` (rowkey, shingle) rows — a flush — whose tokens' entry
-    * rows fit the same bound is probed, scored and decided on the driver
-    * ([[probeLocal]], [[scoreLocal]]), and the decisions are a local
-    * frame; otherwise the distributed plans run. Both give the same
-    * decisions. */
+    * buckets hold at most [[LocalProbeMaxEntryRows]] rows is probed,
+    * scored and decided on the driver ([[probeLocal]], [[scoreLocal]]),
+    * and the decisions are a local frame; otherwise the distributed
+    * plans run. Both give the same decisions. */
   private[graft] def gateDecisionsBody(spark: SparkSession, rootPath: String,
                     batch: DataFrame, threshold: Double,
                     scheme: SketchScheme, maxCandidates: Int,
@@ -1073,17 +1116,17 @@ object IncrementalShingles {
         .agg(max_by(col("text"), col("event_id")).as("text"))
         .select(col("rowkey"),
           array_sort(array_distinct(scheme.sketch(col("text")))).as("qs"))))
-    val onDriver = clock.time("probe") {
+    val (stored, onDriver) = clock.time("probe") {
       requireScheme(spark, rootPath, scheme)
-      boundedRows(latest, "rowkey", maxLocalRows).flatMap(rows =>
-        probeLocal(spark, rootPath, rows, threshold, scheme.dfCap, scheme,
-          maxCandidates, maxLocalRows).map(rows -> _))
+      val stored = hasEntries(spark, rootPath)
+      (stored, probeOnDriver(spark, rootPath, latest, "rowkey", stored, threshold,
+        scheme.dfCap, scheme, maxCandidates, maxLocalRows, LocalProbeMaxEntryRows))
     }
     onDriver match {
       case Some((rows, matches)) =>
         decideLocal(spark, rootPath, rows.toSeq, matches, threshold, scheme.dfCap, clock)
       case None =>
-        decideDistributed(spark, rootPath, latest, threshold, scheme,
+        decideDistributed(spark, rootPath, latest, stored, threshold, scheme,
           maxCandidates, clock, maxLocalRows)
     }
   }
@@ -1118,9 +1161,10 @@ object IncrementalShingles {
   }
 
   /** The gate's verdicts through the distributed plans — a batch past the
-    * driver bound. */
+    * driver bound; no state probe when the root holds no entry (`stored`
+    * false). */
   private def decideDistributed(spark: SparkSession, rootPath: String,
-      latest: DataFrame, threshold: Double, scheme: SketchScheme,
+      latest: DataFrame, stored: Boolean, threshold: Double, scheme: SketchScheme,
       maxCandidates: Int, clock: PhaseClock, maxLocalRows: Long): DataFrame = {
     // min_by over (-jaccard, rowkey) is deterministic: the logged dup_of
     // must not depend on aggregation order (the crash-replay spec
@@ -1128,9 +1172,12 @@ object IncrementalShingles {
     // checkpointed: dupBest feeds BOTH the survivor anti-join and the
     // final decisions select — without it the whole state probe (the
     // batch's most expensive plan) executes twice per gate
-    val dupBest = clock.time("probe")(probeDistributed(spark, rootPath,
+    val matches =
+      if (stored) probeDistributed(spark, rootPath,
         latest.select(col("rowkey").as("qid"), col("qs")), threshold,
         scheme.dfCap, scheme, maxCandidates)
+      else matchesFrame(spark, Nil)
+    val dupBest = clock.time("probe")(matches
       .filter(col("qid") =!= col("rowkey"))
       .groupBy("qid")
       .agg(min_by(col("rowkey"), struct(-col("jaccard"), col("rowkey"))).as("dup_of"))

@@ -610,6 +610,28 @@ object StateStore {
       .sum
   }
 
+  /** Rows in the bucket dirs `dirs` of `root`, summed from their parquet
+    * footers: driver-side metadata, no Spark job. The per-dir counts are
+    * cached per state token ([[cached]]), so a root read between two
+    * commits opens its footers once. An upper bound on any read of those
+    * dirs, known before the read runs. */
+  def bucketRows(spark: SparkSession, root: String, dirs: Seq[String]): Long = {
+    val rows = cached(spark, root, "bucketRows") {
+      val fs = fsOf(spark, new Path(root))
+      val conf = spark.sessionState.newHadoopConf()
+      liveBuckets(spark, root).map { d =>
+        d -> fs.listStatus(new Path(s"$root/$d")).iterator
+          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+          .map { f =>
+            val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+              org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+            try reader.getRecordCount finally reader.close()
+          }.sum
+      }.toMap
+    }
+    dirs.iterator.map(rows.getOrElse(_, 0L)).sum
+  }
+
   /** The live bucket dirs under a state root, healed first (see
     * [[liveBucketsUncached]]) and served from the token-checked cache
     * ([[cached]]). A hit may skip the heal pass safely: a torn swap

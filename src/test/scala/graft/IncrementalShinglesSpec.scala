@@ -1066,6 +1066,72 @@ class IncrementalShinglesSpec extends SparkSpec {
     assert(distributedJobs > 3, s"the distributed probe ran only $distributedJobs jobs")
   }
 
+  test("the driver probe's entries bound is the footers' row count, checked before any entries read") {
+    import graft.streaming.StateStore
+    val root = Files.createTempDirectory("graft_shingF").toString + "/shingles"
+    val rnd = new scala.util.Random(5)
+    val vocab = (1 to 12).map(i => s"f$i")
+    def doc(): String = Seq.fill(6 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val stored = (0 until 120).map(_ => doc())
+    merge(root, stored.zipWithIndex.map { case (t, i) => DocChange(s"s$i", i.toLong, "put", t) }: _*)
+    merge(root, DocChange("s1", 500, "delete", ""), DocChange("s2", 501, "put", doc()))
+    val entries = root + "/entries"
+    val footerRows = StateStore.bucketRows(spark, entries, StateStore.liveBuckets(spark, entries))
+    assert(footerRows === StateStore.readBuckets(spark, entries,
+      StateStore.liveBuckets(spark, entries)).count(), "the footers count every entry row")
+    // a small batch against that state: one entry row under the
+    // footers' count, the call runs the distributed plan without
+    // collecting any entry row first
+    val sk = (0 until 6).map(i => (s"q$i", if (i < 2) stored(10 + i) else doc()))
+      .toDF("qid", "text")
+      .select(col("qid"), array_sort(array_distinct(
+        IncrementalShingles.WordShingles.sketch(col("text")))).as("qs"))
+      .localCheckpoint()
+    def probe(maxLocalRows: Long, maxEntryRows: Long): (Set[(String, String, Double)], Int) = {
+      var out = Set.empty[(String, String, Double)]
+      val jobs = SpecMetrics.jobsRun(spark) {
+        out = IncrementalShingles.nearDuplicatesBatchSketched(spark, root, sk, 0.5,
+            Dedup.DfCap, IncrementalShingles.WordShingles,
+            maxLocalRows = maxLocalRows, maxEntryRows = maxEntryRows)
+          .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+      }
+      (out, jobs)
+    }
+    val batchBound = IncrementalShingles.LocalScoreMaxRows
+    val (overFooters, overJobs) = probe(batchBound, footerRows - 1)
+    val (distributed, distributedJobs) = probe(0L, footerRows)
+    val (onDriver, driverJobs) = probe(batchBound, footerRows)
+    assert(onDriver.nonEmpty && overFooters === onDriver && distributed === onDriver)
+    assert(driverJobs <= 3, s"at the footers' count the driver probe ran $driverJobs jobs")
+    assert(overJobs <= distributedJobs,
+      s"past the footers' count: $overJobs jobs, the distributed plan alone $distributedJobs")
+  }
+
+  test("the batch probe takes one row per qid: null qids dropped, a repeated qid rejected, on either path") {
+    val root = Files.createTempDirectory("graft_shingQ").toString + "/shingles"
+    val stored = "alpha beta gamma delta epsilon zeta"
+    merge(root,
+      DocChange("s1", 0, "put", stored),
+      DocChange("s2", 1, "put", "one two three four five six"))
+    def sketched(rows: (String, String)*): DataFrame =
+      rows.toDF("qid", "text").select(col("qid"), array_sort(array_distinct(
+          IncrementalShingles.WordShingles.sketch(col("text")))).as("qs"))
+        .localCheckpoint()
+    def probe(sk: DataFrame, maxLocalRows: Long): Set[(String, String, Double)] =
+      IncrementalShingles.nearDuplicatesBatchSketched(spark, root, sk, 0.5,
+          Dedup.DfCap, IncrementalShingles.WordShingles, maxLocalRows = maxLocalRows)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+    val withNull = sketched("a" -> stored, (null, stored))
+    val repeated = sketched("a" -> stored, "a" -> "one two three four five six")
+    for (bound <- Seq(IncrementalShingles.LocalScoreMaxRows, 0L)) {
+      assert(probe(withNull, bound) === Set(("a", "s1", 1.0)), s"bound $bound")
+      val e = intercept[IllegalArgumentException](probe(repeated, bound))
+      assert(e.getMessage.contains("qid 'a'"), s"bound $bound: ${e.getMessage}")
+    }
+    intercept[IllegalArgumentException](IncrementalShingles.nearDuplicatesBatch(spark, root,
+      Seq("b" -> stored, "b" -> stored).toDF("qid", "text"), threshold = 0.5).collect())
+  }
+
   test("the df sidecar equals the entries' row count for every token after flushes with updates and deletes") {
     import graft.streaming.IncrementalPostings
     val root = Files.createTempDirectory("graft_shdfc").toString + "/shingles"
